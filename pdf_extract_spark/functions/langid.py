@@ -681,14 +681,17 @@ _LATIN_EXCLUSIVE: list[tuple["re.Pattern[str]", str]] = [
 
 #: char → language for the single combined exclusive-letter scan.
 #: Derived from _LATIN_EXCLUSIVE (the semantic source of truth): every
-#: pattern is a single-char class except Maltese "ħ|għ", whose every
-#: match contains ħ — tests/test_langid.py pins the derivation.
+#: pattern is a single-char class or a single codepoint except Maltese
+#: "ħ|għ", whose every match contains ħ — tests/test_langid.py pins the
+#: derivation.
 _EXCL_CHAR2LANG: dict[str, str] = {}
 for _p, _lang in _LATIN_EXCLUSIVE:
     _src = _p.pattern
     if _src.startswith("[") and _src.endswith("]"):
         for _ch in _src[1:-1]:
             _EXCL_CHAR2LANG[_ch] = _lang
+    elif len(_src) == 1:
+        _EXCL_CHAR2LANG[_src] = _lang
 _EXCL_CHAR2LANG["ħ"] = "mt"
 _EXCL_CLASS_RE = re.compile(
     "[" + "".join(map(re.escape, _EXCL_CHAR2LANG)) + "]")

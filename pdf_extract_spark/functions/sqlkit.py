@@ -12,10 +12,13 @@ Spark DataFrame query and its DuckDB oracle compute bit-identical values:
   * set reductions only (sizes, mins, intersections) — never raw arrays,
     whose element order differs between engines.
 
-Spark-side these fragments are pure Catalyst expressions (higher-order
-array functions) — whole-stage-codegen'd JVM execution, zero Python UDFs on
-the dedup/similarity hot path. That is the 100 TB design: shingling +
-minhash run inside the scan stage; only the candidate-pair join shuffles.
+The shingle / minhash / simhash fragments are the REFERENCE definitions of
+the signature hashing: the DuckDB oracles replay them, and Spark evaluates
+them only in ``sigkernel.hof_signature_frame``, against which the vectorized
+kernel that the dedup operators run is pinned (tests/test_sigkernel.py).
+The set and vector fragments (jaccard, containment, hamming, cosine, ...)
+run Spark-side as plain Catalyst expressions in the operators' verify
+steps.
 
 Reference: the reference engine has no dedup/similarity surface (SURVEY.md
 §2.9); these operators are the training-data-pipeline extension mandated by

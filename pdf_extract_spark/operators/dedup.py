@@ -1,17 +1,21 @@
 """Document deduplication operators for the training-data pipeline.
 
-Five dedup families over the ``documents`` table, each a pure-DataFrame
-operator (Catalyst higher-order array expressions, zero Python UDFs) with a
-bit-identical DuckDB oracle built from the same fragment builders
-(functions/sqlkit.py).
+Five dedup families over the ``documents`` table, each a DataFrame
+operator with a bit-identical DuckDB oracle.  Shingle hashes and
+signatures come from the vectorized Arrow kernel (functions/sigkernel.py,
+one narrow map per scan); the oracles replay the same hashing as SQL
+fragments (functions/sqlkit.py), and the kernel is pinned to them.
 
 Scale design (100 TB / 10^12 docs):
   * exact           — one hash-aggregate shuffle on md5(normalized text);
                       map-side partial agg, AQE-coalesced. O(n).
-  * minhash_lsh     — signatures computed INSIDE the scan stage (JVM
-                      codegen); only (band_idx, band_key) equi-join
-                      shuffles — the standard MinHash-LSH band trick, so
-                      candidate generation is O(n·bands) not O(n²).
+  * minhash_lsh     — signatures from the kernel in the scan stage; only
+                      the (band_idx, band_key) equi-join shuffles — the
+                      standard MinHash-LSH band trick, so candidate
+                      generation is O(n·bands) not O(n²).  ONE candidate
+                      rule (:func:`_band_join`: keep a pair on its first
+                      colliding band) serves the in-plan query, the
+                      sketch table, batch ingest and the stream.
   * simhash         — 32-bit fingerprints in-scan; banded equi-join on
                       8-bit sub-keys (pigeonhole: hamming ≤ 3 pairs must
                       share one of 4 bands) then exact hamming verify.
@@ -30,6 +34,12 @@ the training-data-pipeline extension from the build brief.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
+import re
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -316,22 +326,58 @@ def containment_pairs_oracle() -> str:
 # ---------------------------------------------------------------------------
 
 def _explode_bands(sig: DataFrame, carry: list[str]) -> DataFrame:
-    """(carry..., band_idx, band_key) — one row per (doc, LSH band) from
-    a signature frame with mh0..mh{N-1} columns. Explode (not a union of
-    per-band selects) so the upstream signature kernel executes ONCE:
-    a union re-runs every non-persisted parent branch per band."""
-    structs = F.array(*[
-        F.struct(
-            F.lit(bi).alias("band_idx"),
-            F.concat_ws(",", *[
-                f"mh{j}" for j in range(bi * LSH_ROWS, (bi + 1) * LSH_ROWS)
-            ]).alias("band_key"),
-        )
+    """(carry..., band_keys, band_idx, band_key) — one row per (doc, LSH
+    band) from a signature frame with mh0..mh{N-1} columns.  The doc's
+    whole ``band_keys`` array rides on every band row, so a band join
+    can tell a pair's FIRST colliding band from the joined row alone
+    (:func:`_band_join`).  posexplode, not a union of per-band selects,
+    so the upstream signature kernel executes ONCE: a union re-runs
+    every non-persisted parent branch per band."""
+    keys = F.array(*[
+        F.concat_ws(",", *[
+            f"mh{j}" for j in range(bi * LSH_ROWS, (bi + 1) * LSH_ROWS)
+        ])
         for bi in range(LSH_BANDS)
     ])
     return (
-        sig.select(*carry, F.explode(structs).alias("bk"))
-        .select(*carry, "bk.band_idx", "bk.band_key")
+        sig.select(*carry, keys.alias("band_keys"))
+        .select(*carry, "band_keys",
+                F.posexplode("band_keys").alias("band_idx", "band_key"))
+    )
+
+
+def _band_join(a: DataFrame, b: DataFrame, self_join: bool) -> DataFrame:
+    """THE MinHash-LSH candidate rule: equi-join band rows on
+    (band_idx, band_key) and keep each pair on its FIRST colliding band
+    only, so the result holds exactly one row per candidate pair — no
+    ``distinct`` shuffle, no per-pair re-hash, no streaming state.  The
+    first colliding band is read off the carried ``band_keys`` arrays
+    (a per-band string compare); ``self_join`` adds ``a.doc_id <
+    b.doc_id``.  Columns stay reachable as ``a.*`` / ``b.*``."""
+    first = F.array_position(F.array(*[
+        F.col("a.band_keys")[i] == F.col("b.band_keys")[i]
+        for i in range(LSH_BANDS)
+    ]), True) - 1
+    cand = (
+        a.alias("a").join(b.alias("b"), ["band_idx", "band_key"])
+        .filter(F.col("band_idx") == first)
+    )
+    if self_join:
+        cand = cand.filter(F.col("a.doc_id") < F.col("b.doc_id"))
+    return cand
+
+
+def _verified(cand: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Exact jaccard ≥ τ on the ``a.sh`` / ``b.sh`` sets a band join
+    carried: (id_a, id_b, jacc)."""
+    jac = K.jaccard("a.sh", "b.sh", "a.n_sh", "b.n_sh", SPARK)
+    return (
+        cand.select(
+            F.col("a.doc_id").alias(id_a),
+            F.col("b.doc_id").alias(id_b),
+            F.expr(jac).alias("jacc"),
+        )
+        .filter(F.col("jacc") >= JACCARD_TAU)
     )
 
 
@@ -343,21 +389,17 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs this is the only shuffle, keyed by a near-uniform 4-minhash
     concatenation — no O(n²) stage anywhere.  Signatures come from the
     vectorized kernel (one Arrow map; persisted because the frame feeds
-    both self-join sides AND the verify join)."""
+    both self-join sides AND the verify join).  The band rows are slim
+    — only keys cross the band shuffle — and the verify joins the
+    persisted shingle sets back for the few surviving pairs."""
     from ..functions.sigkernel import signature_frame
 
     s = track_cache(signature_frame(
         _docs(spark, sf_dir), SHINGLE_W, minhash=True))
     bands = _explode_bands(s, ["doc_id"])
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_idx", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-        )
-        .distinct()
+    cand = _band_join(bands, bands, True).select(
+        F.col("a.doc_id").alias("doc_id_a"),
+        F.col("b.doc_id").alias("doc_id_b"),
     )
     sh = s.select("doc_id", "sh", "n_sh")
     jac = K.jaccard("sa.sh", "sb.sh", "sa.n_sh", "sb.n_sh", SPARK)
@@ -369,13 +411,21 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs_oracle() -> str:
+def _lsh_pairs_ctes_duck(tag: str = "0",
+                         pair: str = "a.doc_id < b.doc_id") -> str:
+    """DuckDB CTE chain of the verified MinHash-LSH pair graph — the
+    oracle twin of banded_signatures + _band_join + the jaccard verify,
+    shared by every MinHash oracle.  ``tag`` is a per-doc SQL
+    expression over ``sized`` (the ingest batch a doc belongs to) and
+    ``pair`` the candidate predicate over band rows ``a``, ``b``.
+    Emits ``verified(doc_id_a, doc_id_b, tag_a, jacc)``; the oracle
+    keeps the plain ``select distinct`` candidate form as reference."""
     mh_cols = ", ".join(
         f"{K.minhash('sh', j, DUCK)} as mh{j}" for j in range(N_MINHASH)
     )
     band_rows = " union all ".join(
-        "select doc_id, {bi} as band_idx, concat_ws(',', {cols}) as band_key"
-        " from sig".format(
+        "select doc_id, tag, {bi} as band_idx,"
+        " concat_ws(',', {cols}) as band_key from sig".format(
             bi=bi,
             cols=", ".join(
                 f"mh{j}" for j in range(bi * LSH_ROWS, (bi + 1) * LSH_ROWS)
@@ -385,20 +435,29 @@ def minhash_lsh_pairs_oracle() -> str:
     )
     jac = K.jaccard("sa.sh", "sb.sh", "sa.n_sh", "sb.n_sh", DUCK)
     return f"""
-        with {_SHINGLED_CTE_DUCK},
-        sig as (select doc_id, sh, n_sh, {mh_cols} from sized),
+        sig as (select doc_id, sh, n_sh, {tag} as tag, {mh_cols} from sized),
         bands as ({band_rows}),
         cand as (
-            select distinct a.doc_id as doc_id_a, b.doc_id as doc_id_b
+            select distinct a.doc_id as doc_id_a, b.doc_id as doc_id_b,
+                   a.tag as tag_a
             from bands a join bands b
               on a.band_idx = b.band_idx and a.band_key = b.band_key
-             and a.doc_id < b.doc_id
+            where ({pair})
+        ),
+        verified as (
+            select cand.doc_id_a, cand.doc_id_b, cand.tag_a, {jac} as jacc
+            from cand
+            join sized sa on cand.doc_id_a = sa.doc_id
+            join sized sb on cand.doc_id_b = sb.doc_id
+            where {jac} >= {JACCARD_TAU}
         )
-        select cand.doc_id_a, cand.doc_id_b, {jac} as jacc
-        from cand
-        join sized sa on cand.doc_id_a = sa.doc_id
-        join sized sb on cand.doc_id_b = sb.doc_id
-        where {jac} >= {JACCARD_TAU}
+    """
+
+
+def minhash_lsh_pairs_oracle() -> str:
+    return f"""
+        with {_SHINGLED_CTE_DUCK}, {_lsh_pairs_ctes_duck()}
+        select doc_id_a, doc_id_b, jacc from verified
     """
 
 
@@ -538,34 +597,22 @@ INCR_BATCH_MOD = 10
 
 def incremental_pairs_against_sketch(new_docs: DataFrame,
                                      sketch: DataFrame) -> DataFrame:
-    """Ingest-time dedup core: near-dup pairs between a NEW batch (raw
-    ``doc_id, text`` rows) and a corpus SKETCH (materialized banded
-    signature rows — :func:`write_sketch_table` output).
+    """Ingest-time dedup core: near-dup pairs (new_id, corpus_id, jacc)
+    between a NEW batch (raw ``doc_id, text`` rows) and a corpus SKETCH
+    (:func:`banded_signatures` rows — a :func:`write_sketch_table` scan
+    or an in-plan frame).
 
-    The corpus side is ONLY a scan of the sketch table: no shingle or
-    minhash expression touches it (plan-asserted in
-    tests/test_plan_shapes.py) — the signatures were computed once at
-    ingest.  Per-batch cost is O(batch·bands) hashing on the new side
-    plus one band equi-join against the bucketed table; the carried
-    shingle sets make the jaccard verify join-local (no join back to
-    the corpus).  A pair colliding in several bands computes its
-    (deterministic) jaccard per collision and dedups after — cheaper
-    than a pre-verify distinct, which would shuffle the candidate set
-    twice."""
-    nb = banded_signatures(new_docs).select(
-        F.col("doc_id").alias("new_id"),
-        F.col("sh").alias("new_sh"),
-        F.col("n_sh").alias("new_n_sh"),
-        "band_idx", "band_key",
-    )
-    corp = corpus_rename(sketch)
-    jac = K.jaccard("new_sh", "corpus_sh", "new_n_sh", "corpus_n_sh", SPARK)
-    return (
-        nb.join(corp, ["band_idx", "band_key"])
-        .select("new_id", "corpus_id", F.expr(jac).alias("jacc"))
-        .filter(F.col("jacc") >= JACCARD_TAU)
-        .distinct()
-    )
+    The corpus side is ONLY a scan of the sketch: no shingle or minhash
+    expression touches it (plan-asserted in tests/test_plan_shapes.py)
+    — the signatures were computed once at ingest.  Per-batch cost is
+    O(batch·bands) hashing on the new side plus one band equi-join; the
+    carried shingle sets make the jaccard verify join-local.  The
+    first-colliding-band rule (:func:`_band_join`) emits each pair once
+    and keeps no state, so the same call is the stream-static join of
+    ``streaming.windows.neardup_stream``."""
+    return _verified(
+        _band_join(banded_signatures(new_docs), sketch, False),
+        "new_id", "corpus_id")
 
 
 def incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -587,82 +634,17 @@ def incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def incremental_dedup_pairs_oracle() -> str:
-    mh_cols = ", ".join(
-        f"{K.minhash('sh', j, DUCK)} as mh{j}" for j in range(N_MINHASH)
-    )
-    band_rows = " union all ".join(
-        "select doc_id, is_new, {bi} as band_idx,"
-        " concat_ws(',', {cols}) as band_key from sig".format(
-            bi=bi,
-            cols=", ".join(
-                f"mh{j}" for j in range(bi * LSH_ROWS, (bi + 1) * LSH_ROWS)
-            ),
-        )
-        for bi in range(LSH_BANDS)
-    )
-    jac = K.jaccard("sa.sh", "sb.sh", "sa.n_sh", "sb.n_sh", DUCK)
+    lsh = _lsh_pairs_ctes_duck(
+        f"(doc_id % {INCR_BATCH_MOD} = 0)", "a.tag and not b.tag")
     return f"""
-        with {_SHINGLED_CTE_DUCK},
-        sig as (
-            select doc_id, sh, n_sh,
-                   (doc_id % {INCR_BATCH_MOD} = 0) as is_new, {mh_cols}
-            from sized
-        ),
-        bands as ({band_rows}),
-        cand as (
-            select distinct a.doc_id as new_id, b.doc_id as corpus_id
-            from bands a join bands b
-              on a.band_idx = b.band_idx and a.band_key = b.band_key
-            where a.is_new and not b.is_new
-        )
-        select cand.new_id, cand.corpus_id, {jac} as jacc
-        from cand
-        join sized sa on cand.new_id = sa.doc_id
-        join sized sb on cand.corpus_id = sb.doc_id
-        where {jac} >= {JACCARD_TAU}
+        with {_SHINGLED_CTE_DUCK}, {lsh}
+        select doc_id_a as new_id, doc_id_b as corpus_id, jacc from verified
     """
 
 
 # ---------------------------------------------------------------------------
 # duplicate clusters (connected components over the near-dup pair graph)
 # ---------------------------------------------------------------------------
-
-def _lsh_pairs_ctes_duck() -> str:
-    """DuckDB CTE chain producing the verified MinHash-LSH pair graph
-    (``pairs(src, dst)``) — the same banded-candidate + exact-jaccard
-    verify that ``minhash_lsh_pairs`` runs in Spark, so the cluster
-    oracles check the actual scale-path edge source bit-for-bit."""
-    mh_cols = ", ".join(
-        f"{K.minhash('sh', j, DUCK)} as mh{j}" for j in range(N_MINHASH)
-    )
-    band_rows = " union all ".join(
-        "select doc_id, {bi} as band_idx, concat_ws(',', {cols}) as band_key"
-        " from sig".format(
-            bi=bi,
-            cols=", ".join(
-                f"mh{j}" for j in range(bi * LSH_ROWS, (bi + 1) * LSH_ROWS)
-            ),
-        )
-        for bi in range(LSH_BANDS)
-    )
-    jac = K.jaccard("sa.sh", "sb.sh", "sa.n_sh", "sb.n_sh", DUCK)
-    return f"""
-        sig as (select doc_id, sh, n_sh, {mh_cols} from sized),
-        bands as ({band_rows}),
-        cand as (
-            select distinct a.doc_id as doc_id_a, b.doc_id as doc_id_b
-            from bands a join bands b
-              on a.band_idx = b.band_idx and a.band_key = b.band_key
-             and a.doc_id < b.doc_id
-        ),
-        pairs as (
-            select cand.doc_id_a as src, cand.doc_id_b as dst
-            from cand
-            join sized sa on cand.doc_id_a = sa.doc_id
-            join sized sb on cand.doc_id_b = sb.doc_id
-            where {jac} >= {JACCARD_TAU}
-        )
-    """
 
 def star_contraction_labels(sym: DataFrame, max_rounds: int = 32,
                             rounds_out: list | None = None) -> DataFrame:
@@ -803,14 +785,17 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.join(losers, "doc_id", "left_anti")
 
 
-def dedup_keep_canonical_oracle() -> str:
+def _cc_labels_ctes_duck() -> str:
+    """DuckDB ``with`` clause ending in ``lab(doc_id, cluster_id)``:
+    min-label reachability over the verified LSH pair graph — the
+    oracle of :func:`_cc_labels`."""
     return f"""
         with recursive {_SHINGLED_CTE_DUCK},
         {_lsh_pairs_ctes_duck()},
         edges as (
-            select src, dst from pairs
+            select doc_id_a as src, doc_id_b as dst from verified
             union all
-            select dst, src from pairs
+            select doc_id_b, doc_id_a from verified
         ),
         nodes as (select distinct src as doc_id from edges),
         reach(doc_id, label) as (
@@ -819,6 +804,12 @@ def dedup_keep_canonical_oracle() -> str:
             select e.src, r.label from edges e join reach r on e.dst = r.doc_id
         ),
         lab as (select doc_id, min(label) as cluster_id from reach group by doc_id)
+    """
+
+
+def dedup_keep_canonical_oracle() -> str:
+    return f"""
+        {_cc_labels_ctes_duck()}
         select d.doc_id from documents d
         left join lab on d.doc_id = lab.doc_id
         where lab.doc_id is null or lab.cluster_id = d.doc_id
@@ -827,20 +818,7 @@ def dedup_keep_canonical_oracle() -> str:
 
 def duplicate_clusters_oracle() -> str:
     return f"""
-        with recursive {_SHINGLED_CTE_DUCK},
-        {_lsh_pairs_ctes_duck()},
-        edges as (
-            select src, dst from pairs
-            union all
-            select dst, src from pairs
-        ),
-        nodes as (select distinct src as doc_id from edges),
-        reach(doc_id, label) as (
-            select doc_id, doc_id from nodes
-            union
-            select e.src, r.label from edges e join reach r on e.dst = r.doc_id
-        ),
-        lab as (select doc_id, min(label) as cluster_id from reach group by doc_id)
+        {_cc_labels_ctes_duck()}
         select cluster_id, cast(count(*) as bigint) as n_docs,
                min(doc_id) as min_doc, max(doc_id) as max_doc
         from lab group by cluster_id
@@ -855,49 +833,35 @@ def duplicate_clusters_oracle() -> str:
 def banded_signatures(docs: DataFrame) -> DataFrame:
     """The ingest-time sketch rows for a ``doc_id, text`` frame: one row
     per (doc, LSH band) carrying the distinct shingle-hash set, its
-    size, and the band key — the SINGLE definition of the MinHash
-    banding that every consumer (bucketed sketch write, incremental
-    batch join, streaming stream-static join) shares, so a sketch
-    written at ingest time joins bit-identically against signatures
-    computed in-plan.
+    size, the doc's band-key array and the band key — the SINGLE
+    definition of the MinHash banding that every consumer (bucketed
+    sketch write, incremental batch join, streaming stream-static join)
+    shares, so a sketch written at ingest time joins bit-identically
+    against signatures computed in-plan.
 
     Signatures come from the vectorized Arrow kernel and the bands from
-    one explode — the whole frame is a single narrow pass over the
-    input (the old HOF-expression + per-band-union form ran the
-    interpreted hash chain once per band)."""
+    one posexplode — the whole frame is a single narrow pass over the
+    input."""
     from ..functions.sigkernel import signature_frame
 
     sig = signature_frame(docs, SHINGLE_W, minhash=True)
     return _explode_bands(sig, ["doc_id", "sh", "n_sh"])
 
 
-def corpus_rename(bands: DataFrame) -> DataFrame:
-    """Rename sketch rows to the ``corpus_*`` side of an
-    ingest-vs-corpus join — the ONE definition shared by the batch
-    incremental join (:func:`incremental_pairs_against_sketch`) and the
-    streaming stream-static join (``streaming.windows``), so a sketch
-    schema change cannot drift the two consumers apart."""
-    return bands.select(
-        F.col("doc_id").alias("corpus_id"),
-        F.col("sh").alias("corpus_sh"),
-        F.col("n_sh").alias("corpus_n_sh"),
-        "band_idx", "band_key",
-    )
-
-
 def write_sketch_table(spark: SparkSession, docs: DataFrame, table: str,
                        path: str, buckets: int = 64) -> None:
-    """Materialize the banded MinHash sketch as a BUCKETED, sorted
-    table: ``bucketBy(buckets, band_idx, band_key)`` co-locates every
-    band bucket, so the LSH candidate self-join — the single biggest
-    shuffle in near-dedup at 10^12 docs — runs with NO Exchange on
-    either side (Spark's bucketed SortMergeJoin reads both sides
-    pre-partitioned and pre-sorted).  Signatures are computed ONCE at
-    ingest; every later dedup pass (self-join via
-    :func:`sketch_table_pairs`, incremental batch join via
+    """Materialize the banded MinHash sketch (:func:`banded_signatures`
+    rows) as a BUCKETED, sorted table: ``bucketBy(buckets, band_idx,
+    band_key)`` co-locates every band bucket, so the LSH candidate
+    self-join — the single biggest shuffle in near-dedup at 10^12 docs
+    — runs with NO Exchange at all (Spark's bucketed SortMergeJoin
+    reads both sides pre-partitioned and pre-sorted, and the
+    first-colliding-band rule leaves no pair duplicates to collapse).
+    Signatures are computed ONCE at ingest; every later dedup pass
+    (self-join via :func:`band_pairs`, incremental batch join via
     :func:`incremental_pairs_against_sketch`, streaming stream-static
-    join via ``streaming.windows.corpus_sketch_from_table``) reads this
-    table instead of re-hashing the corpus.
+    join via ``streaming.windows.neardup_stream``) reads this table
+    instead of re-hashing the corpus.
 
     Rows carry the shingle set alongside the band key (2 bands → 2×
     storage) so the jaccard verify needs no extra join back to the
@@ -924,10 +888,10 @@ def append_to_sketch_table(spark: SparkSession, new_docs: DataFrame,
     The append declares the same bucket spec as the bootstrap write
     (Spark refuses mismatched bucketing on an existing table, so drift
     is an error, not silent corruption). Each append adds one file per
-    touched bucket; the bucketed self-join stays Exchange-free below
-    the join — Spark reads multi-file buckets co-located (it may
-    re-sort within a partition, never reshuffle). Periodic compaction
-    of many-append tables is ordinary parquet file management."""
+    touched bucket; the bucketed self-join stays Exchange-free — Spark
+    reads multi-file buckets co-located (it may re-sort within a
+    partition, never reshuffle). Periodic compaction of many-append
+    tables is ordinary parquet file management."""
     (
         banded_signatures(new_docs).write.format("parquet")
         .bucketBy(buckets, "band_idx", "band_key")
@@ -935,6 +899,13 @@ def append_to_sketch_table(spark: SparkSession, new_docs: DataFrame,
         .mode("append")
         .saveAsTable(table)
     )
+
+
+def _app_id(spark: SparkSession) -> str:
+    try:
+        return spark.sparkContext.applicationId
+    except Exception:  # Spark Connect: no context handle — key by session
+        return str(id(spark))
 
 
 #: session-memoized sketch tables: (app id, abs sf_dir) -> table name
@@ -949,15 +920,8 @@ def ensure_sketch_table(spark: SparkSession, sf_dir: str,
     queries (dedup_sketch_pairs, dedup_incremental) call this so one
     check_oracle / bench session hashes the corpus exactly once, then
     every dedup pass reads the bucketed table."""
-    import os
-    import re
-    import tempfile
-
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect: no context handle — key by session
-        app = str(id(spark))
-    key = (app, os.path.abspath(sf_dir))
+    abs_dir = os.path.abspath(sf_dir)
+    key = (_app_id(spark), abs_dir)
     got = _SKETCH_TABLES.get(key)
     if got is not None and spark.catalog.tableExists(got):
         return got
@@ -965,9 +929,6 @@ def ensure_sketch_table(spark: SparkSession, sf_dir: str,
     # basename (/a/corpus vs /b/corpus) must not collide on one table
     # name / warehouse path, or the second overwrite silently serves
     # the wrong corpus' signatures to the first corpus' memo entry
-    import hashlib
-
-    abs_dir = os.path.abspath(sf_dir)
     digest = hashlib.sha1(abs_dir.encode()).hexdigest()[:10]
     tag = re.sub(r"\W+", "_", os.path.basename(abs_dir)) + "_" + digest
     table = f"pdfx_sketch_{tag}"
@@ -984,6 +945,15 @@ def ensure_sketch_table(spark: SparkSession, sf_dir: str,
 INGEST_B1, INGEST_B2 = 5, 0
 
 
+def _ingest_table(spark: SparkSession, sf_dir: str) -> str:
+    """Scratch sketch table of :func:`ingest_lifecycle`, keyed by the
+    corpus path AND the application id, so concurrent applications on
+    one corpus never share (and race on) a table."""
+    digest = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+    app = re.sub(r"\W+", "_", _app_id(spark))
+    return f"pdfx_ingest_{digest}_{app}"
+
+
 def ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full incremental-ingest lifecycle as ONE registered,
     oracle-pinned query: bootstrap the bucketed sketch from the standing
@@ -992,101 +962,74 @@ def ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-2 document duplicating a batch-1 document is caught even
     though neither was in the bootstrap corpus.  This is the loop a
     production ingest runs forever: the corpus is hashed exactly once,
-    each batch pays only its own hashing (r4 VERDICT stretch item 7).
+    each batch pays only its own hashing.
 
     Emits (new_id, corpus_id, jacc, phase): phase 'b1' rows matched the
-    bootstrap corpus, 'b2' rows matched bootstrap ∪ batch 1.  Batch-1
-    probes are materialized (localCheckpoint) BEFORE the append — a
-    lazy plan would re-list the table's files after the append and see
-    its own batch as corpus."""
-    import hashlib
-    import os
-    import tempfile
-
+    bootstrap corpus, 'b2' rows matched bootstrap ∪ batch 1.  Both
+    probes are materialized (localCheckpoint): batch 1 BEFORE the
+    append — a lazy plan would re-list the table's files after the
+    append and see its own batch as corpus — and batch 2 before the
+    scratch table is dropped on return."""
     docs = _docs(spark, sf_dir)
     mod = F.col("doc_id") % INCR_BATCH_MOD
     old = docs.filter((mod != INGEST_B1) & (mod != INGEST_B2))
     b1 = docs.filter(mod == INGEST_B1)
     b2 = docs.filter(mod == INGEST_B2)
 
-    digest = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    table = f"pdfx_ingest_{digest}"
+    table = _ingest_table(spark, sf_dir)
     path = os.path.join(tempfile.gettempdir(), table)
     # overwrite-then-append keeps repeated invocations deterministic:
     # every call rebuilds the bootstrap state before its single append
     write_sketch_table(spark, old, table, path, buckets=8)
-    p1 = incremental_pairs_against_sketch(
-        b1, spark.table(table)
-    ).withColumn("phase", F.lit("b1")).localCheckpoint()
-    append_to_sketch_table(spark, b1, table, buckets=8)
-    p2 = incremental_pairs_against_sketch(
-        b2, spark.table(table)
-    ).withColumn("phase", F.lit("b2"))
+    try:
+        p1 = incremental_pairs_against_sketch(
+            b1, spark.table(table)
+        ).withColumn("phase", F.lit("b1")).localCheckpoint()
+        append_to_sketch_table(spark, b1, table, buckets=8)
+        p2 = incremental_pairs_against_sketch(
+            b2, spark.table(table)
+        ).withColumn("phase", F.lit("b2")).localCheckpoint()
+    finally:
+        # an external (path) table: DROP leaves its files behind
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        shutil.rmtree(path, ignore_errors=True)
     return p1.unionByName(p2)
 
 
 def ingest_lifecycle_oracle() -> str:
-    mh_cols = ", ".join(
-        f"{K.minhash('sh', j, DUCK)} as mh{j}" for j in range(N_MINHASH)
-    )
-    band_rows = " union all ".join(
-        "select doc_id, ph, {bi} as band_idx,"
-        " concat_ws(',', {cols}) as band_key from sig".format(
-            bi=bi,
-            cols=", ".join(
-                f"mh{j}" for j in range(bi * LSH_ROWS, (bi + 1) * LSH_ROWS)
-            ),
-        )
-        for bi in range(LSH_BANDS)
-    )
-    jac = K.jaccard("sa.sh", "sb.sh", "sa.n_sh", "sb.n_sh", DUCK)
+    lsh = _lsh_pairs_ctes_duck(
+        f"case when doc_id % {INCR_BATCH_MOD} = {INGEST_B1} then 1"
+        f" when doc_id % {INCR_BATCH_MOD} = {INGEST_B2} then 2 else 0 end",
+        "(a.tag = 1 and b.tag = 0) or (a.tag = 2 and b.tag in (0, 1))")
     return f"""
-        with {_SHINGLED_CTE_DUCK},
-        sig as (
-            select doc_id, sh, n_sh,
-                   case when doc_id % {INCR_BATCH_MOD} = {INGEST_B1} then 1
-                        when doc_id % {INCR_BATCH_MOD} = {INGEST_B2} then 2
-                        else 0 end as ph,
-                   {mh_cols}
-            from sized
-        ),
-        bands as ({band_rows}),
-        cand as (
-            select distinct a.doc_id as new_id, b.doc_id as corpus_id,
-                   a.ph as new_ph
-            from bands a join bands b
-              on a.band_idx = b.band_idx and a.band_key = b.band_key
-            where (a.ph = 1 and b.ph = 0)
-               or (a.ph = 2 and b.ph in (0, 1))
-        )
-        select cand.new_id, cand.corpus_id, {jac} as jacc,
-               case when cand.new_ph = 1 then 'b1' else 'b2' end as phase
-        from cand
-        join sized sa on cand.new_id = sa.doc_id
-        join sized sb on cand.corpus_id = sb.doc_id
-        where {jac} >= {JACCARD_TAU}
+        with {_SHINGLED_CTE_DUCK}, {lsh}
+        select doc_id_a as new_id, doc_id_b as corpus_id, jacc,
+               case when tag_a = 1 then 'b1' else 'b2' end as phase
+        from verified
     """
 
 
 def cap_band_buckets(bands: DataFrame, max_bucket: int) -> DataFrame:
     """Skew control for the LSH candidate join: drop band buckets with
-    more than ``max_bucket`` members before the self-join.
+    more than ``max_bucket`` members before the self-join —
+    ``band_pairs(cap_band_buckets(bands, cap))``.
 
     At web scale a single degenerate band key — empty documents,
     templated boilerplate, crawler error pages — can hold millions of
     docs, and the self-join then materializes k²/2 candidate pairs from
     ONE key: the classic hot-key stage that stalls a 1000-executor job
-    on a single task. Production LSH dedup caps the bucket (the
-    pigeonhole still gives every near-dup pair LSH_BANDS chances to
-    collide in a non-degenerate band, and truly giant buckets are
-    better handled by exact dedup — their members are near-identical
-    by construction).
+    on a single task. Production LSH dedup caps the bucket; truly giant
+    buckets are better handled by exact dedup — their members are
+    near-identical by construction.  Under the first-colliding-band
+    rule a pair is emitted only from its lowest colliding band, so a
+    pair whose lowest colliding band is capped is dropped even if a
+    later band bucket survives.
 
     The cap is a windowed count over (band_idx, band_key) — on the
     bucketed sketch table the window's partitioning matches the bucket
     spec, so it adds NO Exchange (plan-asserted). Recall tradeoff is
-    explicit: callers opt in with ``max_band_bucket``; the registered
-    oracle queries run uncapped."""
+    explicit: callers opt in by composing it; the registered oracle
+    queries run uncapped."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("band_idx", "band_key")
@@ -1103,36 +1046,13 @@ def sketch_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join + jaccard verify.  Produces exactly the
     minhash_lsh_pairs row set — the oracle reuses that SQL — but with
     the corpus hashed once at write time instead of per query."""
-    return sketch_table_pairs(spark, ensure_sketch_table(spark, sf_dir))
+    return band_pairs(spark.table(ensure_sketch_table(spark, sf_dir)))
 
 
-def sketch_table_pairs(spark: SparkSession, table: str,
-                       max_band_bucket: int | None = None) -> DataFrame:
-    """Near-dup pairs from a bucketed sketch table: the banded
-    candidate equi-join runs bucket-to-bucket (zero Exchange below the
-    join — asserted by tests/test_plan_shapes.py), then the exact
-    jaccard verify on the carried shingle sets.
-
-    ``max_band_bucket`` opts into hot-bucket skew control
-    (:func:`cap_band_buckets`); the windowed count rides the table's
-    bucketing, so the capped plan is still Exchange-free below the
-    join."""
-    from ..functions import sqlkit as K
-    from ..functions.sqlkit import SPARK
-
-    t = spark.table(table)
-    if max_band_bucket is not None:
-        t = cap_band_buckets(t, max_band_bucket)
-    jac = K.jaccard("a.sh", "b.sh", "a.n_sh", "b.n_sh", SPARK)
-    return (
-        t.alias("a")
-        .join(t.alias("b"), ["band_idx", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.expr(jac).alias("jacc"),
-        )
-        .filter(F.col("jacc") >= JACCARD_TAU)
-        .distinct()
-    )
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """Near-dup pairs (doc_id_a, doc_id_b, jacc) within one set of
+    :func:`banded_signatures` rows: the band self-join, then the exact
+    jaccard verify on the carried shingle sets.  Over a bucketed sketch
+    table the join runs bucket-to-bucket — zero Exchange in the whole
+    plan (asserted by tests/test_plan_shapes.py)."""
+    return _verified(_band_join(bands, bands, True), "doc_id_a", "doc_id_b")

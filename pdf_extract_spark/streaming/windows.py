@@ -6,8 +6,8 @@ extension: event-time windowed aggregation with a watermark, a custom
 stateful sessionizer via ``applyInPandasWithState`` (the streaming form of
 the W2 gap-segmentation query in queries.py session_window), streaming
 first-seen exact dedup (keyed state), and streaming MinHash near-dup of
-arriving docs against a static corpus sketch (stateless stream-static
-band join — the ingest-time filter of dedup_incremental).
+arriving docs against a static corpus sketch (``neardup_stream``: the
+stateless stream-static band join of dedup_incremental, called as is).
 
 Scale notes: the windowed aggregate shuffles on (window, event_type) with
 partial aggregation map-side and its watermark bounds both state and
@@ -276,90 +276,19 @@ def dedup_docs_stream(docs: DataFrame,
 # ---------------------------------------------------------------------------
 
 
-def _corpus_rename(bands: DataFrame) -> DataFrame:
-    # single definition in operators.dedup, shared with the batch
-    # incremental join — see dedup.corpus_rename
-    from ..operators.dedup import corpus_rename
-
-    return corpus_rename(bands)
-
-
-def corpus_sketch(docs: DataFrame):
-    """Static side of the streaming near-dup join computed IN-PLAN from
-    raw documents — the ad-hoc form for corpora with no materialized
-    sketch.  A deployed pipeline uses :func:`corpus_sketch_from_table`
-    instead: signatures are computed once at ingest
-    (operators.dedup.write_sketch_table), never per query."""
-    from ..operators.dedup import banded_signatures
-
-    return _corpus_rename(banded_signatures(docs))
-
-
-def corpus_sketch_from_table(spark, table: str) -> DataFrame:
-    """Static side of the streaming near-dup join read from the
-    MATERIALIZED bucketed sketch table: a pure scan + rename — zero
-    hashing (plan-asserted in tests/test_plan_shapes.py), because the
-    band keys and shingle sets were written once at ingest by
-    ``operators.dedup.write_sketch_table``.  This is the same table the
-    batch incremental dedup reads, closing the loop: one sketch, three
-    consumers (self-join, batch ingest, stream ingest)."""
-    return _corpus_rename(spark.table(table))
-
-
 def neardup_stream(new_docs: DataFrame, sketch: DataFrame) -> DataFrame:
     """Streaming MinHash near-dup: each arriving doc's bands equi-join
-    the static corpus sketch (a stateless stream-static join), then the
-    exact-jaccard verify. Emits (new_id, corpus_id, jacc) per detected
+    the static corpus sketch (``operators.dedup.banded_signatures``
+    rows — a sketch-table scan or an in-plan frame), then the
+    exact-jaccard verify.  Emits (new_id, corpus_id, jacc) per detected
     near-dup; the ingest filter is an anti-join of the batch against
     these ids downstream.
 
-    Genuinely zero streaming state: a pair colliding in several bands
-    would duplicate, but instead of ``dropDuplicates`` (an unbounded
-    keyed state store — one entry per emitted pair, never retired) the
-    pair is kept only on its FIRST colliding band.  Band keys are a
-    deterministic function of the shingle sets, so earlier-band
-    equality is recomputable post-join from (new_sh, corpus_sh) — a few
-    hash folds per LSH candidate, paid only on the rare collision rows,
-    in exchange for state that stays empty at 10^12 docs."""
-    from ..functions import sqlkit as K
-    from ..functions.sqlkit import SPARK
-    from ..operators.dedup import (
-        JACCARD_TAU,
-        LSH_BANDS,
-        LSH_ROWS,
-        banded_signatures,
-    )
+    This IS the batch ingest join (``incremental_pairs_against_sketch``):
+    its first-colliding-band rule emits each pair exactly once with no
+    ``dropDuplicates`` — whose keyed state store would grow by one entry
+    per emitted pair, never retired — so the stream-static join keeps
+    zero streaming state at 10^12 docs."""
+    from ..operators.dedup import incremental_pairs_against_sketch
 
-    # the stream side hashes through the SAME vectorized kernel +
-    # explode banding as every batch consumer (banded_signatures —
-    # mapInPandas is streaming-supported), so a stream doc's band keys
-    # are bit-identical to ingest-time sketch rows by construction
-    bands = banded_signatures(new_docs).select(
-        F.col("doc_id").alias("new_id"),
-        F.col("sh").alias("new_sh"),
-        F.col("n_sh").alias("new_n_sh"),
-        "band_idx", "band_key",
-    )
-    jac = K.jaccard("new_sh", "corpus_sh", "new_n_sh", "corpus_n_sh", SPARK)
-    # per-band "do these two docs collide?" — recomputed from the joined
-    # shingle sets; array_position finds the first colliding band
-    collide = F.array(*[
-        F.expr(" AND ".join(
-            f"(({K.minhash('new_sh', j, SPARK)})"
-            f" <=> ({K.minhash('corpus_sh', j, SPARK)}))"
-            for j in range(bi * LSH_ROWS, (bi + 1) * LSH_ROWS)
-        ))
-        for bi in range(LSH_BANDS)
-    ])
-    return (
-        bands.join(sketch, ["band_idx", "band_key"])
-        .withColumn(
-            "_first_band",
-            F.array_position(collide, F.lit(True)) - F.lit(1),
-        )
-        .filter(F.col("band_idx") == F.col("_first_band"))
-        .select(
-            "new_id", "corpus_id", F.expr(jac).alias("jacc"),
-        )
-        .filter(F.col("jacc") >= JACCARD_TAU)
-    )
+    return incremental_pairs_against_sketch(new_docs, sketch)

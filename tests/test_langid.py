@@ -395,3 +395,25 @@ def test_pointed_hebrew_is_not_yiddish():
     # YIVO-pointed Yiddish routes via ligatures/rafe
     yivo_yi = "יעדער מענטש װערט געבױרן פֿרײַ און גלײַך אין כּבֿוד און רעכט."
     assert detect(yivo_yi) == "yi"
+
+
+def test_exclusive_letter_map_covers_every_exclusive_language():
+    """_EXCL_CHAR2LANG is derived from _LATIN_EXCLUSIVE: every language
+    with an exclusive letter must appear in the combined map, and every
+    mapped char must match its language's own pattern.  Bare
+    single-codepoint patterns (ə → az, ł → pl) were once dropped by a
+    derivation that only read bracketed classes."""
+    from pdf_extract_spark.functions.langid import (
+        _EXCL_CHAR2LANG,
+        _LATIN_EXCLUSIVE,
+        detect,
+    )
+
+    assert {lang for _, lang in _LATIN_EXCLUSIVE} == set(
+        _EXCL_CHAR2LANG.values())
+    pats = dict((lang, p) for p, lang in _LATIN_EXCLUSIVE)
+    for ch, lang in _EXCL_CHAR2LANG.items():
+        assert pats[lang].search(ch), (ch, lang)
+    assert detect("mały chłopiec szedł do szkoły") == "pl"
+    assert detect("Bütün insanlar ləyaqət və hüquqlarına görə azad və "
+                  "bərabər doğulurlar.") == "az"

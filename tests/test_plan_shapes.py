@@ -147,9 +147,9 @@ def test_ivf_trained_plan_shape(spark):
 def test_bucketed_sketch_join_no_shuffle(spark, tmp_path):
     """The materialized bucketed sketch removes near-dedup's biggest
     shuffle: the banded LSH candidate SELF-JOIN reads both sides
-    bucket-to-bucket (zero Exchange below the join — the only Exchange
-    left is the final distinct over the tiny verified-pair set), and
-    the pairs equal the shuffle-based minhash_lsh_pairs exactly."""
+    bucket-to-bucket and the first-colliding-band rule leaves no pair
+    duplicates to collapse, so the plan has ZERO Exchanges — and the
+    pairs equal the shuffle-based minhash_lsh_pairs exactly."""
     import re
 
     from pdf_extract_spark.operators import dedup
@@ -160,14 +160,9 @@ def test_bucketed_sketch_join_no_shuffle(spark, tmp_path):
         docs = dedup._docs(spark, SF_DIR)
         dedup.write_sketch_table(
             spark, docs, "sketch_shape_t", str(tmp_path / "sk"), buckets=8)
-        pairs = dedup.sketch_table_pairs(spark, "sketch_shape_t")
+        pairs = dedup.band_pairs(spark.table("sketch_shape_t"))
         plan = pairs._jdf.queryExecution().executedPlan().toString()
-        exchanges = re.findall(r"Exchange [^\n]*", plan)
-        # exactly one Exchange, and it is the post-join distinct (keyed
-        # on the pair columns) — never the band-key join shuffle
-        assert len(exchanges) == 1, exchanges
-        assert "doc_id_a" in exchanges[0]
-        assert "band_idx" not in exchanges[0]
+        assert not re.findall(r"Exchange [^\n]*", plan), plan
 
         got = sorted((r.doc_id_a, r.doc_id_b) for r in pairs.collect())
         want = sorted(
@@ -200,34 +195,65 @@ def test_incremental_dedup_reads_sketch_not_rehash(spark):
     assert doc_scans and all("% 10" in s for s in doc_scans), scans
 
 
-def test_streaming_corpus_sketch_from_table_is_pure_scan(spark, tmp_path):
-    """The streaming near-dup static side read from the materialized
-    sketch is a scan + rename with ZERO hashing (no transform /
-    array_distinct / array_min anywhere in the plan), and yields
-    row-identical sketch rows to the in-plan corpus_sketch form."""
+def test_sketch_table_scan_is_pure_and_equals_in_plan_bands(spark,
+                                                           tmp_path):
+    """The corpus side every sketch consumer reads from the
+    materialized table is a plain scan with ZERO hashing (no transform
+    / array_distinct / array_min anywhere in the plan), and yields
+    row-identical sketch rows — band_keys included — to the in-plan
+    banded_signatures form."""
     from pdf_extract_spark.operators import dedup
-    from pdf_extract_spark.streaming.windows import (
-        corpus_sketch,
-        corpus_sketch_from_table,
-    )
 
     docs = dedup._docs(spark, SF_DIR)
     try:
         dedup.write_sketch_table(
             spark, docs, "sketch_stream_t", str(tmp_path / "sk"), buckets=4)
-        from_table = corpus_sketch_from_table(spark, "sketch_stream_t")
+        from_table = spark.table("sketch_stream_t")
         plan = _physical(from_table)
         for marker in ("transform(", "array_distinct", "array_min"):
             assert marker not in plan, (marker, plan)
 
-        key = ["corpus_id", "band_idx", "band_key", "corpus_n_sh"]
+        key = ["doc_id", "band_idx", "band_key", "n_sh", "band_keys"]
         got = sorted(tuple(r[k] for k in key)
                      for r in from_table.collect())
         want = sorted(tuple(r[k] for k in key)
-                      for r in corpus_sketch(docs).collect())
+                      for r in dedup.banded_signatures(docs).collect())
         assert got == want and got
     finally:
         spark.sql("DROP TABLE IF EXISTS sketch_stream_t")
+
+
+def test_minhash_lsh_pairs_has_no_pair_distinct(spark):
+    """The first-colliding-band rule emits each candidate pair once, so
+    the in-plan LSH query has no aggregate keyed on the pair columns
+    (the old ``.distinct()`` shuffle)."""
+    import re
+
+    from pdf_extract_spark.operators import dedup
+
+    plan = _physical(dedup.minhash_lsh_pairs(spark, SF_DIR))
+    aggs = re.findall(r"HashAggregate\(keys=\[([^\]]*)\]", plan)
+    assert not [k for k in aggs if "doc_id_a" in k and "doc_id_b" in k], \
+        plan
+
+
+def test_neardup_stream_plan_has_no_rehash(spark):
+    """neardup_stream tells a pair's first colliding band from the
+    carried band-key arrays, not by re-folding minhashes through
+    interpreted higher-order functions: no aggregate( / transform( in
+    the plan."""
+    from pyspark.sql import functions as F
+
+    from pdf_extract_spark.operators import dedup
+    from pdf_extract_spark.streaming.windows import neardup_stream
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
+        .select("doc_id", "text")
+    sketch = dedup.banded_signatures(docs.filter(F.col("doc_id") % 10 != 0))
+    plan = _physical(neardup_stream(
+        docs.filter(F.col("doc_id") % 10 == 0), sketch))
+    for marker in ("aggregate(", "transform("):
+        assert marker not in plan, (marker, plan)
 
 
 def test_ensure_sketch_table_distinct_for_same_basename(spark, tmp_path):
@@ -263,8 +289,8 @@ def test_ensure_sketch_table_distinct_for_same_basename(spark, tmp_path):
 def test_band_bucket_cap_semantics_and_no_extra_shuffle(spark, tmp_path):
     """Hot-bucket skew control: cap_band_buckets drops exactly the
     oversized band buckets, and on the bucketed sketch table the capped
-    self-join plan is STILL Exchange-free below the join (the windowed
-    count rides the table's bucketing)."""
+    self-join plan is STILL Exchange-free (the windowed count rides the
+    table's bucketing)."""
     import re
 
     from pyspark.sql import functions as F
@@ -292,17 +318,13 @@ def test_band_bucket_cap_semantics_and_no_extra_shuffle(spark, tmp_path):
             F.sum("n")).collect()[0][0]
         assert capped.count() == want
 
-        pairs = dedup.sketch_table_pairs(
-            spark, "sketch_cap_t", max_band_bucket=cap)
+        pairs = dedup.band_pairs(capped)
         plan = pairs._jdf.queryExecution().executedPlan().toString()
-        exchanges = re.findall(r"Exchange [^\n]*", plan)
-        assert len(exchanges) == 1, exchanges  # only the pair distinct
-        assert "band_idx" not in exchanges[0]
+        assert not re.findall(r"Exchange [^\n]*", plan), plan
         # capped pairs are a subset of the uncapped pair set
         got = {(r.doc_id_a, r.doc_id_b) for r in pairs.collect()}
         full = {(r.doc_id_a, r.doc_id_b)
-                for r in dedup.sketch_table_pairs(
-                    spark, "sketch_cap_t").collect()}
+                for r in dedup.band_pairs(t).collect()}
         assert got <= full
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
@@ -313,8 +335,7 @@ def test_sketch_append_lifecycle(spark, tmp_path):
     """Incremental ingest lifecycle: bootstrap the sketch from 90% of
     the corpus, append the remaining batch's signatures, and the
     appended table's self-join pairs equal the full-corpus pairs with
-    the join still Exchange-free below it (multi-file buckets stay
-    co-located)."""
+    the plan still Exchange-free (multi-file buckets stay co-located)."""
     import re
 
     from pyspark.sql import functions as F
@@ -334,11 +355,9 @@ def test_sketch_append_lifecycle(spark, tmp_path):
         t = spark.table("sketch_app_t")
         assert t.select("doc_id").distinct().count() == docs.count()
 
-        pairs = dedup.sketch_table_pairs(spark, "sketch_app_t")
+        pairs = dedup.band_pairs(t)
         plan = pairs._jdf.queryExecution().executedPlan().toString()
-        exchanges = re.findall(r"Exchange [^\n]*", plan)
-        assert len(exchanges) == 1, exchanges
-        assert "band_idx" not in exchanges[0]
+        assert not re.findall(r"Exchange [^\n]*", plan), plan
 
         got = sorted((r.doc_id_a, r.doc_id_b) for r in pairs.collect())
         want = sorted(
@@ -392,6 +411,23 @@ def test_ingest_lifecycle_append_is_observable(spark):
                for r in b1)
     assert all(r.new_id % 10 == 0 and r.corpus_id % 10 != 0 for r in b2)
     assert any(r.corpus_id % 10 == 5 for r in b2)  # append mattered
+
+
+def test_ingest_lifecycle_table_is_per_application_and_dropped(spark):
+    """Concurrent applications on one corpus must not share the
+    lifecycle's scratch sketch table: its name carries the sanitized
+    application id, and the table is gone once the call returns (both
+    probes are materialized first, so the result stays readable)."""
+    import re
+
+    from pdf_extract_spark.operators import dedup
+
+    table = dedup._ingest_table(spark, SF_DIR)
+    app = re.sub(r"\W+", "_", spark.sparkContext.applicationId)
+    assert table.endswith("_" + app), (table, app)
+    out = dedup.ingest_lifecycle(spark, SF_DIR)
+    assert not spark.catalog.tableExists(table)
+    assert out.count() > 0
 
 
 def test_decontaminate_broadcasts_eval_grams(spark):

@@ -323,12 +323,16 @@ def test_streaming_dedup_first_seen(spark, tmp_path):
 def test_streaming_neardup_matches_batch_incremental(spark, tmp_path):
     """Stream-static near-dup: new docs streamed against the corpus
     sketch emit exactly the pairs batch-mode dedup_incremental finds
-    (same split: doc_id % 10 == 0 is 'new')."""
+    (same split: doc_id % 10 == 0 is 'new'), each pair exactly once on
+    both sides — at sf0.001 most LSH candidate pairs collide in both
+    bands, so a lost first-colliding-band rule would repeat them."""
     import os
 
-    from pdf_extract_spark.operators.dedup import incremental_dedup_pairs
+    from pdf_extract_spark.operators.dedup import (
+        banded_signatures,
+        incremental_dedup_pairs,
+    )
     from pdf_extract_spark.streaming.windows import (
-        corpus_sketch,
         neardup_stream,
         run_available_now,
     )
@@ -337,7 +341,7 @@ def test_streaming_neardup_matches_batch_incremental(spark, tmp_path):
         .select("doc_id", "text")
     new = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    sketch = corpus_sketch(corpus).persist()
+    sketch = banded_signatures(corpus).persist()
 
     d = str(tmp_path / "new_docs")
     os.makedirs(d)
@@ -360,10 +364,11 @@ def test_streaming_neardup_matches_batch_incremental(spark, tmp_path):
         neardup_stream(sdf, sketch), "neardup_stream_t",
         output_mode="append",
     )
-    stream_pairs = {(r.new_id, r.corpus_id) for r in got.collect()}
-
-    batch_pairs = {
+    stream_rows = [(r.new_id, r.corpus_id) for r in got.collect()]
+    batch_rows = [
         (r.new_id, r.corpus_id)
         for r in incremental_dedup_pairs(spark, SF_DIR).collect()
-    }
-    assert stream_pairs == batch_pairs
+    ]
+    assert len(stream_rows) == len(set(stream_rows)), stream_rows
+    assert len(batch_rows) == len(set(batch_rows)), batch_rows
+    assert set(stream_rows) == set(batch_rows) and batch_rows
