@@ -572,6 +572,22 @@ def _devanagari_lang(sample: str) -> str:
     return "hi"
 
 
+def _script_lang(code: str, sample: str) -> str:
+    """The language of a script-block verdict: routed blocks (``@``)
+    sub-classify within their script."""
+    if code == "@cyr":
+        return _cyrillic_lang(
+            sample, [w.lower() for w in _WORD_RE.findall(sample)]
+        )
+    if code == "@arab":
+        return _arabic_lang(sample)
+    if code == "@heb":
+        return _hebrew_lang(sample)
+    if code == "@dev":
+        return _devanagari_lang(sample)
+    return code
+
+
 def detect(text: str) -> str | None:
     """Best-guess ISO 639-1 code, or None when undecidable."""
     if not text:
@@ -580,34 +596,21 @@ def detect(text: str) -> str | None:
     m = _NONLATIN_RE.search(sample)
     if m is not None:
         non_space = max(1, len(sample.replace(" ", "")))
-        # fast path (r4 VERDICT item 5): probe the first non-Latin
-        # char's own script block FIRST — script blocks are disjoint,
-        # so for single-script text this is one findall instead of a
-        # walk through the whole table. zh/ja keep their table order
-        # (kanji-majority Japanese must still resolve through the Han
-        # check first), so only disjoint blocks are hoisted.
-        ranges = _SCRIPT_RANGES
+        # fast path: probe the first non-Latin char's own script block
+        # FIRST and accept it outright only when it holds MORE than ⅔
+        # of the chars — script blocks are disjoint, so no other block
+        # can then reach ⅓ and the table walk below would pick it too.
+        # For single-script text this is one findall instead of a walk
+        # through the whole table; mixed text keeps the table order.
         ch = m.group(0)
-        for idx, (code, pat) in enumerate(_SCRIPT_RANGES):
+        for code, pat in _SCRIPT_RANGES:
             if pat.match(ch) is not None:
-                if idx >= 2:
-                    ranges = [_SCRIPT_RANGES[idx]] + \
-                        _SCRIPT_RANGES[:idx] + _SCRIPT_RANGES[idx + 1:]
+                if len(pat.findall(sample)) * 3 > non_space * 2:
+                    return _script_lang(code, sample)
                 break
-        for code, pat in ranges:
-            hits_n = len(pat.findall(sample))
-            if hits_n * 3 >= non_space:  # ≥⅓ of chars in the script
-                if code == "@cyr":
-                    return _cyrillic_lang(
-                        sample, [w.lower() for w in _WORD_RE.findall(sample)]
-                    )
-                if code == "@arab":
-                    return _arabic_lang(sample)
-                if code == "@heb":
-                    return _hebrew_lang(sample)
-                if code == "@dev":
-                    return _devanagari_lang(sample)
-                return code
+        for code, pat in _SCRIPT_RANGES:
+            if len(pat.findall(sample)) * 3 >= non_space:  # ≥⅓ of chars
+                return _script_lang(code, sample)
     words = _WORD_RE.findall(sample)
     words_n = len(words)
     if not words_n:

@@ -13,10 +13,10 @@ Scale design (100 TB / 10^12 docs):
                       the (band_idx, band_key) equi-join shuffles — the
                       standard MinHash-LSH band trick, so candidate
                       generation is O(n·bands) not O(n²).  ONE candidate
-                      rule (:func:`_band_join`: keep a pair on its first
-                      colliding band) serves the in-plan query, the
-                      sketch table, batch ingest and the stream.
-  * simhash         — 32-bit fingerprints in-scan; banded equi-join on
+                      rule (:func:`band_join`: keep a pair on its first
+                      colliding band) serves every MinHash path, simhash,
+                      SRP-LSH and media phash.
+  * simhash         — 32-bit fingerprints in-scan; the same band join on
                       8-bit sub-keys (pigeonhole: hamming ≤ 3 pairs must
                       share one of 4 bands) then exact hamming verify.
   * ngram_jaccard   — exact verification operator; the all-pairs form here
@@ -325,45 +325,52 @@ def containment_pairs_oracle() -> str:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _explode_bands(sig: DataFrame, carry: list[str]) -> DataFrame:
-    """(carry..., band_keys, band_idx, band_key) — one row per (doc, LSH
-    band) from a signature frame with mh0..mh{N-1} columns.  The doc's
-    whole ``band_keys`` array rides on every band row, so a band join
-    can tell a pair's FIRST colliding band from the joined row alone
-    (:func:`_band_join`).  posexplode, not a union of per-band selects,
-    so the upstream signature kernel executes ONCE: a union re-runs
-    every non-persisted parent branch per band."""
-    keys = F.array(*[
-        F.concat_ws(",", *[
-            f"mh{j}" for j in range(bi * LSH_ROWS, (bi + 1) * LSH_ROWS)
-        ])
-        for bi in range(LSH_BANDS)
-    ])
+def explode_bands(frame: DataFrame, carry: list[str],
+                  keys: list | None = None) -> DataFrame:
+    """(carry..., band_keys, band_idx, band_key) — one row per (row,
+    LSH band).  ``keys`` holds one key Column per band; the default is
+    the MinHash banding of a signature frame with mh0..mh{N-1} columns
+    (``LSH_ROWS`` minhashes joined per band).  The row's whole
+    ``band_keys`` array rides on every band row, so a band join can
+    tell a pair's FIRST colliding band from the joined row alone
+    (:func:`band_join`).  posexplode, not a union of per-band selects,
+    so the upstream frame executes ONCE: a union re-runs every
+    non-persisted parent branch per band."""
+    if keys is None:
+        keys = [
+            F.concat_ws(",", *[
+                f"mh{j}" for j in range(bi * LSH_ROWS, (bi + 1) * LSH_ROWS)
+            ])
+            for bi in range(LSH_BANDS)
+        ]
     return (
-        sig.select(*carry, keys.alias("band_keys"))
+        frame.select(*carry, F.array(*keys).alias("band_keys"))
         .select(*carry, "band_keys",
                 F.posexplode("band_keys").alias("band_idx", "band_key"))
     )
 
 
-def _band_join(a: DataFrame, b: DataFrame, self_join: bool) -> DataFrame:
-    """THE MinHash-LSH candidate rule: equi-join band rows on
+def band_join(a: DataFrame, b: DataFrame, self_join: bool,
+              n_bands: int = LSH_BANDS, id_col: str = "doc_id") -> DataFrame:
+    """THE banded-LSH candidate rule, shared by MinHash, SimHash, SRP
+    and media phash: equi-join :func:`explode_bands` rows on
     (band_idx, band_key) and keep each pair on its FIRST colliding band
-    only, so the result holds exactly one row per candidate pair — no
-    ``distinct`` shuffle, no per-pair re-hash, no streaming state.  The
-    first colliding band is read off the carried ``band_keys`` arrays
-    (a per-band string compare); ``self_join`` adds ``a.doc_id <
-    b.doc_id``.  Columns stay reachable as ``a.*`` / ``b.*``."""
+    only, so the result holds exactly one row per candidate pair (ids
+    are unique) — no ``distinct`` shuffle, no per-pair re-hash, no
+    streaming state.  The first colliding band is read off the carried
+    ``band_keys`` arrays (``n_bands`` per-band compares); ``self_join``
+    adds ``a.<id_col> < b.<id_col>``.  Columns stay reachable as
+    ``a.*`` / ``b.*``."""
     first = F.array_position(F.array(*[
         F.col("a.band_keys")[i] == F.col("b.band_keys")[i]
-        for i in range(LSH_BANDS)
+        for i in range(n_bands)
     ]), True) - 1
     cand = (
         a.alias("a").join(b.alias("b"), ["band_idx", "band_key"])
         .filter(F.col("band_idx") == first)
     )
     if self_join:
-        cand = cand.filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        cand = cand.filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     return cand
 
 
@@ -396,8 +403,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = track_cache(signature_frame(
         _docs(spark, sf_dir), SHINGLE_W, minhash=True))
-    bands = _explode_bands(s, ["doc_id"])
-    cand = _band_join(bands, bands, True).select(
+    bands = explode_bands(s, ["doc_id"])
+    cand = band_join(bands, bands, True).select(
         F.col("a.doc_id").alias("doc_id_a"),
         F.col("b.doc_id").alias("doc_id_b"),
     )
@@ -414,7 +421,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lsh_pairs_ctes_duck(tag: str = "0",
                          pair: str = "a.doc_id < b.doc_id") -> str:
     """DuckDB CTE chain of the verified MinHash-LSH pair graph — the
-    oracle twin of banded_signatures + _band_join + the jaccard verify,
+    oracle twin of banded_signatures + band_join + the jaccard verify,
     shared by every MinHash oracle.  ``tag`` is a per-doc SQL
     expression over ``sized`` (the ingest batch a doc belongs to) and
     ``pair`` the candidate predicate over band rows ``a``, ``b``.
@@ -492,31 +499,21 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pigeonhole: ≤ 3 differing bits cannot touch all 4 bands, so the banded
     equi-join is recall-complete for the threshold — the scalable version
-    of the quadratic hamming scan, same plan shape as MinHash-LSH."""
+    of the quadratic hamming scan, on the MinHash-LSH candidate rule
+    (:func:`band_join`: one row per pair, no ``distinct``)."""
     # persisted: fp feeds BOTH sides of the band self-join — without it
-    # the shingle explode + 32-vote aggregate runs twice per doc (the
-    # same reason minhash_lsh_pairs persists its signature frame).
+    # the signature kernel runs twice per doc (the same reason
+    # minhash_lsh_pairs persists its signature frame).
     # track_cache registers it for harness-side release (no leak in a
     # long-lived session).
     fp = track_cache(simhash_fingerprints(spark, sf_dir))
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band_idx"),
-                F.expr(f"(simhash DIV {1 << (8 * bi)}) % 256")
-                .alias("band_key"),
-            )
-            for bi in range(SIMHASH_BANDS)
-        ]
-    )
-    bands = fp.select(
-        "doc_id", "simhash", F.explode(band_structs).alias("bk")
-    ).select("doc_id", "simhash", "bk.band_idx", "bk.band_key")
+    bands = explode_bands(fp, ["doc_id", "simhash"], [
+        F.expr(f"(simhash DIV {1 << (8 * bi)}) % 256")
+        for bi in range(SIMHASH_BANDS)
+    ])
     ham = K.hamming("a.simhash", "b.simhash", SPARK)
     return (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_idx", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        band_join(bands, bands, True, SIMHASH_BANDS)
         .select(
             F.col("a.doc_id").alias("doc_id_a"),
             F.col("b.doc_id").alias("doc_id_b"),
@@ -524,7 +521,6 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             # TINYINT — an aligned declared type is part of the contract
             F.expr(ham).cast("bigint").alias("hamming"),
         )
-        .distinct()
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
@@ -607,11 +603,11 @@ def incremental_pairs_against_sketch(new_docs: DataFrame,
     — the signatures were computed once at ingest.  Per-batch cost is
     O(batch·bands) hashing on the new side plus one band equi-join; the
     carried shingle sets make the jaccard verify join-local.  The
-    first-colliding-band rule (:func:`_band_join`) emits each pair once
+    first-colliding-band rule (:func:`band_join`) emits each pair once
     and keeps no state, so the same call is the stream-static join of
     ``streaming.windows.neardup_stream``."""
     return _verified(
-        _band_join(banded_signatures(new_docs), sketch, False),
+        band_join(banded_signatures(new_docs), sketch, False),
         "new_id", "corpus_id")
 
 
@@ -845,7 +841,7 @@ def banded_signatures(docs: DataFrame) -> DataFrame:
     from ..functions.sigkernel import signature_frame
 
     sig = signature_frame(docs, SHINGLE_W, minhash=True)
-    return _explode_bands(sig, ["doc_id", "sh", "n_sh"])
+    return explode_bands(sig, ["doc_id", "sh", "n_sh"])
 
 
 def write_sketch_table(spark: SparkSession, docs: DataFrame, table: str,
@@ -1055,4 +1051,4 @@ def band_pairs(bands: DataFrame) -> DataFrame:
     jaccard verify on the carried shingle sets.  Over a bucketed sketch
     table the join runs bucket-to-bucket — zero Exchange in the whole
     plan (asserted by tests/test_plan_shapes.py)."""
-    return _verified(_band_join(bands, bands, True), "doc_id_a", "doc_id_b")
+    return _verified(band_join(bands, bands, True), "doc_id_a", "doc_id_b")

@@ -455,50 +455,43 @@ def media_phash_neardup(spark, sf_dir: str) -> DataFrame:
     """Image near-dup pairs by fingerprint hamming distance: the phash
     column (aHash64 for real decoders, stub polyhash for synthetic
     payloads — either way a deterministic 64-bit-space fingerprint)
-    splits into 4×16-bit bands; candidates come from a banded
-    equi-join (recall-complete for hamming ≤ 3 by pigeonhole, the
-    simhash idiom), then the exact ``bit_count(xor)`` verify.
+    splits into 4×16-bit bands; candidates come from the shared banded
+    candidate rule (:func:`dedup.band_join`: one row per pair;
+    recall-complete for hamming ≤ 3 by pigeonhole, the simhash idiom),
+    then the exact ``bit_count(xor)`` verify.
 
     This is what makes the decode tier (mediacodec/jpegdec) a DEDUP
     input at 100 TB: O(n·bands) candidate generation over billions of
     images, never an all-pairs pass."""
     from ..functions import sqlkit as K
     from ..functions.sqlkit import SPARK
+    from ..runtime import ensure_parallel_scan, track_cache
+    from .dedup import band_join, explode_bands
 
-    # tracked persist (runtime.track_cache): the phash frame feeds all
-    # 4 band branches; harnesses release between queries so repeated
-    # invocations in a long-lived session don't accumulate cached blocks
-    from ..runtime import track_cache
-
-    f = track_cache(multimodal_features(spark, sf_dir).select(
-        "media_ref", "phash"))
-    bands = None
-    for bi in range(PHASH_BANDS):
-        # bitslice, not div/mod: real aHashes use bit 63, and a banded
-        # join must extract true bit fields for negative values too
-        key = K.bitslice("phash", PHASH_BAND_BITS * bi,
-                         (1 << PHASH_BAND_BITS) - 1, SPARK)
-        b = f.select(
-            "media_ref", "phash",
-            F.lit(bi).alias("band_idx"),
-            F.expr(key).alias("band_key"),
-        )
-        bands = b if bands is None else bands.unionByName(b)
-    ham = K.hamming("a_phash", "b_phash", SPARK)
+    # tracked persist (runtime.track_cache): the phash frame feeds both
+    # sides of the band self-join; harnesses release between queries so
+    # repeated invocations in a long-lived session don't accumulate
+    # cached blocks.  The scan is spread before the decode (gated, as
+    # dedup._docs): the band join has no shuffle of its own, so it runs
+    # at the decode's width.
+    media = ensure_parallel_scan(spark, media_from_documents(spark, sf_dir))
+    f = track_cache(media_features(media).select("media_ref", "phash"))
+    # bitslice, not div/mod: real aHashes use bit 63, and a banded join
+    # must extract true bit fields for negative values too
+    bands = explode_bands(f, ["media_ref", "phash"], [
+        F.expr(K.bitslice("phash", PHASH_BAND_BITS * bi,
+                          (1 << PHASH_BAND_BITS) - 1, SPARK))
+        for bi in range(PHASH_BANDS)
+    ])
+    ham = K.hamming("a.phash", "b.phash", SPARK)
     return (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_idx", "band_key"])
-        .filter(F.col("a.media_ref") < F.col("b.media_ref"))
+        band_join(bands, bands, True, PHASH_BANDS, "media_ref")
         .select(
             F.col("a.media_ref").alias("media_ref_a"),
             F.col("b.media_ref").alias("media_ref_b"),
-            F.col("a.phash").alias("a_phash"),
-            F.col("b.phash").alias("b_phash"),
+            F.expr(ham).cast("int").alias("hamming"),
         )
-        .distinct()
-        .withColumn("hamming", F.expr(ham).cast("int"))
         .filter(F.col("hamming") <= PHASH_HAM_MAX)
-        .select("media_ref_a", "media_ref_b", "hamming")
     )
 
 

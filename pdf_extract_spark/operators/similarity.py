@@ -30,7 +30,8 @@ from pyspark.sql.window import Window
 
 from ..functions import sqlkit as K
 from ..functions.sqlkit import DUCK, SPARK
-from ..runtime import track_cache
+from ..runtime import ensure_parallel_scan, track_cache
+from .dedup import band_join, explode_bands
 
 TOP_K = 5
 QUERY_STRIDE = 83  # query set = vec_id % 83 == 0 (deterministic, tiny)
@@ -182,37 +183,28 @@ def srp_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     like MinHash-LSH, then the same cosine ≥ τ verify. Recall is
     probabilistic by construction (banding trades recall for the
     elimination of the O(n²) stage); the oracle mirrors the bands
-    exactly so the cross-check is deterministic.
-
-    Perf note: the signature is 16 interpreted Catalyst folds per row —
-    chosen because sequential float64 folds cross-check bit-identically
-    against DuckDB (the text_fingerprint tradeoff). At production scale
-    the signature step becomes one Arrow-batched numpy matmul
-    (vectors @ signs.T > 0) with the SAME banding plan downstream."""
+    exactly so the cross-check is deterministic.  The candidate rule is
+    MinHash-LSH's (:func:`dedup.band_join`): only ``vec_id`` rows cross
+    the band shuffle, one row per pair, no ``distinct``; the vectors
+    join back for the cosine verify."""
     # cache lifetime is caller-owned (runtime.track_cache): harnesses
-    # release between queries, so repeated invocations don't accumulate
-    emb = track_cache(_emb(spark, sf_dir).select("vec_id", "v"))
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band_idx"),
-                F.expr(_srp_band_key("v", bi, SPARK)).alias("band_key"),
-            )
-            for bi in range(SRP_BANDS)
-        ]
-    )
-    bands = emb.select(
-        "vec_id", F.explode(band_structs).alias("bk")
-    ).select("vec_id", "bk.band_idx", "bk.band_key")
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_idx", "band_key"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_id_a"),
-            F.col("b.vec_id").alias("vec_id_b"),
-        )
-        .distinct()
+    # release between queries, so repeated invocations don't accumulate.
+    # The band keys (16 interpreted folds per vector) are persisted
+    # columns, like MinHash's mh*: a key expression downstream of the
+    # cache would also run inside the size(band_keys) > 0 filter Spark
+    # infers for the posexplode, once per join side.  The scan is
+    # spread first (gated, as dedup._docs): the band join and cosine
+    # verify have no shuffle of their own, so they run at its width.
+    keys = [f"srp{bi}" for bi in range(SRP_BANDS)]
+    emb = track_cache(ensure_parallel_scan(spark, _emb(spark, sf_dir)).select(
+        "vec_id", "v", *[
+            F.expr(_srp_band_key("v", bi, SPARK)).alias(k)
+            for bi, k in enumerate(keys)
+        ]))
+    bands = explode_bands(emb, ["vec_id"], keys)
+    cand = band_join(bands, bands, True, SRP_BANDS, "vec_id").select(
+        F.col("a.vec_id").alias("vec_id_a"),
+        F.col("b.vec_id").alias("vec_id_b"),
     )
     cos = K.cosine("ea.v", "eb.v", SPARK)
     return (
@@ -248,54 +240,6 @@ def srp_neardup_pairs_oracle() -> str:
         join e eb on cand.vec_id_b = eb.vec_id
         where {cos} >= {SRP_COS_TAU}
     """
-
-
-def srp_signatures_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production-path SRP signature stage: one Arrow-batched numpy
-    matmul per batch (``vectors @ signs.T >= 0``) producing the SAME
-    16-bit signatures as the Catalyst fold form (identical deterministic
-    hyperplanes; equality is regression-tested). Downstream banding is
-    unchanged — at 10^12 vectors this replaces 16 interpreted folds per
-    row with one BLAS call per batch."""
-    import numpy as np
-    import pandas as pd
-
-    def sig_batches(batches):
-        signs_cache: dict[int, "np.ndarray"] = {}
-
-        def signs_for(d: int) -> "np.ndarray":
-            s = signs_cache.get(d)
-            if s is None:
-                i = np.arange(1, d + 1, dtype=np.int64)[:, None]
-                j = np.arange(SRP_BITS, dtype=np.int64)[None, :]
-                bit = ((i * 2654435761 + (j + 1) * 40503) // 65536) % 2
-                s = (1.0 - 2.0 * bit).astype(np.float64)  # (d, bits)
-                signs_cache[d] = s
-            return s
-
-        for b in batches:
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in b["embedding"]]
-            )
-            proj = vecs @ signs_for(vecs.shape[1])
-            bits = (proj >= 0).astype(np.int64)
-            sig = (bits << np.arange(SRP_BITS, dtype=np.int64)).sum(axis=1)
-            yield pd.DataFrame({"vec_id": b["vec_id"], "srp_sig": sig})
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return emb.select("vec_id", "embedding").mapInPandas(
-        sig_batches, schema="vec_id long, srp_sig long"
-    )
-
-
-def srp_signatures_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fold-form signatures as one integer per vector (test surface
-    for fast-path equivalence)."""
-    emb = _emb(spark, sf_dir)
-    sig = " + ".join(
-        f"({_srp_bit('v', j, SPARK)} * {1 << j})" for j in range(SRP_BITS)
-    )
-    return emb.select("vec_id", F.expr(sig).cast("long").alias("srp_sig"))
 
 
 # ---------------------------------------------------------------------------

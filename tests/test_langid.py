@@ -417,3 +417,15 @@ def test_exclusive_letter_map_covers_every_exclusive_language():
     assert detect("mały chłopiec szedł do szkoły") == "pl"
     assert detect("Bütün insanlar ləyaqət və hüquqlarına görə azad və "
                   "bərabər doğulurlar.") == "az"
+
+
+def test_mixed_script_blocks_keep_table_order():
+    """Two disjoint script blocks that both clear ⅓ of the chars resolve
+    in _SCRIPT_RANGES order (Cyrillic before Greek), whichever block the
+    first non-Latin char belongs to: the first char's block is only a
+    fast accept when it holds more than ⅔ of the chars."""
+    from pdf_extract_spark.functions.langid import detect
+
+    # Greek first, but Cyrillic holds 22 of 41 non-space chars
+    assert detect("Καλημέρα κόσμε σήμερα Привет мир сегодня хорошо") == "ru"
+    assert detect("Καλημέρα κόσμε σήμερα") == "el"

@@ -69,7 +69,8 @@ def test_dedup_queries_no_python_no_cartesian(spark):
     from pdf_extract_spark.queries import QUERIES
 
     for name in ("dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-                 "dedup_incremental", "dedup_sketch_pairs",
+                 "dedup_embedding_srp", "dedup_incremental",
+                 "dedup_sketch_pairs",
                  "simhash_fingerprints", "dedup_containment",
                  "source_quota_sample"):
         plan = _physical(QUERIES[name](spark, SF_DIR))
@@ -223,18 +224,27 @@ def test_sketch_table_scan_is_pure_and_equals_in_plan_bands(spark,
         spark.sql("DROP TABLE IF EXISTS sketch_stream_t")
 
 
-def test_minhash_lsh_pairs_has_no_pair_distinct(spark):
-    """The first-colliding-band rule emits each candidate pair once, so
-    the in-plan LSH query has no aggregate keyed on the pair columns
-    (the old ``.distinct()`` shuffle)."""
+@pytest.mark.parametrize("name,pair", [
+    ("dedup_minhash_lsh", "doc_id"),
+    ("dedup_simhash", "doc_id"),
+    ("dedup_embedding_srp", "vec_id"),
+    ("media_phash_neardup", "media_ref"),
+])
+def test_lsh_pairs_have_no_pair_distinct(spark, name, pair):
+    """The first-colliding-band rule (``dedup.band_join``) emits each
+    candidate pair once, so no banded-LSH query has an aggregate keyed
+    on its pair columns (the old ``.distinct()`` shuffle), and the band
+    rows come from one posexplode (``dedup.explode_bands``), not a
+    per-band Union."""
     import re
 
-    from pdf_extract_spark.operators import dedup
+    from pdf_extract_spark.queries import QUERIES
 
-    plan = _physical(dedup.minhash_lsh_pairs(spark, SF_DIR))
+    plan = _physical(QUERIES[name](spark, SF_DIR))
     aggs = re.findall(r"HashAggregate\(keys=\[([^\]]*)\]", plan)
-    assert not [k for k in aggs if "doc_id_a" in k and "doc_id_b" in k], \
-        plan
+    assert not [k for k in aggs
+                if f"{pair}_a" in k and f"{pair}_b" in k], plan
+    assert "Union" not in plan, plan
 
 
 def test_neardup_stream_plan_has_no_rehash(spark):

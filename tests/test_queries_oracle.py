@@ -212,23 +212,6 @@ def test_cluster_apply_plan_shape(spark):
     assert "CartesianProduct" not in clus_plan
 
 
-def test_srp_fast_path_matches_catalyst(spark):
-    """The numpy matmul SRP signature (production path) must equal the
-    Catalyst fold form bit-for-bit on the test corpus — same
-    deterministic hyperplanes, same 16-bit signatures."""
-    from pdf_extract_spark.operators.similarity import (
-        srp_signatures_catalyst,
-        srp_signatures_fast,
-    )
-
-    fast = {r.vec_id: r.srp_sig
-            for r in srp_signatures_fast(spark, SF_DIR).collect()}
-    slow = {r.vec_id: r.srp_sig
-            for r in srp_signatures_catalyst(spark, SF_DIR).collect()}
-    assert fast == slow
-    assert len(fast) > 0
-
-
 def test_readme_registry_counts_do_not_drift():
     """README's registry-count claims are generated facts, not prose:
     assert they equal len(queries())/len(oracle_sql()) so doc drift is
