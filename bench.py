@@ -3,6 +3,8 @@ queries + the north-rule scaling evidence (same job at N and 4N cores).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total headline seconds>, "unit": "sec",
+   "flagged": {name: max/min run ratio, ...},
+   "corpus": {fixtures, fixtures_missing, docs},
    "queries": {name: sec, ...}, "sf": <sf>,
    "extraction": {docs, wall_s, docs_per_sec},
    "scaling": {cores_lo, cores_hi, docs_per_sec_lo, docs_per_sec_hi,
@@ -11,6 +13,10 @@ Prints ONE JSON line:
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS  (default 32),
      SPARK_GRAFT_SCALING=0 to skip the scaling pair runs.
+
+A query whose two runs differ by more than FLAG_RATIO× is flagged: its
+time is reported as null and so is the suite total. Steal is a share of
+busy jiffies, recorded with the 1-minute loadavg for every timed window.
 
 Methodology (see BENCH.md for the control experiments):
   * The extraction corpus is materialized to parquet once (not timed) —
@@ -64,31 +70,48 @@ SCALING_DOCS = 1_024   # corpus subset for the N vs 4N pair
 SCALE_LO, SCALE_HI = 2, 8
 
 
+#: two runs of one query further apart than this ratio are one window
+#: poisoned by a neighbour (or a cold cache), not an engine cost
+FLAG_RATIO = 3.0
+
+
 def _cpu_stat() -> tuple[int, int]:
-    """(total jiffies, steal jiffies) from /proc/stat — the evidence
+    """(busy jiffies, steal jiffies) from /proc/stat — the evidence
     that a timing window was or wasn't poisoned by hypervisor steal
-    (r4 VERDICT: BENCH numbers must carry steal measurements)."""
+    (r4 VERDICT: BENCH numbers must carry steal measurements). Busy is
+    every state but idle and iowait, steal included."""
     try:
         with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        return sum(vals), (vals[7] if len(vals) > 7 else 0)
+            vals = [int(x) for x in fh.readline().split()[1:]]
+        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
+        return sum(vals[:8]) - idle, (vals[7] if len(vals) > 7 else 0)
     except Exception:
         return 0, 0
 
 
+def _loadavg_1m() -> float | None:
+    try:
+        with open("/proc/loadavg") as fh:
+            return float(fh.read().split()[0])
+    except Exception:
+        return None
+
+
 class StealMeter:
-    """Context manager: .pct is steal time as % of ALL cpu time (busy +
-    idle) across the window — comparable across runs of any length."""
+    """Context manager: .pct is steal time as % of BUSY cpu time across
+    the window (an idle window cannot dilute it), .loadavg the 1-minute
+    load average at its end."""
 
     def __enter__(self):
-        self._t0, self._s0 = _cpu_stat()
+        self._b0, self._s0 = _cpu_stat()
         return self
 
     def __exit__(self, *exc):
-        t1, s1 = _cpu_stat()
-        dt = t1 - self._t0
-        self.pct = round(100.0 * (s1 - self._s0) / dt, 2) if dt else None
+        b1, s1 = _cpu_stat()
+        busy = b1 - self._b0
+        self.pct = (round(100.0 * (s1 - self._s0) / busy, 2) if busy > 0
+                    else None)
+        self.loadavg = _loadavg_1m()
         return False
 
 
@@ -138,7 +161,8 @@ def run_extraction(spark, corpus_path: str, cores: int) -> dict:
         n = extract_spans(spark.read.parquet(corpus_path)).count()
         wall = time.time() - t0
     return {"docs": n, "wall_s": round(wall, 2),
-            "docs_per_sec": round(n / wall, 2), "steal_pct": sm.pct}
+            "docs_per_sec": round(n / wall, 2), "steal_pct": sm.pct,
+            "loadavg_1m": sm.loadavg}
 
 
 def main() -> None:
@@ -152,7 +176,20 @@ def main() -> None:
     n_docs = max(256, int(DOCS_PER_SF * sf))
 
     from pdf_extract_spark.queries import QUERIES
-    from pdf_extract_spark.sources.corpus import corpus_dataframe
+    from pdf_extract_spark.sources.corpus import (
+        FIXTURE_NAMES,
+        corpus_dataframe,
+        load_fixtures,
+    )
+
+    # without the reference fixtures the corpus has no sample4 skew
+    # tail, so its throughput is not comparable with a fixture run
+    fixtures = sorted(load_fixtures())
+    corpus = {"fixtures": fixtures,
+              "fixtures_missing": sorted(set(FIXTURE_NAMES) - set(fixtures)),
+              "docs": n_docs}
+    print(f"bench corpus: {n_docs} docs, reference fixtures "
+          f"{len(fixtures)}/{len(FIXTURE_NAMES)} present", file=sys.stderr)
 
     tmp = tempfile.mkdtemp(prefix="bench_corpus_")
     corpus_path = os.path.join(tmp, "corpus")
@@ -199,7 +236,8 @@ def main() -> None:
                         (QUERIES[name](spark, sf_dir)
                          .write.format("noop").mode("overwrite").save())
                         dt = time.time() - t0
-                    runs.append({"sec": round(dt, 3), "steal_pct": sm.pct})
+                    runs.append({"sec": round(dt, 3), "steal_pct": sm.pct,
+                                 "loadavg_1m": sm.loadavg})
                     # each invocation persists fresh intermediates
                     # (caller-owned lifetime) — release outside the timer
                     release_caches()
@@ -256,10 +294,21 @@ def main() -> None:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    total = round(sum(timings.values()) + extraction["wall_s"], 2)
+    # a flagged query's window reports nothing: neither its time nor
+    # the suite total built from it
+    flagged = {}
+    for name, runs in raw_runs.items():
+        lo, hi = min(r["sec"] for r in runs), max(r["sec"] for r in runs)
+        if lo > 0 and hi / lo > FLAG_RATIO:
+            flagged[name] = round(hi / lo, 2)
+            timings[name] = None
+    total = (None if flagged
+             else round(sum(timings.values()) + extraction["wall_s"], 2))
     print(json.dumps({
         "metric": "headline_suite_seconds",
         "value": total,
+        "flagged": flagged,
+        "corpus": corpus,
         "unit": "sec",
         "queries": timings,
         "sf": sf,
@@ -273,6 +322,7 @@ def main() -> None:
             "harness_commit": _harness_commit(),
             "queries_raw": raw_runs,
             "suite_steal_pct": suite_steal.pct,
+            "suite_loadavg_1m": suite_steal.loadavg,
             "extraction_runs": ext_runs,
             "note": ("queries = min of the recorded runs; "
                      "dedup_sketch_pairs run 1 includes the one-time "

@@ -478,15 +478,22 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def gram_hashes_duck(toks: str, w: int) -> str:
+    """DuckDB: the polyhash of every w-token window of the token array
+    ``toks``, in position order, and none for an array of fewer than w
+    tokens — the oracle form of the kernel's positional mode
+    (``signature_frame(distinct=False, pad_short=False)``)."""
+    n = K.asize(toks, DUCK)
+    parts = ", ".join(K.at(toks, f"i + {k}", DUCK) for k in range(w))
+    windows = K.xform(
+        f"range(1, greatest({n} - {w} + 2, 1))",
+        f"i -> concat_ws(' ', {parts})", DUCK)
+    return K.xform(windows, f"s -> {K.polyhash('s', DUCK)}", DUCK)
+
+
 def exact_substring_spans_oracle() -> str:
     toks = K.tokens("text", DUCK)
-    n = K.asize("toks", DUCK)
-    parts = ", ".join(K.at("toks", f"i + {k}", DUCK)
-                      for k in range(EXACT_W))
-    windows = K.xform(
-        f"range(1, greatest({n} - {EXACT_W} + 2, 1))",
-        f"i -> concat_ws(' ', {parts})", DUCK)
-    grams = K.xform(windows, f"s -> {K.polyhash('s', DUCK)}", DUCK)
+    grams = gram_hashes_duck("toks", EXACT_W)
     return f"""
         with t as (
             select doc_id, {grams} as g

@@ -3,19 +3,24 @@
 Five dedup families over the ``documents`` table, each a DataFrame
 operator with a bit-identical DuckDB oracle.  Shingle hashes and
 signatures come from the vectorized Arrow kernel (functions/sigkernel.py,
-one narrow map per scan); the oracles replay the same hashing as SQL
-fragments (functions/sqlkit.py), and the kernel is pinned to them.
+one narrow ``mapInArrow`` per scan); the oracles replay the same hashing
+as SQL fragments (functions/sqlkit.py), and the kernel is pinned to them.
 
 Scale design (100 TB / 10^12 docs):
   * exact           — one hash-aggregate shuffle on md5(normalized text);
                       map-side partial agg, AQE-coalesced. O(n).
-  * minhash_lsh     — signatures from the kernel in the scan stage; only
-                      the (band_idx, band_key) equi-join shuffles — the
+  * minhash_lsh     — signatures from the kernel in the scan stage,
+                      persisted; candidates from the (band_idx,
+                      band_key) equi-join of slim band rows — the
                       standard MinHash-LSH band trick, so candidate
                       generation is O(n·bands) not O(n²).  ONE candidate
                       rule (:func:`band_join`: keep a pair on its first
                       colliding band) serves every MinHash path, simhash,
-                      SRP-LSH and media phash.
+                      SRP-LSH and media phash.  The jaccard verify
+                      broadcasts the candidate pairs and streams the
+                      persisted shingle frame past them once per pair
+                      side, so only candidates' shingle sets are ever
+                      shipped — never the corpus's.
   * simhash         — 32-bit fingerprints in-scan; the same band join on
                       8-bit sub-keys (pigeonhole: hamming ≤ 3 pairs must
                       share one of 4 bands) then exact hamming verify.
@@ -392,13 +397,20 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures → banded LSH candidate join → exact jaccard
     verify ≥ τ.
 
-    The candidate join is an equi-join on (band_idx, band_key): at 10^12
-    docs this is the only shuffle, keyed by a near-uniform 4-minhash
-    concatenation — no O(n²) stage anywhere.  Signatures come from the
-    vectorized kernel (one Arrow map; persisted because the frame feeds
-    both self-join sides AND the verify join).  The band rows are slim
-    — only keys cross the band shuffle — and the verify joins the
-    persisted shingle sets back for the few surviving pairs."""
+    Signatures come from the vectorized kernel (one Arrow map over the
+    scan), persisted because the frame feeds both band-join sides AND
+    both verify joins.  The band rows are slim — only keys cross the
+    (band_idx, band_key) equi-join — so candidate generation is
+    O(n·bands), keyed by a near-uniform 4-minhash concatenation, with
+    no O(n²) stage anywhere.
+
+    The verify builds on the CANDIDATE side: the candidate pairs are
+    broadcast and the persisted shingle frame streams past them once
+    per pair side (``sh`` of side a, then of side b).  Left to AQE, the
+    cached frame's exact size made IT the broadcast side, so every task
+    deserialized the whole corpus's shingle sets — a serial cost of
+    corpus size.  The hint assumes candidates ≪ corpus (about the
+    near-duplicate rate × n)."""
     from ..functions.sigkernel import signature_frame
 
     s = track_cache(signature_frame(
@@ -409,10 +421,14 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b.doc_id").alias("doc_id_b"),
     )
     sh = s.select("doc_id", "sh", "n_sh")
-    jac = K.jaccard("sa.sh", "sb.sh", "sa.n_sh", "sb.n_sh", SPARK)
+    side_a = F.broadcast(cand).join(
+        sh.alias("sa"), F.col("doc_id_a") == F.col("sa.doc_id")
+    ).select("doc_id_a", "doc_id_b",
+             F.col("sa.sh").alias("sh_a"), F.col("sa.n_sh").alias("n_a"))
+    jac = K.jaccard("sh_a", "sb.sh", "n_a", "sb.n_sh", SPARK)
     return (
-        cand.join(sh.alias("sa"), cand["doc_id_a"] == F.col("sa.doc_id"))
-        .join(sh.alias("sb"), cand["doc_id_b"] == F.col("sb.doc_id"))
+        F.broadcast(side_a)
+        .join(sh.alias("sb"), F.col("doc_id_b") == F.col("sb.doc_id"))
         .select("doc_id_a", "doc_id_b", F.expr(jac).alias("jacc"))
         .filter(F.col("jacc") >= JACCARD_TAU)
     )

@@ -247,6 +247,44 @@ def test_lsh_pairs_have_no_pair_distinct(spark, name, pair):
     assert "Union" not in plan, plan
 
 
+def _subtrees(plan: str, node: str):
+    """Text of every subtree of ``plan`` rooted at a ``node`` line: the
+    lines after it, up to the first one whose node name starts at or
+    left of the root's column."""
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        col = line.find(node)
+        if col < 0:
+            continue
+        sub = [line]
+        for nxt in lines[i + 1:]:
+            if len(nxt) - len(nxt.lstrip(" :+-")) <= col:
+                break
+            sub.append(nxt)
+        yield "\n".join(sub)
+
+
+def test_minhash_lsh_verify_builds_on_candidates(spark):
+    """The jaccard verify of dedup_minhash_lsh broadcasts the candidate
+    pairs, not the persisted signature frame: every broadcast that
+    carries the frame's ``sh`` column has the band join below it (it
+    holds shingle sets of candidates only), so no task deserializes a
+    copy of the whole corpus's shingle sets. Checked on the executed
+    adaptive plan, where AQE has seen the cached frame's exact size."""
+    import re
+
+    from pdf_extract_spark.queries import QUERIES
+
+    df = QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
+    df.collect()
+    plan = _physical(df)
+    carrying = [sub for sub in _subtrees(plan, "BroadcastExchange")
+                if re.search(r"InMemoryTableScan \[[^\]]*\bsh#", sub)]
+    assert carrying, plan
+    for sub in carrying:
+        assert re.search(r"Join \[band_idx#", sub), sub
+
+
 def test_neardup_stream_plan_has_no_rehash(spark):
     """neardup_stream tells a pair's first colliding band from the
     carried band-key arrays, not by re-folding minhashes through
@@ -381,13 +419,15 @@ def test_sketch_append_lifecycle(spark, tmp_path):
 
 def test_simhash_fingerprints_is_narrow_kernel(spark):
     """The in-kernel simhash is a zero-shuffle plan: scan → (gated
-    round-robin repartition) → one Arrow map. No hash Exchange, no
+    round-robin repartition) → one ``mapInArrow`` (Arrow in and out, no
+    pandas conversion on either side). No hash Exchange, no
     aggregate — the r4 explode + 32-vote form shuffled every shingle
     hash on doc_id."""
     from pdf_extract_spark.queries import QUERIES
 
     plan = _physical(QUERIES["simhash_fingerprints"](spark, SF_DIR))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
+    assert "MapInPandas" not in plan
     assert "Exchange hashpartitioning" not in plan
     assert "HashAggregate" not in plan
 

@@ -253,3 +253,142 @@ def test_sigkernel_matches_duckdb_on_random_unicode(tokens):
     assert n_sh[0] == row[1]
     assert int(mh_cols[0][0]) == row[2]
     assert int(mh_cols[7][0]) == row[3]
+
+
+# ---------------------------------------------------------------------------
+# the kernel signs a whole batch: pin every doc of a multi-doc batch
+# ---------------------------------------------------------------------------
+
+#: edge docs in one batch: null / empty / whitespace-only texts,
+#: leading, trailing and multi-space runs, tab and NBSP (NOT
+#: separators — only U+0020 is), astral codepoints, 0-2 token docs
+#: next to long ones, so a token merged across a document boundary
+#: changes some doc's hashes
+KERNEL_EDGE_BATCH = [
+    "the quick brown fox", None, "", "   ", " lead and trail ",
+    "x  y   z  w", "tab\tis\ta letter", "nbsp is a letter",
+    "astral \U0001F600 \U0001D11E codepoints \U0001F600 \U0001D11E",
+    "solo", "two tokens", " ", "a b a b a b a b", None,
+    "  \t", "end of batch docs",
+]
+
+
+def _kernel_docs(texts, w, form):
+    """Per-doc (sh, mh0, mh7, simhash) from ONE kernel call over the
+    batch, in set mode, plus per-doc sh in positional mode. ``form``
+    "sliced" signs a slice (non-zero offset) of a bigger array whose
+    outer docs must not leak in; "large" a large_string array (what
+    Spark sends under ``spark.sql.execution.arrow.useLargeVarTypes``)."""
+    import pyarrow as pa
+
+    from pdf_extract_spark.functions.sigkernel import sign_batch
+
+    if form == "sliced":
+        arr = pa.array(["outer head doc", *texts, "outer tail doc"])
+        arr = arr.slice(1, len(texts))
+    else:
+        arr = pa.array(texts, pa.large_string() if form == "large"
+                       else pa.string())
+    out = []
+    for distinct in (True, False):
+        s = sign_batch(arr, w, distinct, distinct, distinct, distinct)
+        off, vals = s["offsets"], s["values"].tolist()
+        rows = []
+        for i in range(len(texts)):
+            if not s["valid"][i]:
+                rows.append(None)
+                continue
+            sh = vals[off[i]:off[i + 1]]
+            assert int(s["n_sh"][i]) == len(sh)
+            rows.append((sh, int(s["minhash"][0][i]),
+                         int(s["minhash"][7][i]), int(s["simhash"][i]))
+                        if distinct else sh)
+        out.append(rows)
+    return out
+
+
+def _duckdb_docs(texts, w):
+    """The same per-doc values from the sqlkit DuckDB fragments: set
+    mode (``shingle_hashes`` + minhash + simhash) and positional mode
+    (``gram_hashes_duck``, the exact-substring oracle's fragment)."""
+    import duckdb
+    import pyarrow as pa
+
+    from pdf_extract_spark.functions import sqlkit as K
+    from pdf_extract_spark.functions.textstats import gram_hashes_duck
+
+    D = K.DUCK
+    toks = K.tokens("text", D)
+    grams = gram_hashes_duck("toks", w)
+    con = duckdb.connect()
+    con.register("documents", pa.table({
+        "i": list(range(len(texts))), "text": pa.array(texts, pa.string())}))
+    rows = con.execute(f"""
+        select i, sh, {K.minhash('sh', 0, D)}, {K.minhash('sh', 7, D)},
+               {K.simhash('sh', D)}, g
+        from (select i, {K.shingle_hashes('text', w, D)} as sh,
+                     {grams} as g
+              from (select i, text, {toks} as toks from documents))
+        order by i""").fetchall()
+    return ([None if r[1] is None else (r[1], r[2], r[3], r[4])
+             for r in rows],
+            [r[5] for r in rows])
+
+
+def _assert_batch_matches_duckdb(texts, w):
+    want_set, want_pos = _duckdb_docs(texts, w)
+    for form in ("plain", "sliced", "large"):
+        got_set, got_pos = _kernel_docs(texts, w, form)
+        for t, g, d, gp, dp in zip(texts, got_set, want_set, got_pos,
+                                   want_pos):
+            if t is None:
+                # a NULL text has NULL signatures, as in the Spark HOF
+                # form (DuckDB's fragments read it as the empty doc)
+                assert g is None and gp is None
+                continue
+            # sh as a SET (DuckDB's list_distinct does not keep
+            # first-occurrence order), same size: no hash lost
+            assert sorted(g[0]) == sorted(d[0]) and len(g[0]) == len(d[0]), t
+            assert g[1:] == d[1:], t
+            # positional mode is an ORDERED pin
+            assert gp == dp, t
+
+
+def test_sigkernel_batch_edge_cases_match_duckdb():
+    """Every doc of one multi-document batch (plain, sliced and
+    large_string) equals
+    the DuckDB fragments in set and positional mode, at w = 1, 2, 3
+    and 8 (8 is the exact-substring and decontamination width)."""
+    for w in (1, 2, 3, 8):
+        _assert_batch_matches_duckdb(KERNEL_EDGE_BATCH, w)
+
+
+_kernel_token = st.text(
+    alphabet=st.one_of(
+        st.sampled_from(["\t", " ", "\U0001F600", "\U0001D11E", "é"]),
+        st.characters(codec="utf-8", exclude_characters=" ",
+                      exclude_categories=("Cs",)),
+    ),
+    min_size=1, max_size=5,
+)
+_kernel_doc = st.one_of(
+    st.none(),
+    st.tuples(
+        st.text(" ", max_size=3),
+        st.lists(st.tuples(st.text(" ", min_size=1, max_size=3),
+                           _kernel_token),
+                 max_size=8),
+        st.text(" ", max_size=2),
+    ).map(lambda d: d[0] + "".join(sep + t for sep, t in d[1])[1:]
+          + d[2]),
+)
+
+
+@given(st.lists(_kernel_doc, min_size=2, max_size=12))
+@settings(max_examples=30, deadline=None)
+def test_sigkernel_batch_matches_duckdb_on_random_batches(texts):
+    """Property form of the batch pin: random batches of null, empty,
+    space-run and short docs over a unicode alphabet with tab, NBSP and
+    astral codepoints, signed in ONE kernel call, plain, sliced and
+    large_string."""
+    _assert_batch_matches_duckdb(texts, 3)

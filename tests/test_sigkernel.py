@@ -105,15 +105,22 @@ def test_kernel_matches_duckdb_on_short_docs(spark):
 
 
 def test_polyhash_strings_matches_bytes_twin():
-    """On pure-ASCII input codepoints == bytes, so the string kernel and
-    the byte block-Horner twin must agree at every length."""
+    """On pure-ASCII input codepoints == bytes, so the kernel's segment
+    hash (the token hash every shingle hash is composed from) and the
+    byte block-Horner twin must agree at every length — with junk
+    codepoints between the segments, which the hash must skip."""
     import numpy as np
 
-    from pdf_extract_spark.functions.sigkernel import polyhash_strings
+    from pdf_extract_spark.functions.sigkernel import segment_polyhash
     from pdf_extract_spark.functions.sqlkit import polyhash_bytes
 
-    cases = ["", "a", "abc xyz", "q" * 1023, "r s t " * 700, "Z" * 70000]
-    got = polyhash_strings(cases)
+    cases = ["a", "abc xyz", "q" * 1023, "r s t " * 700, "Z" * 70000]
+    blob = "#".join([""] + cases + [""])
+    codes = np.frombuffer(blob.encode("utf-32-le"),
+                          dtype=np.uint32).astype(np.int64)
+    lens = np.array([len(c) for c in cases], dtype=np.int64)
+    starts = 1 + np.cumsum(lens + 1) - (lens + 1)
+    got = segment_polyhash(codes, starts, lens)
     want = np.array([polyhash_bytes(c.encode()) for c in cases])
     assert (got == want).all()
 
