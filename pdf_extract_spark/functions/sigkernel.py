@@ -33,12 +33,12 @@ pandas —
 ``sh`` leaves as a ``pa.ListArray`` built from the offsets + values
 those steps produce.
 
-Bit-identity with the HOF fragments is pinned by
+Bit-identity with the DuckDB fragments is pinned by
 tests/test_sigkernel.py on the real corpus plus adversarial synthetic
-docs (unicode, hash-colliding shingles, short docs), and with the DuckDB
-fragments per multi-document batch by tests/test_properties.py; the
-DuckDB oracles in operators/dedup.py therefore keep checking this path
-end-to-end.
+docs (unicode, hash-colliding shingles, short docs; ``sh``
+element-for-element) and per multi-document batch by
+tests/test_properties.py; the DuckDB oracles in operators/dedup.py
+therefore keep checking this path end-to-end.
 
 Scale shape: the kernel is a NARROW Arrow map over the scan — no
 shuffle, no driver involvement. Measured on one core of a shared 4-core
@@ -60,7 +60,6 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -70,7 +69,6 @@ from pyspark.sql.types import (
 )
 
 from . import sqlkit as K
-from .sqlkit import SPARK
 
 N_MINHASH = len(K.MINHASH_PARAMS)
 
@@ -276,9 +274,9 @@ def signature_frame(docs: DataFrame, w: int,
                     pad_short: bool = True) -> DataFrame:
     """``doc_id, sh, n_sh[, mh0..mh7][, simhash]`` for a ``doc_id, text``
     frame, computed by the vectorized kernel as a narrow ``mapInArrow``
-    over the scan. Values are bit-identical to the HOF-fragment form
-    (:func:`hof_signature_frame`) — pinned by tests — so every DuckDB
-    oracle built from sqlkit fragments keeps verifying this path."""
+    over the scan. Values are bit-identical to the sqlkit fragments'
+    DuckDB form — pinned by tests — so every DuckDB oracle built from
+    them keeps verifying this path."""
     fields = [docs.schema["doc_id"],
               StructField("sh", ArrayType(LongType()), True),
               StructField("n_sh", IntegerType(), True)]
@@ -311,22 +309,3 @@ def signature_frame(docs: DataFrame, w: int,
 
     return docs.select("doc_id", "text").mapInArrow(gen, schema)
 
-
-def hof_signature_frame(docs: DataFrame, w: int,
-                        minhash: bool = True,
-                        simhash: bool = False) -> DataFrame:
-    """The ORACLE form: the same signature columns built from the
-    Catalyst higher-order-function fragments (interpreted, KB/s/core —
-    test scale only). The DuckDB oracles replay exactly these
-    fragments; tests/test_sigkernel.py pins kernel == HOF, closing the
-    kernel → HOF → DuckDB equality chain."""
-    sh = K.shingle_hashes("text", w, SPARK)
-    out = docs.select("doc_id", F.expr(sh).alias("sh")).withColumn(
-        "n_sh", F.expr(K.asize("sh", SPARK)))
-    if minhash:
-        out = out.select(
-            "*", *[F.expr(K.minhash("sh", j, SPARK)).alias(f"mh{j}")
-                   for j in range(N_MINHASH)])
-    if simhash:
-        out = out.withColumn("simhash", F.expr(K.simhash("sh", SPARK)))
-    return out

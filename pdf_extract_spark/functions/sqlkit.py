@@ -13,9 +13,9 @@ Spark DataFrame query and its DuckDB oracle compute bit-identical values:
     whose element order differs between engines.
 
 The shingle / minhash / simhash fragments are the REFERENCE definitions of
-the signature hashing: the DuckDB oracles replay them, and Spark evaluates
-them only in ``sigkernel.hof_signature_frame``, against which the vectorized
-kernel that the dedup operators run is pinned (tests/test_sigkernel.py).
+the signature hashing: the DuckDB oracles replay them, and the vectorized
+kernel the dedup operators run (``sigkernel.signature_frame``) is pinned to
+their DuckDB form (tests/test_sigkernel.py, tests/test_properties.py).
 The set and vector fragments (jaccard, containment, hamming, cosine, ...)
 run Spark-side as plain Catalyst expressions in the operators' verify
 steps.

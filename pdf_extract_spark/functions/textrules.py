@@ -4,11 +4,11 @@ Functionally equivalent to the reference's JSON rule engine
 (Config.java:95-145 loads per-language rule lists; Common.replaceText
 Common.java:529-542 applies ordered regex search/replace; rule-based line
 join at PDFExtract.java:919-999). Re-expressed as plain Python data +
-vectorized pandas application; the default ruleset reproduces the
-documented semantics of the reference's shipped config (PDFExtract.json:
-ligature fold, smart-quote fold, ellipsis/dash fold, NBSP strip; join rules
-for trailing commas / hyphen-split words / lowercase continuations;
-absolute-EOF sentence boundaries).
+per-string regex chains behind one combined gate regex; the default
+ruleset reproduces the documented semantics of the reference's shipped
+config (PDFExtract.json: ligature fold, smart-quote fold, ellipsis/dash
+fold, NBSP strip; join rules for trailing commas / hyphen-split words /
+lowercase continuations; absolute-EOF sentence boundaries).
 """
 
 from __future__ import annotations
@@ -265,28 +265,13 @@ class RuleSet:
         self._chain_cache[key] = hit
         return hit
 
-    def normalize_series(self, texts, lang: str | None = None):
-        """Ordered normalize over a pandas Series of strings — one map
-        (one output array) instead of one intermediate Series per rule."""
-        return self._apply_series(texts, lang, "normalize")
+    def normalize_series(self, texts, lang: str | None = None) -> list[str]:
+        """Ordered normalize over a sequence of strings (one document's
+        lines), returned as a list."""
+        return [self._apply_str(t, lang, "normalize") for t in texts]
 
-    def repair_series(self, texts, lang: str | None = None):
-        return self._apply_series(texts, lang, "repair")
-
-    def _apply_series(self, texts, lang: str | None, kind: str):
-        rules, gate = self._chain(lang, kind)
-        if not rules:
-            return texts
-        search = gate.search if gate is not None else None
-
-        def f(t):
-            if search is not None and search(t) is None:
-                return t
-            for pat, rep in rules:
-                t = pat.sub(rep, t)
-            return t
-
-        return texts.map(f)
+    def repair_series(self, texts, lang: str | None = None) -> list[str]:
+        return [self._apply_str(t, lang, "repair") for t in texts]
 
     def normalize_str(self, text: str, lang: str | None = None) -> str:
         return self._apply_str(text, lang, "normalize")

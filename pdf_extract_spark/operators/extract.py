@@ -12,8 +12,9 @@ over in-memory structures:
   span assembly (text lines in reading order, media refs interleaved).
 
 Vectorization note: the per-doc passes are sequential over at most a few
-hundred lines; pandas is used only for the doc-level regex chains
-(normalize/repair over one Series per document).
+hundred lines of plain Python lists; the doc-level regex chains
+(normalize/repair) run once per line behind one combined gate regex
+(functions/textrules.py).
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ import zlib
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 
 from ..functions import langid
 from ..functions.textops import interpret_page
@@ -48,6 +48,20 @@ class DocResult:
 
 
 _DEFAULT_RULES = RuleSet()
+
+
+def lang_distribution(
+        counts: dict[str, int]) -> tuple[str, list[tuple[str, float, int]]]:
+    """Doc language and ``(lang, percent, rows)`` distribution from
+    per-line language counts, by falling count, ties by language code
+    (the reference's ``<languages>`` block, PDFExtract.java:1283-1285).
+    A zero count (a declared language with no detected line) can name
+    the language but gives no distribution when nothing else counted."""
+    ordered = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+    total = sum(counts.values())
+    lang = ordered[0][0] if ordered else ""
+    return lang, ([(l, c * 100.0 / total, c) for l, c in ordered]
+                  if total else [])
 
 
 def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
@@ -154,9 +168,9 @@ def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
         if drop:
             lines = [ln for i, ln in enumerate(lines) if i not in drop]
 
-    # F1 normalize (common rules) — one vectorized regex chain per document
+    # F1 normalize (common rules) — one regex chain per document
     if lines:
-        texts = rules.normalize_series(pd.Series([ln.text for ln in lines]))
+        texts = rules.normalize_series([ln.text for ln in lines])
         kept: list[Line] = []
         for ln, t in zip(lines, texts):
             t = t.strip()
@@ -195,13 +209,7 @@ def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
             ln.lang = langid.detect_reliable(ln.text) or ""
             if ln.lang:
                 counts[ln.lang] = counts.get(ln.lang, 0) + 1
-        if counts:
-            total = sum(counts.values())
-            ordered = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-            res.lang = ordered[0][0]
-            res.lang_dist = [
-                (l, c * 100.0 / total, c) for l, c in ordered
-            ]
+        res.lang, res.lang_dist = lang_distribution(counts)
         for ln in lines:
             if not ln.lang:
                 ln.lang = res.lang
@@ -223,9 +231,9 @@ def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
         else:
             lines = _sentence_join(lines, sj_scorer)
 
-    # F2 final repair — vectorized chain; per-language on top of common
+    # F2 final repair — one chain; per-language on top of common
     if lines:
-        texts = rules.repair_series(pd.Series([ln.text for ln in lines]))
+        texts = rules.repair_series([ln.text for ln in lines])
         for ln, t in zip(lines, texts):
             ln.text = t
 

@@ -3,8 +3,8 @@ pipeline.
 
 Media payloads are opaque ``binary`` columns with typed metadata; decode /
 feature-extraction runs in Arrow-batched ``mapInPandas`` — the same
-execution shape as the PDF extractor (plans/pipeline.py), so the 100 TB
-properties carry over: narrow map, fine-grained scan splits for oversized
+narrow-map shape as the PDF extractor's ``mapInArrow``
+(plans/pipeline.py), so the 100 TB properties carry over: narrow map, fine-grained scan splits for oversized
 payloads, per-batch memory bounded by ``arrow.maxRecordsPerBatch``.
 
 Decoding is tiered. Formats stdlib can handle decode for REAL

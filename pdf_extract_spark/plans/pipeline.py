@@ -9,9 +9,13 @@ pointer in ``media_ref``); ``kind='text'`` spans pass through
 normalize/repair; ``kind='media'`` spans pass through in order.
 
 Scale design (north rule: 10^12 docs, explicit partitioning/skew):
-  * All per-document compute runs inside ONE ``mapInPandas`` pass — a
+  * All per-document compute runs inside ONE ``mapInArrow`` pass — a
     narrow transformation with ZERO shuffles on the extraction path. Docs
     parallelize across partitions; Catalyst prunes the two input columns.
+    Both sinks (extract_spans, extract_html) are folds over one span
+    walker (``_walk_spans``) that reads each batch's ``doc_id``/``spans``
+    as plain Python values and writes rows straight back to Arrow — no
+    pandas on the extraction path.
   * Skew: the reference measured a 23× latency spread between its smallest
     and largest fixture (BASELINE.md). We split the input into a small-doc
     lane (hash-partitioned on doc_id) and a big-doc lane (round-robin so
@@ -31,15 +35,17 @@ import uuid
 from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -111,6 +117,8 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
+_OUTPUT_ARROW = to_arrow_schema(OUTPUT_SCHEMA)
+
 # Docs whose pdf payload exceeds this many base64 chars go to the big-doc
 # lane (~1.5 MB of PDF ≈ the reference's skew threshold territory).
 BIG_DOC_B64_CHARS = 2_000_000
@@ -174,12 +182,76 @@ def _get_scorer(sj_model, sj_threshold: float | None):
     return sc
 
 
+def _clean(rules, text: str | None) -> str:
+    """The one text-line cleaning of both sinks: whitespace collapse (P2),
+    normalize (F1), repair (F2), strip."""
+    from ..operators.layout import _collapse_ws
+
+    return rules.repair_str(
+        rules.normalize_str(_collapse_ws(text or ""))).strip()
+
+
+def _walk_spans(spans: list | None, rules, run_pdf) -> Iterator[tuple[str, Any]]:
+    """One document's spans in offset order, one ``(kind, item)`` per span:
+
+      * ``pdf``: ``run_pdf(payload)`` — the sink's ``extract_pdf`` call,
+        a ``DocResult`` — or None when the payload is missing;
+      * ``html``: ``(parts, lang_attr)`` after the DOM main-content strip
+        (functions/htmlextract.py) — ``parts`` are ``(kind, text,
+        media_ref, lang)`` in page order: cleaned non-empty text lines
+        with their reliable language ("" when unsure), and media refs;
+        ``lang_attr`` is the declared ``<html lang>`` ("");
+      * ``text``: the cleaned text ("" when nothing is left);
+      * ``media``: the ref.
+
+    Spans with a null offset follow the numbered ones, in input order;
+    null entries and spans of any other kind are skipped."""
+    from ..functions import langid
+    from ..functions.htmlextract import parse_main
+
+    items = [s for s in spans or () if s is not None]
+    items.sort(key=lambda s: (s["offset"] is None, s["offset"] or 0))
+    for span in items:
+        kind = span["kind"]
+        if kind == "pdf":
+            pdf = _pdf_payload(span)
+            yield kind, run_pdf(pdf) if pdf is not None else None
+        elif kind == "html":
+            parsed = parse_main(span["text"] or "")
+            parts = []
+            for k, t, m in parsed.out:
+                if k == "media":
+                    parts.append(("media", "", m, ""))
+                elif txt := _clean(rules, t):
+                    parts.append(
+                        ("text", txt, "", langid.detect_reliable(txt) or ""))
+            yield kind, (parts, parsed.lang_attr)
+        elif kind == "text":
+            yield kind, _clean(rules, span["text"])
+        elif kind == "media":
+            yield kind, span["media_ref"] or ""
+
+
+def _map_docs(batches: Iterator[pa.RecordBatch], one_doc,
+              schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """The ``mapInArrow`` body of both sinks: one output row per input
+    document, built by ``one_doc(doc_id, spans)`` from plain Python
+    values."""
+    for rb in batches:
+        rows = [
+            one_doc(str(doc_id), spans)
+            for doc_id, spans in zip(rb.column("doc_id").to_pylist(),
+                                     rb.column("spans").to_pylist())
+        ]
+        yield pa.RecordBatch.from_pylist(rows, schema=schema)
+
+
 def _extract_batches(
-    batches: Iterator[pd.DataFrame], config: dict | None, max_pages: int | None,
-    sj_model=None, sj_threshold: float | None = None,
+    batches: Iterator[pa.RecordBatch], config: dict | None,
+    max_pages: int | None, sj_model=None, sj_threshold: float | None = None,
     time_budget_s: float | None = None, hooks: dict | None = None,
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: one output row per input document."""
+) -> Iterator[pa.RecordBatch]:
+    """extract_spans' worker: one OUTPUT_SCHEMA row per input document."""
     from ..operators.extract import extract_pdf
 
     rules = _get_ruleset(config)
@@ -200,125 +272,84 @@ def _extract_batches(
             scorer = scorers
         elif any_missing:
             scorer = "missing"
-    for pdf_batch in batches:
-        out_rows = []
-        for doc_id, spans in zip(pdf_batch["doc_id"], pdf_batch["spans"]):
-            t0 = time.monotonic()
-            row = _extract_one(str(doc_id), spans, rules, max_pages, extract_pdf,
-                               scorer, time_budget_s, hooks)
-            row["extract_ms"] = int((time.monotonic() - t0) * 1000)
-            out_rows.append(row)
-        yield pd.DataFrame(out_rows, columns=[f.name for f in OUTPUT_SCHEMA.fields])
+    sj_missing = scorer == "missing"
+    sj_scorer = None if sj_missing else scorer
+
+    def run_pdf(pdf_bytes: bytes):
+        return extract_pdf(pdf_bytes, rules, max_pages=max_pages,
+                           sj_scorer=sj_scorer,
+                           time_budget_s=time_budget_s, hooks=hooks)
+
+    def one_doc(doc_id: str, spans) -> dict:
+        t0 = time.monotonic()
+        row = _extract_one(_walk_spans(spans, rules, run_pdf), sj_missing)
+        row["doc_id"] = doc_id
+        row["extract_ms"] = int((time.monotonic() - t0) * 1000)
+        return row
+
+    return _map_docs(batches, one_doc, _OUTPUT_ARROW)
 
 
-def _extract_one(doc_id: str, spans, rules, max_pages, extract_pdf,
-                 scorer=None, time_budget_s: float | None = None,
-                 hooks: dict | None = None) -> dict:
-    out_spans: list[dict] = []
+def _extract_one(items, sj_missing: bool) -> dict:
+    """extract_spans' fold over the walker: output spans renumbered in
+    order, media passed through, counts summed; the first span with a
+    language names the document's (with its distribution)."""
+    from ..operators.extract import lang_distribution
+
+    out: list[tuple[str, str, str]] = []
     lang = ""
-    lang_dist: list[dict] = []
-    warnings: list[dict] = []
+    lang_dist: list = []
+    warnings: list[tuple[str, str, str]] = []
     error = None
     n_pages = n_lines = n_media = 0
     permission = None
-
-    sj_scorer = None
-    if scorer == "missing":
+    if sj_missing:
         # model path configured but unreadable — reference degrades to a
         # warning and skips the stage (PDFExtract.java:1299-1324)
-        warnings.append(
-            {"method": "sentencejoin", "detail": "model not found",
-             "suggestion": "check sentence-join model prefix path"}
-        )
-    elif scorer is not None:
-        sj_scorer = scorer
-
-    items = sorted(spans if spans is not None else [], key=lambda s: s["offset"])
-    for span in items:
-        kind = span["kind"]
+        warnings.append(("sentencejoin", "model not found",
+                         "check sentence-join model prefix path"))
+    for kind, item in items:
         if kind == "pdf":
-            pdf_bytes = _pdf_payload(span)
-            if pdf_bytes is None:
+            if item is None:
                 error = "pdf: missing payload"
-                warnings.append(
-                    {"method": "payload", "detail": "no base64/text payload",
-                     "suggestion": "provide base64 body in text"}
-                )
+                warnings.append(("payload", "no base64/text payload",
+                                 "provide base64 body in text"))
                 continue
-            res = extract_pdf(pdf_bytes, rules, max_pages=max_pages,
-                              sj_scorer=sj_scorer,
-                              time_budget_s=time_budget_s, hooks=hooks)
             if permission is None:
-                permission = res.permission
-            n_pages += res.n_pages
-            n_lines += res.n_lines
-            n_media += res.n_media
-            if res.error:
-                error = res.error
-            if res.lang and not lang:
-                lang = res.lang
-                lang_dist = [
-                    {"lang": l, "percent": float(p), "rows": int(c)}
-                    for l, p, c in res.lang_dist
-                ]
-            warnings.extend(
-                {"method": m, "detail": d, "suggestion": s}
-                for m, d, s in res.warnings
-            )
-            out_spans.extend(
-                {"kind": k, "text": t, "media_ref": m} for k, t, m, _ in res.spans
-            )
+                permission = item.permission
+            n_pages += item.n_pages
+            n_lines += item.n_lines
+            n_media += item.n_media
+            if item.error:
+                error = item.error
+            if item.lang and not lang:
+                lang, lang_dist = item.lang, item.lang_dist
+            warnings.extend(item.warnings)
+            out.extend(s[:3] for s in item.spans)
         elif kind == "html":
             # north-rule HTML tier: DOM-heuristic boilerplate strip →
-            # ordered text/media spans (functions/htmlextract.py)
-            from ..functions import langid
-            from ..functions.htmlextract import parse_main
-            from ..operators.layout import _collapse_ws
-
-            parsed = parse_main(span["text"] or "")
+            # ordered text/media spans
+            parts, lang_attr = item
             counts: dict[str, int] = {}
-            for k2, t2, m2 in parsed.out:
-                if k2 == "media":
-                    out_spans.append(
-                        {"kind": "media", "text": "", "media_ref": m2})
+            for k, t, m, ln in parts:
+                out.append((k, t, m))
+                if k == "media":
                     n_media += 1
                     continue
-                txt = rules.repair_str(
-                    rules.normalize_str(_collapse_ws(t2)))
-                if not txt.strip():
-                    continue
-                out_spans.append(
-                    {"kind": "text", "text": txt.strip(), "media_ref": ""})
                 n_lines += 1
-                ln = langid.detect_reliable(txt)
                 if ln:
                     counts[ln] = counts.get(ln, 0) + 1
-            if counts and not lang:
-                total = sum(counts.values())
-                ordered = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-                lang = ordered[0][0]
-                lang_dist = [
-                    {"lang": l, "percent": c * 100.0 / total, "rows": c}
-                    for l, c in ordered
-                ]
-            elif not lang and parsed.lang_attr:
+            if not lang:
+                lang, lang_dist = lang_distribution(counts)
                 # declared <html lang> as fallback when no line detected
-                lang = parsed.lang_attr
+                lang = lang or lang_attr
         elif kind == "text":
-            from ..operators.layout import _collapse_ws
-
-            txt = rules.repair_str(rules.normalize_str(_collapse_ws(span["text"] or "")))
-            if txt.strip():
-                out_spans.append({"kind": "text", "text": txt.strip(), "media_ref": ""})
-        elif kind == "media":
-            out_spans.append(
-                {"kind": "media", "text": "", "media_ref": span["media_ref"] or ""}
-            )
-    for i, s in enumerate(out_spans):
-        s["offset"] = i
+            if item:
+                out.append(("text", item, ""))
+        else:
+            out.append(("media", "", item))
     return dict(
-        doc_id=doc_id,
-        spans=out_spans,
+        spans=[(k, t, m, i) for i, (k, t, m) in enumerate(out)],
         lang=lang,
         lang_dist=lang_dist,
         warnings=warnings,
@@ -326,19 +357,18 @@ def _extract_one(doc_id: str, spans, rules, max_pages, extract_pdf,
         n_pages=n_pages,
         n_lines=n_lines,
         n_media=n_media,
-        extract_ms=0,
         permission=permission,
     )
 
 
-def _pdf_payload(span) -> bytes | None:
-    txt = span.get("text") if hasattr(span, "get") else span["text"]
+def _pdf_payload(span: dict) -> bytes | None:
+    txt = span["text"]
     if txt:
         try:
             return base64.b64decode(txt, validate=False)
         except (ValueError, TypeError):
             return None
-    ref = span.get("media_ref") if hasattr(span, "get") else span["media_ref"]
+    ref = span["media_ref"]
     if ref and ref.startswith("file://"):
         try:
             with open(ref[7:], "rb") as fh:
@@ -346,6 +376,21 @@ def _pdf_payload(span) -> bytes | None:
         except OSError:
             return None
     return None
+
+
+def _span_input(df: DataFrame) -> DataFrame:
+    """The two sink inputs, pruned before the UDF, with ``spans`` as
+    SPAN_TYPE structs. Map-typed spans (what ``spark.createDataFrame``
+    infers from dict spans, every value a string) are coerced here once,
+    offset cast to int, so the walker sees one shape and offsets sort as
+    numbers; a non-numeric offset becomes null."""
+    df = df.select("doc_id", "spans")
+    if isinstance(df.schema["spans"].dataType.elementType, MapType):
+        df = df.withColumn("spans", F.transform("spans", lambda s: F.struct(
+            s["kind"].alias("kind"), s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"),
+            s["offset"].try_cast("int").alias("offset"))))
+    return df
 
 
 def extract_spans(
@@ -370,11 +415,10 @@ def extract_spans(
     ``hooks`` are the §2.8 Python callables (closure-pickled to
     executors — keep them module-level functions, not lambdas over big
     state)."""
-    spark = df.sparkSession
-    df = df.select("doc_id", "spans")  # column pruning before the UDF
+    df = _span_input(df)
 
     def run(d: DataFrame) -> DataFrame:
-        return d.mapInPandas(
+        return d.mapInArrow(
             lambda it: _extract_batches(it, config, max_pages, sj_model,
                                         sj_threshold, time_budget_s, hooks),
             schema=OUTPUT_SCHEMA,
@@ -452,132 +496,110 @@ HTML_SCHEMA = StructType(
         StructField("error", StringType()),
     ]
 )
+_HTML_ARROW = to_arrow_schema(HTML_SCHEMA)
 
 
 def _html_batches(
-    batches: Iterator[pd.DataFrame], config: dict | None,
-    max_pages: int | None, keep_br: bool
-) -> Iterator[pd.DataFrame]:
-    from ..functions.htmlout import render_document, render_error
+    batches: Iterator[pa.RecordBatch], config: dict | None,
+    max_pages: int | None, keep_br: bool,
+) -> Iterator[pa.RecordBatch]:
+    """extract_html's worker: one HTML_SCHEMA row per input document."""
     from ..operators.extract import extract_pdf
 
     rules = _get_ruleset(config)
-    for b in batches:
-        rows = []
-        for doc_id, spans in zip(b["doc_id"], b["spans"]):
-            # A document may carry several pdf spans: accumulate every
-            # successful span's lines (pagenos offset so pages stay
-            # distinct and ordered) and render ONE combined document;
-            # per-span errors are reported alongside, never paired with
-            # another span's html as if they were one extraction.
-            items = sorted(spans if spans is not None else [],
-                           key=lambda s: s["offset"])
-            all_lines: list = []
-            lang_counts: dict[str, int] = {}
-            warnings: list = []
-            errs: list[str] = []
-            permission = None
-            page_base = 0
-            for span in items:
-                if span["kind"] == "html":
-                    # HTML tier through the S7 sink: each main-content
-                    # block becomes one paragraph on its own "page"
-                    # (the html doc has no page geometry); media refs
-                    # are dropped here, matching the reference's
-                    # image-less HTML output (PDFToHtml.java:52 -i)
-                    from ..functions import langid
-                    from ..functions.htmlextract import parse_main
-                    from ..operators.layout import Line, _collapse_ws
 
-                    parsed = parse_main(span["text"] or "")
-                    page_base += 1
-                    para = 0
-                    for k2, t2, _m2 in parsed.out:
-                        if k2 != "text":
-                            continue
-                        txt = rules.repair_str(
-                            rules.normalize_str(_collapse_ws(t2))).strip()
-                        if not txt:
-                            continue
-                        para += 1
-                        ln_lang = langid.detect_reliable(txt) or ""
-                        if ln_lang:
-                            lang_counts[ln_lang] = (
-                                lang_counts.get(ln_lang, 0) + 1)
-                        all_lines.append(Line(
-                            page_base, 0.0, float(para), 1.0,
-                            float(para) + 0.5, 12.0, "", "", "normal",
-                            "normal", "#000000", txt, 0,
-                            block=para, para=para, lang=ln_lang,
-                        ))
-                    if not para and parsed.lang_attr:
-                        lang_counts.setdefault(parsed.lang_attr, 0)
-                    continue
-                if span["kind"] == "text":
-                    from ..operators.layout import Line, _collapse_ws
+    def run_pdf(pdf_bytes: bytes):
+        return extract_pdf(pdf_bytes, rules, max_pages=max_pages,
+                           keep_lines=True)
 
-                    txt = rules.repair_str(rules.normalize_str(
-                        _collapse_ws(span["text"] or ""))).strip()
-                    if txt:
-                        page_base += 1
-                        all_lines.append(Line(
-                            page_base, 0.0, 1.0, 1.0, 1.5, 12.0, "", "",
-                            "normal", "normal", "#000000", txt, 0,
-                            block=1, para=1,
-                        ))
+    def one_doc(doc_id: str, spans) -> dict:
+        html, err = _html_doc(_walk_spans(spans, rules, run_pdf), keep_br)
+        return {"doc_id": doc_id, "html": html, "error": err}
+
+    return _map_docs(batches, one_doc, _HTML_ARROW)
+
+
+def _html_doc(items, keep_br: bool) -> tuple[str, str | None]:
+    """extract_html's fold over the walker: every span's lines go into ONE
+    rendered document, each span on pages of its own (pdf pagenos offset
+    past the earlier spans'). Per-span errors are reported alongside,
+    never paired with another span's html as if they were one
+    extraction. Media refs are dropped, matching the reference's
+    image-less HTML output (PDFToHtml.java:52 -i)."""
+    from ..functions.htmlout import render_document, render_error
+    from ..operators.extract import lang_distribution
+    from ..operators.layout import Line
+
+    lines: list = []
+    counts: dict[str, int] = {}
+    warnings: list = []
+    errs: list[str] = []
+    permission = None
+    page_base = 0
+    for kind, item in items:
+        if kind == "html":
+            # each main-content block becomes one paragraph on the
+            # span's own "page" (the html doc has no page geometry)
+            parts, lang_attr = item
+            page_base += 1
+            para = 0
+            for k, t, _m, ln in parts:
+                if k != "text":
                     continue
-                if span["kind"] != "pdf":
-                    continue
-                pdf = _pdf_payload(span)
-                if pdf is None:
-                    errs.append("pdf: missing payload")
-                    continue
-                res = extract_pdf(pdf, rules, max_pages=max_pages,
-                                  keep_lines=True)
-                if res.error:
-                    errs.append(res.error)
-                    continue
-                span_max_page = 0
-                for ln in res.lines or []:
-                    ln.pageno += page_base
-                    span_max_page = max(span_max_page, ln.pageno)
-                    all_lines.append(ln)
-                page_base = max(page_base, span_max_page, page_base + res.n_pages)
-                for l, _pct, c in res.lang_dist:
-                    lang_counts[l] = lang_counts.get(l, 0) + c
-                warnings.extend(res.warnings)
-                if res.permission is not None:
-                    permission = res.permission
-            if all_lines or not errs:
-                total = sum(lang_counts.values())
-                ordered = sorted(lang_counts.items(),
-                                 key=lambda kv: (-kv[1], kv[0]))
-                lang = ordered[0][0] if ordered else ""
-                # total can be 0 when the only signal is a declared
-                # <html lang> attribute (count 0, no detected lines)
-                lang_dist = ([(l, c * 100.0 / total, c) for l, c in ordered]
-                             if total else [])
-                html = render_document(
-                    all_lines, lang, lang_dist, warnings,
-                    keep_br=keep_br, permission=permission,
-                )
-            else:
-                html = render_error("; ".join(errs))
-            err = "; ".join(errs) if errs else None
-            rows.append({"doc_id": str(doc_id), "html": html, "error": err})
-        yield pd.DataFrame(rows, columns=["doc_id", "html", "error"])
+                para += 1
+                if ln:
+                    counts[ln] = counts.get(ln, 0) + 1
+                lines.append(Line(
+                    page_base, 0.0, float(para), 1.0, float(para) + 0.5,
+                    12.0, "", "", "normal", "normal", "#000000", t, 0,
+                    block=para, para=para, lang=ln,
+                ))
+            if not para and lang_attr:
+                counts.setdefault(lang_attr, 0)
+        elif kind == "text":
+            if item:
+                page_base += 1
+                lines.append(Line(
+                    page_base, 0.0, 1.0, 1.0, 1.5, 12.0, "", "", "normal",
+                    "normal", "#000000", item, 0, block=1, para=1,
+                ))
+        elif kind == "pdf":
+            if item is None or item.error:
+                errs.append(item.error if item else "pdf: missing payload")
+                continue
+            span_max_page = 0
+            for ln in item.lines or []:
+                ln.pageno += page_base
+                span_max_page = max(span_max_page, ln.pageno)
+                lines.append(ln)
+            page_base = max(page_base, span_max_page,
+                            page_base + item.n_pages)
+            for l, _pct, c in item.lang_dist:
+                counts[l] = counts.get(l, 0) + c
+            warnings.extend(item.warnings)
+            if item.permission is not None:
+                permission = item.permission
+    err = "; ".join(errs) if errs else None
+    if lines or not errs:
+        # the distribution is empty when the only signal is a declared
+        # <html lang> attribute (count 0, no detected lines)
+        lang, lang_dist = lang_distribution(counts)
+        return render_document(lines, lang, lang_dist, warnings,
+                               keep_br=keep_br, permission=permission), err
+    return render_error(err), err
 
 
 def extract_html(df: DataFrame, config: dict | None = None,
                  max_pages: int | None = None,
                  keep_br: bool = False) -> DataFrame:
     """S7 HTML sink: (doc_id, spans) → (doc_id, html, error) in the
-    reference's alignment-optimized format — same narrow Arrow-batched
-    shape as extract_spans."""
-    return df.select("doc_id", "spans").mapInPandas(
+    reference's alignment-optimized format — the same narrow
+    ``mapInArrow`` shape and span walker as extract_spans."""
+    return _span_input(df).mapInArrow(
         lambda it: _html_batches(it, config, max_pages, keep_br),
         schema=HTML_SCHEMA,
     )
+
 
 
 LINEAGE_SCHEMA = [

@@ -5,7 +5,7 @@ The reference's closest analogue is the batch-file mode that tails a
 work list into a thread pool (S3, PDFExtract.java:453-516). Here newly
 arriving files of interleaved documents are discovered by a file-source
 stream and flow through the SAME ``extract_spans`` narrow map used in
-batch (``mapInPandas`` is streaming-safe: stateless, one output row per
+batch (``mapInArrow`` is streaming-safe: stateless, one output row per
 input row), with exactly-once sink semantics from the checkpoint — the
 streaming twin of the batch pipeline's lineage/resume (a failed run
 restarts from the last committed micro-batch instead of anti-joining).

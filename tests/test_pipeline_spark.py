@@ -95,6 +95,50 @@ class TestExtractSpans:
                  for r in pipeline.extract_spans(small_corpus, num_partitions=4).collect()}
         assert plain == laned
 
+    def test_null_offset_sorts_last(self, spark):
+        """A null offset next to numbered ones, or a null span entry,
+        must not kill the job: null-offset spans follow the numbered ones
+        in input order, in both sinks."""
+        def span(text, offset):
+            return {"kind": "text", "text": text, "media_ref": "",
+                    "offset": offset}
+
+        rows = [("d0", [span("late one", None), span("second", 1), None,
+                        span("late two", None), span("first", 0)])]
+        df = spark.createDataFrame(rows, SPANS_DDL)
+        want = ["first", "second", "late one", "late two"]
+        out = pipeline.extract_spans(df).collect()[0]
+        assert [s["text"] for s in out["spans"]] == want
+        html = pipeline.extract_html(df).collect()[0]["html"]
+        assert _positions(html, want) == sorted(_positions(html, want))
+
+    def test_map_typed_spans_sort_numerically(self, spark):
+        """Dict spans infer ``array<map<string,string>>``; their offsets
+        must still sort as numbers (t2 before t10), in both sinks."""
+        texts = [f"t{i}" for i in range(12)]
+        doc = {"doc_id": "m0", "spans": [
+            {"kind": "text", "text": t, "media_ref": "", "offset": i}
+            for i, t in reversed(list(enumerate(texts)))]}
+        df = spark.createDataFrame([doc])
+        assert "map<" in df.schema.simpleString()
+        out = pipeline.extract_spans(df).collect()[0]
+        assert [s["text"] for s in out["spans"]] == texts
+        html = pipeline.extract_html(df).collect()[0]["html"]
+        assert _positions(html, texts) == sorted(_positions(html, texts))
+
+
+SPANS_DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
+             "media_ref:string,offset:int>>")
+
+
+def _positions(html: str, words: list[str]) -> list[int]:
+    """Where each whole word first occurs in a rendered document."""
+    import re
+
+    found = [re.search(rf"\b{re.escape(w)}\b", html) for w in words]
+    assert None not in found, (words, html[:800])
+    return [m.start() for m in found]
+
 
 class TestPipelineRun:
     def test_run_and_resume(self, spark, tmp_path):
@@ -146,22 +190,26 @@ class TestPipelineRun:
 
 
 def test_extraction_plan_is_narrow(spark, tmp_path):
-    """North-rule scale contract: the extraction path over a file source
-    is a pure narrow map — scan → project → mapInPandas, with NO
-    Exchange (shuffle) anywhere, and only the two needed columns read."""
-    from pdf_extract_spark.plans.pipeline import extract_spans
+    """North-rule scale contract: both extraction sinks over a file
+    source are a pure narrow map — scan → project → mapInArrow (no
+    pandas boundary), with NO Exchange (shuffle) anywhere, and only the
+    two needed columns read."""
+    from pyspark.sql import functions as F
+
     from pdf_extract_spark.sources.corpus import corpus_dataframe
 
     path = str(tmp_path / "corpus")
     corpus_dataframe(spark, 4).write.mode("overwrite").parquet(path)
-    df = spark.read.parquet(path).withColumn("extra", __import__(
-        "pyspark.sql.functions", fromlist=["lit"]).lit(1))
-    plan = (extract_spans(df)._jdf.queryExecution()
-            .executedPlan().toString())
-    assert "Exchange" not in plan
-    assert "MapInPandas" in plan
-    # column pruning: the synthetic extra column must not reach the scan
-    assert "extra" not in plan.split("ReadSchema")[1][:400]
+    df = spark.read.parquet(path).withColumn("extra", F.lit(1))
+    for sink in (pipeline.extract_spans, pipeline.extract_html):
+        plan = sink(df)._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, sink.__name__
+        assert "MapInArrow" in plan, sink.__name__
+        assert "MapInPandas" not in plan, sink.__name__
+        # column pruning: the synthetic extra column must not reach the
+        # scan
+        assert "extra" not in plan.split("ReadSchema")[1][:400], \
+            sink.__name__
 
 
 def test_read_pdf_dir_source(spark, tmp_path):

@@ -118,15 +118,18 @@ def test_gated_repartition_skips_parallel_input(spark, tmp_path):
 
 
 def test_extraction_plan_is_narrow(spark):
-    """The flagship extraction is a zero-shuffle narrow map over the
-    scan (BENCH.md §4: narrow beats shuffle for payload tables)."""
-    from pdf_extract_spark.plans.pipeline import extract_spans
+    """The flagship extraction is a zero-shuffle narrow map over an
+    in-memory source too (BENCH.md §4: narrow beats shuffle for payload
+    tables), in both sinks, with no pandas boundary."""
+    from pdf_extract_spark.plans.pipeline import extract_html, extract_spans
     from pdf_extract_spark.sources.corpus import corpus_pandas
 
     df = spark.createDataFrame(corpus_pandas(4, use_fixtures=False))
-    plan = _physical(extract_spans(df))
-    assert "Exchange" not in plan
-    assert "MapInPandas" in plan
+    for sink in (extract_spans, extract_html):
+        plan = _physical(sink(df))
+        assert "Exchange" not in plan, sink.__name__
+        assert "MapInArrow" in plan, sink.__name__
+        assert "MapInPandas" not in plan, sink.__name__
 
 
 def test_ivf_trained_plan_shape(spark):

@@ -1,8 +1,8 @@
 """Bit-identity of the vectorized signature kernel (functions/sigkernel)
-against the HOF-fragment oracle form — the equality chain the dedup tier
-rests on: kernel == Catalyst HOF == DuckDB oracle. A drift of a single
-hash value here would silently change every LSH band key, so the pin is
-exact (arrays element-for-element, not set-wise)."""
+against the DuckDB oracle form — the sqlkit fragments every dedup oracle
+replays. A drift of a single hash value here would silently change
+every LSH band key, so the pin is exact (arrays element-for-element, not
+set-wise)."""
 
 from __future__ import annotations
 
@@ -12,8 +12,8 @@ import pytest
 SF_DIR = "/root/testdata/sf0.001"
 
 #: adversarial docs: unicode (BMP + astral codepoints), repeated
-#: shingles, single-space runs, long tokens.  All have >= 3 tokens so
-#: the HOF form is ANSI-safe (element_at never goes out of bounds).
+#: shingles, single-space runs, long tokens.  All have >= 3 tokens, so
+#: every doc has a full w-token window.
 EDGE_DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
     (2, "a b c"),
@@ -25,9 +25,11 @@ EDGE_DOCS = [
     (8, "samesame " * 40 + "tail end token"),
 ]
 
-#: short docs (< w tokens) exercise the fewer-than-w window join; the
-#: ANSI HOF form would throw on these, so they pin kernel == DuckDB.
+#: short docs (< w tokens) exercise the fewer-than-w window join
 SHORT_DOCS = [(11, "solo"), (12, "two tokens"), (13, "")]
+
+SIG_COLS = ["doc_id", "sh", "n_sh"] + [f"mh{j}" for j in range(8)] + [
+    "simhash"]
 
 
 def _collect(df, cols):
@@ -36,46 +38,77 @@ def _collect(df, cols):
     )
 
 
+def _duckdb_signatures(documents_sql: str, w: int, **tables) -> list:
+    """``SIG_COLS`` rows from the sqlkit DuckDB fragments over a
+    ``(doc_id, text)`` relation. ``sh`` is ordered element-for-element:
+    the positional window hashes (``gram_hashes_duck``, the
+    exact-substring oracle's fragment) with repeats dropped after their
+    first occurrence. That ordered list must hold exactly the set
+    ``shingle_hashes`` gives, which minhash/simhash are computed from."""
+    from pdf_extract_spark.functions import sqlkit as K
+    from pdf_extract_spark.functions.textstats import gram_hashes_duck
+
+    D = K.DUCK
+    con = duckdb.connect()
+    for name, table in tables.items():
+        con.register(name, table)
+    mh = ", ".join(f"{K.minhash('sh', j, D)}" for j in range(8))
+    rows = con.execute(f"""
+        select doc_id,
+               list_filter(g, (x, i) -> list_position(g, x) = i) as ordered,
+               sh, {K.asize('sh', D)}, {mh}, {K.simhash('sh', D)}
+        from (select doc_id, {K.shingle_hashes('text', w, D)} as sh,
+                     {gram_hashes_duck('toks', w)} as g
+              from (select doc_id, text, {K.tokens('text', D)} as toks
+                    from ({documents_sql})))
+        order by doc_id""").fetchall()
+    out = []
+    for doc_id, ordered, sh, *rest in rows:
+        # a doc shorter than w tokens has no full window; its one padded
+        # shingle needs no order
+        ordered = ordered or sh
+        assert sorted(ordered) == sorted(sh), doc_id
+        out.append((doc_id, ordered, *rest))
+    return out
+
+
 def test_kernel_matches_hof_on_corpus(spark):
-    from pdf_extract_spark.functions.sigkernel import (
-        hof_signature_frame,
-        signature_frame,
-    )
+    """The kernel on the sf0.001 corpus equals the DuckDB fragments on
+    the same parquet, every column, sh element-for-element."""
+    from pdf_extract_spark.functions.sigkernel import signature_frame
     from pdf_extract_spark.operators.dedup import SHINGLE_W, _docs
 
-    docs = _docs(spark, SF_DIR)
-    cols = ["doc_id", "sh", "n_sh"] + [f"mh{j}" for j in range(8)] + [
-        "simhash"]
     fast = _collect(
-        signature_frame(docs, SHINGLE_W, minhash=True, simhash=True), cols)
-    slow = _collect(
-        hof_signature_frame(docs, SHINGLE_W, minhash=True, simhash=True),
-        cols)
-    assert len(fast) == len(slow) > 0
-    assert fast == slow
+        signature_frame(_docs(spark, SF_DIR), SHINGLE_W, minhash=True,
+                        simhash=True), SIG_COLS)
+    want = _duckdb_signatures(
+        f"select doc_id, text from read_parquet('{SF_DIR}/documents.parquet')",
+        SHINGLE_W)
+    assert len(fast) == len(want) > 0
+    assert fast == want
 
 
 def test_kernel_matches_hof_on_edge_docs(spark):
-    from pdf_extract_spark.functions.sigkernel import (
-        hof_signature_frame,
-        signature_frame,
-    )
+    """The adversarial docs: kernel == DuckDB fragments, sh
+    element-for-element."""
+    import pyarrow as pa
+
+    from pdf_extract_spark.functions.sigkernel import signature_frame
 
     docs = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
-    cols = ["doc_id", "sh", "n_sh"] + [f"mh{j}" for j in range(8)] + [
-        "simhash"]
     fast = _collect(signature_frame(docs, 3, minhash=True, simhash=True),
-                    cols)
-    slow = _collect(hof_signature_frame(docs, 3, minhash=True, simhash=True),
-                    cols)
-    assert fast == slow
+                    SIG_COLS)
+    ids, texts = zip(*EDGE_DOCS)
+    want = _duckdb_signatures(
+        "select doc_id, text from edge", 3,
+        edge=pa.table({"doc_id": list(ids), "text": list(texts)}))
+    assert fast == want
 
 
 def test_kernel_matches_duckdb_on_short_docs(spark):
     """Docs shorter than w tokens: the single window joins the available
     tokens (DuckDB's out-of-range list index is NULL, concat_ws skips
-    it).  The Spark HOF form is ANSI-strict here, so the pin is kernel
-    == DuckDB — which is the pair the driver's gate actually compares."""
+    it)."""
     from pdf_extract_spark.functions import sqlkit as K
     from pdf_extract_spark.functions.sigkernel import signature_frame
 
@@ -98,8 +131,8 @@ def test_kernel_matches_duckdb_on_short_docs(spark):
         from z order by doc_id
     """).fetchall()
     # sh compares as a SET: DuckDB list_distinct does not preserve
-    # first-occurrence order (registered queries only ever reduce sh
-    # order-insensitively; the ORDER pin is kernel == Spark HOF above)
+    # first-occurrence order (a short doc has at most one shingle; the
+    # ORDER pin is the positional fragment in the two tests above)
     want = sorted((r[0], sorted(r[1]), r[2], r[3], r[4]) for r in got)
     assert fast == want
 

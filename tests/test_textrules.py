@@ -1,6 +1,5 @@
 """Unit tests: normalize/repair/join/eof rules (functions/textrules)."""
 
-import pandas as pd
 import pytest
 
 from pdf_extract_spark.functions.textrules import DEFAULT_CONFIG, RuleSet
@@ -28,8 +27,7 @@ class TestNormalize:
 
     def test_series_matches_scalar(self, rules):
         texts = ["eﬀort ﬁne", "“q” – …", "plain"]
-        ser = rules.normalize_series(pd.Series(texts))
-        assert list(ser) == [rules.normalize_str(t) for t in texts]
+        assert rules.normalize_series(texts) == [rules.normalize_str(t) for t in texts]
 
 
 class TestRepair:
