@@ -2,10 +2,11 @@
 pipeline.
 
 Media payloads are opaque ``binary`` columns with typed metadata; decode /
-feature-extraction runs in Arrow-batched ``mapInPandas`` — the same
-narrow-map shape as the PDF extractor's ``mapInArrow``
-(plans/pipeline.py), so the 100 TB properties carry over: narrow map, fine-grained scan splits for oversized
-payloads, per-batch memory bounded by ``arrow.maxRecordsPerBatch``.
+feature-extraction runs through the package's one Python row map
+(``runtime.map_rows``, a narrow ``mapInArrow``) — the same shape as the
+PDF extractor (plans/pipeline.py), so the 100 TB properties carry over:
+narrow map, fine-grained scan splits for oversized payloads, per-batch
+memory bounded by ``arrow.maxRecordsPerBatch``.
 
 Decoding is tiered. Formats stdlib can handle decode for REAL
 (functions/mediacodec.py): BMP pixel decode with an 8×8 average-hash,
@@ -15,9 +16,12 @@ to ``_decode_stub`` — a deterministic pseudo-decode, clearly marked,
 swapped for full decoders via ``register_decoder``. The Spark-side
 plumbing (schema, batching, UDF signature, partitioning) is identical
 for every tier; the stub is also expressible in SQL, which gives the
-rare chance to oracle-check a pandas-UDF path end-to-end against DuckDB
+rare chance to oracle-check a Python UDF path end-to-end against DuckDB
 (queries.py multimodal_features — synthetic payloads carry no media
-magic, so they stay on the stub path by construction).
+magic, so they stay on the stub path by construction). Nulls follow the
+SQL stub: a null ``media_ref`` or ``media_kind`` passes through as null,
+and so does every stub value derived from it (``polyhash(NULL)`` is
+NULL); a null payload decodes as empty bytes.
 
 Reference parity note: the reference DROPS images at the poppler level
 (``-i`` flag, PDFToHtml.java:52 — issue #56); our engine instead carries
@@ -27,9 +31,9 @@ become features.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -41,7 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.sqlkit import BASE, PRIME
+from ..functions.sqlkit import BASE, PRIME, polyhash_bytes
+from ..runtime import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -66,33 +71,31 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def polyhash_bytes(data: bytes) -> int:
-    """The sqlkit rolling hash, byte-wise — identical to the SQL
-    ``polyhash`` fragment for ASCII payloads.  Vectorized block-Horner
-    (functions/sqlkit.py): multi-MB decode-fallback payloads hash at
-    numpy speed with bit-identical values (r3 VERDICT hot-path fix)."""
-    from ..functions.sqlkit import polyhash_bytes as _ph
-
-    return _ph(data)
-
-
-def _decode_stub(payload: bytes, media_ref: str, kind: str) -> dict:
+def _decode_stub(payload: bytes, media_ref: str | None,
+                 kind: str | None) -> dict:
     """STUB decoder — deterministic pseudo-decode (no image/audio libs in
     this sandbox). Real deployments call ``register_decoder('image',
     pil_decode)`` etc.; raising NotImplementedError here would be the
     honest production default, but the stub keeps the plumbing testable
-    AND SQL-checkable."""
-    href = polyhash_bytes(media_ref.encode("ascii", "replace"))
+    AND SQL-checkable. Dimensions of a null ref and the decoder of a
+    null kind are null, as in the SQL replay."""
+    if media_ref is None:
+        width = height = None
+    else:
+        href = polyhash_bytes(media_ref.encode("ascii", "replace"))
+        width = 64 + (href % 1856)
+        height = 64 + ((href * BASE + 7) % PRIME) % 1016
     return {
         "n_bytes": len(payload),
-        "width": 64 + (href % 1856),
-        "height": 64 + ((href * BASE + 7) % PRIME) % 1016,
+        "width": width,
+        "height": height,
         "phash": polyhash_bytes(payload),
-        "decoder": f"stub:{kind}",
+        "decoder": None if kind is None else f"stub:{kind}",
     }
 
 
-def _default_decode(payload: bytes, media_ref: str, kind: str) -> dict:
+def _default_decode(payload: bytes, media_ref: str | None,
+                    kind: str | None) -> dict:
     """Default decoder chain: REAL stdlib decode when the payload is a
     format that needs no external libs (BMP pixels + aHash; PNG/JPEG/GIF
     header dimensions; WAV via ``wave`` — functions/mediacodec.py),
@@ -107,29 +110,27 @@ def _default_decode(payload: bytes, media_ref: str, kind: str) -> dict:
     return _decode_stub(payload, media_ref, kind)
 
 
-_DECODERS: dict[str, Callable[[bytes, str, str], dict]] = {}
+#: ``fn(payload, media_ref, kind) -> features``; a null payload arrives
+#: as empty bytes, a null ref or kind as None
+Decoder = Callable[[bytes, str | None, str | None], dict]
+_DECODERS: dict[str, Decoder] = {}
 
 
-def register_decoder(kind: str, fn: Callable[[bytes, str, str], dict]) -> None:
+def register_decoder(kind: str, fn: Decoder) -> None:
     """Swap in a full decoder (e.g. PIL) for a media kind."""
     _DECODERS[kind] = fn
 
 
-def _decode_batches(
-    batches: Iterator[pd.DataFrame], decoders: dict
-) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in FEATURE_SCHEMA.fields]
-    for b in batches:
-        out = []
-        for doc_id, ref, kind, payload in zip(
-            b["doc_id"], b["media_ref"], b["media_kind"], b["payload"]
-        ):
-            fn = decoders.get(kind, _default_decode)
-            payload = bytes(payload) if payload is not None else b""
-            feat = fn(payload, str(ref), str(kind))
-            out.append({"doc_id": doc_id, "media_ref": ref,
-                        "media_kind": kind, **feat})
-        yield pd.DataFrame(out, columns=cols)
+def _decode(decoders: dict, ref: str | None, kind: str | None,
+            payload: bytes | None) -> dict:
+    """One media row's features: the kind's registered decoder, else the
+    default chain."""
+    return decoders.get(kind, _default_decode)(payload or b"", ref, kind)
+
+
+def _feature_rows(decoders: dict, doc_id, ref, kind, payload) -> list[dict]:
+    return [{"doc_id": doc_id, "media_ref": ref, "media_kind": kind,
+             **_decode(decoders, ref, kind, payload)}]
 
 
 def media_features(media: DataFrame) -> DataFrame:
@@ -143,11 +144,9 @@ def media_features(media: DataFrame) -> DataFrame:
     after plan construction would never reach them (cloudpickle ships the
     captured copy with the task)."""
     decoders = dict(_DECODERS)
-    return media.select(
-        "doc_id", "media_ref", "media_kind", "payload"
-    ).mapInPandas(
-        lambda it: _decode_batches(it, decoders), schema=FEATURE_SCHEMA
-    )
+    return map_rows(
+        media.select("doc_id", "media_ref", "media_kind", "payload"),
+        FEATURE_SCHEMA, lambda: partial(_feature_rows, decoders))
 
 
 def media_from_documents(spark, sf_dir: str) -> DataFrame:
@@ -165,7 +164,7 @@ def media_from_documents(spark, sf_dir: str) -> DataFrame:
 
 def multimodal_features(spark, sf_dir: str) -> DataFrame:
     """Driver-contract query: stub-decode features over the synthesized
-    media table. The pandas-UDF output is cross-checked against a pure
+    media table. The Python UDF output is cross-checked against a pure
     SQL oracle (the stub is hash-arithmetic, so DuckDB can replay it)."""
     return media_features(media_from_documents(spark, sf_dir))
 
@@ -215,30 +214,20 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def _resize_batches(batches: Iterator[pd.DataFrame], decoders: dict,
-                    max_dim: int) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in RESIZE_SCHEMA.fields]
-    for b in batches:
-        out = []
-        for doc_id, ref, kind, payload in zip(
-            b["doc_id"], b["media_ref"], b["media_kind"], b["payload"]
-        ):
-            payload = bytes(payload) if payload is not None else b""
-            feat = decoders.get(kind, _default_decode)(payload, str(ref), str(kind))
-            w, h = int(feat["width"]), int(feat["height"])
-            m = max(w, h)
-            if m > max_dim:
-                # exact integer downscale (SQL-replayable — no float scale)
-                ow = max(1, (w * max_dim) // m)
-                oh = max(1, (h * max_dim) // m)
-            else:
-                ow, oh = w, h
-            # STUB: payload passes through; a real deployment registers a
-            # pixel transform via register_decoder and re-encodes here
-            out.append({"doc_id": doc_id, "media_ref": ref, "width": w,
-                        "height": h, "out_width": ow, "out_height": oh,
-                        "payload": payload})
-        yield pd.DataFrame(out, columns=cols)
+def _resize_rows(decoders: dict, max_dim: int,
+                 doc_id, ref, kind, payload) -> list[dict]:
+    feat = _decode(decoders, ref, kind, payload)
+    w, h = feat["width"], feat["height"]
+    ow, oh = w, h
+    if w is not None and h is not None and max(w, h) > max_dim:
+        # exact integer downscale (SQL-replayable — no float scale)
+        m = max(w, h)
+        ow = max(1, (w * max_dim) // m)
+        oh = max(1, (h * max_dim) // m)
+    # STUB: payload passes through; a real deployment registers a
+    # pixel transform via register_decoder and re-encodes here
+    return [{"doc_id": doc_id, "media_ref": ref, "width": w, "height": h,
+             "out_width": ow, "out_height": oh, "payload": payload or b""}]
 
 
 def image_resize(media: DataFrame, max_dim: int = RESIZE_MAX_DIM) -> DataFrame:
@@ -247,12 +236,9 @@ def image_resize(media: DataFrame, max_dim: int = RESIZE_MAX_DIM) -> DataFrame:
     Arrow-batched shape as media_features; the per-image pixel work is a
     registered decoder at deployment, a deterministic stub here."""
     decoders = dict(_DECODERS)
-    return media.select(
-        "doc_id", "media_ref", "media_kind", "payload"
-    ).mapInPandas(
-        lambda it: _resize_batches(it, decoders, max_dim),
-        schema=RESIZE_SCHEMA,
-    )
+    return map_rows(
+        media.select("doc_id", "media_ref", "media_kind", "payload"),
+        RESIZE_SCHEMA, lambda: partial(_resize_rows, decoders, max_dim))
 
 
 FRAME_INTERVAL_MS = 5_000
@@ -300,69 +286,59 @@ def _avi_frame_rows(doc_id, ref, payload, info,
             fh = polyhash_bytes(raw)
         rows.append({
             "doc_id": doc_id, "media_ref": ref, "frame_idx": i,
-            "timestamp_ms": ts, "frame_ref": f"{ref}#f{int(fi)}",
+            "timestamp_ms": ts,
+            "frame_ref": None if ref is None else f"{ref}#f{int(fi)}",
             "frame_hash": fh,
         })
     return rows
 
 
-def _frame_batches(batches: Iterator[pd.DataFrame],
-                   interval_ms: int, max_frames: int) -> Iterator[pd.DataFrame]:
+def _frame_rows(interval_ms: int, max_frames: int,
+                doc_id, ref, payload) -> list[dict]:
+    """One media row's sampled frames (fan-out)."""
     from ..functions.containerdec import container_duration_ms, parse_avi
 
-    cols = [f.name for f in FRAME_SCHEMA.fields]
-    for b in batches:
-        out = []
-        for doc_id, ref, payload in zip(
-            b["doc_id"], b["media_ref"], b["payload"]
-        ):
-            payload = bytes(payload) if payload is not None else b""
-            # REAL pixels for AVI payloads: the movi list gives frame
-            # byte ranges and MJPEG frames decode via jpegdec (magic-
-            # gated — synthetic oracle payloads have no RIFF magic)
-            if payload[:4] == b"RIFF":
-                info = parse_avi(payload)
-                if info and info["frames"]:
-                    out.extend(_avi_frame_rows(
-                        doc_id, ref, payload, info,
-                        interval_ms, max_frames))
-                    continue
-            ph = polyhash_bytes(payload)
-            # Real duration when the payload is an MP4/WebM whose header
-            # we can walk (magic-gated); frame DECODE for those still
-            # needs a registered decoder, but the sampling fan-out is
-            # driven by the true container duration.
-            duration_ms = container_duration_ms(payload)
-            if duration_ms is None:
-                # STUB duration (deterministic, SQL-replayable)
-                duration_ms = 1_000 + (ph % 59_000)
-            n = min(max_frames, 1 + duration_ms // interval_ms)
-            for i in range(n):
-                out.append({
-                    "doc_id": doc_id, "media_ref": ref, "frame_idx": i,
-                    "timestamp_ms": i * interval_ms,
-                    "frame_ref": f"{ref}#f{i}",
-                    "frame_hash": (ph * (i + 1) + i) % PRIME,
-                })
-        yield pd.DataFrame(out, columns=cols)
+    payload = payload or b""
+    # REAL pixels for AVI payloads: the movi list gives frame byte ranges
+    # and MJPEG frames decode via jpegdec (magic-gated — synthetic oracle
+    # payloads have no RIFF magic)
+    if payload[:4] == b"RIFF":
+        info = parse_avi(payload)
+        if info and info["frames"]:
+            return _avi_frame_rows(doc_id, ref, payload, info,
+                                   interval_ms, max_frames)
+    ph = polyhash_bytes(payload)
+    # Real duration when the payload is an MP4/WebM whose header we can
+    # walk (magic-gated); frame DECODE for those still needs a registered
+    # decoder, but the sampling fan-out is driven by the true container
+    # duration.
+    duration_ms = container_duration_ms(payload)
+    if duration_ms is None:
+        # STUB duration (deterministic, SQL-replayable)
+        duration_ms = 1_000 + (ph % 59_000)
+    return [{
+        "doc_id": doc_id, "media_ref": ref, "frame_idx": i,
+        "timestamp_ms": i * interval_ms,
+        "frame_ref": None if ref is None else f"{ref}#f{i}",
+        "frame_hash": (ph * (i + 1) + i) % PRIME,
+    } for i in range(min(max_frames, 1 + duration_ms // interval_ms))]
 
 
 def video_frame_sample(media: DataFrame,
                        interval_ms: int = FRAME_INTERVAL_MS,
                        max_frames: int = FRAME_MAX) -> DataFrame:
     """Frame sampling: one input row → N frame rows (variable fan-out
-    inside ``mapInPandas`` — the batch shape real frame extraction
+    through ``runtime.map_rows`` — the batch shape real frame extraction
     needs; output row count is NOT the input row count, which Spark
-    permits because mapInPandas yields arbitrary batches). Durations are
+    permits because ``mapInArrow`` yields arbitrary batches). Durations are
     REAL for MP4/MOV (``moov/mvhd``) and WebM/MKV (EBML ``Segment→Info``)
     payloads via the stdlib header walk in ``functions/containerdec.py``;
     frame decode itself remains a deployment-registered transform, and
     non-container payloads fall back to a deterministic stub duration so
     the synthetic-payload fan-out stays SQL-replayable."""
-    return media.select("doc_id", "media_ref", "payload").mapInPandas(
-        lambda it: _frame_batches(it, interval_ms, max_frames),
-        schema=FRAME_SCHEMA,
-    )
+    return map_rows(media.select("doc_id", "media_ref", "payload"),
+                    FRAME_SCHEMA,
+                    lambda: partial(_frame_rows, interval_ms, max_frames))
 
 
 def multimodal_resize(spark, sf_dir: str) -> DataFrame:
@@ -405,7 +381,7 @@ def multimodal_resize_oracle() -> str:
 
 def multimodal_frames(spark, sf_dir: str) -> DataFrame:
     """Driver-contract query: deterministic frame fan-out (one-to-many
-    pandas-UDF path cross-checked against a lateral generate_series)."""
+    Python UDF path cross-checked against a lateral generate_series)."""
     return video_frame_sample(media_from_documents(spark, sf_dir))
 
 

@@ -13,8 +13,9 @@ Scale design (north rule: 10^12 docs, explicit partitioning/skew):
     narrow transformation with ZERO shuffles on the extraction path. Docs
     parallelize across partitions; Catalyst prunes the two input columns.
     Both sinks (extract_spans, extract_html) are folds over one span
-    walker (``_walk_spans``) that reads each batch's ``doc_id``/``spans``
-    as plain Python values and writes rows straight back to Arrow — no
+    walker (``_walk_spans``), run through the package's one Python row
+    map (``runtime.map_rows``): each batch's ``doc_id``/``spans`` come in
+    as plain Python values and rows go straight back to Arrow — no
     pandas on the extraction path.
   * Skew: the reference measured a 23× latency spread between its smallest
     and largest fixture (BASELINE.md). We split the input into a small-doc
@@ -35,10 +36,8 @@ import uuid
 from collections.abc import Iterator
 from typing import Any
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -50,6 +49,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..runtime import map_rows
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -116,8 +117,6 @@ OUTPUT_SCHEMA = StructType(
         ),
     ]
 )
-
-_OUTPUT_ARROW = to_arrow_schema(OUTPUT_SCHEMA)
 
 # Docs whose pdf payload exceeds this many base64 chars go to the big-doc
 # lane (~1.5 MB of PDF ≈ the reference's skew threshold territory).
@@ -232,26 +231,11 @@ def _walk_spans(spans: list | None, rules, run_pdf) -> Iterator[tuple[str, Any]]
             yield kind, span["media_ref"] or ""
 
 
-def _map_docs(batches: Iterator[pa.RecordBatch], one_doc,
-              schema: pa.Schema) -> Iterator[pa.RecordBatch]:
-    """The ``mapInArrow`` body of both sinks: one output row per input
-    document, built by ``one_doc(doc_id, spans)`` from plain Python
-    values."""
-    for rb in batches:
-        rows = [
-            one_doc(str(doc_id), spans)
-            for doc_id, spans in zip(rb.column("doc_id").to_pylist(),
-                                     rb.column("spans").to_pylist())
-        ]
-        yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-
-def _extract_batches(
-    batches: Iterator[pa.RecordBatch], config: dict | None,
-    max_pages: int | None, sj_model=None, sj_threshold: float | None = None,
-    time_budget_s: float | None = None, hooks: dict | None = None,
-) -> Iterator[pa.RecordBatch]:
-    """extract_spans' worker: one OUTPUT_SCHEMA row per input document."""
+def _extract_setup(config: dict | None, max_pages: int | None, sj_model,
+                   sj_threshold: float | None, time_budget_s: float | None,
+                   hooks: dict | None):
+    """extract_spans' per-task setup for ``runtime.map_rows``: returns
+    the row function, one OUTPUT_SCHEMA row per input document."""
     from ..operators.extract import extract_pdf
 
     rules = _get_ruleset(config)
@@ -280,14 +264,14 @@ def _extract_batches(
                            sj_scorer=sj_scorer,
                            time_budget_s=time_budget_s, hooks=hooks)
 
-    def one_doc(doc_id: str, spans) -> dict:
+    def one_doc(doc_id: str | None, spans) -> list[dict]:
         t0 = time.monotonic()
         row = _extract_one(_walk_spans(spans, rules, run_pdf), sj_missing)
         row["doc_id"] = doc_id
         row["extract_ms"] = int((time.monotonic() - t0) * 1000)
-        return row
+        return [row]
 
-    return _map_docs(batches, one_doc, _OUTPUT_ARROW)
+    return one_doc
 
 
 def _extract_one(items, sj_missing: bool) -> dict:
@@ -379,12 +363,13 @@ def _pdf_payload(span: dict) -> bytes | None:
 
 
 def _span_input(df: DataFrame) -> DataFrame:
-    """The two sink inputs, pruned before the UDF, with ``spans`` as
-    SPAN_TYPE structs. Map-typed spans (what ``spark.createDataFrame``
-    infers from dict spans, every value a string) are coerced here once,
-    offset cast to int, so the walker sees one shape and offsets sort as
-    numbers; a non-numeric offset becomes null."""
-    df = df.select("doc_id", "spans")
+    """The two sink inputs, pruned before the UDF, with ``doc_id`` as a
+    string (a null id stays null) and ``spans`` as SPAN_TYPE structs.
+    Map-typed spans (what ``spark.createDataFrame`` infers from dict
+    spans, every value a string) are coerced here once, offset cast to
+    int, so the walker sees one shape and offsets sort as numbers; a
+    non-numeric offset becomes null."""
+    df = df.select(F.col("doc_id").cast("string").alias("doc_id"), "spans")
     if isinstance(df.schema["spans"].dataType.elementType, MapType):
         df = df.withColumn("spans", F.transform("spans", lambda s: F.struct(
             s["kind"].alias("kind"), s["text"].alias("text"),
@@ -418,11 +403,8 @@ def extract_spans(
     df = _span_input(df)
 
     def run(d: DataFrame) -> DataFrame:
-        return d.mapInArrow(
-            lambda it: _extract_batches(it, config, max_pages, sj_model,
-                                        sj_threshold, time_budget_s, hooks),
-            schema=OUTPUT_SCHEMA,
-        )
+        return map_rows(d, OUTPUT_SCHEMA, lambda: _extract_setup(
+            config, max_pages, sj_model, sj_threshold, time_budget_s, hooks))
 
     if num_partitions is None:
         return run(df)
@@ -496,14 +478,11 @@ HTML_SCHEMA = StructType(
         StructField("error", StringType()),
     ]
 )
-_HTML_ARROW = to_arrow_schema(HTML_SCHEMA)
 
 
-def _html_batches(
-    batches: Iterator[pa.RecordBatch], config: dict | None,
-    max_pages: int | None, keep_br: bool,
-) -> Iterator[pa.RecordBatch]:
-    """extract_html's worker: one HTML_SCHEMA row per input document."""
+def _html_setup(config: dict | None, max_pages: int | None, keep_br: bool):
+    """extract_html's per-task setup for ``runtime.map_rows``: returns
+    the row function, one HTML_SCHEMA row per input document."""
     from ..operators.extract import extract_pdf
 
     rules = _get_ruleset(config)
@@ -512,11 +491,11 @@ def _html_batches(
         return extract_pdf(pdf_bytes, rules, max_pages=max_pages,
                            keep_lines=True)
 
-    def one_doc(doc_id: str, spans) -> dict:
+    def one_doc(doc_id: str | None, spans) -> list[dict]:
         html, err = _html_doc(_walk_spans(spans, rules, run_pdf), keep_br)
-        return {"doc_id": doc_id, "html": html, "error": err}
+        return [{"doc_id": doc_id, "html": html, "error": err}]
 
-    return _map_docs(batches, one_doc, _HTML_ARROW)
+    return one_doc
 
 
 def _html_doc(items, keep_br: bool) -> tuple[str, str | None]:
@@ -595,10 +574,8 @@ def extract_html(df: DataFrame, config: dict | None = None,
     """S7 HTML sink: (doc_id, spans) → (doc_id, html, error) in the
     reference's alignment-optimized format — the same narrow
     ``mapInArrow`` shape and span walker as extract_spans."""
-    return _span_input(df).mapInArrow(
-        lambda it: _html_batches(it, config, max_pages, keep_br),
-        schema=HTML_SCHEMA,
-    )
+    return map_rows(_span_input(df), HTML_SCHEMA,
+                    lambda: _html_setup(config, max_pages, keep_br))
 
 
 

@@ -1,7 +1,7 @@
 """Runtime/session helpers shared by the operator builders.
 
-Two concerns live here because every dedup/similarity/textstats builder
-needs them and neither belongs in a SQL-fragment or operator module:
+Three concerns live here because many builders need them and none
+belongs in a SQL-fragment or operator module:
 
 * the **plan-cache registry** — builders persist small intermediate
   frames that feed several plan branches (LSH signature frames, phash
@@ -19,11 +19,21 @@ needs them and neither belongs in a SQL-fragment or operator module:
   only for scans with fewer files than the target parallelism.  The
   probe is Spark-Connect-safe: ``DataFrame.inputFiles()`` (plan-side)
   instead of ``df.rdd.getNumPartitions()`` (classic-only RDD API).
+
+* the **Python row map** — every row-wise Python UDF (both extraction
+  sinks, media decode/resize/frame sampling, WARC parsing, the corpus
+  generator) crosses into Python through :func:`map_rows`: one narrow
+  ``mapInArrow``, plain Python values in, Arrow rows out, no pandas.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 _CACHES: list[DataFrame] = []
 
@@ -90,3 +100,29 @@ def ensure_parallel_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
         if width >= par:
             return df
     return df.repartition(par)
+
+
+def map_rows(df: DataFrame, schema: StructType,
+             setup: Callable[[], Callable[..., list[dict]]]) -> DataFrame:
+    """The package's one Python row map: a narrow ``mapInArrow`` over
+    ``df``'s columns.
+
+    ``setup()`` runs once per task, on the executor (load models,
+    fixtures, compiled rules there), and returns ``fn(*values)``: one
+    call per input row with that row's column values as plain Python
+    objects, returning the output rows as dicts keyed by ``schema``'s
+    field names — one row, many (fan-out) or none. Columns come in with
+    ``RecordBatch.column(c).to_pylist()``; rows go out with
+    ``RecordBatch.from_pylist``, one output batch per input batch."""
+    cols = df.columns
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        arrow = to_arrow_schema(schema)
+        fn = setup()
+        for rb in batches:
+            rows: list[dict] = []
+            for values in zip(*(rb.column(c).to_pylist() for c in cols)):
+                rows.extend(fn(*values))
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow)
+
+    return df.mapInArrow(run, schema=schema)

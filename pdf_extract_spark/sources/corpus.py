@@ -11,7 +11,8 @@ a skew tail mirroring the reference's measured 23× large-doc latency spread
 
 Everything is seeded from doc_id → fully deterministic at any scale and
 any partitioning (the corpus can be generated distributedly with
-``spark.range(n)`` + mapInPandas, no driver-side materialization).
+``spark.range(n)`` + ``runtime.map_rows``, no driver-side
+materialization).
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ from __future__ import annotations
 import base64
 import os
 import random
-from collections.abc import Iterator
 
 import pandas as pd
 
@@ -152,28 +152,26 @@ def corpus_pandas(n_docs: int, use_fixtures: bool = True,
 
 def corpus_dataframe(spark, n_docs: int, use_fixtures: bool = True,
                      skew_every: int = 50, num_partitions: int | None = None):
-    """Distributed deterministic corpus: spark.range → mapInPandas.
+    """Distributed deterministic corpus: spark.range → runtime.map_rows.
 
     Payload bytes are derived from doc_idx on the executors — nothing big
     crosses the driver."""
     from ..plans.pipeline import SPAN_TYPE  # schema reuse
+    from ..runtime import map_rows
     from pyspark.sql.types import StringType, StructField, StructType
 
     schema = StructType(
         [StructField("doc_id", StringType()), StructField("spans", SPAN_TYPE)]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def setup():
         fixtures = load_fixtures() if use_fixtures else {}
-        for b in batches:
-            yield pd.DataFrame(
-                [make_doc(int(i), fixtures, skew_every) for i in b["id"]]
-            )
+        return lambda i: [make_doc(i, fixtures, skew_every)]
 
     rng = spark.range(n_docs)
     if num_partitions:
         rng = rng.repartition(num_partitions)
-    return rng.mapInPandas(gen, schema=schema)
+    return map_rows(rng, schema, setup)
 
 
 def read_pdf_dir(spark, path: str, pattern: str = "*.pdf"):

@@ -7,8 +7,9 @@ headers and payload. ``read_warc`` turns a directory of ``.warc`` /
 ``(doc_id, spans)`` with one ``kind='pdf'`` span per matching response
 — the same table every downstream stage already consumes.
 
-Plan shape: ``binaryFile`` scan → Arrow-batched ``mapInPandas`` parse —
-the identical narrow-map pattern as extraction itself, so WARC ingest
+Plan shape: ``binaryFile`` scan → one ``runtime.map_rows`` parse (a
+narrow ``mapInArrow``, one file in, its documents out) — the identical
+narrow-map pattern as extraction itself, so WARC ingest
 inherits the pipeline's scale properties (file-granular parallelism, no
 shuffle). Parsing is stdlib-only: ``.warc.gz`` files are concatenated
 per-record gzip members, which ``gzip`` decompresses transparently.
@@ -27,9 +28,8 @@ from __future__ import annotations
 import base64
 import gzip
 import re
-from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..runtime import map_rows
 
 # no ^ anchor: pattern.match(data, pos) is already position-anchored,
 # and ^ would only ever match at offset 0
@@ -266,15 +268,8 @@ def read_warc(
         spark.read.format("binaryFile")
         .option("pathGlobFilter", pattern)
         .load(path)
-        .select("path", "content")
+        # in warc_docs' argument order: (data, source_name)
+        .select("content", "path")
     )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _SPAN_SCHEMA.fields]
-        for b in batches:
-            rows: list[dict] = []
-            for p, content in zip(b["path"], b["content"]):
-                rows.extend(warc_docs(bytes(content), str(p), kinds))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(parse, schema=_SPAN_SCHEMA)
+    return map_rows(files, _SPAN_SCHEMA,
+                    lambda: partial(warc_docs, mime_kinds=kinds))

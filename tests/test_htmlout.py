@@ -4,46 +4,66 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from conftest import fixture_bytes
+
+#: the hermetic 2-page synthetic PDF; the reference's sample PDFs run as
+#: extra cases when its fixture directory is present
+_SYNTH = "synth_pdf(3, n_pages=2)"
+
+
+def _case(name: str, *values):
+    marks = () if name == _SYNTH else pytest.mark.skipif(
+        fixture_bytes(name) is None, reason=f"fixture {name} absent")
+    return pytest.param(name, *values, id=name, marks=marks)
 
 
 def _render(name: str) -> str:
     from pdf_extract_spark.functions.htmlout import render_document
     from pdf_extract_spark.functions.textrules import RuleSet
     from pdf_extract_spark.operators.extract import extract_pdf
+    from pdf_extract_spark.sources.corpus import synth_pdf
 
-    pdf = fixture_bytes(name)
+    pdf = synth_pdf(3, n_pages=2) if name == _SYNTH else fixture_bytes(name)
     assert pdf is not None
     res = extract_pdf(pdf, RuleSet(), keep_lines=True)
     assert res.error is None
     return render_document(res.lines, res.lang, res.lang_dist, res.warnings)
 
 
-def test_render_sample_structure():
-    html = _render("sample.pdf")
+@pytest.mark.parametrize("name,title", [
+    _case(_SYNTH, "Structure To Dog Science"),  # the synth title line
+    _case("sample.pdf", "A Simple PDF File"),
+])
+def test_render_sample_structure(name, title):
+    html = _render(name)
     assert html.startswith("<html>\n<head>")
     assert '<defaultLang abbr="en" />' in html
     assert '<language abbr="en"' in html
     assert '<div id="page1" class="page">' in html
     assert '<div id="page2" class="page">' in html
     assert '<p id="page1p1" lang="en"' in html
-    assert "A Simple PDF File" in html
+    assert title in html
     assert html.rstrip().endswith("</html>")
     # well-formed nesting: every <p opens before its </p>, pages balanced
     assert html.count("<p id=") == html.count("</p>")
     assert html.count('<div id="page') == html.count("</div>")
 
 
-def test_paragraph_ids_reset_per_page():
-    html = _render("sample.pdf")
+@pytest.mark.parametrize("name", [_case(_SYNTH), _case("sample.pdf")])
+def test_paragraph_ids_reset_per_page(name):
+    html = _render(name)
     # page2's first paragraph must restart at p1 (README.md:290-298)
     assert re.search(r'<p id="page2p1" ', html)
 
 
-def test_fontname_attribute_present():
-    html = _render("sample3.pdf")
+@pytest.mark.parametrize("name", [_case(_SYNTH), _case("sample3.pdf")])
+def test_fontname_attribute_present(name):
+    html = _render(name)
     m = re.search(r'<p id="page1p1" lang="[a-z]*" fontname="([^"]*)">', html)
     assert m, html[:600]
+    if name == _SYNTH:
+        assert m.group(1) == "Helvetica"
 
 
 def test_render_error_doc():

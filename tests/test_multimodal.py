@@ -1,5 +1,6 @@
-"""Multimodal plumbing: binary payload column through mapInPandas,
-deterministic stub decode, decoder registry override, null payloads."""
+"""Multimodal plumbing: binary payload column through the Arrow row map
+(runtime.map_rows), deterministic stub decode, decoder registry
+override, null payloads, refs and kinds."""
 
 from __future__ import annotations
 
@@ -59,6 +60,39 @@ def test_register_decoder_override(spark):
         assert out["vid://b/1"].decoder == "stub:video"  # untouched kind
     finally:
         multimodal._DECODERS.pop("image", None)
+
+
+def test_null_ref_and_kind_stay_null(spark):
+    """A null media_ref or media_kind stays null through all three
+    operators, and so does every stub value derived from it — the SQL
+    stub's answer, since polyhash(NULL) is NULL — instead of values
+    hashed from the string "None"."""
+    from pdf_extract_spark.operators.multimodal import (
+        image_resize, media_features, polyhash_bytes, video_frame_sample,
+    )
+
+    df = spark.createDataFrame(
+        [("d3", None, "image", b"abc"), ("d4", "img://c/1", None, b"abc")],
+        "doc_id string, media_ref string, media_kind string, payload binary",
+    )
+    feat = {r.doc_id: r for r in media_features(df).collect()}
+    assert (feat["d3"].media_ref, feat["d3"].width, feat["d3"].height) == (
+        None, None, None)
+    assert feat["d3"].phash == polyhash_bytes(b"abc")
+    assert feat["d3"].decoder == "stub:image"
+    assert feat["d4"].media_kind is None and feat["d4"].decoder is None
+    assert feat["d4"].width is not None and feat["d4"].height is not None
+
+    size = {r.doc_id: r for r in image_resize(df).collect()}
+    assert (size["d3"].width, size["d3"].height, size["d3"].out_width,
+            size["d3"].out_height) == (None, None, None, None)
+    assert size["d3"].payload == b"abc"
+    assert size["d4"].out_width is not None
+
+    frames = video_frame_sample(df).collect()
+    by_doc = {d: [r for r in frames if r.doc_id == d] for d in ("d3", "d4")}
+    assert by_doc["d3"] and all(r.frame_ref is None for r in by_doc["d3"])
+    assert by_doc["d4"][0].frame_ref == "img://c/1#f0"
 
 
 def test_media_from_documents_shape(spark):

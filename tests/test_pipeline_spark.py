@@ -126,6 +126,18 @@ class TestExtractSpans:
         html = pipeline.extract_html(df).collect()[0]["html"]
         assert _positions(html, texts) == sorted(_positions(html, texts))
 
+    def test_null_doc_id_stays_null(self, spark):
+        """A null doc_id comes out null from both sinks — never a
+        made-up id (the string "None") that a resume anti-join would
+        then treat as committed."""
+        span = {"kind": "text", "text": "body", "media_ref": "", "offset": 0}
+        df = spark.createDataFrame([(None, [span]), ("d1", [span])],
+                                   SPANS_DDL)
+        for sink in (pipeline.extract_spans, pipeline.extract_html):
+            ids = [r["doc_id"] for r in sink(df).collect()]
+            assert sorted(ids, key=lambda d: d is None) == ["d1", None], (
+                sink.__name__)
+
 
 SPANS_DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
              "media_ref:string,offset:int>>")

@@ -435,6 +435,30 @@ def test_simhash_fingerprints_is_narrow_kernel(spark):
     assert "HashAggregate" not in plan
 
 
+@pytest.mark.parametrize("name", [
+    "media_features", "image_resize", "video_frame_sample", "read_warc",
+    "corpus_dataframe",
+])
+def test_row_map_plan_is_arrow(spark, tmp_path, name):
+    """Every row-wise Python UDF crosses into Python through the one
+    Arrow row map (runtime.map_rows): ``MapInArrow``, no pandas
+    conversion on either side."""
+    from pdf_extract_spark.operators import multimodal
+    from pdf_extract_spark.sources.corpus import corpus_dataframe
+    from pdf_extract_spark.sources.warc import read_warc
+
+    if name == "read_warc":
+        df = read_warc(spark, str(tmp_path))
+    elif name == "corpus_dataframe":
+        df = corpus_dataframe(spark, 4, use_fixtures=False)
+    else:
+        df = getattr(multimodal, name)(
+            multimodal.media_from_documents(spark, SF_DIR))
+    plan = _physical(df)
+    assert "MapInArrow" in plan, name
+    assert "MapInPandas" not in plan, name
+
+
 def test_bpe_no_cartesian_no_python(spark):
     """BPE training: the only nested loops are the broadcast 1-row
     merge applications; nothing quadratic, no Python eval nodes (the
