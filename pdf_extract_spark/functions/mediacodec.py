@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import struct
 
+from ..sources.pdfparse import png_unfilter_row
 from .sqlkit import polyhash_bytes as _polyhash  # noqa: F401  (vectorized)
 
 
@@ -145,29 +146,7 @@ def parse_png_pixels(b: bytes):
                 ftype = raw[pos]
                 cur = bytearray(raw[pos + 1: pos + 1 + stride])
                 pos += 1 + stride
-                if ftype == 1:  # Sub
-                    for i in range(bpp, stride):
-                        cur[i] = (cur[i] + cur[i - bpp]) & 0xFF
-                elif ftype == 2:  # Up
-                    for i in range(stride):
-                        cur[i] = (cur[i] + prev[i]) & 0xFF
-                elif ftype == 3:  # Average
-                    for i in range(stride):
-                        left = cur[i - bpp] if i >= bpp else 0
-                        cur[i] = (cur[i] + ((left + prev[i]) >> 1)) & 0xFF
-                elif ftype == 4:  # Paeth
-                    for i in range(stride):
-                        a = cur[i - bpp] if i >= bpp else 0
-                        bb = prev[i]
-                        c = prev[i - bpp] if i >= bpp else 0
-                        p = a + bb - c
-                        pa = p - a if p > a else a - p
-                        pb = p - bb if p > bb else bb - p
-                        pc = p - c if p > c else c - p
-                        pr = a if (pa <= pb and pa <= pc) else \
-                            (bb if pb <= pc else c)
-                        cur[i] = (cur[i] + pr) & 0xFF
-                elif ftype != 0:
+                if not png_unfilter_row(ftype, cur, prev, bpp):
                     return w, h, None
                 prev = cur
                 lum = row_luma(cur, pw)

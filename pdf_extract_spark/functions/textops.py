@@ -6,6 +6,11 @@ PDF text operators (BT/ET Tf Td TD TL Tm T* Tj TJ ' " Tc Tw Tz Ts), graphics
 state (q/Q cm), and XObjects (Do — images become ordered media records, our
 improvement over the reference's ``-i`` image suppression, PDFToHtml.java:52).
 
+One content-stream scanner: ``_run_stream`` matches ``_CS_TOKEN`` and
+dispatches operators in the same loop; arrays go to the one array parser
+``_parse_content_array``, strings, dicts and names to the
+``sources.pdfparse`` sub-parsers and name decoder.
+
 Coordinates are emitted in a top-left-origin device space at 1:1 PDF units
 (the reference's poppler space is the same up to a constant zoom; our layout
 thresholds in operators/layout.py are calibrated to this space).
@@ -22,11 +27,11 @@ from ..sources.pdfparse import (
     PDFDocument,
     PDFStream,
     Ref,
+    _decode_name,
     _parse_dict,
     _parse_hex_string,
     _parse_literal_string,
     _skip_ws,
-    parse_object,
 )
 from .glyphs import base_encoding_table, default_width_for, glyph_to_unicode
 
@@ -415,135 +420,72 @@ _DRAW_RUN = re.compile(
     rb"(?=[\x00\t\n\x0c\r ()<>\[\]{}/%]|$))++"
 )
 
-# array-element scanner for the TJ fast path: numbers, strings, hex
-# strings, names, and the closing bracket in one anchored pattern
+# array-element scanner: numbers, literal strings, hex strings, the
+# closing bracket and names — everything a TJ array holds — in one
+# anchored pattern (~90% of all tokens in kerning-heavy documents sit
+# inside TJ arrays)
 _ARR_ELEM = re.compile(
     rb"[\x00\t\n\x0c\r ]*"
     rb"(?:([+-]?\d*\.\d+|[+-]?\d+\.?)"  # 1 number
     rb"|(\()"                            # 2 literal string start
-    rb"|<([0-9A-Fa-f\x00\t\n\x0c\r ]*)>"  # 3 hex string
+    rb"|(<)(?!<)"                        # 3 hex string start
     rb"|(\])"                            # 4 close
     rb"|/([^\s()<>\[\]{}/%]*))"          # 5 name
 )
 
-
-def _name_str(raw: bytes) -> str:
-    """Content-stream name token → str, decoding #XX escapes (PDF §7.3.5)
-    so lookups match the resource-dict side, which already decodes them."""
-    if b"#" in raw:
-        from ..sources.pdfparse import _NAME_ESC_RE
-
-        raw = _NAME_ESC_RE.sub(lambda mm: bytes([int(mm.group(1), 16)]), raw)
-    return raw.decode("latin-1")
+# a '[' nested deeper than this is skipped: hostile nesting cannot
+# exhaust the recursion limit and lose the page
+MAX_ARRAY_DEPTH = 32
 
 
-def _parse_content_array(data: bytes, pos: int):
-    """Batch-parse a content-stream array (the TJ hot path: ~90% of all
-    tokens in kerning-heavy documents are numbers/strings inside TJ
-    arrays). Returns (elements, new_pos) or (None, pos) to fall back to
-    the general token loop for exotic contents (nested arrays/dicts)."""
+def _parse_content_array(data: bytes, pos: int, depth: int = 0):
+    """Parse a content-stream array; ``pos`` is just past its '['.
+    Returns (elements, pos after the matching ']', or the end of data).
+
+    TJ elements take the one ``_ARR_ELEM`` match; anything else takes
+    one ``_CS_TOKEN`` step: a nested '[' recurses, '<<' parses a dict,
+    a keyword becomes an inert str element (as ``parse_object`` treats
+    bare keywords — it never runs as an operator mid-array), and
+    comments, braces and stray bytes are skipped."""
     out: list = []
     match = _ARR_ELEM.match
     n = len(data)
     while pos < n:
         m = match(data, pos)
-        if not m or m.lastindex is None:
-            return None, pos  # nested array/dict/operator — generic path
-        gi = m.lastindex
-        if gi == 1:
-            out.append(float(m.group(1)))
-            pos = m.end()
-        elif gi == 2:
-            s, pos = _parse_literal_string(data, m.end())
-            out.append(s)
-        elif gi == 3:
-            # group already restricts to hexdigits+ws: strip ws via
-            # C-level translate (re.sub here was ~3% of doc wall time)
-            hx = m.group(3).translate(None, delete=b"\x00\t\n\x0c\r ")
-            if len(hx) % 2:
-                hx += b"0"
-            out.append(bytes.fromhex(hx.decode("ascii")))
-            pos = m.end()
-        elif gi == 4:
-            return out, m.end()
-        else:
-            out.append(_name_str(m.group(5)))
-            pos = m.end()
-    return out, pos
-
-
-def tokenize_content(data: bytes, keep_ops: frozenset | None = None):
-    """Yield (kind, value) tokens: name/num/nums/str/arr/arr_open/
-    arr_close/dict/op.
-
-    Hot loop (millions of tokens for a 100-page doc): one anchored regex
-    match per token with whitespace folded into the pattern, dispatch on
-    ``m.lastindex`` instead of probing each group.
-
-    ``keep_ops`` (bytes frozenset): operators NOT in the set are consumed
-    without a yield — drawing-heavy pages emit ~25× more path ops than
-    text ops, and each skipped yield saves a generator round-trip. Their
-    operands stay on the consumer's stack until the next kept op; that is
-    safe because every interpreter handler reads operands end-indexed
-    (num(-1), stack[-6:]) — semantics are unchanged for well-formed
-    streams. ``BI`` is always kept (inline-image payload must be
-    skipped structurally)."""
-    pos = 0
-    n = len(data)
-    match = _CS_TOKEN.match
-    while pos < n:
-        m = match(data, pos)
-        if not m or m.lastindex is None:
-            pos = m.end() + 1 if m else pos + 1
-            continue
-        gi = m.lastindex
-        if gi == 2:  # number run (most common kind by far)
-            run = m.group(2)
-            if b"\x00" in run:
-                run = run.replace(b"\x00", b" ")
-            yield ("nums", [float(x) for x in run.split()])
-            pos = m.end()
-        elif gi == 1:
-            yield ("name", _name_str(m.group(1)))
-            pos = m.end()
-        elif gi == 3:
-            tok = m.group(3)
-            if tok == b"(":
+        if m is not None:
+            gi = m.lastindex
+            if gi == 1:
+                out.append(float(m.group(1)))
+                pos = m.end()
+            elif gi == 2:
                 s, pos = _parse_literal_string(data, m.end())
-                yield ("str", s)
-            elif tok == b"<":
+                out.append(s)
+            elif gi == 3:
                 s, pos = _parse_hex_string(data, m.end())
-                yield ("str", s)
-            elif tok == b"<<":
-                d, pos = _parse_dict(data, m.end())
-                yield ("dict", d)
-            elif tok == b"[":
-                # TJ fast path: one batched token instead of per-element
-                # yields (the bulk of all tokens in kerned documents)
-                arr, pos2 = _parse_content_array(data, m.end())
-                if arr is not None:
-                    yield ("arr", arr)
-                    pos = pos2
-                else:
-                    yield ("arr_open", None)
-                    pos = m.end()
-            elif tok == b"]":
-                yield ("arr_close", None)
-                pos = m.end()
+                out.append(s)
+            elif gi == 4:
+                return out, m.end()
             else:
+                out.append(_decode_name(m.group(5)))
                 pos = m.end()
+            continue
+        mt = _CS_TOKEN.match(data, pos)
+        if mt is None:
+            pos += 1  # stray byte
+            continue
+        pos = mt.end()
+        gi = mt.lastindex
+        if gi == 3:
+            tok = mt.group(3)
+            if tok == b"[" and depth < MAX_ARRAY_DEPTH:
+                arr, pos = _parse_content_array(data, pos, depth + 1)
+                out.append(arr)
+            elif tok == b"<<":
+                d, pos = _parse_dict(data, pos)
+                out.append(d)
         elif gi == 4:
-            raw_op = m.group(4)
-            pos = m.end()
-            if raw_op == b"BI":
-                # inline image: skip dict + binary data to EI
-                mm = _EI_RE.search(data, pos)
-                yield ("inline_image", None)
-                pos = mm.end() if mm else n
-            elif keep_ops is None or raw_op in keep_ops:
-                yield ("op", raw_op.decode("latin-1"))
-        else:  # comment
-            pos = m.end()
+            out.append(mt.group(4).decode("latin-1"))
+    return out, pos
 
 
 # ---------------------------------------------------------------------------
@@ -620,7 +562,6 @@ def _run_stream(
     font: FontDecoder | None = None
     fsize = 0.0
     stack: list = []
-    arr_stack: list[list] = []
     in_text = False
     media_seq = [0]
 
@@ -716,12 +657,10 @@ def _run_stream(
         except (IndexError, TypeError, ValueError):
             return 0.0
 
-    # FUSED tokenizer+dispatch: the scanner loop from tokenize_content
-    # inlined so the hot path (445k tokens on a 112-page doc) pays no
-    # generator suspension and no (kind, value) tuple per token — worth
-    # ~10% of single-doc wall time, measured. tokenize_content remains
-    # the standalone tokenizer API; the two loops share _CS_TOKEN and
-    # the string/dict/array sub-parsers, so token syntax cannot drift.
+    # FUSED tokenizer+dispatch: the one content-stream scanner, with no
+    # generator and no (kind, value) tuple per token on the hot path
+    # (445k tokens on a 112-page doc) — worth ~10% of single-doc wall
+    # time, measured. Strings, dicts and arrays go to their sub-parsers.
     # Budget is a local int (op_budget[0] indexing costs ~10% of the
     # dispatch loop); synced at Do recursion and on exit.
     budget = op_budget[0]
@@ -743,10 +682,7 @@ def _run_stream(
             budget += len(vals)
             if budget > MAX_OPS_PER_PAGE:
                 break
-            if arr_stack:
-                arr_stack[-1].extend(vals)
-            else:
-                stack.extend(vals)
+            stack.extend(vals)
             continue
         if gi == 4:  # operator/keyword
             raw_op = mt.group(4)
@@ -796,10 +732,7 @@ def _run_stream(
             budget += 1
             if budget > MAX_OPS_PER_PAGE:
                 break
-            if arr_stack:
-                arr_stack[-1].append(_name_str(mt.group(1)))
-            else:
-                stack.append(_name_str(mt.group(1)))
+            stack.append(_decode_name(mt.group(1)))
             pos = mt.end()
             continue
         elif gi == 3:  # structural
@@ -809,28 +742,20 @@ def _run_stream(
                 break
             if tok == b"(":
                 s, pos = _parse_literal_string(data, mt.end())
-                (arr_stack[-1] if arr_stack else stack).append(s)
+                stack.append(s)
             elif tok == b"<":
                 s, pos = _parse_hex_string(data, mt.end())
-                (arr_stack[-1] if arr_stack else stack).append(s)
+                stack.append(s)
             elif tok == b"<<":
                 d, pos = _parse_dict(data, mt.end())
-                (arr_stack[-1] if arr_stack else stack).append(d)
+                stack.append(d)
             elif tok == b"[":
-                # TJ fast path: batch-parse the whole array
-                arr, pos2 = _parse_content_array(data, mt.end())
-                if arr is not None:
-                    budget += len(arr)
-                    (arr_stack[-1] if arr_stack else stack).append(arr)
-                    pos = pos2
-                else:
-                    arr_stack.append([])
-                    pos = mt.end()
-            elif tok == b"]":
-                arr = arr_stack.pop() if arr_stack else []
-                (arr_stack[-1] if arr_stack else stack).append(arr)
-                pos = mt.end()
+                arr, pos = _parse_content_array(data, mt.end())
+                budget += len(arr)
+                stack.append(arr)
             else:
+                if tok == b"]":  # stray close: an empty array operand
+                    stack.append([])
                 pos = mt.end()
             continue
         else:  # comment
@@ -903,10 +828,6 @@ def _run_stream(
             elif op in ("rg", "sc", "scn") and len(stack) >= 3:
                 try:
                     gs.fill = _color_hex(stack[-3:])
-                    if op == "scn" and not all(
-                        isinstance(v, (int, float)) for v in stack[-3:]
-                    ):
-                        gs.fill = gs.fill
                 except (TypeError, ValueError):
                     pass
             elif op == "g" and stack:
@@ -935,7 +856,6 @@ def _run_stream(
         stack.clear()
 
     op_budget[0] = budget
-    # handle TJ leftovers: nothing — arrays consumed in-place
 
 
 def _do_xobject(

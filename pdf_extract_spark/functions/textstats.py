@@ -421,6 +421,23 @@ def passage_boilerplate_oracle() -> str:
 EXACT_W = 8  # k-gram width: repeated spans of >= EXACT_W tokens are found
 
 
+def _gram_positions(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, h): the polyhash ``h`` of every ``EXACT_W``-token
+    window of each document, at its 1-based start position ``pos`` —
+    the kernel's positional mode. Persisted: it feeds both the
+    gram-frequency agg and the mark join, and without the cache the
+    kernel hashes the corpus once per branch."""
+    from .sigkernel import signature_frame
+
+    from ..runtime import track_cache
+
+    return track_cache(signature_frame(
+        docs, EXACT_W, minhash=False, distinct=False, pad_short=False,
+    ).select(
+        "doc_id", F.posexplode("sh").alias("pos0", "h")
+    ).select("doc_id", (F.col("pos0") + 1).cast("bigint").alias("pos"), "h"))
+
+
 def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring repeated-span detection — the token-range form
     of "Deduplicating Training Data Makes Language Models Better" (Lee
@@ -445,18 +462,7 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     run-length grouping.  Nothing quadratic, no per-row Python."""
     from pyspark.sql.window import Window
 
-    from .sigkernel import signature_frame
-
-    from ..runtime import track_cache
-
-    # persisted: occ feeds the gram-frequency agg AND the mark join —
-    # without it the kernel hashes the corpus once per branch
-    occ = track_cache(signature_frame(
-        _docs(spark, sf_dir), EXACT_W,
-        minhash=False, distinct=False, pad_short=False,
-    ).select(
-        "doc_id", F.posexplode("sh").alias("pos0", "h")
-    ).select("doc_id", (F.col("pos0") + 1).cast("bigint").alias("pos"), "h"))
+    occ = _gram_positions(_docs(spark, sf_dir))
     cnt = occ.groupBy("h").agg(F.count("*").alias("c"))
     marked = occ.join(cnt, "h").filter(F.col("c") > 1)
     win = Window.partitionBy("doc_id").orderBy("pos")
@@ -544,19 +550,8 @@ def remove_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the span detection's two shuffles, plus one doc-keyed
     aggregation for the rebuild; the token explode is scan-local."""
-    from pyspark.sql.window import Window
-
-    from .sigkernel import signature_frame
-
-    from ..runtime import track_cache
-
     docs = _docs(spark, sf_dir)
-    # persisted for the same two-branch reason as exact_substring_spans
-    occ = track_cache(signature_frame(
-        docs, EXACT_W, minhash=False, distinct=False, pad_short=False,
-    ).select(
-        "doc_id", F.posexplode("sh").alias("pos0", "h")
-    ).select("doc_id", (F.col("pos0") + 1).cast("bigint").alias("pos"), "h"))
+    occ = _gram_positions(docs)
     cnt = occ.groupBy("h").agg(F.count("*").alias("c"))
     # covered token positions: each marked gram start p covers
     # p .. p+W-1; explode the small per-gram range and dedup
@@ -595,13 +590,7 @@ def remove_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def remove_repeated_spans_oracle() -> str:
     toks = K.tokens("text", DUCK)
-    n = K.asize("toks", DUCK)
-    parts = ", ".join(K.at("toks", f"i + {k}", DUCK)
-                      for k in range(EXACT_W))
-    windows = K.xform(
-        f"range(1, greatest({n} - {EXACT_W} + 2, 1))",
-        f"i -> concat_ws(' ', {parts})", DUCK)
-    grams = K.xform(windows, f"s -> {K.polyhash('s', DUCK)}", DUCK)
+    grams = gram_hashes_duck("toks", EXACT_W)
     return f"""
         with t as (
             select doc_id, toks, {grams} as g

@@ -76,6 +76,16 @@ _TOKEN_RE = re.compile(
 
 _NAME_ESC_RE = re.compile(rb"#([0-9A-Fa-f]{2})")
 
+
+def _decode_name(raw: bytes) -> str:
+    """Name token body (after '/') → str, decoding #XX escapes (PDF
+    §7.3.5) — one decoder for object syntax and content streams, so
+    content-stream lookups match resource-dict keys."""
+    if b"#" in raw:
+        raw = _NAME_ESC_RE.sub(lambda mm: bytes([int(mm.group(1), 16)]), raw)
+    return raw.decode("latin-1")
+
+
 _STR_ESCAPES = {
     ord("n"): b"\n",
     ord("r"): b"\r",
@@ -187,10 +197,7 @@ def parse_object(data: bytes, pos: int):
         # unknown byte — skip it defensively
         return None, pos + 1
     if m.group(1) is not None:  # name
-        raw = m.group(1)
-        if b"#" in raw:
-            raw = _NAME_ESC_RE.sub(lambda mm: bytes([int(mm.group(1), 16)]), raw)
-        return Name(raw.decode("latin-1")), m.end()
+        return Name(_decode_name(m.group(1))), m.end()
     if m.group(2) is not None:  # structural
         tok = m.group(2)
         if tok == b"<<":
@@ -270,40 +277,53 @@ def _parse_dict(data: bytes, pos: int):
 # Stream filters
 # ---------------------------------------------------------------------------
 
+def png_unfilter_row(ft: int, row: bytearray, prev, bpp: int) -> bool:
+    """Undo one PNG scanline filter in place: ``ft`` 0 None, 1 Sub, 2 Up,
+    3 Average, 4 Paeth; ``prev`` is the previous unfiltered row (zeros
+    for the first), ``bpp`` the filter distance in bytes. Returns False
+    for an unknown filter type, leaving ``row`` as it was — each caller
+    keeps its own policy for that. Serves PDF predictors and PNG images."""
+    n = len(row)
+    if ft == 1:  # Sub
+        for j in range(bpp, n):
+            row[j] = (row[j] + row[j - bpp]) & 0xFF
+    elif ft == 2:  # Up
+        for j in range(n):
+            row[j] = (row[j] + prev[j]) & 0xFF
+    elif ft == 3:  # Average
+        for j in range(n):
+            left = row[j - bpp] if j >= bpp else 0
+            row[j] = (row[j] + ((left + prev[j]) >> 1)) & 0xFF
+    elif ft == 4:  # Paeth
+        for j in range(n):
+            a = row[j - bpp] if j >= bpp else 0
+            b = prev[j]
+            c = prev[j - bpp] if j >= bpp else 0
+            p = a + b - c
+            pa = p - a if p > a else a - p
+            pb = p - b if p > b else b - p
+            pc = p - c if p > c else c - p
+            pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+            row[j] = (row[j] + pr) & 0xFF
+    else:
+        return ft == 0
+    return True
+
+
 def _png_predictor(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
-    """Reverse PNG predictors (used by xref streams / Flate DecodeParms)."""
+    """Reverse PNG predictors (used by xref streams / Flate DecodeParms);
+    a row with an unknown filter type passes through as is."""
     bpp = max(1, (colors * bpc) // 8)
     stride = (colors * bpc * columns + 7) // 8
     out = bytearray()
     prev = bytearray(stride)
     i = 0
     n = len(data)
-    while i + 1 <= n:
+    while i < n:
         ft = data[i]
-        i += 1
-        row = bytearray(data[i : i + stride])
-        i += stride
-        if ft == 0:
-            pass
-        elif ft == 1:  # Sub
-            for j in range(bpp, len(row)):
-                row[j] = (row[j] + row[j - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for j in range(len(row)):
-                row[j] = (row[j] + prev[j]) & 0xFF
-        elif ft == 3:  # Average
-            for j in range(len(row)):
-                left = row[j - bpp] if j >= bpp else 0
-                row[j] = (row[j] + ((left + prev[j]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for j in range(len(row)):
-                a = row[j - bpp] if j >= bpp else 0
-                b = prev[j]
-                c = prev[j - bpp] if j >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                row[j] = (row[j] + pr) & 0xFF
+        row = bytearray(data[i + 1 : i + 1 + stride])
+        i += 1 + stride
+        png_unfilter_row(ft, row, prev, bpp)
         out += row
         prev = row
     return bytes(out)

@@ -8,7 +8,16 @@ import random
 import pytest
 
 from pdf_extract_spark.operators.extract import extract_pdf
-from tests.conftest import fixture_bytes
+from pdf_extract_spark.sources.corpus import synth_pdf
+from tests.conftest import fixture_bytes, kerned_pdf
+
+#: in-repo sources, so the fuzz runs in every environment; the
+#: reference fixtures are extra cases when present
+_IN_REPO = {
+    "synth_pdf": lambda: synth_pdf(7, n_pages=3),
+    "kerned_pdf": lambda: kerned_pdf(7, n_pages=3),
+    "kerned_pdf_flate": lambda: kerned_pdf(8, n_pages=3, flate=True),
+}
 
 
 def _corrupt(src: bytes, seed: int) -> bytes:
@@ -29,9 +38,10 @@ def _corrupt(src: bytes, seed: int) -> bytes:
     return bytes(data)
 
 
-@pytest.mark.parametrize("fixture", ["sample.pdf", "sample2.pdf", "sample3.pdf"])
+@pytest.mark.parametrize("fixture", [*_IN_REPO, "sample.pdf", "sample2.pdf",
+                                     "sample3.pdf"])
 def test_corrupted_pdfs_never_raise(fixture):
-    src = fixture_bytes(fixture)
+    src = _IN_REPO[fixture]() if fixture in _IN_REPO else fixture_bytes(fixture)
     if src is None:
         pytest.skip("reference fixtures unavailable")
     for seed in range(80):

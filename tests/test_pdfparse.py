@@ -85,6 +85,20 @@ class TestFilters:
         )
         assert out == bytes([1, 2, 3, 4, 2, 3, 4, 5])
 
+    def test_png_predictor_sub_average_paeth(self):
+        # columns=4, 1 byte per pixel: Sub, Average and Paeth rows, then
+        # a row with an unknown filter type (7), which passes through
+        rows = (bytes([1, 1, 1, 1, 1]) + bytes([3, 5, 3, 3, 3])
+                + bytes([4, 4, 249, 5, 12]) + bytes([7, 1, 2, 3, 4]))
+        out = decode_stream(
+            {
+                "Filter": Name("FlateDecode"),
+                "DecodeParms": {"Predictor": 15, "Columns": 4},
+            },
+            zlib.compress(rows),
+        )
+        assert out == bytes([1, 2, 3, 4, 5, 6, 7, 8, 9, 2, 7, 20, 1, 2, 3, 4])
+
     def test_unknown_filter_returns_raw(self):
         assert decode_stream({"Filter": Name("DCTDecode")}, b"jpeg") == b"jpeg"
 

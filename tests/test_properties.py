@@ -5,14 +5,19 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pdf_extract_spark.functions.sentencejoin import NgramModel, SentenceJoinScorer
-from pdf_extract_spark.functions.textops import tokenize_content
+from pdf_extract_spark.functions.textops import (
+    _parse_content_array,
+    interpret_page,
+)
 from pdf_extract_spark.functions.textrules import RuleSet
+from pdf_extract_spark.sources.corpus import synth_pdf
 from pdf_extract_spark.sources.pdfcrypt import (
     compute_o,
     compute_u,
     file_key,
     rc4,
 )
+from pdf_extract_spark.sources.pdfparse import PDFDocument
 
 RULES = RuleSet()
 
@@ -36,25 +41,37 @@ def test_repair_stable_after_two_applications(s):
     assert RULES.repair_str(twice) == twice
 
 
+_DOC = PDFDocument(synth_pdf(0))  # provides the /F1 Helvetica resources
+_RES = _DOC.pages()[0].resources
+
+
+def _interpret(content: bytes):
+    return interpret_page(_DOC, 1, content, _RES, (0, 0, 612, 792), 0, {})
+
+
 @settings(max_examples=60, deadline=None)
 @given(st.binary(max_size=512))
 def test_tokenizer_never_crashes(data):
-    for _ in tokenize_content(data):
-        pass
+    # the production scanner, on arbitrary bytes and inside a text object
+    _interpret(data)
+    _interpret(b"BT /F1 10 Tf " + data + b" ET")
 
 
 @settings(max_examples=30, deadline=None)
 @given(st.lists(st.floats(-1e6, 1e6).map(lambda f: round(f, 3)),
                 min_size=1, max_size=12))
 def test_tokenizer_number_runs_roundtrip(nums):
-    stream = (" ".join(f"{n:.3f}" for n in nums) + " W n").encode()
-    got = []
-    for kind, val in tokenize_content(stream):
-        if kind == "nums":
-            got.extend(val)
-        elif kind == "num":
-            got.append(val)
-    assert got == [float(f"{n:.3f}") for n in nums]
+    want = [float(f"{n:.3f}") for n in nums]
+    # a number run inside an array: the array parser
+    run = " ".join(f"{n:.3f}" for n in nums).encode()
+    assert _parse_content_array(run + b"] W n", 0) == (want, len(run) + 1)
+    # number runs in the scanner: every number, then the six Tm operands
+    # with one number as the translation x, all in one run; the text
+    # run Tm places reads x back as its left edge
+    stream = b"BT /F1 10 Tf " + b" ".join(
+        b"%s 1 0 0 1 %.3f 0 Tm (x) Tj" % (run, n) for n in nums) + b" ET"
+    runs, _ = _interpret(stream)
+    assert [r.left for r in runs] == want
 
 
 @settings(max_examples=40, deadline=None)

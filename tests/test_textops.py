@@ -81,6 +81,28 @@ class TestTextOps:
         runs2, _ = _page(b"BT /F1 10 Tf 100 700 Td (half) Tj ET")
         assert runs[0].width == pytest.approx(runs2[0].width / 2, rel=0.01)
 
+    def test_tj_array_exotic_elements_inert(self):
+        # comments, nested arrays, dicts, names and non-hex bytes in a
+        # hex string sit inside the array; only strings and kerns show
+        runs, _ = _page(
+            b"BT /F1 10 Tf 100 700 Td [(He) %c\n [1 [2]] << /K [3] >> "
+            b"/N <6C 6Cz> {} (o) -400 (World)] TJ ET"
+        )
+        assert [r.text for r in runs] == ["Hello World"]
+
+    def test_keyword_in_array_is_inert(self):
+        # a keyword inside an array is an element, never an operator:
+        # the ' does not move the line down one leading mid-array
+        runs, _ = _page(
+            b"BT /F1 10 Tf 60 700 Td 14 TL [(a) '] TJ (tail) Tj ET")
+        assert [(r.text, r.top) for r in runs] == [
+            ("a", pytest.approx(82.0)), ("tail", pytest.approx(82.0))]
+
+    def test_deeply_nested_array_does_not_recurse_unbounded(self):
+        runs, _ = _page(b"BT /F1 10 Tf 60 700 Td " + b"[" * 5000
+                        + b"]" * 5000 + b" TJ (x) Tj ET")
+        assert [r.text for r in runs] == ["x"]
+
     def test_inline_image_skipped_and_recorded(self):
         runs, media = _page(
             b"BI /W 2 /H 2 /BPC 8 /CS /G ID \x00\x01\x02\x03 EI\n"
