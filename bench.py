@@ -209,7 +209,7 @@ def main() -> None:
         # JVM/JIT warm-up: the first lambda-heavy query otherwise pays
         # ~10s of interpreter warm-up (measured 11.7s cold vs 0.9s warm
         # for the identical plan); steady-state is the honest metric.
-        # The Arrow/mapInPandas path warms separately (python workers
+        # The mapInArrow path warms separately (python workers
         # import the signature kernel + numpy once per executor — at
         # sf0.001 this is < 1s; unwarmed it lands ~10s of one-time cost
         # on the first dedup query's recorded number).

@@ -23,6 +23,7 @@ import re
 from dataclasses import dataclass
 
 from ..sources.pdfparse import (
+    MAX_NESTING,
     Name,
     PDFDocument,
     PDFStream,
@@ -433,14 +434,10 @@ _ARR_ELEM = re.compile(
     rb"|/([^\s()<>\[\]{}/%]*))"          # 5 name
 )
 
-# a '[' nested deeper than this is skipped: hostile nesting cannot
-# exhaust the recursion limit and lose the page
-MAX_ARRAY_DEPTH = 32
-
-
-def _parse_content_array(data: bytes, pos: int, depth: int = 0):
+def _parse_content_array(data: bytes, pos: int, depth: int = 1):
     """Parse a content-stream array; ``pos`` is just past its '['.
     Returns (elements, pos after the matching ']', or the end of data).
+    ``depth`` counts this array among the enclosing arrays and dicts.
 
     TJ elements take the one ``_ARR_ELEM`` match; anything else takes
     one ``_CS_TOKEN`` step: a nested '[' recurses, '<<' parses a dict,
@@ -477,11 +474,13 @@ def _parse_content_array(data: bytes, pos: int, depth: int = 0):
         gi = mt.lastindex
         if gi == 3:
             tok = mt.group(3)
-            if tok == b"[" and depth < MAX_ARRAY_DEPTH:
+            if depth >= MAX_NESTING:
+                continue  # too deep: the contents join this array
+            if tok == b"[":
                 arr, pos = _parse_content_array(data, pos, depth + 1)
                 out.append(arr)
             elif tok == b"<<":
-                d, pos = _parse_dict(data, pos)
+                d, pos = _parse_dict(data, pos, depth + 1)
                 out.append(d)
         elif gi == 4:
             out.append(mt.group(4).decode("latin-1"))

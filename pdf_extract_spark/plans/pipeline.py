@@ -18,11 +18,13 @@ Scale design (north rule: 10^12 docs, explicit partitioning/skew):
     as plain Python values and rows go straight back to Arrow — no
     pandas on the extraction path.
   * Skew: the reference measured a 23× latency spread between its smallest
-    and largest fixture (BASELINE.md). We split the input into a small-doc
-    lane (hash-partitioned on doc_id) and a big-doc lane (round-robin so
-    each oversized PDF lands alone), then union — no global sort, no
-    driver-side size census. ``arrow.maxRecordsPerBatch`` bounds batch
-    memory so one giant doc can't OOM an Arrow batch.
+    and largest fixture (BASELINE.md). Parallelism comes from the scan's
+    splits; ``num_partitions=n`` adds one round-robin ``repartition(n)``
+    in front of the map for coarse inputs. BENCH.md §4 measured it
+    within the benchmark's bounds of a hand-built small/big-doc split
+    on every end-to-end metric; the split scanned the input twice.
+    ``arrow.maxRecordsPerBatch`` bounds batch memory so one giant doc
+    can't OOM an Arrow batch.
   * Resume: output snapshot + per-partition lineage rows; a resumed run
     left-anti-joins the input against the committed output's doc_ids —
     a broadcast-able join at per-run failure scales.
@@ -117,10 +119,6 @@ OUTPUT_SCHEMA = StructType(
         ),
     ]
 )
-
-# Docs whose pdf payload exceeds this many base64 chars go to the big-doc
-# lane (~1.5 MB of PDF ≈ the reference's skew threshold territory).
-BIG_DOC_B64_CHARS = 2_000_000
 
 _RULESET_CACHE: dict[str, Any] = {}
 _SCORER_CACHE: dict[str, Any] = {}
@@ -390,8 +388,8 @@ def extract_spans(
 ) -> DataFrame:
     """The extraction operator: (doc_id, spans) → OUTPUT_SCHEMA.
 
-    Zero-shuffle narrow map when ``num_partitions`` is None; with it, the
-    two-lane skew split described in the module docstring. ``sj_model``
+    Zero-shuffle narrow map when ``num_partitions`` is None; with it, one
+    round-robin ``repartition(num_partitions)`` before the map. ``sj_model``
     enables the W4 sentence-join stage: an ARPA model prefix (visible on
     executors, e.g. shipped with ``spark-submit --files``; loaded once
     per Python worker) or an in-memory ``SentenceJoinScorer``.
@@ -401,41 +399,10 @@ def extract_spans(
     executors — keep them module-level functions, not lambdas over big
     state)."""
     df = _span_input(df)
-
-    def run(d: DataFrame) -> DataFrame:
-        return map_rows(d, OUTPUT_SCHEMA, lambda: _extract_setup(
-            config, max_pages, sj_model, sj_threshold, time_budget_s, hooks))
-
-    if num_partitions is None:
-        return run(df)
-
-    # two-lane skew split: oversized pdf payloads get one-doc partitions
-    size_col = F.aggregate(
-        "spans",
-        F.lit(0).cast("long"),
-        lambda acc, s: acc
-        + F.when(s["kind"] == "pdf", F.length(F.coalesce(s["text"], F.lit("")))).otherwise(0),
-    )
-    sized = df.withColumn("_pdf_b64len", size_col)
-    small = (
-        sized.filter(F.col("_pdf_b64len") < BIG_DOC_B64_CHARS)
-        .repartition(num_partitions, "doc_id")
-        .drop("_pdf_b64len")
-    )
-    big = (
-        sized.filter(F.col("_pdf_b64len") >= BIG_DOC_B64_CHARS)
-        # round-robin across the FULL partition count: a heavy doc costs
-        # ~100× a light one, so packing two into one task floors the
-        # stage wall-clock (measured: 2×sample4 in one partition capped
-        # 32-core scaling efficiency at ~0.3)
-        .repartition(num_partitions)
-        .drop("_pdf_b64len")
-    )
-    # big lane FIRST: Spark launches union tasks in partition-index order,
-    # so oversized docs (each ~100× a light doc) start at t=0 — LPT-style
-    # packing. Scheduling them last leaves a full heavy-doc straggler tail
-    # (measured +35% wall at 32 cores).
-    return run(big).unionByName(run(small))
+    if num_partitions is not None:
+        df = df.repartition(num_partitions)
+    return map_rows(df, OUTPUT_SCHEMA, lambda: _extract_setup(
+        config, max_pages, sj_model, sj_threshold, time_budget_s, hooks))
 
 
 def extract_spans_mirror_dedup(df: DataFrame, **kwargs) -> DataFrame:

@@ -83,8 +83,8 @@ def ensure_parallel_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     Spark Connect, where no RDD probe exists.  The proxy's worst case
     is one redundant ~KB/row shuffle on a monolithic-file corpus; the
     common production layout (many files) is untouched either way.
-    Override with the conf ``spark.pdfx.scan.repartition`` = ``auto``
-    (default) | ``never`` | ``always``."""
+    Turn off with the conf ``spark.pdfx.scan.repartition`` = ``never``
+    (default ``auto``)."""
     try:
         mode = spark.conf.get("spark.pdfx.scan.repartition", "auto")
     except Exception:
@@ -92,14 +92,11 @@ def ensure_parallel_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     if mode == "never":
         return df
     par = target_parallelism(spark)
-    if mode != "always":
-        try:
-            width = df.rdd.getNumPartitions()
-        except Exception:  # Spark Connect: no RDD handle
-            width = len(df.inputFiles())
-        if width >= par:
-            return df
-    return df.repartition(par)
+    try:
+        width = df.rdd.getNumPartitions()
+    except Exception:  # Spark Connect: no RDD handle
+        width = len(df.inputFiles())
+    return df if width >= par else df.repartition(par)
 
 
 def map_rows(df: DataFrame, schema: StructType,

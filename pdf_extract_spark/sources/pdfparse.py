@@ -183,11 +183,19 @@ def _parse_hex_string(data: bytes, pos: int) -> tuple[bytes, int]:
         return bytes.fromhex(hx.decode("ascii")), end + 1
 
 
-def parse_object(data: bytes, pos: int):
+# a '[' or '<<' nested deeper than this is dropped (null here, skipped
+# by the content-stream array parser) and its contents parse at the
+# enclosing level: hostile nesting cannot exhaust the recursion limit
+# and lose the page
+MAX_NESTING = 32
+
+
+def parse_object(data: bytes, pos: int, depth: int = 0):
     """Parse one PDF object starting at pos. Returns (obj, new_pos).
 
     Recognizes: dict, array, name, number, string, hex string, bool, null,
-    and indirect references ``n g R``.
+    and indirect references ``n g R``. ``depth`` is the number of arrays
+    and dicts around ``pos``.
     """
     pos = _skip_ws(data, pos)
     if pos >= len(data):
@@ -200,10 +208,11 @@ def parse_object(data: bytes, pos: int):
         return Name(_decode_name(m.group(1))), m.end()
     if m.group(2) is not None:  # structural
         tok = m.group(2)
-        if tok == b"<<":
-            return _parse_dict(data, m.end())
-        if tok == b"[":
-            return _parse_array(data, m.end())
+        if tok in (b"<<", b"["):
+            if depth >= MAX_NESTING:
+                return None, m.end()
+            parse = _parse_dict if tok == b"<<" else _parse_array
+            return parse(data, m.end(), depth + 1)
         if tok == b"(":
             return _parse_literal_string(data, m.end())
         if tok == b"<":
@@ -240,14 +249,15 @@ def _try_ref(data: bytes, numtxt: bytes, end: int):
     return None
 
 
-def _parse_array(data: bytes, pos: int):
+def _parse_array(data: bytes, pos: int, depth: int = 1):
+    """``pos`` is just past the '['; ``depth`` counts it."""
     out = []
     n = len(data)
     while pos < n:
         pos = _skip_ws(data, pos)
         if pos < n and data[pos] == 0x5D:  # ]
             return out, pos + 1
-        obj, pos2 = parse_object(data, pos)
+        obj, pos2 = parse_object(data, pos, depth)
         if pos2 == pos:
             pos2 += 1
         else:
@@ -256,19 +266,20 @@ def _parse_array(data: bytes, pos: int):
     return out, pos
 
 
-def _parse_dict(data: bytes, pos: int):
+def _parse_dict(data: bytes, pos: int, depth: int = 1):
+    """``pos`` is just past the '<<'; ``depth`` counts it."""
     out: dict = {}
     n = len(data)
     while pos < n:
         pos = _skip_ws(data, pos)
         if data.startswith(b">>", pos):
             return out, pos + 2
-        key, pos = parse_object(data, pos)
+        key, pos = parse_object(data, pos, depth)
         if not isinstance(key, Name):
             # malformed — bail at next >>
             nxt = data.find(b">>", pos)
             return out, (len(data) if nxt < 0 else nxt + 2)
-        val, pos = parse_object(data, pos)
+        val, pos = parse_object(data, pos, depth)
         out[str(key)] = val
     return out, pos
 
@@ -312,9 +323,10 @@ def png_unfilter_row(ft: int, row: bytearray, prev, bpp: int) -> bool:
 
 def _png_predictor(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
     """Reverse PNG predictors (used by xref streams / Flate DecodeParms);
-    a row with an unknown filter type passes through as is."""
+    a row with an unknown filter type passes through as is. A row is
+    never longer than ``data``, whatever ``/Columns`` claims."""
     bpp = max(1, (colors * bpc) // 8)
-    stride = (colors * bpc * columns + 7) // 8
+    stride = min((colors * bpc * columns + 7) // 8, len(data))
     out = bytearray()
     prev = bytearray(stride)
     i = 0
@@ -363,17 +375,19 @@ def _lzw_decode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _apply_decode_parms(data: bytes, parms) -> bytes:
+def _apply_decode_parms(data: bytes, parms, res) -> bytes:
+    """Undo a PNG predictor (``/Predictor`` >= 10). Each parameter is
+    resolved through ``res``; one that is still not a non-negative int
+    means no predictor."""
     if not isinstance(parms, dict):
         return data
-    pred = parms.get("Predictor", 1)
-    if isinstance(pred, int) and pred >= 10:
-        return _png_predictor(
-            data,
-            int(parms.get("Colors", 1)),
-            int(parms.get("BitsPerComponent", 8)),
-            int(parms.get("Columns", 1)),
-        )
+    pred, colors, bpc, columns = (
+        res(parms.get(k, d)) for k, d in (
+            ("Predictor", 1), ("Colors", 1), ("BitsPerComponent", 8),
+            ("Columns", 1)))
+    if all(type(v) is int and v >= 0 for v in (pred, colors, bpc, columns)) \
+            and pred >= 10:
+        return _png_predictor(data, colors, bpc, columns)
     return data
 
 
@@ -402,9 +416,9 @@ def decode_stream(sdict: dict, raw: bytes, doc: "PDFDocument | None" = None) -> 
                     data = d.decompress(data)
                 except zlib.error:
                     return b""
-            data = _apply_decode_parms(data, res(p))
+            data = _apply_decode_parms(data, res(p), res)
         elif fname in ("LZWDecode", "LZW"):
-            data = _apply_decode_parms(_lzw_decode(data), res(p))
+            data = _apply_decode_parms(_lzw_decode(data), res(p), res)
         elif fname in ("ASCIIHexDecode", "AHx"):
             hx = re.sub(rb"[^0-9A-Fa-f]", b"", data.split(b">")[0])
             if len(hx) % 2:

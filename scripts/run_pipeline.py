@@ -36,9 +36,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--lineage", default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--num-partitions", type=int, default=None,
-                    help="enable the two-lane skew repartition (for "
-                         "generated/coarse inputs; file scans usually "
-                         "prefer small spark.sql.files.maxPartitionBytes)")
+                    help="round-robin the input into N partitions before "
+                         "extraction (for generated/coarse inputs; file "
+                         "scans usually prefer a small "
+                         "spark.sql.files.maxPartitionBytes)")
     ap.add_argument("--max-pages", type=int, default=None,
                     help="per-doc page budget (oversized-doc bypass lane)")
     ap.add_argument("--time-budget", type=float, default=None,

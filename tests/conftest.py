@@ -158,6 +158,12 @@ def kerned_pdf(seed: int, n_pages: int = 2, flate: bool = False) -> bytes:
             head = b" /Filter /FlateDecode" + head
         objs.append(b"<< /Length " + str(len(body)).encode() + head
                     + b" >>\nstream\n" + body + b"\nendstream")
+    return write_pdf(objs)
+
+
+def write_pdf(objs: list[bytes]) -> bytes:
+    """A PDF file of ``objs`` (object bodies numbered from 1, the first
+    the catalog) with its xref table and trailer."""
     buf = bytearray(b"%PDF-1.4\n")
     offsets = []
     for i, body in enumerate(objs, start=1):

@@ -1,10 +1,13 @@
 """Unit tests: PDF object layer (sources/pdfparse)."""
 
+import re
 import zlib
 
 import pytest
 
+from pdf_extract_spark.operators.extract import extract_pdf
 from pdf_extract_spark.sources.pdfparse import (
+    MAX_NESTING,
     Name,
     PDFDocument,
     Ref,
@@ -12,7 +15,7 @@ from pdf_extract_spark.sources.pdfparse import (
     parse_object,
 )
 from pdf_extract_spark.sources.corpus import synth_pdf
-from tests.conftest import fixture_bytes
+from tests.conftest import _png_encode, fixture_bytes, write_pdf
 
 
 class TestLexer:
@@ -53,6 +56,22 @@ class TestLexer:
         assert parse_object(b"true", 0)[0] is True
         assert parse_object(b"false", 0)[0] is False
         assert parse_object(b"null", 0)[0] is None
+
+    def test_nesting_is_bounded(self):
+        """Arrays and dicts nested past MAX_NESTING parse as null instead
+        of recursing until the interpreter's limit."""
+        obj, _ = parse_object(b"[" * 5000 + b"]" * 5000, 0)
+        depth = 0
+        while isinstance(obj, list) and obj:
+            obj, depth = obj[0], depth + 1
+        assert depth == MAX_NESTING
+        obj, pos = parse_object(b"<<" * 5000, 0)
+        assert isinstance(obj, dict) and pos == 10000
+        inner, _ = parse_object(b"<< /A " * 40 + b"1" + b" >>" * 40, 0)
+        for _ in range(MAX_NESTING - 1):
+            inner = inner["A"]
+        # the innermost dict took the deeper entries: the last /A wins
+        assert inner == {"A": 1}
 
     def test_comment_skipped(self):
         obj, _ = parse_object(b"% comment\n42", 0)
@@ -145,3 +164,63 @@ def test_runlength_decode_filter():
     out = decode_stream({"Filter": "RunLengthDecode"}, enc)
     assert out == b"ABCCCC"
     assert decode_stream({"Filter": "RL"}, enc) == b"ABCCCC"
+
+
+def _one_page_pdf(content: bytes, head: bytes = b"",
+                  extra: tuple[bytes, ...] = ()) -> bytes:
+    """``synth_pdf(1, n_pages=1)`` with its content stream replaced by
+    ``content`` (``head`` appended to the stream dict) and ``extra``
+    objects numbered from 6 on."""
+    objs = re.findall(rb"\d+ 0 obj\n(.*?)\nendobj\n", synth_pdf(1, n_pages=1),
+                      re.S)[:4]
+    objs.append(b"<< /Length %d%s >>\nstream\n%s\nendstream"
+                % (len(content), head, content))
+    return write_pdf(objs + list(extra))
+
+
+def _content() -> bytes:
+    return PDFDocument(synth_pdf(1, n_pages=1)).pages()[0].content
+
+
+def _spans(pdf: bytes) -> list:
+    return extract_pdf(pdf).spans
+
+
+class TestHostileStreams:
+    """Malformed stream parameters and nesting cost at most the stream
+    or the object, never the page or the task."""
+
+    def test_indirect_predictor_columns(self):
+        body = zlib.compress(_png_encode(_content(), 37))
+        flate = b" /Filter /FlateDecode /DecodeParms << /Predictor 15 /Columns "
+        direct = _one_page_pdf(body, flate + b"37 >>")
+        indirect = _one_page_pdf(body, flate + b"6 0 R >>", extra=(b"37",))
+        want = _spans(synth_pdf(1, n_pages=1))
+        assert _spans(direct) == want
+        assert _spans(indirect) == want
+
+    @pytest.mark.parametrize("columns,extra", [
+        (b"6 0 R", (b"/Foo",)),
+        (b"-3", ()),
+        (b"2000000000", ()),
+        (b"6 0 R", (b"(37)",)),
+    ], ids=["ref-to-name", "negative", "huge", "ref-to-string"])
+    def test_bad_predictor_params_do_not_raise(self, columns, extra):
+        body = zlib.compress(_png_encode(_content(), 37))
+        pdf = _one_page_pdf(body, b" /Filter /FlateDecode /DecodeParms"
+                            b" << /Predictor 15 /Columns " + columns + b" >>",
+                            extra=extra)
+        res = extract_pdf(pdf)
+        assert res.n_pages == 1
+
+    def test_huge_columns_row_is_bounded(self):
+        rows = bytes([2, 1, 2, 3, 4])
+        out = decode_stream({"Filter": Name("FlateDecode"), "DecodeParms": {
+            "Predictor": 12, "Columns": 2_000_000_000}}, zlib.compress(rows))
+        assert out == bytes([1, 2, 3, 4])
+
+    def test_deep_dict_nesting_keeps_page(self):
+        res = extract_pdf(_one_page_pdf(_content() + b"<<" * 3000))
+        assert len(res.spans) == 17
+        assert res.spans == _spans(synth_pdf(1, n_pages=1))
+        assert not [w for w in res.warnings if "recursion" in w[1]]

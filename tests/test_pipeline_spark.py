@@ -87,14 +87,6 @@ class TestExtractSpans:
         assert out["good"]["error"] is None
         assert len(out["good"]["spans"]) > 0
 
-    def test_skew_lane_split(self, spark, small_corpus):
-        """num_partitions triggers the two-lane plan; results unchanged."""
-        plain = {r["doc_id"]: r["spans"]
-                 for r in pipeline.extract_spans(small_corpus).collect()}
-        laned = {r["doc_id"]: r["spans"]
-                 for r in pipeline.extract_spans(small_corpus, num_partitions=4).collect()}
-        assert plain == laned
-
     def test_null_offset_sorts_last(self, spark):
         """A null offset next to numbered ones, or a null span entry,
         must not kill the job: null-offset spans follow the numbered ones

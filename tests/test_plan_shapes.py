@@ -132,6 +132,33 @@ def test_extraction_plan_is_narrow(spark):
         assert "MapInPandas" not in plan, sink.__name__
 
 
+def test_extraction_num_partitions_is_one_round_robin(spark, tmp_path):
+    """``num_partitions=n`` puts one round-robin exchange in front of the
+    one extraction map: the input is scanned once, nothing is unioned,
+    the output has ``n`` partitions, and the spans are the unpartitioned
+    run's."""
+    from pdf_extract_spark.plans.pipeline import extract_spans
+    from pdf_extract_spark.sources.corpus import corpus_pandas
+
+    path = str(tmp_path / "docs")
+    (spark.createDataFrame(corpus_pandas(8, use_fixtures=False))
+     .repartition(2).write.parquet(path))
+    df = spark.read.parquet(path)
+    out = extract_spans(df, num_partitions=4)
+    plan = _physical(out)
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "RoundRobinPartitioning(4)" in plan, plan
+    assert "Union" not in plan, plan
+    assert out.rdd.getNumPartitions() == 4
+
+    def spans(frame):
+        return sorted((r["doc_id"], r["spans"]) for r in frame.collect())
+
+    assert spans(out) == spans(extract_spans(df))
+
+
 def test_ivf_trained_plan_shape(spark):
     """ann_ivf_trained: every nested-loop join in the plan is against
     the IVF_K-row centroid side (broadcast — the intended tiny cross
