@@ -102,33 +102,39 @@ def glyph_to_unicode(name: str) -> str | None:
     return None
 
 
-def base_encoding_table(kind: str) -> dict[int, str]:
-    """code → unicode for the standard single-byte encodings."""
+def _codec_table(codec: str) -> dict[int, str]:
     table: dict[int, str] = {}
-    if kind == "WinAnsiEncoding":
-        for c in range(32, 256):
-            try:
-                table[c] = bytes([c]).decode("cp1252")
-            except UnicodeDecodeError:
-                pass
-    elif kind == "MacRomanEncoding":
-        for c in range(32, 256):
-            try:
-                table[c] = bytes([c]).decode("mac_roman")
-            except UnicodeDecodeError:
-                pass
-    else:  # StandardEncoding ≈ ASCII for the printable range + a few extras
-        for c in range(32, 127):
-            table[c] = chr(c)
-        table.update({
-            0xA1: "¡", 0xA2: "¢", 0xA3: "£", 0xA5: "¥",
-            0xA7: "§", 0xA9: "’", 0xAA: "“", 0xAB: "«",
-            0xB4: "·", 0xB5: "¶", 0xB7: "•", 0xB8: "‚",
-            0xB9: "„", 0xBA: "”", 0xBB: "»", 0xBC: "…",
-            0xD0: "—", 0x27: "’", 0x60: "‘",
-            0xAE: "ﬁ", 0xAF: "ﬂ", 0xB1: "–",
-        })
+    for c in range(32, 256):
+        try:
+            table[c] = bytes([c]).decode(codec)
+        except UnicodeDecodeError:
+            pass
     return table
+
+
+#: code → unicode for the standard single-byte encodings, built once per
+#: process (StandardEncoding ≈ ASCII for the printable range + a few
+#: extras)
+_BASE_TABLES: dict[str, dict[int, str]] = {
+    "WinAnsiEncoding": _codec_table("cp1252"),
+    "MacRomanEncoding": _codec_table("mac_roman"),
+    "StandardEncoding": {
+        **{c: chr(c) for c in range(32, 127)},
+        0xA1: "¡", 0xA2: "¢", 0xA3: "£", 0xA5: "¥",
+        0xA7: "§", 0xA9: "’", 0xAA: "“", 0xAB: "«",
+        0xB4: "·", 0xB5: "¶", 0xB7: "•", 0xB8: "‚",
+        0xB9: "„", 0xBA: "”", 0xBB: "»", 0xBC: "…",
+        0xD0: "—", 0x27: "’", 0x60: "‘",
+        0xAE: "ﬁ", 0xAF: "ﬂ", 0xB1: "–",
+    },
+}
+
+
+def base_encoding_table(kind: str) -> dict[int, str]:
+    """code → unicode for the standard single-byte encodings (any other
+    name reads as StandardEncoding). A fresh copy: fonts apply their
+    ``/Differences`` to it in place."""
+    return dict(_BASE_TABLES.get(kind, _BASE_TABLES["StandardEncoding"]))
 
 
 # Standard-14 AFM advance widths (1000-unit em) for ASCII 32..126 — width

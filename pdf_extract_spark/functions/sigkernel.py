@@ -10,10 +10,10 @@ per-character fold runs on the interpreted expression path, costing
 hashing kernel IS the dedup pipeline.
 
 This module is the execution path: one ``mapInArrow`` over the corpus
-signs each Arrow RecordBatch whole, with no per-document Python and no
-pandas —
+signs each Arrow RecordBatch in byte-bounded slices of whole documents,
+with no per-document Python and no pandas —
 
-  * tokens: the batch's UTF-8 string buffer is decoded to UTF-32 once
+  * tokens: the slice's UTF-8 string buffer is decoded to UTF-32 once
     (``ascii``/``substring`` in both engines are codepoint-based —
     probed, including astral planes); a token is a maximal run of
     codepoints other than U+0020 inside one document, found with numpy
@@ -23,7 +23,7 @@ pandas —
     precomputed power table (`np.add.reduceat` over per-char terms);
   * shingle hashes: composed from the token hashes, never building a
     shingle string — ``H(x␠y) = H(x)·31^(|y|+1) + 32·31^|y| + H(y)``
-    (mod PRIME), w-1 vectorized steps per batch;
+    (mod PRIME), w-1 vectorized steps per slice;
   * per-doc first-occurrence distinct: one ``np.unique`` on the
     (doc, hash) key, first indices re-sorted;
   * min-wise hashes: 8 affine maps + ``np.minimum.reduceat`` per doc;
@@ -49,6 +49,17 @@ per-document Python form it replaced and KB/s for the HOF form.
 Downstream (banding, candidate equi-joins, jaccard verify) stays pure
 Catalyst.
 
+Memory: Spark cuts Arrow batches by record count (10,000 by default;
+the package sets no ``arrow.maxRecordsPerBatch``), not by bytes, and
+one vectorized pass holds ~45x its text in numpy temporaries (~70x
+with simhash). ``sign_batch`` therefore signs each batch in zero-copy
+slices of at most ``SLICE_BYTES`` (256 KiB) of UTF-8 text — a larger
+document is a slice of its own — and concatenates the small per-slice
+outputs, so a batch still yields one output batch. Traced with
+tracemalloc, a full slice of ~4 KB docs peaks at 12 MB (16 MB with
+simhash), and one 10,000-doc, 3 MB ``neardup`` batch at 16 MB (23 MB)
+where signing it whole peaked at 134 MB (219 MB).
+
 The reference engine has no dedup surface (SURVEY.md §2.9); this module
 is part of the training-data-pipeline extension from the build brief.
 """
@@ -71,6 +82,9 @@ from pyspark.sql.types import (
 from . import sqlkit as K
 
 N_MINHASH = len(K.MINHASH_PARAMS)
+
+#: UTF-8 text bytes one vectorized pass signs at once (see "Memory" above)
+SLICE_BYTES = 256 * 1024
 
 #: power table BASE^k mod PRIME, ascending; grown on demand (a token
 #: longer than the table grows it once)
@@ -115,18 +129,23 @@ def segment_polyhash(codes: np.ndarray, starts: np.ndarray,
     return np.add.reduceat(terms, seg_off) % K.PRIME
 
 
+def _byte_offsets(text: pa.Array) -> np.ndarray:
+    """The n+1 UTF-8 byte offsets of a string / large_string array,
+    sliced or not, read off its own offsets buffer."""
+    off_dtype = np.int64 if pa.types.is_large_string(text.type) else np.int32
+    return np.frombuffer(text.buffers()[1], dtype=off_dtype)[
+        text.offset:text.offset + len(text) + 1].astype(np.int64)
+
+
 def _utf32(text: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(codepoints of the whole batch as uint32, per-doc codepoint
+    """(codepoints of the whole array as uint32, per-doc codepoint
     offsets of length n+1) for a string / large_string array, sliced or
     not — one decode of the array's data buffer."""
-    n = len(text)
-    off_dtype = np.int64 if pa.types.is_large_string(text.type) else np.int32
-    bufs = text.buffers()
-    off = np.frombuffer(bufs[1], dtype=off_dtype)[
-        text.offset:text.offset + n + 1].astype(np.int64)
+    off = _byte_offsets(text)
     lo, hi = int(off[0]), int(off[-1])
-    data = (np.frombuffer(bufs[2], dtype=np.uint8)[lo:hi]
-            if bufs[2] is not None and hi > lo
+    buf = text.buffers()[2]
+    data = (np.frombuffer(buf, dtype=np.uint8)[lo:hi]
+            if buf is not None and hi > lo
             else np.empty(0, dtype=np.uint8))
     codes = np.frombuffer(
         data.tobytes().decode("utf-8").encode("utf-32-le"), dtype=np.uint32)
@@ -158,10 +177,43 @@ def sign_batch(text: pa.Array, w: int,
     all (positional semantics — a doc without a full w-gram has
     nothing to mark). Min-wise values are unaffected by duplicates,
     but simhash votes are set-semantics, so both require the defaults.
+
+    The array is signed in slices of whole documents holding at most
+    ``SLICE_BYTES`` of text each; the result does not depend on where
+    the cuts fall.
     """
     if want_minhash or want_simhash:
         assert distinct and pad_short, \
             "minhash/simhash require distinct set semantics"
+    # cut the array into runs of whole documents holding <= SLICE_BYTES
+    # of UTF-8 text each (a larger document is a run of its own)
+    off = _byte_offsets(text)
+    cuts = [0]
+    while cuts[-1] < len(text):
+        a = cuts[-1]
+        b = int(np.searchsorted(off, off[a] + SLICE_BYTES, side="right")) - 1
+        cuts.append(max(b, a + 1))
+    if len(cuts) <= 2:
+        return _sign_slice(text, w, want_minhash, want_simhash,
+                           distinct, pad_short)
+    parts = [_sign_slice(text.slice(a, b - a), w, want_minhash,
+                         want_simhash, distinct, pad_short)
+             for a, b in zip(cuts, cuts[1:])]
+    out = {k: np.concatenate([p[k] for p in parts])
+           for k in ("valid", "values", "n_sh")}
+    out["offsets"] = np.concatenate(([0], np.cumsum(out["n_sh"])))
+    if want_minhash:
+        out["minhash"] = [np.concatenate([p["minhash"][j] for p in parts])
+                          for j in range(N_MINHASH)]
+    if want_simhash:
+        out["simhash"] = np.concatenate([p["simhash"] for p in parts])
+    return out
+
+
+def _sign_slice(text: pa.Array, w: int,
+                want_minhash: bool, want_simhash: bool,
+                distinct: bool, pad_short: bool) -> dict:
+    """:func:`sign_batch` over one slice, all its documents at once."""
     n = len(text)
     valid = ~np.asarray(text.is_null(), dtype=bool)
     codes, doc_off = _utf32(text)

@@ -5,8 +5,10 @@ Media payloads are opaque ``binary`` columns with typed metadata; decode /
 feature-extraction runs through the package's one Python row map
 (``runtime.map_rows``, a narrow ``mapInArrow``) — the same shape as the
 PDF extractor (plans/pipeline.py), so the 100 TB properties carry over:
-narrow map, fine-grained scan splits for oversized payloads, per-batch
-memory bounded by ``arrow.maxRecordsPerBatch``.
+narrow map, fine-grained scan splits for oversized payloads. Per-batch
+memory is not bounded in bytes: Spark cuts batches by record count
+(``arrow.maxRecordsPerBatch``, which the package does not set) and a
+batch's payloads come in whole as Python bytes.
 
 Decoding is tiered. Formats stdlib can handle decode for REAL
 (functions/mediacodec.py): BMP pixel decode with an 8×8 average-hash,
@@ -47,15 +49,6 @@ from pyspark.sql.types import (
 
 from ..functions.sqlkit import BASE, PRIME, polyhash_bytes
 from ..runtime import map_rows
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("media_kind", StringType()),
-        StructField("payload", BinaryType()),
-    ]
-)
 
 FEATURE_SCHEMA = StructType(
     [

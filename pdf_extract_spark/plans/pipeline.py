@@ -23,8 +23,11 @@ Scale design (north rule: 10^12 docs, explicit partitioning/skew):
     in front of the map for coarse inputs. BENCH.md §4 measured it
     within the benchmark's bounds of a hand-built small/big-doc split
     on every end-to-end metric; the split scanned the input twice.
-    ``arrow.maxRecordsPerBatch`` bounds batch memory so one giant doc
-    can't OOM an Arrow batch.
+    Batch memory is NOT bounded in bytes: Spark cuts the map's Arrow
+    batches by record count (``arrow.maxRecordsPerBatch``, 10,000
+    unless the session sets it — the package does not) and each batch
+    comes in whole as Python values, so it grows with document size;
+    sessions over large PDFs set that conf low (``bench.py`` uses 8).
   * Resume: output snapshot + per-partition lineage rows; a resumed run
     left-anti-joins the input against the committed output's doc_ids —
     a broadcast-able join at per-run failure scales.
@@ -543,13 +546,6 @@ def extract_html(df: DataFrame, config: dict | None = None,
     ``mapInArrow`` shape and span walker as extract_spans."""
     return map_rows(_span_input(df), HTML_SCHEMA,
                     lambda: _html_setup(config, max_pages, keep_br))
-
-
-
-LINEAGE_SCHEMA = [
-    "run_id", "partition_id", "doc_ids_min", "doc_ids_max",
-    "n_docs", "n_ok", "n_err", "wall_ms",
-]
 
 
 def lineage_frame(out: DataFrame, run_id: str) -> DataFrame:

@@ -306,6 +306,7 @@ def _kernel_docs(texts, w, form):
     else:
         arr = pa.array(texts, pa.large_string() if form == "large"
                        else pa.string())
+    _assert_slice_invariant(arr, w)
     out = []
     for distinct in (True, False):
         s = sign_batch(arr, w, distinct, distinct, distinct, distinct)
@@ -322,6 +323,32 @@ def _kernel_docs(texts, w, form):
                         if distinct else sh)
         out.append(rows)
     return out
+
+
+def _assert_slice_invariant(arr, w):
+    """``sign_batch`` returns identical arrays whether it signs ``arr``
+    one document per slice (a 1-byte budget: most docs are larger than
+    it) or in one slice, in all four modes: minhash, simhash, set and
+    positional."""
+    import numpy as np
+
+    from pdf_extract_spark.functions import sigkernel
+
+    modes = [(True, False), (False, True), (False, False),
+             (False, False, False, False)]
+    saved = sigkernel.SLICE_BYTES
+    got = []
+    try:
+        for budget in (1, 1 << 40):
+            sigkernel.SLICE_BYTES = budget
+            got.append([sigkernel.sign_batch(arr, w, *m) for m in modes])
+    finally:
+        sigkernel.SLICE_BYTES = saved
+    for one, whole in zip(*got):
+        assert one.keys() == whole.keys()
+        for k in whole:
+            for a, b in zip(np.atleast_2d(one[k]), np.atleast_2d(whole[k])):
+                assert a.dtype == b.dtype and np.array_equal(a, b), k
 
 
 def _duckdb_docs(texts, w):
@@ -375,9 +402,14 @@ def test_sigkernel_batch_edge_cases_match_duckdb():
     """Every doc of one multi-document batch (plain, sliced and
     large_string) equals
     the DuckDB fragments in set and positional mode, at w = 1, 2, 3
-    and 8 (8 is the exact-substring and decontamination width)."""
+    and 8 (8 is the exact-substring and decontamination width), and
+    every form — an empty array too — signs the same at any slice
+    budget."""
+    import pyarrow as pa
+
     for w in (1, 2, 3, 8):
         _assert_batch_matches_duckdb(KERNEL_EDGE_BATCH, w)
+        _assert_slice_invariant(pa.array([], pa.string()), w)
 
 
 _kernel_token = st.text(

@@ -168,3 +168,32 @@ def test_null_text_yields_null_signature(spark):
     assert rows[2].sh is None and rows[2].n_sh is None
     assert rows[2].mh0 is None and rows[2].simhash is None
     assert rows[1].sh and rows[1].n_sh == len(rows[1].sh)
+
+
+def test_kernel_working_set_is_bounded_by_slice_budget():
+    """``sign_batch`` signs an Arrow batch in slices of at most
+    ``SLICE_BYTES`` of text, so its numpy working set is one slice's
+    plus the outputs, not ~45x (~70x with simhash) the whole batch: on
+    2,000 docs of ~4 KB (8 MB of text) the traced peak stays under
+    32 MiB."""
+    import random
+    import tracemalloc
+
+    import pyarrow as pa
+
+    from pdf_extract_spark.functions.sigkernel import sign_batch
+
+    rng = random.Random(7)
+    vocab = ["".join(rng.choices("abcdefghijklmnopqrstuvwxyz",
+                                 k=rng.randint(2, 9)))
+             for _ in range(5000)]
+    text = pa.array([" ".join(rng.choices(vocab, k=620))
+                     for _ in range(2000)])
+    assert text.buffers()[2].size > 8_000_000
+    tracemalloc.start()
+    try:
+        sign_batch(text, 3, want_minhash=True, want_simhash=True)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 32 * 2**20, f"{peak / 2**20:.0f} MiB"

@@ -10,7 +10,7 @@ from pdf_extract_spark.functions.textops import (
     mat_mul,
     parse_tounicode,
 )
-from pdf_extract_spark.sources.pdfparse import PDFDocument
+from pdf_extract_spark.sources.pdfparse import Name, PDFDocument
 from pdf_extract_spark.sources.corpus import synth_pdf
 
 
@@ -124,6 +124,26 @@ class TestTextOps:
         dec._code_table = {}
         out = dec.decode(b"\x01")
         assert out == [(1, "", 500.0)]
+
+    def test_differences_stay_with_their_font(self):
+        # the base tables are shared per process; /Differences must not
+        # leak from one font's copy into another's
+        doc = PDFDocument(synth_pdf(0))
+
+        def font(encoding):
+            return {"Type": Name("Font"), "Subtype": Name("Type1"),
+                    "BaseFont": Name("Helvetica"), "Encoding": encoding}
+
+        def diffs(*items):
+            return {"BaseEncoding": Name("WinAnsiEncoding"),
+                    "Differences": list(items)}
+
+        a = FontDecoder(doc, font(diffs(65, Name("B"))), "F1")
+        b = FontDecoder(doc, font(diffs(65, Name("C"))), "F2")
+        plain = FontDecoder(doc, font(Name("WinAnsiEncoding")), "F3")
+        assert a.decode_agg(b"AB")[0] == "BB"
+        assert b.decode_agg(b"AB")[0] == "CB"
+        assert plain.decode_agg(b"AB")[0] == "AB"
 
 
 class TestToUnicode:
