@@ -210,12 +210,6 @@ class _MainContentParser(HTMLParser):
         self._flush()
 
 
-def extract_main_spans(html: str) -> list[tuple[str, str, str]]:
-    """(kind, text, media_ref) main-content spans of one HTML document,
-    in DOM order; boilerplate stripped per the module heuristics."""
-    return parse_main(html).out
-
-
 def parse_main(html: str) -> "_MainContentParser":
     """Parsed document (spans + title + declared lang attribute)."""
     p = _MainContentParser()
@@ -225,7 +219,3 @@ def parse_main(html: str) -> "_MainContentParser":
     except Exception:
         pass  # salvage whatever parsed before malformed markup
     return p
-
-
-def extract_title(html: str) -> str:
-    return _WS_RE.sub(" ", parse_main(html).title).strip()

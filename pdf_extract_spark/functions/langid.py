@@ -3,7 +3,7 @@
 The reference calls the cld3 neural net over JNI per line
 (DetectLanguage.java:22, gated by canDetectLang PDFExtract.java:1613-1630).
 We replace it with a deterministic stopword + character-profile scorer —
-pure Python/pandas, broadcast-friendly, no native deps. Accuracy is lower
+pure Python, broadcast-friendly, no native deps. Accuracy is lower
 than cld3 but deterministic and adequate for doc-majority voting (A3).
 
 Coverage (~105 languages — cld3's breadth except Bosnian, which cld3

@@ -234,11 +234,10 @@ class FontDecoder:
                     if isinstance(item, (int, float)):
                         code = int(item)
                     elif isinstance(item, (Name, str)):
-                        uni = glyph_to_unicode(str(item))
-                        if uni is not None:
-                            self.enc_table[code] = uni
-                        else:
-                            self.enc_table.pop(code, None)
+                        # an unknown glyph name maps to "": dropped at
+                        # every code, not decoded through chr(code)
+                        self.enc_table[code] = \
+                            glyph_to_unicode(str(item)) or ""
                         code += 1
             fd = doc.resolve(font.get("FontDescriptor"))
             self._flags_from_descriptor(doc, fd)

@@ -362,7 +362,7 @@ def band_join(a: DataFrame, b: DataFrame, self_join: bool,
     (band_idx, band_key) and keep each pair on its FIRST colliding band
     only, so the result holds exactly one row per candidate pair (ids
     are unique) — no ``distinct`` shuffle, no per-pair re-hash, no
-    streaming state.  The first colliding band is read off the carried
+    state.  The first colliding band is read off the carried
     ``band_keys`` arrays (``n_bands`` per-band compares); ``self_join``
     adds ``a.<id_col> < b.<id_col>``.  Columns stay reachable as
     ``a.*`` / ``b.*``."""
@@ -620,8 +620,7 @@ def incremental_pairs_against_sketch(new_docs: DataFrame,
     O(batch·bands) hashing on the new side plus one band equi-join; the
     carried shingle sets make the jaccard verify join-local.  The
     first-colliding-band rule (:func:`band_join`) emits each pair once
-    and keeps no state, so the same call is the stream-static join of
-    ``streaming.windows.neardup_stream``."""
+    and keeps no state."""
     return _verified(
         band_join(banded_signatures(new_docs), sketch, False),
         "new_id", "corpus_id")
@@ -629,8 +628,8 @@ def incremental_pairs_against_sketch(new_docs: DataFrame,
 
 def incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time dedup: near-dup pairs between a NEW batch and the
-    existing corpus — the filter a streaming ingest pipeline runs
-    before appending to a 10^12-doc table.
+    existing corpus — the filter an ingest pipeline runs before
+    appending to a 10^12-doc table.
 
     The corpus side reads the MATERIALIZED bucketed sketch table
     (written once per session by :func:`ensure_sketch_table`), so each
@@ -847,9 +846,9 @@ def banded_signatures(docs: DataFrame) -> DataFrame:
     per (doc, LSH band) carrying the distinct shingle-hash set, its
     size, the doc's band-key array and the band key — the SINGLE
     definition of the MinHash banding that every consumer (bucketed
-    sketch write, incremental batch join, streaming stream-static join)
-    shares, so a sketch written at ingest time joins bit-identically
-    against signatures computed in-plan.
+    sketch write, incremental batch join) shares, so a sketch written
+    at ingest time joins bit-identically against signatures computed
+    in-plan.
 
     Signatures come from the vectorized Arrow kernel and the bands from
     one posexplode — the whole frame is a single narrow pass over the
@@ -871,9 +870,8 @@ def write_sketch_table(spark: SparkSession, docs: DataFrame, table: str,
     first-colliding-band rule leaves no pair duplicates to collapse).
     Signatures are computed ONCE at ingest; every later dedup pass
     (self-join via :func:`band_pairs`, incremental batch join via
-    :func:`incremental_pairs_against_sketch`, streaming stream-static
-    join via ``streaming.windows.neardup_stream``) reads this table
-    instead of re-hashing the corpus.
+    :func:`incremental_pairs_against_sketch`) reads this table instead
+    of re-hashing the corpus.
 
     Rows carry the shingle set alongside the band key (2 bands → 2×
     storage) so the jaccard verify needs no extra join back to the
@@ -893,7 +891,7 @@ def append_to_sketch_table(spark: SparkSession, new_docs: DataFrame,
     """The accept step of incremental ingest: after a new batch passes
     :func:`incremental_pairs_against_sketch` (or its duplicates are
     resolved), append the batch's banded signatures to the sketch table
-    so the NEXT ingest — batch or streaming — sees these docs as corpus.
+    so the NEXT ingest sees these docs as corpus.
     This completes the sketch lifecycle: write once at bootstrap,
     append per accepted batch, never re-hash the corpus.
 
@@ -1019,37 +1017,6 @@ def ingest_lifecycle_oracle() -> str:
                case when tag_a = 1 then 'b1' else 'b2' end as phase
         from verified
     """
-
-
-def cap_band_buckets(bands: DataFrame, max_bucket: int) -> DataFrame:
-    """Skew control for the LSH candidate join: drop band buckets with
-    more than ``max_bucket`` members before the self-join —
-    ``band_pairs(cap_band_buckets(bands, cap))``.
-
-    At web scale a single degenerate band key — empty documents,
-    templated boilerplate, crawler error pages — can hold millions of
-    docs, and the self-join then materializes k²/2 candidate pairs from
-    ONE key: the classic hot-key stage that stalls a 1000-executor job
-    on a single task. Production LSH dedup caps the bucket; truly giant
-    buckets are better handled by exact dedup — their members are
-    near-identical by construction.  Under the first-colliding-band
-    rule a pair is emitted only from its lowest colliding band, so a
-    pair whose lowest colliding band is capped is dropped even if a
-    later band bucket survives.
-
-    The cap is a windowed count over (band_idx, band_key) — on the
-    bucketed sketch table the window's partitioning matches the bucket
-    spec, so it adds NO Exchange (plan-asserted). Recall tradeoff is
-    explicit: callers opt in by composing it; the registered oracle
-    queries run uncapped."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("band_idx", "band_key")
-    return (
-        bands.withColumn("_bucket_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("_bucket_n") <= max_bucket)
-        .drop("_bucket_n")
-    )
 
 
 def sketch_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

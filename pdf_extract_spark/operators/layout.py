@@ -3,8 +3,7 @@ boilerplate strip (A4), paragraph segmentation (W2).
 
 List/numpy implementations invoked per document from the Arrow-batched
 pipeline UDF (plans/pipeline.py). Per-document line counts are small
-(hundreds), so the passes are plain sequential code; pandas is reserved for
-the doc-level vectorized regex chains (textrules) and the Arrow boundary.
+(hundreds), so the passes are plain sequential code.
 
 Reference semantics reproduced:
   * W1 same-row merge — tops equal within ±8 px, horizontal gap < 200 px

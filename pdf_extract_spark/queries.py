@@ -24,7 +24,7 @@ Grouping (SURVEY.md §2 ids in parens):
     dedup_clusters (connected components over the pair graph),
     dedup_keep_canonical (the apply step: surviving corpus after
     near-dedup), dedup_incremental (new ingest batch vs corpus via the
-    banded sketch join — the streaming ingest filter),
+    banded sketch join — the ingest filter),
     dedup_sketch_pairs (the materialized bucketed-sketch self-join:
     signatures hashed once at ingest, zero-Exchange candidate join),
     simhash_fingerprints,

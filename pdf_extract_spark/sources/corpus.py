@@ -21,8 +21,6 @@ import base64
 import os
 import random
 
-import pandas as pd
-
 FIXTURE_DIR = "/root/reference/Test/pdf-in"
 FIXTURE_NAMES = ["sample.pdf", "sample2.pdf", "sample3.pdf", "sample4.pdf"]
 
@@ -141,13 +139,6 @@ def make_doc(doc_idx: int, fixtures: dict[str, bytes] | None = None,
     for _ in range(rng.randint(0, 1)):
         add("text", "Trailing note for document %d." % doc_idx)
     return {"doc_id": f"doc{doc_idx:08d}", "spans": spans}
-
-
-def corpus_pandas(n_docs: int, use_fixtures: bool = True,
-                  skew_every: int = 50) -> pd.DataFrame:
-    """Small corpora for tests: driver-side pandas frame."""
-    fixtures = load_fixtures() if use_fixtures else {}
-    return pd.DataFrame([make_doc(i, fixtures, skew_every) for i in range(n_docs)])
 
 
 def corpus_dataframe(spark, n_docs: int, use_fixtures: bool = True,

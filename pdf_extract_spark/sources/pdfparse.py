@@ -3,7 +3,7 @@
 From-scratch replacement for the reference's poppler subprocess scan
 (reference: PDFToHtml.java:45-72 spawns ``pdftohtml``; we tokenize raw PDF
 bytes in-process with stdlib ``zlib``/``re`` so extraction runs inside
-Arrow-batched pandas UDFs with no process boundary — SURVEY.md §2.1 S4).
+the Arrow-batched row map with no process boundary — SURVEY.md §2.1 S4).
 
 Design notes for scale:
   * Streams are decoded LAZILY (`PDFStream.data` property) — image payloads

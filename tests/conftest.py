@@ -29,6 +29,26 @@ def spark():
     s.stop()
 
 
+def corpus_frame(spark, n_docs: int, use_fixtures: bool = False,
+                 suffixes: tuple[str, ...] = ("",)):
+    """A small driver-side corpus of ``corpus.make_doc`` rows under the
+    explicit ``(doc_id string, spans SPAN_TYPE)`` schema, so span structs
+    never infer as maps. Each doc is repeated once per ``doc_id`` suffix
+    (byte-identical mirror copies), all of one suffix before the next."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from pdf_extract_spark.plans.pipeline import SPAN_TYPE
+    from pdf_extract_spark.sources.corpus import load_fixtures, make_doc
+
+    fixtures = load_fixtures() if use_fixtures else {}
+    docs = [make_doc(i, fixtures) for i in range(n_docs)]
+    schema = StructType([StructField("doc_id", StringType()),
+                         StructField("spans", SPAN_TYPE)])
+    return spark.createDataFrame(
+        [(d["doc_id"] + sfx, d["spans"]) for sfx in suffixes for d in docs],
+        schema)
+
+
 def fixture_bytes(name: str) -> bytes | None:
     path = os.path.join(FIXTURE_DIR, name)
     if not os.path.exists(path):

@@ -5,7 +5,7 @@ from __future__ import annotations
 import re
 
 import pytest
-from conftest import fixture_bytes
+from conftest import corpus_frame, fixture_bytes
 
 #: the hermetic 2-page synthetic PDF; the reference's sample PDFs run as
 #: extra cases when its fixture directory is present
@@ -75,9 +75,8 @@ def test_render_error_doc():
 
 def test_extract_html_operator(spark):
     from pdf_extract_spark.plans.pipeline import extract_html
-    from pdf_extract_spark.sources.corpus import corpus_pandas
 
-    docs = spark.createDataFrame(corpus_pandas(6, use_fixtures=True))
+    docs = corpus_frame(spark, 6, use_fixtures=True)
     rows = {r.doc_id: r for r in extract_html(docs).collect()}
     assert len(rows) == 6
     ok = [r for r in rows.values() if r.error is None]

@@ -7,6 +7,7 @@ import pytest
 from pdf_extract_spark.operators.extract import extract_pdf
 from pdf_extract_spark.plans import pipeline
 from pdf_extract_spark.sources.corpus import corpus_dataframe, make_doc, synth_pdf
+from tests.conftest import corpus_frame
 
 
 @pytest.fixture(scope="module")
@@ -246,20 +247,12 @@ def test_mirror_dedup_extraction_equivalent(spark):
     """extract_spans_mirror_dedup produces the same per-doc results as
     plain extract_spans on a corpus with byte-identical mirrors, while
     extracting each distinct payload only once."""
-    import pandas as pd
-
     from pdf_extract_spark.plans.pipeline import (
         extract_spans,
         extract_spans_mirror_dedup,
     )
-    from pdf_extract_spark.sources.corpus import corpus_pandas
 
-    base = corpus_pandas(6, use_fixtures=False)
-    mirrored = pd.concat([
-        base,
-        base.assign(doc_id=base["doc_id"] + "_mirror"),
-    ], ignore_index=True)
-    df = spark.createDataFrame(mirrored)
+    df = corpus_frame(spark, 6, suffixes=("", "_mirror"))
 
     plain = {r.doc_id: r for r in extract_spans(df).collect()}
     dedup = {r.doc_id: r for r in extract_spans_mirror_dedup(df).collect()}
@@ -279,19 +272,11 @@ def test_run_pipeline_mirror_dedup_with_resume(spark, tmp_path):
     """Integration: --dedup-mirrors composes with resume + lineage —
     a mirrored corpus extracts once per distinct payload, commits all
     carrier docs, and a resumed run finds nothing left."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from pdf_extract_spark.sources.corpus import corpus_pandas
-
-    base = corpus_pandas(6, use_fixtures=False)
-    mirrored = pd.concat(
-        [base, base.assign(doc_id=base["doc_id"] + "_m")],
-        ignore_index=True,
-    )
     inp = str(tmp_path / "in_mirror")
     outp = str(tmp_path / "out_mirror")
-    spark.createDataFrame(mirrored).write.parquet(inp)
+    corpus_frame(spark, 6, suffixes=("", "_m")).write.parquet(inp)
 
     r1 = pipeline.run_pipeline(spark, inp, outp, dedup_mirrors=True)
     assert r1["n_docs"] == 12
@@ -300,7 +285,7 @@ def test_run_pipeline_mirror_dedup_with_resume(spark, tmp_path):
     assert out.filter(F.col("error").isNotNull()).count() == 0
     # mirror pairs carry identical spans
     rows = {r.doc_id: [tuple(s) for s in r.spans] for r in out.collect()}
-    for k in base["doc_id"]:
+    for k in (make_doc(i)["doc_id"] for i in range(6)):
         assert rows[k] == rows[k + "_m"]
 
     r2 = pipeline.run_pipeline(spark, inp, outp, resume=True,

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import pytest
 
+from tests.conftest import corpus_frame
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -122,9 +124,8 @@ def test_extraction_plan_is_narrow(spark):
     in-memory source too (BENCH.md §4: narrow beats shuffle for payload
     tables), in both sinks, with no pandas boundary."""
     from pdf_extract_spark.plans.pipeline import extract_html, extract_spans
-    from pdf_extract_spark.sources.corpus import corpus_pandas
 
-    df = spark.createDataFrame(corpus_pandas(4, use_fixtures=False))
+    df = corpus_frame(spark, 4)
     for sink in (extract_spans, extract_html):
         plan = _physical(sink(df))
         assert "Exchange" not in plan, sink.__name__
@@ -138,11 +139,9 @@ def test_extraction_num_partitions_is_one_round_robin(spark, tmp_path):
     the output has ``n`` partitions, and the spans are the unpartitioned
     run's."""
     from pdf_extract_spark.plans.pipeline import extract_spans
-    from pdf_extract_spark.sources.corpus import corpus_pandas
 
     path = str(tmp_path / "docs")
-    (spark.createDataFrame(corpus_pandas(8, use_fixtures=False))
-     .repartition(2).write.parquet(path))
+    corpus_frame(spark, 8).repartition(2).write.parquet(path)
     df = spark.read.parquet(path)
     out = extract_spans(df, num_partitions=4)
     plan = _physical(out)
@@ -315,20 +314,19 @@ def test_minhash_lsh_verify_builds_on_candidates(spark):
         assert re.search(r"Join \[band_idx#", sub), sub
 
 
-def test_neardup_stream_plan_has_no_rehash(spark):
-    """neardup_stream tells a pair's first colliding band from the
-    carried band-key arrays, not by re-folding minhashes through
-    interpreted higher-order functions: no aggregate( / transform( in
-    the plan."""
+def test_incremental_sketch_join_plan_has_no_rehash(spark):
+    """incremental_pairs_against_sketch tells a pair's first colliding
+    band from the carried band-key arrays, not by re-folding minhashes
+    through interpreted higher-order functions: no aggregate( /
+    transform( in the plan."""
     from pyspark.sql import functions as F
 
     from pdf_extract_spark.operators import dedup
-    from pdf_extract_spark.streaming.windows import neardup_stream
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .select("doc_id", "text")
     sketch = dedup.banded_signatures(docs.filter(F.col("doc_id") % 10 != 0))
-    plan = _physical(neardup_stream(
+    plan = _physical(dedup.incremental_pairs_against_sketch(
         docs.filter(F.col("doc_id") % 10 == 0), sketch))
     for marker in ("aggregate(", "transform("):
         assert marker not in plan, (marker, plan)
@@ -362,51 +360,6 @@ def test_ensure_sketch_table_distinct_for_same_basename(spark, tmp_path):
         for t in (t_a, t_b):
             if t:
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_band_bucket_cap_semantics_and_no_extra_shuffle(spark, tmp_path):
-    """Hot-bucket skew control: cap_band_buckets drops exactly the
-    oversized band buckets, and on the bucketed sketch table the capped
-    self-join plan is STILL Exchange-free (the windowed count rides the
-    table's bucketing)."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from pdf_extract_spark.operators import dedup
-
-    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        docs = dedup._docs(spark, SF_DIR)
-        dedup.write_sketch_table(
-            spark, docs, "sketch_cap_t", str(tmp_path / "skc"), buckets=8)
-        t = spark.table("sketch_cap_t")
-        sizes = (t.groupBy("band_idx", "band_key")
-                 .agg(F.count("*").alias("n")))
-        max_n = sizes.agg(F.max("n")).collect()[0][0]
-        assert max_n >= 2  # the corpus has real collisions to cap
-        cap = max_n - 1
-        capped = dedup.cap_band_buckets(t, cap)
-        kept = (capped.groupBy("band_idx", "band_key")
-                .agg(F.count("*").alias("n")))
-        assert kept.agg(F.max("n")).collect()[0][0] <= cap
-        # rows kept = all rows of buckets with n <= cap, exactly
-        want = sizes.filter(F.col("n") <= cap).agg(
-            F.sum("n")).collect()[0][0]
-        assert capped.count() == want
-
-        pairs = dedup.band_pairs(capped)
-        plan = pairs._jdf.queryExecution().executedPlan().toString()
-        assert not re.findall(r"Exchange [^\n]*", plan), plan
-        # capped pairs are a subset of the uncapped pair set
-        got = {(r.doc_id_a, r.doc_id_b) for r in pairs.collect()}
-        full = {(r.doc_id_a, r.doc_id_b)
-                for r in dedup.band_pairs(t).collect()}
-        assert got <= full
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
-        spark.sql("DROP TABLE IF EXISTS sketch_cap_t")
 
 
 def test_sketch_append_lifecycle(spark, tmp_path):
@@ -484,6 +437,23 @@ def test_row_map_plan_is_arrow(spark, tmp_path, name):
     plan = _physical(df)
     assert "MapInArrow" in plan, name
     assert "MapInPandas" not in plan, name
+
+
+def test_row_map_package_has_no_pandas_source():
+    """No module of the package imports pandas or opens a pandas UDF
+    boundary: ``runtime.map_rows`` is the only way into Python."""
+    import pathlib
+    import re
+
+    import pdf_extract_spark
+
+    pat = re.compile(r"import pandas|applyInPandas|mapInPandas")
+    root = pathlib.Path(pdf_extract_spark.__file__).parent
+    hits = [f"{p.relative_to(root)}:{i}: {line.strip()}"
+            for p in sorted(root.rglob("*.py"))
+            for i, line in enumerate(p.read_text().splitlines(), 1)
+            if pat.search(line)]
+    assert not hits, hits
 
 
 def test_bpe_no_cartesian_no_python(spark):

@@ -145,6 +145,22 @@ class TestTextOps:
         assert b.decode_agg(b"AB")[0] == "CB"
         assert plain.decode_agg(b"AB")[0] == "AB"
 
+    def test_unknown_differences_name_drops_at_every_code(self):
+        # an unknown glyph name is dropped whether its code is printable
+        # ASCII or not; a ToUnicode entry for the code still wins
+        doc = PDFDocument(synth_pdf(0))
+        font = {"Type": Name("Font"), "Subtype": Name("Type1"),
+                "BaseFont": Name("Helvetica"),
+                "Encoding": {"BaseEncoding": Name("WinAnsiEncoding"),
+                             "Differences": [65, Name("C"),
+                                             Name("nosuchglyph"),
+                                             200, Name("nosuchglyph")]}}
+        dec = FontDecoder(doc, font, "F1")
+        assert dec.decode_agg(b"AB\xc8")[0] == "C"
+        dec = FontDecoder(doc, font, "F1")
+        dec.tounicode = {0x42: "b"}
+        assert dec.decode_agg(b"AB\xc8")[0] == "Cb"
+
 
 class TestToUnicode:
     def test_bfchar(self):

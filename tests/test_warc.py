@@ -103,12 +103,10 @@ training pipeline wants to keep intact.</p>
 
 
 def test_html_main_content_extraction():
-    from pdf_extract_spark.functions.htmlextract import (
-        extract_main_spans,
-        extract_title,
-    )
+    from pdf_extract_spark.functions.htmlextract import parse_main
 
-    spans = extract_main_spans(_HTML_PAGE.decode())
+    parsed = parse_main(_HTML_PAGE.decode())
+    spans = parsed.out
     texts = [t for k, t, _ in spans if k == "text"]
     media = [m for k, _, m in spans if k == "media"]
     assert texts[0] == "Main headline"
@@ -121,7 +119,7 @@ def test_html_main_content_extraction():
     assert "Copyright" not in joined     # footer dropped
     assert "BOILER SCRIPT" not in joined  # script dropped
     assert "one two three" not in joined  # link-list paragraph dropped
-    assert extract_title(_HTML_PAGE.decode()) == "A Title"
+    assert " ".join(parsed.title.split()) == "A Title"
 
 
 def test_inline_img_does_not_split_block():
@@ -129,7 +127,7 @@ def test_inline_img_does_not_split_block():
     flush-on-img severed the leading fragment, which then fell under
     MIN_BLOCK_CHARS and lost the first sentence) and media refs keep
     document order."""
-    from pdf_extract_spark.functions.htmlextract import extract_main_spans
+    from pdf_extract_spark.functions.htmlextract import parse_main
 
     html = ('<html><body><p>Start of the paragraph '
             '<img src="http://img.example/a.png"/> and the rest of the '
@@ -137,7 +135,7 @@ def test_inline_img_does_not_split_block():
             '<img src="http://img.example/b.png"/>'
             '<p>Second paragraph is also long enough to survive the '
             'block threshold.</p></body></html>')
-    spans = extract_main_spans(html)
+    spans = parse_main(html).out
     texts = [t for k, t, _ in spans if k == "text"]
     assert len(texts) == 2
     assert texts[0] == ("Start of the paragraph and the rest of the "
@@ -178,7 +176,7 @@ def test_html_extraction_never_raises():
     """Malformed/adversarial markup degrades, never throws."""
     import random
 
-    from pdf_extract_spark.functions.htmlextract import extract_main_spans
+    from pdf_extract_spark.functions.htmlextract import parse_main
 
     samples = [
         "",
@@ -202,7 +200,7 @@ def test_html_extraction_never_raises():
             s[i] = chr(rng.randrange(1, 128))
         samples.append("".join(s))
     for html in samples:
-        out = extract_main_spans(html)
+        out = parse_main(html).out
         assert isinstance(out, list)  # no throw, structured output
 
 
@@ -298,22 +296,22 @@ def test_html_lang_attribute_fallback(spark):
 
 
 def test_aria_landmark_roles_are_boilerplate():
-    from pdf_extract_spark.functions.htmlextract import extract_main_spans
+    from pdf_extract_spark.functions.htmlextract import parse_main
 
     html = ('<html><body>'
             '<div role="navigation"><p>Home page link list goes here now</p></div>'
             '<div role="contentinfo"><p>Site information and legal notices.</p></div>'
             '<p>The real article body, with enough characters to keep.</p>'
             '</body></html>')
-    texts = [t for k, t, _ in extract_main_spans(html) if k == "text"]
+    texts = [t for k, t, _ in parse_main(html).out if k == "text"]
     assert texts == ["The real article body, with enough characters to keep."]
 
 
 def test_search_results_class_is_not_chrome():
-    from pdf_extract_spark.functions.htmlextract import extract_main_spans
+    from pdf_extract_spark.functions.htmlextract import parse_main
 
     html = ('<html><body><div class="search-results">'
             '<p>First search result with a meaningful description text.</p>'
             '</div></body></html>')
-    texts = [t for k, t, _ in extract_main_spans(html) if k == "text"]
+    texts = [t for k, t, _ in parse_main(html).out if k == "text"]
     assert texts  # content inside a search-results container survives
