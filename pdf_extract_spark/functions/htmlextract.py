@@ -31,7 +31,8 @@ BLOCK_TAGS = frozenset(
     "p div h1 h2 h3 h4 h5 h6 li td th dd dt article section blockquote "
     "pre figcaption summary main body br tr table ul ol".split()
 )
-SKIP_TAGS = frozenset("script style noscript svg template iframe head".split())
+SKIP_TAGS = frozenset(
+    "script style noscript svg template iframe head title".split())
 BOILER_TAGS = frozenset("nav header footer aside form button select".split())
 HEADING_TAGS = frozenset("h1 h2 h3 h4 h5 h6".split())
 VOID_TAGS = frozenset(
@@ -90,9 +91,7 @@ class _MainContentParser(HTMLParser):
         #: strand the leading fragment below MIN_BLOCK_CHARS and drop
         #: the sentence); emitted right after the block's text span
         self._pending_media: list[str] = []
-        self.title = ""
         self.lang_attr = ""
-        self._in_title = False
 
     # -- block lifecycle ----------------------------------------------------
     def _flush(self) -> None:
@@ -124,12 +123,6 @@ class _MainContentParser(HTMLParser):
         if tag == "html" and not self.lang_attr:
             lang = next((v for k, v in attrs if k == "lang" and v), "")
             self.lang_attr = lang.split("-")[0].strip().lower()
-        if tag == "title":
-            # title lives inside <head> (a skip container) but is the
-            # one piece of it worth keeping
-            self._in_title = True
-            self._stack.append((tag, False))
-            return
         if tag in SKIP_TAGS:
             self._skip += 1
             self._stack.append((tag, False))
@@ -172,8 +165,6 @@ class _MainContentParser(HTMLParser):
             self._link = max(0, self._link - 1)
         if tag in HEADING_TAGS:
             self._heading = max(0, self._heading - 1)
-        if tag == "title":
-            self._in_title = False
 
     def handle_endtag(self, tag):
         if tag in VOID_TAGS:
@@ -192,9 +183,6 @@ class _MainContentParser(HTMLParser):
     def handle_data(self, data):
         if not data:
             return
-        if self._in_title:
-            self.title += data
-            return
         if self._skip:
             return
         if self._cur is None:
@@ -211,7 +199,7 @@ class _MainContentParser(HTMLParser):
 
 
 def parse_main(html: str) -> "_MainContentParser":
-    """Parsed document (spans + title + declared lang attribute)."""
+    """Parsed document: ``out`` spans and the declared ``lang_attr``."""
     p = _MainContentParser()
     try:
         p.feed(html or "")

@@ -43,8 +43,8 @@ therefore keep checking this path end-to-end.
 Scale shape: the kernel is a NARROW Arrow map over the scan — no
 shuffle, no driver involvement. Measured on one core of a shared 4-core
 VM (perfbench ``neardup`` traced replay: 50k docs of ~300 bytes, 10k-doc
-batches, Python-list conversion in and out included): ~35 ms per 1,000
-docs, ~8.5 MB/s of text, against 95-111 ms (~3 MB/s) for the
+batches, Python-list conversion in and out included): ~23-25 ms per
+1,000 docs, ~12 MB/s of text, against 95-111 ms (~3 MB/s) for the
 per-document Python form it replaced and KB/s for the HOF form.
 Downstream (banding, candidate equi-joins, jaccard verify) stays pure
 Catalyst.
@@ -86,6 +86,10 @@ N_MINHASH = len(K.MINHASH_PARAMS)
 #: UTF-8 text bytes one vectorized pass signs at once (see "Memory" above)
 SLICE_BYTES = 256 * 1024
 
+#: segment length from which :func:`segment_polyhash` reduces every
+#: per-character term before summing (below it, raw sums fit in int64)
+LAZY_MOD_CHARS = 1 << 12
+
 #: power table BASE^k mod PRIME, ascending; grown on demand (a token
 #: longer than the table grows it once)
 _POWS: np.ndarray | None = None
@@ -108,13 +112,15 @@ def segment_polyhash(codes: np.ndarray, starts: np.ndarray,
     """Polynomial hash of each segment ``codes[starts[k]:starts[k] +
     lens[k]]`` — the numpy twin of the ``sqlkit.polyhash`` SQL fragment
     (fold ``acc*31 + codepoint`` mod PRIME): per-char term = code *
-    BASE^(L-1-i) mod PRIME, one ``reduceat`` over the segments.
+    (BASE^(L-1-i) mod PRIME), one ``reduceat`` over the segments.
     Segments are non-empty, ascending and non-overlapping; characters
     between segments are skipped.
 
-    Overflow-safe in int64: code < 2^21, power < 2^30 → term < 2^51;
-    terms are reduced mod PRIME (< 2^30) before the segment sum, so a
-    sum of L terms needs L < 2^33 chars — far past any token."""
+    Overflow-safe in int64: code < 2^21, power < 2^30 → term < 2^51,
+    so a sum of fewer than 2^12 raw terms stays below 2^63 and is
+    reduced once, after the ``reduceat``.  When any segment reaches
+    ``LAZY_MOD_CHARS`` the terms are reduced mod PRIME (< 2^30) first,
+    so a sum of L terms needs L < 2^33 chars — far past any token."""
     if len(starts) == 0:
         return np.empty(0, dtype=np.int64)
     # gather the segments' chars contiguously: position of each char,
@@ -124,8 +130,10 @@ def segment_polyhash(codes: np.ndarray, starts: np.ndarray,
     rel = np.arange(total, dtype=np.int64) - np.repeat(seg_off, lens)
     pos = np.repeat(starts, lens) + rel
     exp = np.repeat(lens - 1, lens) - rel
-    pw = _pow_table(int(lens.max()))
-    terms = (codes[pos] * pw[exp]) % K.PRIME
+    longest = int(lens.max())
+    terms = codes[pos] * _pow_table(longest)[exp]
+    if longest >= LAZY_MOD_CHARS:
+        terms %= K.PRIME
     return np.add.reduceat(terms, seg_off) % K.PRIME
 
 

@@ -299,12 +299,20 @@ def test_minhash_lsh_verify_builds_on_candidates(spark):
     carries the frame's ``sh`` column has the band join below it (it
     holds shingle sets of candidates only), so no task deserializes a
     copy of the whole corpus's shingle sets. Checked on the executed
-    adaptive plan, where AQE has seen the cached frame's exact size."""
+    adaptive plan, where AQE has seen the cached frame's exact size.
+    The same holds for both ``F.broadcast``-forced sides of the
+    analyzed plan: a forced build side is never corpus-sized."""
     import re
 
     from pdf_extract_spark.queries import QUERIES
 
     df = QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
+    forced = list(_subtrees(df._jdf.queryExecution().analyzed().toString(),
+                            "ResolvedHint (strategy=broadcast)"))
+    assert len(forced) == 2, forced
+    for sub in forced:
+        assert re.search(r"Join Inner, \(\(band_idx#\d+ = band_idx#",
+                         sub), sub
     df.collect()
     plan = _physical(df)
     carrying = [sub for sub in _subtrees(plan, "BroadcastExchange")
@@ -312,6 +320,45 @@ def test_minhash_lsh_verify_builds_on_candidates(spark):
     assert carrying, plan
     for sub in carrying:
         assert re.search(r"Join \[band_idx#", sub), sub
+
+
+def test_minhash_band_keys_are_int64(spark):
+    """MinHash band keys are one ``xxhash64`` per band, not decimal
+    text: the executed dedup_minhash_lsh plan formats no string key, and
+    the sketch rows carry a bigint ``band_key`` and an
+    ``array<bigint>`` ``band_keys``."""
+    from pyspark.sql.types import ArrayType, LongType
+
+    from pdf_extract_spark.operators import dedup
+    from pdf_extract_spark.queries import QUERIES
+
+    df = QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
+    df.collect()
+    assert "concat_ws" not in _physical(df)
+    schema = dedup.banded_signatures(dedup._docs(spark, SF_DIR)).schema
+    assert schema["band_key"].dataType == LongType()
+    keys = schema["band_keys"].dataType
+    assert isinstance(keys, ArrayType) and keys.elementType == LongType()
+
+
+def test_band_join_refuses_mixed_band_key_types(spark):
+    """A sketch written with string band keys cannot join bigint band
+    rows (ANSI fails the cast at run time; without ANSI no pair ever
+    matches), so the join refuses it while the plan is built, naming
+    both sides' types."""
+    from pyspark.sql import functions as F
+
+    from pdf_extract_spark.operators import dedup
+
+    docs = dedup._docs(spark, SF_DIR)
+    sketch = dedup.banded_signatures(
+        docs.filter(F.col("doc_id") % 10 != 0)).select(
+        "doc_id", "sh", "n_sh",
+        F.col("band_keys").cast("array<string>").alias("band_keys"),
+        "band_idx", F.col("band_key").cast("string").alias("band_key"))
+    with pytest.raises(ValueError, match=r"bigint \(a\) vs string \(b\)"):
+        dedup.incremental_pairs_against_sketch(
+            docs.filter(F.col("doc_id") % 10 == 0), sketch)
 
 
 def test_incremental_sketch_join_plan_has_no_rehash(spark):

@@ -158,6 +158,42 @@ def test_polyhash_strings_matches_bytes_twin():
     assert (got == want).all()
 
 
+def test_polyhash_long_astral_segments_match_codepoint_fold():
+    """The token hash sums raw per-character terms (< 2^51 each) for
+    segments shorter than ``LAZY_MOD_CHARS`` and reduces each term
+    first from there on. Runs of the largest codepoint U+10FFFF on both
+    sides of that bound, and one far past it (40,000 raw terms
+    overflow int64), must equal the per-codepoint fold
+    ``acc = (acc*31 + ord(c)) % PRIME`` — alone and in one call."""
+    import numpy as np
+
+    from pdf_extract_spark.functions.sigkernel import (
+        LAZY_MOD_CHARS, segment_polyhash)
+    from pdf_extract_spark.functions.sqlkit import BASE, PRIME
+
+    astral = "\U0010ffff"
+    cases = [astral * (LAZY_MOD_CHARS - 1), astral * LAZY_MOD_CHARS,
+             astral * 40000,
+             ("ab\U0001f600" + astral + "z" * 9) * 300]
+
+    def fold(s: str) -> int:
+        acc = 0
+        for c in s:
+            acc = (acc * BASE + ord(c)) % PRIME
+        return acc
+
+    def run(segs: list[str]) -> list[int]:
+        blob = "#".join([""] + segs + [""])
+        codes = np.frombuffer(blob.encode("utf-32-le"), dtype=np.uint32)
+        lens = np.array([len(c) for c in segs], dtype=np.int64)
+        starts = 1 + np.cumsum(lens + 1) - (lens + 1)
+        return segment_polyhash(codes, starts, lens).tolist()
+
+    want = [fold(c) for c in cases]
+    assert [run([c])[0] for c in cases] == want
+    assert run(cases) == want
+
+
 def test_null_text_yields_null_signature(spark):
     from pdf_extract_spark.functions.sigkernel import signature_frame
 

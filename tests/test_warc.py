@@ -119,7 +119,11 @@ def test_html_main_content_extraction():
     assert "Copyright" not in joined     # footer dropped
     assert "BOILER SCRIPT" not in joined  # script dropped
     assert "one two three" not in joined  # link-list paragraph dropped
-    assert " ".join(parsed.title.split()) == "A Title"
+    # <title> is page metadata, not main content, even outside <head>
+    # and long enough to pass as a block
+    headless = parse_main("<html><title>A page title long enough to be a"
+                          " block</title><body><p>" + "word " * 10 + "</p>")
+    assert [t for _, t, _ in headless.out] == [("word " * 10).strip()]
 
 
 def test_inline_img_does_not_split_block():
