@@ -83,13 +83,6 @@ class NgramModel:
             backoff += bo[1] if bo is not None else 0.0
             context = context[1:]
 
-    def sequence_logprob(self, words: list[str]) -> float:
-        """Sum of per-token conditional log10 probs (diagnostic)."""
-        total = 0.0
-        for i, w in enumerate(words):
-            total += self.logprob(tuple(words[max(0, i - self.order + 1):i]), w)
-        return total
-
     # -- training ------------------------------------------------------------
     @classmethod
     def train(cls, blocks: list[list[str]], order: int = DEFAULT_ORDER) -> "NgramModel":

@@ -34,7 +34,7 @@ MIN_QUALITY_TOKENS = 5
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file input → repartition so the hash expressions parallelize;
     # gated so an already-parallel production scan keeps its partitioning
-    # (no gratuitous shuffle; Connect-safe gate — see runtime.py)
+    # (no gratuitous shuffle)
     from ..runtime import ensure_parallel_scan
 
     return ensure_parallel_scan(

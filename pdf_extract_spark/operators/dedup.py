@@ -70,7 +70,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first (a ~KB/row shuffle, repaid ~cores× on the hash stage).
     # GATED: a production-scale scan is already parallel, and an
     # unconditional repartition would insert a full shuffle of the
-    # corpus for nothing (Connect-safe gate — see runtime.py).
+    # corpus for nothing.
     return ensure_parallel_scan(
         spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
@@ -345,7 +345,9 @@ def explode_bands(frame: DataFrame, carry: list[str],
     tell a pair's FIRST colliding band from the joined row alone
     (:func:`band_join`).  posexplode, not a union of per-band selects,
     so the upstream frame executes ONCE: a union re-runs every
-    non-persisted parent branch per band."""
+    non-persisted parent branch per band.  The outer form emits the
+    same rows (the key array is never empty) without the inferred
+    ``size(band_keys) > 0`` filter that would build each array twice."""
     if keys is None:
         keys = [
             F.xxhash64(*[
@@ -356,7 +358,8 @@ def explode_bands(frame: DataFrame, carry: list[str],
     return (
         frame.select(*carry, F.array(*keys).alias("band_keys"))
         .select(*carry, "band_keys",
-                F.posexplode("band_keys").alias("band_idx", "band_key"))
+                F.posexplode_outer("band_keys")
+                .alias("band_idx", "band_key"))
     )
 
 
@@ -931,13 +934,6 @@ def append_to_sketch_table(spark: SparkSession, new_docs: DataFrame,
     )
 
 
-def _app_id(spark: SparkSession) -> str:
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # Spark Connect: no context handle — key by session
-        return str(id(spark))
-
-
 #: session-memoized sketch tables: (app id, abs sf_dir) -> table name
 _SKETCH_TABLES: dict[tuple[str, str], str] = {}
 
@@ -949,9 +945,14 @@ def ensure_sketch_table(spark: SparkSession, sf_dir: str,
     a production table gets when documents are appended.  Registered
     queries (dedup_sketch_pairs, dedup_incremental) call this so one
     check_oracle / bench session hashes the corpus exactly once, then
-    every dedup pass reads the bucketed table."""
+    every dedup pass reads the bucketed table.
+
+    The table is external, at ``<tempdir>/pdfx_sketch_<tag>``, one per
+    corpus path: its files outlive the session on purpose, as an
+    ingest-time sketch outlives its writer (``DROP TABLE`` keeps them),
+    and the next session's first call overwrites them in place."""
     abs_dir = os.path.abspath(sf_dir)
-    key = (_app_id(spark), abs_dir)
+    key = (spark.sparkContext.applicationId, abs_dir)
     got = _SKETCH_TABLES.get(key)
     if got is not None and spark.catalog.tableExists(got):
         return got
@@ -980,7 +981,7 @@ def _ingest_table(spark: SparkSession, sf_dir: str) -> str:
     corpus path AND the application id, so concurrent applications on
     one corpus never share (and race on) a table."""
     digest = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    app = re.sub(r"\W+", "_", _app_id(spark))
+    app = re.sub(r"\W+", "_", spark.sparkContext.applicationId)
     return f"pdfx_ingest_{digest}_{app}"
 
 

@@ -191,10 +191,10 @@ def srp_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # release between queries, so repeated invocations don't accumulate.
     # The band keys (16 interpreted folds per vector) are persisted
     # columns, like MinHash's mh*: a key expression downstream of the
-    # cache would also run inside the size(band_keys) > 0 filter Spark
-    # infers for the posexplode, once per join side.  The scan is
-    # spread first (gated, as dedup._docs): the band join and cosine
-    # verify have no shuffle of their own, so they run at its width.
+    # cache would run once per join side of the band self-join.  The
+    # scan is spread first (gated, as dedup._docs): the band join and
+    # cosine verify have no shuffle of their own, so they run at its
+    # width.
     keys = [f"srp{bi}" for bi in range(SRP_BANDS)]
     emb = track_cache(ensure_parallel_scan(spark, _emb(spark, sf_dir)).select(
         "vec_id", "v", *[

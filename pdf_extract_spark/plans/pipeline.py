@@ -28,9 +28,12 @@ Scale design (north rule: 10^12 docs, explicit partitioning/skew):
     unless the session sets it — the package does not) and each batch
     comes in whole as Python values, so it grows with document size;
     sessions over large PDFs set that conf low (``bench.py`` uses 8).
+  * Input: one reader (``_read_input``) serves both CLI sinks: a table
+    (optionally as of a committed snapshot), raw PDFs or WARC files.
   * Resume: output snapshot + per-partition lineage rows; a resumed run
     left-anti-joins the input against the committed output's doc_ids —
-    a broadcast-able join at per-run failure scales.
+    a broadcast-able join at per-run failure scales. Commits only
+    append (``TableIO.write``).
 """
 
 from __future__ import annotations
@@ -408,39 +411,6 @@ def extract_spans(
         config, max_pages, sj_model, sj_threshold, time_budget_s, hooks))
 
 
-def extract_spans_mirror_dedup(df: DataFrame, **kwargs) -> DataFrame:
-    """Mirror-aware extraction: web corpora carry many byte-identical
-    documents (mirrors, re-crawls); extract each DISTINCT payload once
-    and join the result back to every carrier doc_id.
-
-    Plan: md5(payload) → dropDuplicates (one hash-agg shuffle of the
-    payload) → the normal narrow extraction over distinct payloads →
-    equi-join results back on the hash. Worth it when duplicate bytes
-    dominate compute (heavy mirrored PDFs); for low-duplication corpora
-    the two payload shuffles cost more than the saved extraction — this
-    is why it is opt-in (BENCH.md §4: payload shuffles measured ~40%
-    of extraction wall at sf0.1). Per-doc timing columns reflect the
-    one real extraction, shared by its mirrors."""
-    # coalesce: a null spans column must hash to a real key — md5(null)
-    # is null, which never equi-joins, and the doc would silently vanish
-    # where plain extract_spans emits an error row for it
-    hashed = df.select("doc_id", "spans").withColumn(
-        "payload_md5",
-        F.md5(F.coalesce(F.to_json("spans"), F.lit("null"))),
-    )
-    reps = (
-        hashed.select(F.col("payload_md5").alias("doc_id"), "spans")
-        .dropDuplicates(["doc_id"])
-    )
-    extracted = extract_spans(reps, **kwargs).withColumnRenamed(
-        "doc_id", "payload_md5"
-    )
-    out = hashed.select("doc_id", "payload_md5").join(
-        extracted, "payload_md5"
-    )
-    return out.select(*[f.name for f in OUTPUT_SCHEMA.fields])
-
-
 HTML_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
@@ -566,6 +536,27 @@ def lineage_frame(out: DataFrame, run_id: str) -> DataFrame:
     )
 
 
+def _read_input(spark: SparkSession, io, ref: str, input_format: str,
+                input_asof: str | None) -> DataFrame:
+    """Both CLI sinks' (doc_id, spans) input. ``input_format="pdf-dir"``
+    reads a directory of raw PDF files (the reference's -I/-B modes);
+    ``"warc"`` reads web-archive files (sources/warc.py); ``"table"``
+    reads ``io.read(ref)``, or ``io.read_asof(ref, input_asof)``. Only a
+    table has snapshots: ``input_asof`` with a file format raises."""
+    if input_asof and input_format != "table":
+        raise ValueError(
+            f"input_asof needs input_format='table', not {input_format!r}")
+    if input_format == "pdf-dir":
+        from ..sources.corpus import read_pdf_dir
+
+        return read_pdf_dir(spark, ref)
+    if input_format == "warc":
+        from ..sources.warc import read_warc
+
+        return read_warc(spark, ref)
+    return io.read_asof(ref, input_asof) if input_asof else io.read(ref)
+
+
 def run_pipeline(
     spark: SparkSession,
     input_ref: str,
@@ -579,45 +570,30 @@ def run_pipeline(
     sj_threshold: float | None = None,
     time_budget_s: float | None = None,
     input_format: str = "table",
-    dedup_mirrors: bool = False,
     input_asof: str | None = None,
 ) -> dict:
     """spark-submit entry: read → (resume anti-join) → extract → commit.
 
-    ``input_format="pdf-dir"`` reads a directory of raw PDF files (the
-    reference's -I/-B modes); ``"warc"`` reads web-archive files,
-    one pdf span per matching HTTP response (sources/warc.py).
-    ``dedup_mirrors=True`` extracts each distinct payload once (see
-    extract_spans_mirror_dedup). ``input_asof`` time-travels the table
-    input to a committed snapshot (TableIO.read_asof) — reprocessing an
-    exact historical corpus state. Returns a summary dict (docs in/out,
+    ``input_format`` and ``input_asof`` choose the input (see
+    :func:`_read_input`); ``input_asof`` time-travels a table input to a
+    committed snapshot (TableIO.read_asof) — reprocessing an exact
+    historical corpus state. Returns a summary dict (docs in/out,
     run_id)."""
     from ..sources.tableio import TableIO
 
     io = TableIO(spark)
     run_id = uuid.uuid4().hex
-    if input_format == "pdf-dir":
-        from ..sources.corpus import read_pdf_dir
-
-        df = read_pdf_dir(spark, input_ref)
-    elif input_format == "warc":
-        from ..sources.warc import read_warc
-
-        df = read_warc(spark, input_ref)
-    else:
-        df = (io.read_asof(input_ref, input_asof) if input_asof
-              else io.read(input_ref))
+    df = _read_input(spark, io, input_ref, input_format, input_asof)
     if resume and io.exists(output_ref):
         done = io.read(output_ref).select("doc_id")
         # no forced broadcast: on a resume late in a large run the
         # committed set approaches the full corpus, and a forced hint
         # bypasses AQE's size check — let AQE pick broadcast vs shuffle
         df = df.join(done, "doc_id", "left_anti")
-    extract_fn = extract_spans_mirror_dedup if dedup_mirrors else extract_spans
-    out = extract_fn(df, config=config, max_pages=max_pages,
-                     num_partitions=num_partitions,
-                     sj_model=sj_model, sj_threshold=sj_threshold,
-                     time_budget_s=time_budget_s)
+    out = extract_spans(df, config=config, max_pages=max_pages,
+                        num_partitions=num_partitions,
+                        sj_model=sj_model, sj_threshold=sj_threshold,
+                        time_budget_s=time_budget_s)
     out = out.persist()
     n_out = out.count()
     # Write lineage BEFORE appending the output: on resume, `out` depends
@@ -629,7 +605,7 @@ def run_pipeline(
     # resume correctness keys on committed OUTPUT doc_ids.
     lin = lineage_frame(out, run_id)
     io.write(lin, lineage_ref or output_ref.rstrip("/") + "_lineage",
-             run_id=run_id, mode="append")
-    io.write(out, output_ref, run_id=run_id, mode="append")
+             run_id=run_id)
+    io.write(out, output_ref, run_id=run_id)
     out.unpersist()
     return {"run_id": run_id, "n_docs": n_out}

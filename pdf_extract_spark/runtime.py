@@ -16,9 +16,8 @@ belongs in a SQL-fragment or operator module:
   parquet files (one input split); hash-heavy operators repartition
   them across the cluster first.  A production-scale scan is already
   parallel and must NOT pay a corpus-wide shuffle, so the gate fires
-  only for scans with fewer files than the target parallelism.  The
-  probe is Spark-Connect-safe: ``DataFrame.inputFiles()`` (plan-side)
-  instead of ``df.rdd.getNumPartitions()`` (classic-only RDD API).
+  only for scans with fewer partitions than the session's
+  ``defaultParallelism``, probed with ``df.rdd.getNumPartitions()``.
 
 * the **Python row map** — every row-wise Python UDF (both extraction
   sinks, media decode/resize/frame sampling, WARC parsing, the corpus
@@ -62,41 +61,18 @@ def release_caches() -> int:
     return n
 
 
-def target_parallelism(spark: SparkSession) -> int:
-    """Cluster-width hint: ``defaultParallelism`` on classic Spark, the
-    shuffle-partition count under Spark Connect (no SparkContext on the
-    client)."""
-    try:
-        return spark.sparkContext.defaultParallelism
-    except Exception:
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-
-
 def ensure_parallel_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Repartition an under-parallel file scan across the cluster;
     leave already-parallel scans untouched (no gratuitous shuffle).
 
-    Gate: the scan's actual partition count when the RDD API is
-    available (classic Spark — this respects ``maxPartitionBytes``
-    splitting, so a corpus of few LARGE files that already scans wide
-    is left alone), falling back to the file-count proxy only under
-    Spark Connect, where no RDD probe exists.  The proxy's worst case
-    is one redundant ~KB/row shuffle on a monolithic-file corpus; the
-    common production layout (many files) is untouched either way.
-    Turn off with the conf ``spark.pdfx.scan.repartition`` = ``never``
-    (default ``auto``)."""
-    try:
-        mode = spark.conf.get("spark.pdfx.scan.repartition", "auto")
-    except Exception:
-        mode = "auto"
-    if mode == "never":
+    Gate: the scan's actual partition count, which respects
+    ``maxPartitionBytes`` splitting, so a corpus of few LARGE files that
+    already scans wide is left alone. Turn off with the conf
+    ``spark.pdfx.scan.repartition`` = ``never`` (default ``auto``)."""
+    if spark.conf.get("spark.pdfx.scan.repartition", "auto") == "never":
         return df
-    par = target_parallelism(spark)
-    try:
-        width = df.rdd.getNumPartitions()
-    except Exception:  # Spark Connect: no RDD handle
-        width = len(df.inputFiles())
-    return df if width >= par else df.repartition(par)
+    par = spark.sparkContext.defaultParallelism
+    return df if df.rdd.getNumPartitions() >= par else df.repartition(par)
 
 
 def map_rows(df: DataFrame, schema: StructType,

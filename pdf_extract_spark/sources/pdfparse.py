@@ -645,9 +645,6 @@ class PDFDocument:
             depth += 1
         return obj
 
-    def rdict(self, d: dict | None) -> dict:
-        return {k: self.resolve(v) for k, v in (d or {}).items()}
-
     # -- page tree ----------------------------------------------------------
     _INHERITABLE = ("Resources", "MediaBox", "CropBox", "Rotate")
 

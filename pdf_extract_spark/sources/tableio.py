@@ -14,20 +14,19 @@ TableIO keeps one API with two backends (SURVEY.md §7 preamble):
 
 Filesystem access on the parquet backend goes through the JVM Hadoop
 ``FileSystem`` API (py4j), so the same code serves ``file:``, ``hdfs:``,
-``s3a:``, ``abfs:``, ... — the realistic homes for a 100 TB warehouse —
-with a pure-POSIX fallback only when no JVM gateway is reachable (Spark
-Connect). Manifest commits are write-temp-then-rename: atomic on HDFS
-and POSIX; on object stores rename is copy+delete, which still leaves
-either the old or the new complete manifest (never a torn append) —
-that, plus the absence of an atomic multi-writer swap, is the documented
-delta vs real Iceberg (single-writer assumption, like a Hive table
-without a lock service).
+``s3a:``, ``abfs:``, ... — the realistic homes for a 100 TB warehouse.
+Writes only append, so every committed snapshot stays readable.
+Manifest commits are write-temp-then-rename: atomic on HDFS and POSIX;
+on object stores rename is copy+delete, which still leaves either the
+old or the new complete manifest (never a torn append) — that, plus
+the absence of an atomic multi-writer swap, is the documented delta vs
+real Iceberg (single-writer assumption, like a Hive table without a
+lock service).
 """
 
 from __future__ import annotations
 
 import json
-import os
 import posixpath
 import uuid
 
@@ -116,41 +115,12 @@ class _HadoopFS:
             raise IOError(f"manifest rename failed: {tmp} -> {p}") from exc
 
 
-class _PosixFS:
-    """POSIX fallback for JVM-less sessions (Spark Connect) — local
-    paths only."""
-
-    def exists(self, p: str) -> bool:
-        return os.path.exists(p)
-
-    def listdir(self, p: str) -> list[str]:
-        return os.listdir(p) if os.path.isdir(p) else []
-
-    def mkdirs(self, p: str) -> None:
-        os.makedirs(p, exist_ok=True)
-
-    def read_text(self, p: str) -> str | None:
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return fh.read()
-
-    def write_text_atomic(self, p: str, text: str) -> None:
-        tmp = f"{p}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            fh.write(text)
-        os.replace(tmp, p)  # atomic on POSIX
-
-
 class TableIO:
     """Read/write interleaved-document tables by path or catalog ref."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        try:
-            self._io = _HadoopFS(spark)  # raises under Spark Connect
-        except Exception:
-            self._io = _PosixFS()
+        self._io = _HadoopFS(spark)
 
     def read(self, ref: str) -> DataFrame:
         if _has_iceberg_catalog(self.spark, ref):
@@ -169,27 +139,22 @@ class TableIO:
             for f in self._io.listdir(ref)
         )
 
-    def write(self, df: DataFrame, ref: str, run_id: str | None = None,
-              mode: str = "append") -> str:
-        """Commit df to the table; returns the snapshot id."""
+    def write(self, df: DataFrame, ref: str,
+              run_id: str | None = None) -> str:
+        """Append df to the table as one commit; returns the snapshot
+        id."""
         run_id = run_id or uuid.uuid4().hex
         if _has_iceberg_catalog(self.spark, ref):
             writer = df.writeTo(ref)
-            if mode == "overwrite":
-                writer.createOrReplace()
-            else:
-                try:
-                    writer.append()
-                except Exception:
-                    writer.create()
+            try:
+                writer.append()
+            except Exception:
+                writer.create()
             return run_id
         before = self._data_files(ref)
-        df.write.mode(mode).parquet(ref)
-        added = sorted(self._data_files(ref) - (
-            set() if mode == "overwrite" else before
-        ))
-        self._append_manifest(ref, run_id, added,
-                              reset=(mode == "overwrite"))
+        df.write.mode("append").parquet(ref)
+        added = sorted(self._data_files(ref) - before)
+        self._append_manifest(ref, run_id, added)
         return run_id
 
     def read_asof(self, ref: str, snapshot_id: str) -> DataFrame:
@@ -237,8 +202,7 @@ class TableIO:
         return {f for f in self._io.listdir(ref) if f.endswith(".parquet")}
 
     def _append_manifest(self, ref: str, run_id: str,
-                         files: list[str] | None = None,
-                         reset: bool = False) -> None:
+                         files: list[str]) -> None:
         # Manifest rows mirror Iceberg snapshot metadata (documented
         # delta: single-writer, no catalog-arbitrated swap; commit order
         # is append order). Each row records the data files its commit
@@ -246,9 +210,8 @@ class TableIO:
         # via temp+rename so a crash mid-commit leaves the previous
         # complete manifest, never a torn line.
         self._io.mkdirs(ref)
-        row = json.dumps({"snapshot_id": run_id, "files": files or []})
-        prior = "" if reset else (
-            self._io.read_text(self._manifest_path(ref)) or "")
+        row = json.dumps({"snapshot_id": run_id, "files": files})
+        prior = self._io.read_text(self._manifest_path(ref)) or ""
         self._io.write_text_atomic(self._manifest_path(ref),
                                    prior + row + "\n")
 

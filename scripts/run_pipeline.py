@@ -3,16 +3,22 @@
     spark-submit --py-files pdfx.zip scripts/run_pipeline.py \
         --input  <parquet path | iceberg catalog.table> \
         --output <parquet path | iceberg catalog.table> \
-        [--lineage <ref>] [--resume] [--input-asof SNAPSHOT] \
-        [--num-partitions N] \
-        [--max-pages N] [--config PDFExtract.json] [--html]
+        [--input-format table|pdf-dir|warc] [--input-asof SNAPSHOT] \
+        [--max-pages N] [--config PDFExtract.json] \
+        [--lineage <ref>] [--resume] [--num-partitions N] \
+        [--time-budget S] [--sj-model M] [--sj-threshold T] \
+        [--html [--keep-br]]
 
-Reads the interleaved-document table (doc_id, spans), extracts spans (or
-alignment-optimized HTML with --html), commits output + per-partition
-lineage via TableIO (Iceberg when a catalog is configured, parquet
-warehouse with a snapshot manifest otherwise), and with --resume
-anti-joins the input against already-committed doc_ids so a failed run
-continues from the last committed snapshot.
+Reads the interleaved-document table (doc_id, spans) — or raw PDFs or
+WARC files — and extracts spans (or alignment-optimized HTML with
+--html). Both sinks read their input the same way and append their
+output via TableIO (Iceberg when a catalog is configured, parquet
+warehouse with a snapshot manifest otherwise). The span sink also
+commits per-partition lineage, and with --resume anti-joins the input
+against already-committed doc_ids so a failed run continues from the
+last committed snapshot. A flag the chosen sink would ignore is an
+error: --lineage, --resume, --num-partitions, --time-budget and the
+--sj-* options need the span sink, --keep-br needs --html.
 
 Build pdfx.zip with:  cd <repo> && zip -r pdfx.zip pdf_extract_spark
 """
@@ -29,6 +35,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+#: options only the span sink (run_pipeline) reads
+_SPANS_ONLY = ("lineage", "resume", "num_partitions", "time_budget",
+               "sj_model", "sj_threshold")
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True)
@@ -41,7 +52,7 @@ def main(argv: list[str] | None = None) -> int:
                          "scans usually prefer a small "
                          "spark.sql.files.maxPartitionBytes)")
     ap.add_argument("--max-pages", type=int, default=None,
-                    help="per-doc page budget (oversized-doc bypass lane)")
+                    help="per-doc page budget")
     ap.add_argument("--time-budget", type=float, default=None,
                     help="per-doc seconds budget (X4: the reference's -t "
                          "poppler timeout; here partial spans + warning)")
@@ -61,9 +72,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--keep-br", action="store_true",
                     help="with --html: keep <br /> line tags inside "
                          "paragraphs (the reference's -K keepbrtags)")
-    ap.add_argument("--dedup-mirrors", action="store_true",
-                    help="extract each distinct payload once and join "
-                         "results back (mirror-heavy corpora)")
     ap.add_argument("--input-asof", default=None,
                     help="time-travel: read the table input as of a "
                          "committed snapshot id (Iceberg snapshot-id / "
@@ -74,6 +82,10 @@ def main(argv: list[str] | None = None) -> int:
                          "(the reference's -I/-B modes); 'warc' reads "
                          "web-archive files (Common Crawl layout)")
     args = ap.parse_args(argv)
+    for dest in _SPANS_ONLY if args.html else ("keep_br",):
+        if getattr(args, dest) not in (None, False):
+            ap.error(f"--{dest.replace('_', '-')} has no effect "
+                     f"{'with' if args.html else 'without'} --html")
 
     from pyspark.sql import SparkSession
 
@@ -85,16 +97,12 @@ def main(argv: list[str] | None = None) -> int:
             config = json.load(fh)
 
     if args.html:
-        from pdf_extract_spark.plans.pipeline import extract_html
+        from pdf_extract_spark.plans.pipeline import _read_input, extract_html
         from pdf_extract_spark.sources.tableio import TableIO
 
         io = TableIO(spark)
-        if args.input_format == "pdf-dir":
-            from pdf_extract_spark.sources.corpus import read_pdf_dir
-
-            src_df = read_pdf_dir(spark, args.input)
-        else:
-            src_df = io.read(args.input)
+        src_df = _read_input(spark, io, args.input, args.input_format,
+                             args.input_asof)
         out = extract_html(src_df, config=config,
                            max_pages=args.max_pages, keep_br=args.keep_br)
         run_id = io.write(out, args.output)
@@ -115,7 +123,6 @@ def main(argv: list[str] | None = None) -> int:
             sj_threshold=args.sj_threshold,
             time_budget_s=args.time_budget,
             input_format=args.input_format,
-            dedup_mirrors=args.dedup_mirrors,
             input_asof=args.input_asof,
         )
     print(json.dumps(summary))

@@ -29,12 +29,10 @@ def spark():
     s.stop()
 
 
-def corpus_frame(spark, n_docs: int, use_fixtures: bool = False,
-                 suffixes: tuple[str, ...] = ("",)):
+def corpus_frame(spark, n_docs: int, use_fixtures: bool = False):
     """A small driver-side corpus of ``corpus.make_doc`` rows under the
     explicit ``(doc_id string, spans SPAN_TYPE)`` schema, so span structs
-    never infer as maps. Each doc is repeated once per ``doc_id`` suffix
-    (byte-identical mirror copies), all of one suffix before the next."""
+    never infer as maps."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     from pdf_extract_spark.plans.pipeline import SPAN_TYPE
@@ -45,8 +43,7 @@ def corpus_frame(spark, n_docs: int, use_fixtures: bool = False,
     schema = StructType([StructField("doc_id", StringType()),
                          StructField("spans", SPAN_TYPE)])
     return spark.createDataFrame(
-        [(d["doc_id"] + sfx, d["spans"]) for sfx in suffixes for d in docs],
-        schema)
+        [(d["doc_id"], d["spans"]) for d in docs], schema)
 
 
 def fixture_bytes(name: str) -> bytes | None:

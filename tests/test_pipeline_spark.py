@@ -7,7 +7,6 @@ import pytest
 from pdf_extract_spark.operators.extract import extract_pdf
 from pdf_extract_spark.plans import pipeline
 from pdf_extract_spark.sources.corpus import corpus_dataframe, make_doc, synth_pdf
-from tests.conftest import corpus_frame
 
 
 @pytest.fixture(scope="module")
@@ -243,51 +242,40 @@ def test_read_pdf_dir_source(spark, tmp_path):
     assert all(len(r["spans"]) > 0 for r in rows)
 
 
-def test_mirror_dedup_extraction_equivalent(spark):
-    """extract_spans_mirror_dedup produces the same per-doc results as
-    plain extract_spans on a corpus with byte-identical mirrors, while
-    extracting each distinct payload only once."""
-    from pdf_extract_spark.plans.pipeline import (
-        extract_spans,
-        extract_spans_mirror_dedup,
-    )
+def test_cli_html_reads_warc_input(spark, tmp_path):
+    """``run_pipeline.py --html --input-format warc`` reads the WARC
+    files through the span sink's reader: one HTML row per document
+    ``read_warc`` finds."""
+    from scripts.run_pipeline import main
 
-    df = corpus_frame(spark, 6, suffixes=("", "_mirror"))
+    from pdf_extract_spark.sources.warc import read_warc
+    from tests.test_warc import _build_warc, _records
 
-    plain = {r.doc_id: r for r in extract_spans(df).collect()}
-    dedup = {r.doc_id: r for r in extract_spans_mirror_dedup(df).collect()}
-    assert set(plain) == set(dedup)
-    for k in plain:
-        assert [tuple(s) for s in plain[k].spans] == \
-            [tuple(s) for s in dedup[k].spans], k
-        assert plain[k].lang == dedup[k].lang
-        assert plain[k].error == dedup[k].error
-        # mirror pairs share one extraction's result
-        assert [tuple(s) for s in dedup[k].spans] == \
-            [tuple(s) for s in dedup[k.replace("_mirror", "") if
-                                     k.endswith("_mirror") else k + "_mirror"].spans]
+    src = tmp_path / "warc"
+    src.mkdir()
+    (src / "a.warc").write_bytes(_build_warc(_records()))
+    out = str(tmp_path / "html_out")
+    assert main(["--input", str(src), "--output", out, "--html",
+                 "--input-format", "warc"]) == 0
+    rows = spark.read.parquet(out).collect()
+    want = {r.doc_id for r in read_warc(spark, str(src)).collect()}
+    assert {r.doc_id for r in rows} == want and len(rows) == len(want)
+    assert all(r.html and r.html.startswith("<") for r in rows), rows
 
 
-def test_run_pipeline_mirror_dedup_with_resume(spark, tmp_path):
-    """Integration: --dedup-mirrors composes with resume + lineage —
-    a mirrored corpus extracts once per distinct payload, commits all
-    carrier docs, and a resumed run finds nothing left."""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("argv,flag", [
+    (["--html", "--resume"], "--resume"),
+    (["--html", "--num-partitions", "4"], "--num-partitions"),
+    (["--html", "--lineage", "lin"], "--lineage"),
+    (["--keep-br"], "--keep-br"),
+])
+def test_cli_refuses_flag_the_sink_ignores(spark, tmp_path, capsys, argv,
+                                           flag):
+    """A flag the chosen sink would silently drop is a usage error that
+    names the flag, raised before any input is read."""
+    from scripts.run_pipeline import main
 
-    inp = str(tmp_path / "in_mirror")
-    outp = str(tmp_path / "out_mirror")
-    corpus_frame(spark, 6, suffixes=("", "_m")).write.parquet(inp)
-
-    r1 = pipeline.run_pipeline(spark, inp, outp, dedup_mirrors=True)
-    assert r1["n_docs"] == 12
-    out = spark.read.parquet(outp)
-    assert out.count() == 12
-    assert out.filter(F.col("error").isNotNull()).count() == 0
-    # mirror pairs carry identical spans
-    rows = {r.doc_id: [tuple(s) for s in r.spans] for r in out.collect()}
-    for k in (make_doc(i)["doc_id"] for i in range(6)):
-        assert rows[k] == rows[k + "_m"]
-
-    r2 = pipeline.run_pipeline(spark, inp, outp, resume=True,
-                               dedup_mirrors=True)
-    assert r2["n_docs"] == 0
+    with pytest.raises(SystemExit):
+        main(["--input", str(tmp_path / "missing"),
+              "--output", str(tmp_path / "out"), *argv])
+    assert flag in capsys.readouterr().err

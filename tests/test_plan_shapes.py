@@ -6,6 +6,10 @@ audit relies on — asserted so a refactor cannot silently lose them."""
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 import pytest
 
 from tests.conftest import corpus_frame
@@ -276,6 +280,23 @@ def test_lsh_pairs_have_no_pair_distinct(spark, name, pair):
     assert "Union" not in plan, plan
 
 
+@pytest.mark.parametrize("name", [
+    "dedup_minhash_lsh", "dedup_simhash", "dedup_embedding_srp",
+    "media_phash_neardup",
+])
+def test_band_keys_built_once(spark, name):
+    """``dedup.explode_bands`` builds each row's band-key array once: a
+    plain posexplode makes Spark infer ``size(band_keys) > 0`` and push
+    it below the projection, where it rebuilds the key array in a
+    ``Filter`` (and a cached scan's predicate) besides the ``Project``."""
+    from pdf_extract_spark.queries import QUERIES
+
+    df = QUERIES[name](spark, SF_DIR)
+    df.collect()
+    plan = _physical(df)
+    assert "size(array(" not in plan, plan
+
+
 def _subtrees(plan: str, node: str):
     """Text of every subtree of ``plan`` rooted at a ``node`` line: the
     lines after it, up to the first one whose node name starts at or
@@ -404,9 +425,12 @@ def test_ensure_sketch_table_distinct_for_same_basename(spark, tmp_path):
         assert ids_a == {"a1", "a2"}
         assert ids_b == {"b1", "b2"}
     finally:
+        # the sketch tables are external: DROP TABLE keeps their files
         for t in (t_a, t_b):
             if t:
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
+                shutil.rmtree(os.path.join(tempfile.gettempdir(), t),
+                              ignore_errors=True)
 
 
 def test_sketch_append_lifecycle(spark, tmp_path):

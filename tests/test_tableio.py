@@ -34,24 +34,6 @@ def test_snapshot_append_and_time_travel(spark, tmp_path):
         io.read_asof(ref, "nope")
 
 
-def test_snapshot_overwrite_resets_history(spark, tmp_path):
-    from pdf_extract_spark.sources.tableio import TableIO
-
-    io = TableIO(spark)
-    ref = str(tmp_path / "docs_table")
-    io.write(spark.createDataFrame([(1, "a")], "doc_id long, t string"),
-             ref, run_id="s1")
-    io.write(spark.createDataFrame([(9, "z")], "doc_id long, t string"),
-             ref, run_id="s2", mode="overwrite")
-    # overwrite starts a fresh history: old snapshot ids are gone and
-    # the new snapshot covers exactly the replacement data
-    assert io.snapshots(ref) == ["s2"]
-    assert _ids(io.read(ref)) == [9]
-    assert _ids(io.read_asof(ref, "s2")) == [9]
-    with pytest.raises(ValueError):
-        io.read_asof(ref, "s1")
-
-
 def test_run_pipeline_input_asof(spark, tmp_path):
     """--input-asof: a pipeline run over snapshot s1 extracts exactly
     the docs committed in s1, even after a later append."""
@@ -74,6 +56,17 @@ def test_run_pipeline_input_asof(spark, tmp_path):
     got = {r.doc_id for r in spark.read.parquet(out_ref).collect()}
     assert got == {r.doc_id for r in first.collect()}
     assert summary["n_docs"] == n_first
+
+
+@pytest.mark.parametrize("fmt", ["pdf-dir", "warc"])
+def test_input_asof_needs_a_table_input(spark, tmp_path, fmt):
+    """Only a table has snapshots: ``input_asof`` with a file-directory
+    input is refused, not silently dropped."""
+    from pdf_extract_spark.plans.pipeline import _read_input
+    from pdf_extract_spark.sources.tableio import TableIO
+
+    with pytest.raises(ValueError, match="input_asof"):
+        _read_input(spark, TableIO(spark), str(tmp_path), fmt, "s1")
 
 
 def test_non_posix_scheme_roundtrip(spark, tmp_path):
