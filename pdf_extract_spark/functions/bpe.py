@@ -38,18 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..runtime import ensure_parallel_scan, track_cache
+from ..runtime import read_documents, track_cache
 from . import sqlkit as K
 from .sqlkit import DUCK, SPARK
 
 #: merge steps for the registered query (a production run passes its
 #: own budget; each step is one vocab-table shuffle)
 BPE_MERGES = 8
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ensure_parallel_scan(
-        spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def sym_encode(word: str, d: str) -> str:
@@ -105,7 +100,7 @@ def _bpe_chain(spark: SparkSession, sf_dir: str,
     segmentation every apply-side consumer reads."""
     toks = K.tokens("text", SPARK)
     vocab = (
-        _docs(spark, sf_dir)
+        read_documents(spark, sf_dir)
         .select(F.explode(F.expr(toks)).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
@@ -165,7 +160,7 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str,
         .alias("n_sym"),
     )
     toks = K.tokens("text", SPARK)
-    words = _docs(spark, sf_dir).select(
+    words = read_documents(spark, sf_dir).select(
         "doc_id", F.explode(F.expr(toks)).alias("word"))
     # no forced broadcast: the segmented vocab is usually the small
     # side, but an open web vocab is unbounded — AQE decides by

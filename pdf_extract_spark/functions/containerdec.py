@@ -3,10 +3,10 @@
 The reference pipeline treats video as an opaque media span and leaves
 frame extraction to a downstream tool; our ``video_frame_sample``
 operator needs the container DURATION to decide how many frames to
-sample. Full frame decode needs libav (absent in this sandbox, and a
-``register_decoder`` swap point exists for it), but the duration lives
-in a few header bytes that a pure-stdlib walk can read — exactly like
-the image tier's PNG/JPEG/GIF header parsers in ``mediacodec.py``:
+sample. Full frame decode needs libav, which the package does not
+depend on, but the duration lives in a few header bytes that a
+pure-stdlib walk can read — exactly like the image tier's PNG/JPEG/GIF
+header parsers in ``mediacodec.py``:
 
 * **MP4 / MOV / ISO-BMFF** — a tree of length-prefixed boxes; the
   movie header box ``moov/mvhd`` carries ``timescale`` (ticks per

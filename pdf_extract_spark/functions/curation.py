@@ -22,9 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..runtime import read_documents
 from . import sqlkit as K
 from .sqlkit import DUCK, SPARK
-from .textstats import _docs
 
 # ---------------------------------------------------------------------------
 # benchmark decontamination (n-gram overlap vs a held-out eval set)
@@ -47,13 +47,6 @@ CONTAM_NUM, CONTAM_DEN = 1, 5
 def _eval_selector(doc_id: str, d: str) -> str:
     hv = K.polyhash(f"cast({doc_id} as string)", d)
     return f"(({hv}) % {CONTAM_MOD}) = {CONTAM_RESIDUE}"
-
-
-def _eval_is_member(doc_id: int) -> bool:
-    """Python twin of :func:`_eval_selector` (tests plant known
-    eval/non-eval documents with it)."""
-    return (K.polyhash_bytes(str(doc_id).encode())
-            % CONTAM_MOD) == CONTAM_RESIDUE
 
 
 def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,7 +78,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sigkernel import signature_frame
 
     d = signature_frame(
-        _docs(spark, sf_dir), CONTAM_W, minhash=False
+        read_documents(spark, sf_dir), CONTAM_W, minhash=False
     ).select(
         "doc_id",
         F.col("sh").alias("grams"),
@@ -219,7 +212,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_pii_augmented``); on real data that step is identity.
     """
     aug = _pii_augmented("doc_id", "text", SPARK)
-    d = _docs(spark, sf_dir).select(
+    d = read_documents(spark, sf_dir).select(
         "doc_id", F.expr(aug).alias("t"))
     # PROGRESSIVE counting (r4 ADVICE): pattern i is counted on the text
     # with replacements 1..i-1 already applied, so overlapping matches
@@ -291,7 +284,7 @@ def seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zero-token documents are dropped in-plan (they occupy no budget).
     """
     hv = K.polyhash("cast(doc_id as string)", SPARK)
-    d = _docs(spark, sf_dir).select(
+    d = read_documents(spark, sf_dir).select(
         "doc_id",
         F.expr(f"({hv}) % {NSHARDS}").alias("shard"),
         F.expr(K.asize(K.tokens("text", SPARK), SPARK))
@@ -359,7 +352,7 @@ def _ranked_by_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank is a uniform pseudo-random permutation that is stable across
     runs, partitionings, and cluster sizes)."""
     hv = K.polyhash("concat(source, '#', cast(doc_id as string))", SPARK)
-    d = _docs(spark, sf_dir).select(
+    d = read_documents(spark, sf_dir).select(
         "doc_id", "source", F.expr(hv).alias("hv"))
     win = Window.partitionBy("source").orderBy("hv", "doc_id")
     cnt = Window.partitionBy("source")

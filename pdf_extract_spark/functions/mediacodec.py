@@ -467,7 +467,7 @@ def wav_energy_hash(b: bytes) -> int | None:
 # -- dispatcher -------------------------------------------------------------
 
 
-def sniff_decode(payload: bytes, media_ref: str, kind: str) -> dict | None:
+def sniff_decode(payload: bytes) -> dict | None:
     """Real decode when the payload is a format stdlib can handle;
     ``None`` → caller falls back to the stub. Strict magic checks keep
     random synthetic payloads on the stub path."""

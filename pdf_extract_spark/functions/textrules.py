@@ -13,7 +13,6 @@ lowercase continuations; absolute-EOF sentence boundaries).
 
 from __future__ import annotations
 
-import json
 import re
 from dataclasses import dataclass, field
 
@@ -221,12 +220,6 @@ class RuleSet:
             common = self.langs.setdefault("common", LangRules())
             for pat, rep in load_search_replace_tab(search_replace_tab):
                 common.normalize.append((re.compile(pat), rep))
-
-    @classmethod
-    def from_json(cls, path: str,
-                  search_replace_tab: str | None = None) -> "RuleSet":
-        with open(path) as fh:
-            return cls(json.load(fh), search_replace_tab=search_replace_tab)
 
     def for_lang(self, lang: str | None) -> list[LangRules]:
         """Rule chains to apply: common first, then the language's own."""

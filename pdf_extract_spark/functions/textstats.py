@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..runtime import read_documents
 from . import sqlkit as K
 from .sqlkit import DUCK, SPARK
 
@@ -31,18 +32,8 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 MIN_QUALITY_TOKENS = 5
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-file input → repartition so the hash expressions parallelize;
-    # gated so an already-parallel production scan keeps its partitioning
-    # (no gratuitous shuffle)
-    from ..runtime import ensure_parallel_scan
-
-    return ensure_parallel_scan(
-        spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
 def _tok_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select(
+    return read_documents(spark, sf_dir).select(
         "doc_id", "lang", F.expr(K.tokens("text", SPARK)).alias("toks")
     )
 
@@ -182,7 +173,7 @@ def langid_heuristic_oracle() -> str:
 def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash document fingerprint (same polynomial scheme as the
     dedup shingles) + a normalized variant."""
-    return _docs(spark, sf_dir).select(
+    return read_documents(spark, sf_dir).select(
         "doc_id",
         F.expr(K.polyhash("text", SPARK)).alias("fp"),
         F.expr(K.polyhash("lower(trim(text))", SPARK)).alias("fp_norm"),
@@ -371,7 +362,7 @@ def passage_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle hashes from the vectorized Arrow kernel (bit-identical to
     # the HOF fragments the oracle replays — tests/test_sigkernel.py)
     docs = signature_frame(
-        _docs(spark, sf_dir), PASSAGE_W, minhash=False
+        read_documents(spark, sf_dir), PASSAGE_W, minhash=False
     ).select("doc_id", "sh")
     ex = docs.select("doc_id", F.explode("sh").alias("h"))
     df_counts = ex.groupBy("h").agg(
@@ -462,7 +453,7 @@ def exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     run-length grouping.  Nothing quadratic, no per-row Python."""
     from pyspark.sql.window import Window
 
-    occ = _gram_positions(_docs(spark, sf_dir))
+    occ = _gram_positions(read_documents(spark, sf_dir))
     cnt = occ.groupBy("h").agg(F.count("*").alias("c"))
     marked = occ.join(cnt, "h").filter(F.col("c") > 1)
     win = Window.partitionBy("doc_id").orderBy("pos")
@@ -550,7 +541,7 @@ def remove_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the span detection's two shuffles, plus one doc-keyed
     aggregation for the rebuild; the token explode is scan-local."""
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     occ = _gram_positions(docs)
     cnt = occ.groupBy("h").agg(F.count("*").alias("c"))
     # covered token positions: each marked gram start p covers
@@ -696,7 +687,7 @@ def approx_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     count rides along at test scale so the error is visible and
     oracle-checked; production drops it."""
     hv = K.polyhash("tok", SPARK)
-    occ = _docs(spark, sf_dir).select(
+    occ = read_documents(spark, sf_dir).select(
         "source", F.explode(F.expr(K.tokens("text", SPARK))).alias("tok")
     ).select("source", F.expr(_hll_mix(f"({hv})", SPARK)).alias("h"))
     per_bucket = (
@@ -806,7 +797,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the exploded corpus (AQE picks broadcast when the vocab measures
     small; an open web vocab is unbounded, so the hint is not forced),
     one doc_id hash-agg. No sort, nothing quadratic."""
-    occ = _docs(spark, sf_dir).select(
+    occ = read_documents(spark, sf_dir).select(
         "doc_id", F.explode(F.expr(K.tokens("text", SPARK))).alias("tok"))
     vocab = occ.groupBy("tok").agg(F.count("*").alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("t_total"))
@@ -998,7 +989,7 @@ def source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     hv = K.polyhash("concat(source, '|', cast(doc_id as string))", SPARK)
-    d = _docs(spark, sf_dir).select(
+    d = read_documents(spark, sf_dir).select(
         "doc_id", "source", F.expr(hv).alias("hv"))
     win = Window.partitionBy("source").orderBy("hv", "doc_id")
     return (

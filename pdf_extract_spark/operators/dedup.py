@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from ..functions import sqlkit as K
 from ..functions.sqlkit import DUCK, SPARK
-from ..runtime import ensure_parallel_scan, track_cache
+from ..runtime import read_documents, track_cache
 
 SHINGLE_W = 3          # w-token shingling
 JACCARD_TAU = 0.8      # near-dup verification threshold
@@ -62,17 +62,7 @@ LSH_ROWS = N_MINHASH // LSH_BANDS
 SIMHASH_MAX_HAMMING = 3
 SIMHASH_BANDS = 4      # 4 x 8-bit bands; pigeonhole-complete for ≤ 3 flips
 COSINE_TAU = 0.45
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the test tables are single small parquet files → a single input
-    # partition; hashing is CPU-bound, so spread rows across the cluster
-    # first (a ~KB/row shuffle, repaid ~cores× on the hash stage).
-    # GATED: a production-scale scan is already parallel, and an
-    # unconditional repartition would insert a full shuffle of the
-    # corpus for nothing.
-    return ensure_parallel_scan(
-        spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
+SKETCH_BUCKETS = 8     # bucketBy count of every materialized sketch table
 
 
 # ---------------------------------------------------------------------------
@@ -86,7 +76,7 @@ def exact_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min doc_id sharing the hash) and group size. A single hash-aggregate
     shuffle; at 10^12 docs the group-by key is the 128-bit digest, evenly
     distributed — no skew by construction."""
-    docs = _docs(spark, sf_dir).select(
+    docs = read_documents(spark, sf_dir).select(
         "doc_id", F.md5(F.lower(F.trim("text"))).alias("text_md5")
     )
     groups = docs.groupBy("text_md5").agg(
@@ -136,7 +126,8 @@ def _shingled(spark: SparkSession, sf_dir: str,
     and harnesses release between queries."""
     from ..functions.sigkernel import signature_frame
 
-    out = signature_frame(_docs(spark, sf_dir), SHINGLE_W, minhash=False)
+    out = signature_frame(read_documents(spark, sf_dir), SHINGLE_W,
+                          minhash=False)
     return track_cache(out) if reuse else out
 
 
@@ -433,7 +424,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sigkernel import signature_frame
 
     s = track_cache(signature_frame(
-        _docs(spark, sf_dir), SHINGLE_W, minhash=True))
+        read_documents(spark, sf_dir), SHINGLE_W, minhash=True))
     bands = explode_bands(s, ["doc_id"])
     cand = band_join(bands, bands, True).select(
         F.col("a.doc_id").alias("doc_id_a"),
@@ -522,7 +513,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sigkernel import signature_frame
 
     return signature_frame(
-        _docs(spark, sf_dir), SHINGLE_W, minhash=False, simhash=True
+        read_documents(spark, sf_dir), SHINGLE_W, minhash=False, simhash=True
     ).select("doc_id", "simhash")
 
 
@@ -662,7 +653,7 @@ def incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = ensure_sketch_table(spark, sf_dir)
     sketch = spark.table(table).filter(
         F.col("doc_id") % INCR_BATCH_MOD != 0)
-    new_docs = _docs(spark, sf_dir).filter(
+    new_docs = read_documents(spark, sf_dir).filter(
         F.col("doc_id") % INCR_BATCH_MOD == 0)
     return incremental_pairs_against_sketch(new_docs, sketch)
 
@@ -815,7 +806,7 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, so AQE decides broadcast-vs-shuffle by measured size."""
     labels = _cc_labels(spark, sf_dir)
     losers = labels.filter(F.col("doc_id") != F.col("label")).select("doc_id")
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = read_documents(spark, sf_dir).select("doc_id")
     return docs.join(losers, "doc_id", "left_anti")
 
 
@@ -882,15 +873,15 @@ def banded_signatures(docs: DataFrame) -> DataFrame:
     return explode_bands(sig, ["doc_id", "sh", "n_sh"])
 
 
-def write_sketch_table(spark: SparkSession, docs: DataFrame, table: str,
-                       path: str, buckets: int = 64) -> None:
+def write_sketch_table(docs: DataFrame, table: str, path: str) -> None:
     """Materialize the banded MinHash sketch (:func:`banded_signatures`
-    rows) as a BUCKETED, sorted table: ``bucketBy(buckets, band_idx,
-    band_key)`` co-locates every band bucket, so the LSH candidate
-    self-join — the single biggest shuffle in near-dedup at 10^12 docs
-    — runs with NO Exchange at all (Spark's bucketed SortMergeJoin
-    reads both sides pre-partitioned and pre-sorted, and the
-    first-colliding-band rule leaves no pair duplicates to collapse).
+    rows) as a BUCKETED, sorted table: ``bucketBy(SKETCH_BUCKETS,
+    band_idx, band_key)`` (8 buckets) co-locates every band bucket, so
+    the LSH candidate self-join — the single biggest shuffle in
+    near-dedup at 10^12 docs — runs with NO Exchange at all (Spark's
+    bucketed SortMergeJoin reads both sides pre-partitioned and
+    pre-sorted, and the first-colliding-band rule leaves no pair
+    duplicates to collapse).
     Signatures are computed ONCE at ingest; every later dedup pass
     (self-join via :func:`band_pairs`, incremental batch join via
     :func:`incremental_pairs_against_sketch`) reads this table instead
@@ -901,7 +892,7 @@ def write_sketch_table(spark: SparkSession, docs: DataFrame, table: str,
     corpus — the post-candidate work is scan-local."""
     (
         banded_signatures(docs).write.format("parquet")
-        .bucketBy(buckets, "band_idx", "band_key")
+        .bucketBy(SKETCH_BUCKETS, "band_idx", "band_key")
         .sortBy("band_idx", "band_key")
         .option("path", path)
         .mode("overwrite")
@@ -909,8 +900,7 @@ def write_sketch_table(spark: SparkSession, docs: DataFrame, table: str,
     )
 
 
-def append_to_sketch_table(spark: SparkSession, new_docs: DataFrame,
-                           table: str, buckets: int = 64) -> None:
+def append_to_sketch_table(new_docs: DataFrame, table: str) -> None:
     """The accept step of incremental ingest: after a new batch passes
     :func:`incremental_pairs_against_sketch` (or its duplicates are
     resolved), append the batch's banded signatures to the sketch table
@@ -927,7 +917,7 @@ def append_to_sketch_table(spark: SparkSession, new_docs: DataFrame,
     tables is ordinary parquet file management."""
     (
         banded_signatures(new_docs).write.format("parquet")
-        .bucketBy(buckets, "band_idx", "band_key")
+        .bucketBy(SKETCH_BUCKETS, "band_idx", "band_key")
         .sortBy("band_idx", "band_key")
         .mode("append")
         .saveAsTable(table)
@@ -938,8 +928,7 @@ def append_to_sketch_table(spark: SparkSession, new_docs: DataFrame,
 _SKETCH_TABLES: dict[tuple[str, str], str] = {}
 
 
-def ensure_sketch_table(spark: SparkSession, sf_dir: str,
-                        buckets: int = 8) -> str:
+def ensure_sketch_table(spark: SparkSession, sf_dir: str) -> str:
     """Write-once-per-session sketch materialization for a test-scale
     ``sf_dir`` — the harness-facing stand-in for the ingest-time write
     a production table gets when documents are appended.  Registered
@@ -964,8 +953,7 @@ def ensure_sketch_table(spark: SparkSession, sf_dir: str,
     tag = re.sub(r"\W+", "_", os.path.basename(abs_dir)) + "_" + digest
     table = f"pdfx_sketch_{tag}"
     path = os.path.join(tempfile.gettempdir(), f"pdfx_sketch_{tag}")
-    write_sketch_table(spark, _docs(spark, sf_dir), table, path,
-                       buckets=buckets)
+    write_sketch_table(read_documents(spark, sf_dir), table, path)
     _SKETCH_TABLES[key] = table
     return table
 
@@ -1001,7 +989,7 @@ def ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     append — a lazy plan would re-list the table's files after the
     append and see its own batch as corpus — and batch 2 before the
     scratch table is dropped on return."""
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     mod = F.col("doc_id") % INCR_BATCH_MOD
     old = docs.filter((mod != INGEST_B1) & (mod != INGEST_B2))
     b1 = docs.filter(mod == INGEST_B1)
@@ -1011,12 +999,12 @@ def ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(tempfile.gettempdir(), table)
     # overwrite-then-append keeps repeated invocations deterministic:
     # every call rebuilds the bootstrap state before its single append
-    write_sketch_table(spark, old, table, path, buckets=8)
+    write_sketch_table(old, table, path)
     try:
         p1 = incremental_pairs_against_sketch(
             b1, spark.table(table)
         ).withColumn("phase", F.lit("b1")).localCheckpoint()
-        append_to_sketch_table(spark, b1, table, buckets=8)
+        append_to_sketch_table(b1, table)
         p2 = incremental_pairs_against_sketch(
             b2, spark.table(table)
         ).withColumn("phase", F.lit("b2")).localCheckpoint()

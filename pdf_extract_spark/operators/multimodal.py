@@ -14,16 +14,15 @@ Decoding is tiered. Formats stdlib can handle decode for REAL
 (functions/mediacodec.py): BMP pixel decode with an 8×8 average-hash,
 PNG/JPEG/GIF header dimensions, and WAV audio via ``wave``. Compressed
 pixel formats (the PIL / libav tier, absent in this sandbox) fall back
-to ``_decode_stub`` — a deterministic pseudo-decode, clearly marked,
-swapped for full decoders via ``register_decoder``. The Spark-side
-plumbing (schema, batching, UDF signature, partitioning) is identical
-for every tier; the stub is also expressible in SQL, which gives the
-rare chance to oracle-check a Python UDF path end-to-end against DuckDB
-(queries.py multimodal_features — synthetic payloads carry no media
-magic, so they stay on the stub path by construction). Nulls follow the
-SQL stub: a null ``media_ref`` or ``media_kind`` passes through as null,
-and so does every stub value derived from it (``polyhash(NULL)`` is
-NULL); a null payload decodes as empty bytes.
+to ``_decode_stub`` — a deterministic pseudo-decode, clearly marked.
+The Spark-side plumbing (schema, batching, UDF signature, partitioning)
+is identical for every tier; the stub is also expressible in SQL, which
+gives the rare chance to oracle-check a Python UDF path end-to-end
+against DuckDB (queries.py multimodal_features — synthetic payloads
+carry no media magic, so they stay on the stub path by construction).
+Nulls follow the SQL stub: a null ``media_ref`` or ``media_kind``
+passes through as null, and so does every stub value derived from it
+(``polyhash(NULL)`` is NULL); a null payload decodes as empty bytes.
 
 Reference parity note: the reference DROPS images at the poppler level
 (``-i`` flag, PDFToHtml.java:52 — issue #56); our engine instead carries
@@ -32,9 +31,6 @@ become features.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
-from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -66,12 +62,12 @@ FEATURE_SCHEMA = StructType(
 
 def _decode_stub(payload: bytes, media_ref: str | None,
                  kind: str | None) -> dict:
-    """STUB decoder — deterministic pseudo-decode (no image/audio libs in
-    this sandbox). Real deployments call ``register_decoder('image',
-    pil_decode)`` etc.; raising NotImplementedError here would be the
-    honest production default, but the stub keeps the plumbing testable
-    AND SQL-checkable. Dimensions of a null ref and the decoder of a
-    null kind are null, as in the SQL replay."""
+    """STUB decoder — deterministic pseudo-decode (the package depends on
+    no image/audio libs) for every payload the stdlib tier cannot decode;
+    raising NotImplementedError here would be the honest production
+    default, but the stub keeps the plumbing testable AND SQL-checkable.
+    Dimensions of a null ref and the decoder of a null kind are null, as
+    in the SQL replay."""
     if media_ref is None:
         width = height = None
     else:
@@ -87,59 +83,36 @@ def _decode_stub(payload: bytes, media_ref: str | None,
     }
 
 
-def _default_decode(payload: bytes, media_ref: str | None,
+def _default_decode(payload: bytes | None, media_ref: str | None,
                     kind: str | None) -> dict:
-    """Default decoder chain: REAL stdlib decode when the payload is a
-    format that needs no external libs (BMP pixels + aHash; PNG/JPEG/GIF
+    """One media row's features: REAL stdlib decode when the payload is
+    a format that needs no external libs (BMP pixels + aHash; PNG/JPEG/GIF
     header dimensions; WAV via ``wave`` — functions/mediacodec.py),
     otherwise the deterministic stub. Strict magic sniffing keeps
     synthetic test payloads on the stub path, so the SQL oracle is
-    unaffected."""
+    unaffected. A null payload decodes as empty bytes."""
     from ..functions.mediacodec import sniff_decode
 
-    real = sniff_decode(payload, media_ref, kind)
+    payload = payload or b""
+    real = sniff_decode(payload)
     if real is not None:
         return {"n_bytes": len(payload), **real}
     return _decode_stub(payload, media_ref, kind)
 
 
-#: ``fn(payload, media_ref, kind) -> features``; a null payload arrives
-#: as empty bytes, a null ref or kind as None
-Decoder = Callable[[bytes, str | None, str | None], dict]
-_DECODERS: dict[str, Decoder] = {}
-
-
-def register_decoder(kind: str, fn: Decoder) -> None:
-    """Swap in a full decoder (e.g. PIL) for a media kind."""
-    _DECODERS[kind] = fn
-
-
-def _decode(decoders: dict, ref: str | None, kind: str | None,
-            payload: bytes | None) -> dict:
-    """One media row's features: the kind's registered decoder, else the
-    default chain."""
-    return decoders.get(kind, _default_decode)(payload or b"", ref, kind)
-
-
-def _feature_rows(decoders: dict, doc_id, ref, kind, payload) -> list[dict]:
+def _feature_rows(doc_id, ref, kind, payload) -> list[dict]:
     return [{"doc_id": doc_id, "media_ref": ref, "media_kind": kind,
-             **_decode(decoders, ref, kind, payload)}]
+             **_default_decode(payload, ref, kind)}]
 
 
 def media_features(media: DataFrame) -> DataFrame:
     """(doc_id, media_ref, media_kind, payload:binary) → feature rows.
 
     Narrow Arrow-batched map — zero shuffle; heavy payloads rely on scan
-    granularity exactly like the PDF lane (BENCH.md §4).
-
-    The decoder registry is SNAPSHOTTED into the UDF closure here:
-    executors re-import this module fresh, so a driver-side dict mutated
-    after plan construction would never reach them (cloudpickle ships the
-    captured copy with the task)."""
-    decoders = dict(_DECODERS)
+    granularity exactly like the PDF lane (BENCH.md §4)."""
     return map_rows(
         media.select("doc_id", "media_ref", "media_kind", "payload"),
-        FEATURE_SCHEMA, lambda: partial(_feature_rows, decoders))
+        FEATURE_SCHEMA, lambda: _feature_rows)
 
 
 def media_from_documents(spark, sf_dir: str) -> DataFrame:
@@ -207,31 +180,29 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def _resize_rows(decoders: dict, max_dim: int,
-                 doc_id, ref, kind, payload) -> list[dict]:
-    feat = _decode(decoders, ref, kind, payload)
+def _resize_rows(doc_id, ref, kind, payload) -> list[dict]:
+    feat = _default_decode(payload, ref, kind)
     w, h = feat["width"], feat["height"]
     ow, oh = w, h
-    if w is not None and h is not None and max(w, h) > max_dim:
+    if w is not None and h is not None and max(w, h) > RESIZE_MAX_DIM:
         # exact integer downscale (SQL-replayable — no float scale)
         m = max(w, h)
-        ow = max(1, (w * max_dim) // m)
-        oh = max(1, (h * max_dim) // m)
-    # STUB: payload passes through; a real deployment registers a
-    # pixel transform via register_decoder and re-encodes here
+        ow = max(1, (w * RESIZE_MAX_DIM) // m)
+        oh = max(1, (h * RESIZE_MAX_DIM) // m)
+    # STUB: payload passes through; a pixel resampler would re-encode
+    # the decoded image at (ow, oh) here
     return [{"doc_id": doc_id, "media_ref": ref, "width": w, "height": h,
              "out_width": ow, "out_height": oh, "payload": payload or b""}]
 
 
-def image_resize(media: DataFrame, max_dim: int = RESIZE_MAX_DIM) -> DataFrame:
+def image_resize(media: DataFrame) -> DataFrame:
     """Bounded-resolution resize plan: (payload, dims) → (payload, target
-    dims), aspect-preserving, longest side ≤ ``max_dim``. Same narrow
-    Arrow-batched shape as media_features; the per-image pixel work is a
-    registered decoder at deployment, a deterministic stub here."""
-    decoders = dict(_DECODERS)
+    dims), aspect-preserving, longest side ≤ ``RESIZE_MAX_DIM``. Same
+    narrow Arrow-batched shape as media_features; the per-image pixel
+    work is a deterministic stub here."""
     return map_rows(
         media.select("doc_id", "media_ref", "media_kind", "payload"),
-        RESIZE_SCHEMA, lambda: partial(_resize_rows, decoders, max_dim))
+        RESIZE_SCHEMA, lambda: _resize_rows)
 
 
 FRAME_INTERVAL_MS = 5_000
@@ -249,8 +220,7 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def _avi_frame_rows(doc_id, ref, payload, info,
-                    interval_ms: int, max_frames: int) -> list[dict]:
+def _avi_frame_rows(doc_id, ref, payload, info) -> list[dict]:
     """REAL frame sampling for an AVI payload: pick the stream chunk
     nearest each sample timestamp and hash its DECODED pixels — MJPEG
     frames ('..dc' chunks that are baseline JPEGs) run through the
@@ -263,11 +233,11 @@ def _avi_frame_rows(doc_id, ref, payload, info,
     frames = info["frames"]
     upf = info["us_per_frame"] or 33_333  # degenerate header: assume 30fps
     duration_ms = ((info["total_frames"] or len(frames)) * upf) // 1000
-    n = int(min(max_frames, 1 + duration_ms // interval_ms,
+    n = int(min(FRAME_MAX, 1 + duration_ms // FRAME_INTERVAL_MS,
                 len(frames)))
     rows = []
     for i in range(n):
-        ts = i * interval_ms
+        ts = i * FRAME_INTERVAL_MS
         fi = min((ts * 1000) // upf, len(frames) - 1)
         off, sz = frames[fi]
         raw = payload[off:off + sz]
@@ -286,8 +256,7 @@ def _avi_frame_rows(doc_id, ref, payload, info,
     return rows
 
 
-def _frame_rows(interval_ms: int, max_frames: int,
-                doc_id, ref, payload) -> list[dict]:
+def _frame_rows(doc_id, ref, payload) -> list[dict]:
     """One media row's sampled frames (fan-out)."""
     from ..functions.containerdec import container_duration_ms, parse_avi
 
@@ -298,40 +267,35 @@ def _frame_rows(interval_ms: int, max_frames: int,
     if payload[:4] == b"RIFF":
         info = parse_avi(payload)
         if info and info["frames"]:
-            return _avi_frame_rows(doc_id, ref, payload, info,
-                                   interval_ms, max_frames)
+            return _avi_frame_rows(doc_id, ref, payload, info)
     ph = polyhash_bytes(payload)
     # Real duration when the payload is an MP4/WebM whose header we can
-    # walk (magic-gated); frame DECODE for those still needs a registered
-    # decoder, but the sampling fan-out is driven by the true container
-    # duration.
+    # walk (magic-gated); frame DECODE for those still needs libav, but
+    # the sampling fan-out is driven by the true container duration.
     duration_ms = container_duration_ms(payload)
     if duration_ms is None:
         # STUB duration (deterministic, SQL-replayable)
         duration_ms = 1_000 + (ph % 59_000)
     return [{
         "doc_id": doc_id, "media_ref": ref, "frame_idx": i,
-        "timestamp_ms": i * interval_ms,
+        "timestamp_ms": i * FRAME_INTERVAL_MS,
         "frame_ref": None if ref is None else f"{ref}#f{i}",
         "frame_hash": (ph * (i + 1) + i) % PRIME,
-    } for i in range(min(max_frames, 1 + duration_ms // interval_ms))]
+    } for i in range(min(FRAME_MAX, 1 + duration_ms // FRAME_INTERVAL_MS))]
 
 
-def video_frame_sample(media: DataFrame,
-                       interval_ms: int = FRAME_INTERVAL_MS,
-                       max_frames: int = FRAME_MAX) -> DataFrame:
+def video_frame_sample(media: DataFrame) -> DataFrame:
     """Frame sampling: one input row → N frame rows (variable fan-out
     through ``runtime.map_rows`` — the batch shape real frame extraction
     needs; output row count is NOT the input row count, which Spark
     permits because ``mapInArrow`` yields arbitrary batches). Durations are
     REAL for MP4/MOV (``moov/mvhd``) and WebM/MKV (EBML ``Segment→Info``)
     payloads via the stdlib header walk in ``functions/containerdec.py``;
-    frame decode itself remains a deployment-registered transform, and
     non-container payloads fall back to a deterministic stub duration so
-    the synthetic-payload fan-out stays SQL-replayable."""
+    the synthetic-payload fan-out stays SQL-replayable. One frame every
+    ``FRAME_INTERVAL_MS``, at most ``FRAME_MAX`` per payload."""
     return map_rows(media.select("doc_id", "media_ref", "payload"),
-                    FRAME_SCHEMA,
-                    lambda: partial(_frame_rows, interval_ms, max_frames))
+                    FRAME_SCHEMA, lambda: _frame_rows)
 
 
 def multimodal_resize(spark, sf_dir: str) -> DataFrame:
@@ -441,8 +405,8 @@ def media_phash_neardup(spark, sf_dir: str) -> DataFrame:
     # sides of the band self-join; harnesses release between queries so
     # repeated invocations in a long-lived session don't accumulate
     # cached blocks.  The scan is spread before the decode (gated, as
-    # dedup._docs): the band join has no shuffle of its own, so it runs
-    # at the decode's width.
+    # runtime.read_documents): the band join has no shuffle of its own,
+    # so it runs at the decode's width.
     media = ensure_parallel_scan(spark, media_from_documents(spark, sf_dir))
     f = track_cache(media_features(media).select("media_ref", "phash"))
     # bitslice, not div/mod: real aHashes use bit 63, and a banded join

@@ -192,9 +192,9 @@ def srp_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The band keys (16 interpreted folds per vector) are persisted
     # columns, like MinHash's mh*: a key expression downstream of the
     # cache would run once per join side of the band self-join.  The
-    # scan is spread first (gated, as dedup._docs): the band join and
-    # cosine verify have no shuffle of their own, so they run at its
-    # width.
+    # scan is spread first (gated, as runtime.read_documents): the band
+    # join and cosine verify have no shuffle of their own, so they run
+    # at its width.
     keys = [f"srp{bi}" for bi in range(SRP_BANDS)]
     emb = track_cache(ensure_parallel_scan(spark, _emb(spark, sf_dir)).select(
         "vec_id", "v", *[

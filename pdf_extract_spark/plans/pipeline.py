@@ -71,6 +71,12 @@ SPAN_TYPE = ArrayType(
     )
 )
 
+#: the input table every source builds: one row per document, its
+#: spans in offset order
+INPUT_SCHEMA = StructType(
+    [StructField("doc_id", StringType()), StructField("spans", SPAN_TYPE)]
+)
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),

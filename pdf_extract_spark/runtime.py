@@ -75,6 +75,14 @@ def ensure_parallel_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df if df.rdd.getNumPartitions() >= par else df.repartition(par)
 
 
+def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``documents`` table of a test-scale ``sf_dir``, its scan
+    spread by :func:`ensure_parallel_scan`: the test tables are single
+    small files, and the hashing that follows is CPU-bound."""
+    return ensure_parallel_scan(
+        spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
+
+
 def map_rows(df: DataFrame, schema: StructType,
              setup: Callable[[], Callable[..., list[dict]]]) -> DataFrame:
     """The package's one Python row map: a narrow ``mapInArrow`` over

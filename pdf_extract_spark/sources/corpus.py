@@ -105,12 +105,15 @@ def load_fixtures() -> dict[str, bytes]:
     return out
 
 
-def make_doc(doc_idx: int, fixtures: dict[str, bytes] | None = None,
-             skew_every: int = 50) -> dict:
+#: every SKEW_EVERY-th doc embeds the large fixture (sample4)
+SKEW_EVERY = 50
+
+
+def make_doc(doc_idx: int, fixtures: dict[str, bytes] | None = None) -> dict:
     """One deterministic interleaved document row (doc_id, spans).
 
     Interleaves 0-2 text spans and 0-3 media spans around one pdf span
-    (FIXTURES.md synthesis recipe). Every ``skew_every``-th doc embeds the
+    (FIXTURES.md synthesis recipe). Every ``SKEW_EVERY``-th doc embeds the
     large fixture (sample4) when available — the skew tail."""
     rng = random.Random(doc_idx * 2654435761 % (2**31))
     fixtures = fixtures or {}
@@ -127,7 +130,8 @@ def make_doc(doc_idx: int, fixtures: dict[str, bytes] | None = None,
     for _ in range(rng.randint(0, 3)):
         add("media", media_ref=f"img://ext/{doc_idx}/{rng.randint(0, 999)}")
 
-    if fixtures and skew_every and doc_idx % skew_every == skew_every - 1 and "sample4.pdf" in fixtures:
+    if (fixtures and doc_idx % SKEW_EVERY == SKEW_EVERY - 1
+            and "sample4.pdf" in fixtures):
         payload = fixtures["sample4.pdf"]
     elif fixtures and doc_idx % 7 == 3:
         name = FIXTURE_NAMES[doc_idx % 3]  # sample/sample2/sample3
@@ -142,27 +146,22 @@ def make_doc(doc_idx: int, fixtures: dict[str, bytes] | None = None,
 
 
 def corpus_dataframe(spark, n_docs: int, use_fixtures: bool = True,
-                     skew_every: int = 50, num_partitions: int | None = None):
+                     num_partitions: int | None = None):
     """Distributed deterministic corpus: spark.range → runtime.map_rows.
 
     Payload bytes are derived from doc_idx on the executors — nothing big
     crosses the driver."""
-    from ..plans.pipeline import SPAN_TYPE  # schema reuse
+    from ..plans.pipeline import INPUT_SCHEMA
     from ..runtime import map_rows
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        [StructField("doc_id", StringType()), StructField("spans", SPAN_TYPE)]
-    )
 
     def setup():
         fixtures = load_fixtures() if use_fixtures else {}
-        return lambda i: [make_doc(i, fixtures, skew_every)]
+        return lambda i: [make_doc(i, fixtures)]
 
     rng = spark.range(n_docs)
     if num_partitions:
         rng = rng.repartition(num_partitions)
-    return map_rows(rng, schema, setup)
+    return map_rows(rng, INPUT_SCHEMA, setup)
 
 
 def read_pdf_dir(spark, path: str, pattern: str = "*.pdf"):

@@ -224,18 +224,6 @@ class StandardSecurityHandler:
             return cbc_decrypt(key, raw[:16], raw[16:])
         return rc4(key, raw)
 
-    def encrypt(self, raw: bytes, num: int, gen: int) -> bytes:
-        """Fixture-writer side (the itext role, PDFToHtml.java:96). For
-        AES the IV is derived deterministically from (num, gen) so the
-        builders stay reproducible."""
-        key = self.object_key(num, gen)
-        if self.aes:
-            from .aes import cbc_encrypt
-
-            iv = hashlib.md5(b"iv" + struct.pack("<II", num, gen)).digest()
-            return iv + cbc_encrypt(key, iv, raw)
-        return rc4(key, raw)
-
     def permissions(self) -> dict:
         return permissions_dict(self.p, encrypted=True)
 
@@ -289,23 +277,6 @@ def compute_u(key: bytes, doc_id: bytes, r: int) -> bytes:
     for i in range(1, 20):
         out = rc4(bytes(b ^ i for b in key), out)
     return out + b"\x00" * 16  # 16 bytes of arbitrary padding per spec
-
-
-def compute_o(owner_password: bytes, user_password: bytes, r: int,
-              length: int) -> bytes:
-    """Algorithm 3: the /O entry (needed to WRITE encrypted PDFs — the
-    role of itext in the reference's decrypt-rewrite, PDFToHtml.java:96)."""
-    n = max(5, min(16, length // 8)) if r >= 3 else 5
-    h = hashlib.md5((owner_password or user_password) + PAD).digest()
-    if r >= 3:
-        for _ in range(50):
-            h = hashlib.md5(h).digest()
-    key = h[:n]
-    out = rc4(key, (user_password + PAD)[:32])
-    if r >= 3:
-        for i in range(1, 20):
-            out = rc4(bytes(b ^ i for b in key), out)
-    return out
 
 
 def _as_int32(v) -> int:

@@ -26,18 +26,9 @@ archives upstream; the parser itself is single-pass.
 from __future__ import annotations
 
 import base64
-import gzip
 import re
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..runtime import map_rows
 
@@ -170,26 +161,6 @@ def _http_payload(body: bytes) -> tuple[dict[str, str], bytes]:
     return _parse_headers(body[:sep]), body[sep + 4:]
 
 
-_SPAN_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField(
-            "spans",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("kind", StringType()),
-                        StructField("text", StringType()),
-                        StructField("media_ref", StringType()),
-                        StructField("offset", IntegerType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
 #: mime prefix → span kind; pdf payloads ride base64 in ``text``, html
 #: payloads ride decoded markup (the pipeline's html tier strips
 #: boilerplate via DOM heuristics, functions/htmlextract.py)
@@ -200,9 +171,9 @@ DEFAULT_MIME_KINDS: dict[str, str] = {
 }
 
 
-def warc_docs(data: bytes, source_name: str,
-              mime_kinds: dict[str, str]) -> list[dict]:
-    """All matching-response documents of one WARC file."""
+def warc_docs(data: bytes, source_name: str) -> list[dict]:
+    """All matching-response documents of one WARC file (pdf and html by
+    ``DEFAULT_MIME_KINDS``)."""
     docs: list[dict] = []
     for i, (headers, body) in enumerate(iter_warc_records(data)):
         if headers.get("warc-type", "") not in ("response", "resource"):
@@ -218,7 +189,8 @@ def warc_docs(data: bytes, source_name: str,
         )
         mime = content_type.split(";")[0].strip().lower()
         kind = next(
-            (k for p, k in mime_kinds.items() if mime.startswith(p)), None
+            (k for p, k in DEFAULT_MIME_KINDS.items() if mime.startswith(p)),
+            None,
         )
         if kind is None:
             continue
@@ -254,16 +226,13 @@ def warc_docs(data: bytes, source_name: str,
     return docs
 
 
-def read_warc(
-    spark: SparkSession,
-    path: str,
-    pattern: str = "*.warc*",
-    mime_kinds: dict[str, str] | None = None,
-) -> DataFrame:
+def read_warc(spark: SparkSession, path: str,
+              pattern: str = "*.warc*") -> DataFrame:
     """Directory of WARC files → interleaved (doc_id, spans) table with
-    one span per matching HTTP response record (pdf and html by
-    default — see DEFAULT_MIME_KINDS)."""
-    kinds = dict(DEFAULT_MIME_KINDS if mime_kinds is None else mime_kinds)
+    one span per matching HTTP response record (pdf and html — see
+    DEFAULT_MIME_KINDS)."""
+    from ..plans.pipeline import INPUT_SCHEMA
+
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", pattern)
@@ -271,5 +240,4 @@ def read_warc(
         # in warc_docs' argument order: (data, source_name)
         .select("content", "path")
     )
-    return map_rows(files, _SPAN_SCHEMA,
-                    lambda: partial(warc_docs, mime_kinds=kinds))
+    return map_rows(files, INPUT_SCHEMA, lambda: warc_docs)

@@ -31,19 +31,15 @@ def spark():
 
 def corpus_frame(spark, n_docs: int, use_fixtures: bool = False):
     """A small driver-side corpus of ``corpus.make_doc`` rows under the
-    explicit ``(doc_id string, spans SPAN_TYPE)`` schema, so span structs
-    never infer as maps."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from pdf_extract_spark.plans.pipeline import SPAN_TYPE
+    explicit ``pipeline.INPUT_SCHEMA``, so span structs never infer as
+    maps."""
+    from pdf_extract_spark.plans.pipeline import INPUT_SCHEMA
     from pdf_extract_spark.sources.corpus import load_fixtures, make_doc
 
     fixtures = load_fixtures() if use_fixtures else {}
     docs = [make_doc(i, fixtures) for i in range(n_docs)]
-    schema = StructType([StructField("doc_id", StringType()),
-                         StructField("spans", SPAN_TYPE)])
     return spark.createDataFrame(
-        [(d["doc_id"], d["spans"]) for d in docs], schema)
+        [(d["doc_id"], d["spans"]) for d in docs], INPUT_SCHEMA)
 
 
 def fixture_bytes(name: str) -> bytes | None:

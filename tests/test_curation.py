@@ -12,8 +12,16 @@ from collections import defaultdict
 import pytest
 
 from pdf_extract_spark.functions import curation as C
+from pdf_extract_spark.functions import sqlkit as K
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _eval_is_member(doc_id: int) -> bool:
+    """Python twin of ``curation._eval_selector``: is ``doc_id`` in the
+    hash-selected eval set?"""
+    return (K.polyhash_bytes(str(doc_id).encode())
+            % C.CONTAM_MOD) == C.CONTAM_RESIDUE
 
 
 @pytest.fixture(scope="module")
@@ -150,7 +158,7 @@ def test_decontaminate_flags_planted_eval_copy(spark, tmp_path):
     assert eval_doc is not None
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     copy_id = 10_000_019  # chosen non-eval: polyhash % 19 != 3
-    assert not C._eval_is_member(copy_id)
+    assert not _eval_is_member(copy_id)
     extra = spark.createDataFrame(
         [(copy_id, eval_doc[1], "xx", "planted", len(eval_doc[1]))],
         schema=src.schema)

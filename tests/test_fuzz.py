@@ -127,10 +127,10 @@ def test_media_decoders_never_raise():
     rng = random.Random(99)
     for base in bases:
         for seed in range(40):
-            out = sniff_decode(_corrupt(base, seed), "m", "image")
+            out = sniff_decode(_corrupt(base, seed))
             assert out is None or isinstance(out, dict)
     for _ in range(60):  # pure random payloads
         blob = bytes(rng.randrange(256)
                      for _ in range(rng.randrange(1, 4000)))
-        out = sniff_decode(blob, "m", "image")
+        out = sniff_decode(blob)
         assert out is None or isinstance(out, dict)

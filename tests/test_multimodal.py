@@ -44,24 +44,6 @@ def test_media_features_schema_and_determinism(spark):
     }
 
 
-def test_register_decoder_override(spark):
-    from pdf_extract_spark.operators import multimodal
-
-    def fake_image(payload, ref, kind):
-        return {"n_bytes": len(payload), "width": 1, "height": 2,
-                "phash": 3, "decoder": "pil"}
-
-    multimodal.register_decoder("image", fake_image)
-    try:
-        out = {r.media_ref: r
-               for r in multimodal.media_features(_media_df(spark)).collect()}
-        assert out["img://a/1"].decoder == "pil"
-        assert out["img://a/1"].width == 1
-        assert out["vid://b/1"].decoder == "stub:video"  # untouched kind
-    finally:
-        multimodal._DECODERS.pop("image", None)
-
-
 def test_null_ref_and_kind_stay_null(spark):
     """A null media_ref or media_kind stays null through all three
     operators, and so does every stub value derived from it — the SQL
@@ -190,11 +172,11 @@ class TestStdlibDecoders:
     def test_bmp_real_pixels_and_ahash(self):
         from pdf_extract_spark.functions.mediacodec import sniff_decode
 
-        d = sniff_decode(self._bmp(16, 8), "m", "image")
+        d = sniff_decode(self._bmp(16, 8))
         assert (d["width"], d["height"], d["decoder"]) == (16, 8, "bmp")
         # top half bright, bottom dark → aHash = top 32 bits set pattern,
         # and constant images hash to 0 (no cell above the mean)
-        flat = sniff_decode(self._bmp(8, 8, value=128), "m", "image")
+        flat = sniff_decode(self._bmp(8, 8, value=128))
         assert flat["phash"] == 0
         assert d["phash"] != 0
 
@@ -205,26 +187,26 @@ class TestStdlibDecoders:
 
         png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
                + struct.pack(">IIBBBBB", 640, 480, 8, 2, 0, 0, 0))
-        assert sniff_decode(png, "m", "image")["width"] == 640
+        assert sniff_decode(png)["width"] == 640
         jpeg = (b"\xff\xd8\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
                 + b"\xff\xc0" + struct.pack(">H", 11) + b"\x08"
                 + struct.pack(">HH", 300, 200) + b"\x03" + b"\x00" * 2)
-        j = sniff_decode(jpeg, "m", "image")
+        j = sniff_decode(jpeg)
         assert (j["width"], j["height"]) == (200, 300)
         assert j["decoder"] == "jpeg-header"
         gif = b"GIF89a" + struct.pack("<HH", 320, 240) + b"\x00" * 3
-        assert sniff_decode(gif, "m", "image")["height"] == 240
+        assert sniff_decode(gif)["height"] == 240
 
     def test_wav_audio(self):
         from pdf_extract_spark.functions.mediacodec import sniff_decode
 
-        d = sniff_decode(self._wav(44100, 1, 64), "m", "audio")
+        d = sniff_decode(self._wav(44100, 1, 64))
         assert (d["width"], d["height"], d["decoder"]) == (44100, 1, "wav")
 
     def test_random_payload_falls_back_to_stub(self):
         from pdf_extract_spark.functions.mediacodec import sniff_decode
 
-        assert sniff_decode(bytes(range(256)) * 8, "m", "image") is None
+        assert sniff_decode(bytes(range(256)) * 8) is None
 
     def test_pipeline_uses_real_decoder(self, spark):
         """End-to-end: a BMP payload rides the media frame and comes out
@@ -243,6 +225,26 @@ class TestStdlibDecoders:
         assert rows["d2"].decoder == "wav"
         assert rows["d2"].width == 8000
         assert rows["d3"].decoder == "stub:image"
+
+    def test_resize_uses_real_decoder(self, spark):
+        """image_resize takes its source dims from the default decode
+        chain: a real 1024×256 BMP downscales to 512×128, not the stub's
+        hash-derived dims."""
+        from pdf_extract_spark.operators.multimodal import (
+            image_resize,
+            media_features,
+        )
+
+        bmp = self._bmp(1024, 256)
+        df = spark.createDataFrame(
+            [("d1", "img://big", "image", bytearray(bmp))],
+            "doc_id string, media_ref string, media_kind string, payload binary",
+        )
+        assert media_features(df).first().decoder == "bmp"
+        r = image_resize(df).first()
+        assert (r.width, r.height) == (1024, 256)
+        assert (r.out_width, r.out_height) == (512, 128)
+        assert r.payload == bmp
 
 
 class TestPngPixelDecode:
@@ -366,7 +368,7 @@ class TestPngPixelDecode:
         )
 
         png = self._png(16, 16, self._grad, row_filters=[0, 1, 2, 3, 4])
-        d = sniff_decode(png, "m", "image")
+        d = sniff_decode(png)
         assert (d["width"], d["height"], d["decoder"]) == (16, 16, "png")
 
         # same pixels as 24-bit BMP (bottom-up rows)
@@ -433,7 +435,7 @@ class TestPngPixelDecode:
 
         png = self._png(8, 8, self._grad)
         trunc = png[:40]  # header only, no complete IDAT
-        d = sniff_decode(trunc, "m", "image")
+        d = sniff_decode(trunc)
         assert d["decoder"] == "png-header"
 
     def test_checked_in_fixture_hash(self):
@@ -443,7 +445,7 @@ class TestPngPixelDecode:
 
         with open("tests/golden/fingerprint.png", "rb") as fh:
             png = fh.read()
-        d = sniff_decode(png, "m", "image")
+        d = sniff_decode(png)
         assert d["decoder"] == "png"
         assert (d["width"], d["height"]) == (24, 16)
         assert d["phash"] == PNG_FIXTURE_AHASH
@@ -528,7 +530,7 @@ class TestJpegPixelDecode:
         jp = bytearray(encode_jpeg(self._gradient()))
         sof = jp.find(b"\xff\xc0")
         jp[sof + 1] = 0xC2
-        d = sniff_decode(bytes(jp), "m", "image")
+        d = sniff_decode(bytes(jp))
         assert d["decoder"] == "jpeg-header"
         assert (d["width"], d["height"]) == (32, 24)
 
@@ -575,8 +577,7 @@ class TestJpegPixelDecode:
         from jpeg_encoder import encode_jpeg_progressive
         from pdf_extract_spark.functions.mediacodec import sniff_decode
 
-        d = sniff_decode(encode_jpeg_progressive(self._gradient()),
-                         "m", "image")
+        d = sniff_decode(encode_jpeg_progressive(self._gradient()))
         assert d["decoder"] == "jpeg"
         assert (d["width"], d["height"]) == (32, 24)
 
@@ -598,7 +599,7 @@ class TestJpegPixelDecode:
             (np.add.outer(np.arange(16) // 8, np.arange(16) // 8) % 2) == 0,
             224.0, 32.0,
         )
-        d = sniff_decode(encode_jpeg(img), "m", "image")
+        d = sniff_decode(encode_jpeg(img))
         assert d["decoder"] == "jpeg"
         assert (d["width"], d["height"]) == (16, 16)
 
@@ -743,7 +744,7 @@ class TestGifPixelDecode:
 
         px = [[224 if ((r // 8 + c // 8) % 2 == 0) else 32
                for c in range(16)] for r in range(16)]
-        d = sniff_decode(self._gif(px), "m", "image")
+        d = sniff_decode(self._gif(px))
         assert d["decoder"] == "gif"
         stride = ((16 * 3) + 3) & ~3
         raw = bytearray()
@@ -772,7 +773,7 @@ class TestGifPixelDecode:
         idx = 13 + 768
         assert g[idx] == 0x2C
         g[idx + 1: idx + 9] = struct.pack("<HHHH", 2, 2, 4, 4)
-        d = sniff_decode(bytes(g), "m", "image")
+        d = sniff_decode(bytes(g))
         assert d["decoder"] == "gif-header"
         assert (d["width"], d["height"]) == (8, 8)
 
@@ -799,7 +800,7 @@ def test_bmp_8bit_palette_decode():
     got = parse_bmp(bmp8)
     assert got[0] == w and got[1] == h
     assert got[2] == vals
-    d = sniff_decode(bmp8, "m", "image")
+    d = sniff_decode(bmp8)
     assert d["decoder"] == "bmp"
 
     stride24 = ((w * 3) + 3) & ~3
@@ -813,7 +814,7 @@ def test_bmp_8bit_palette_decode():
     bmp24 = (b"BM" + struct.pack("<IHHI", 54 + len(px24), 0, 0, 54)
              + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
                            len(px24), 2835, 2835, 0, 0) + px24)
-    assert d["phash"] == sniff_decode(bmp24, "m", "image")["phash"]
+    assert d["phash"] == sniff_decode(bmp24)["phash"]
 
 
 def test_wav_energy_fingerprint():
@@ -854,7 +855,7 @@ def test_wav_energy_fingerprint():
     # loud half = windows 32..63 → the high 32 bits
     assert (h1 if h1 >= 0 else h1 + (1 << 64)) >> 32 == 0xFFFFFFFF
     assert (h1 if h1 >= 0 else h1 + (1 << 64)) & 0xFFFFFFFF == 0
-    d = sniff_decode(loud, "m", "audio")
+    d = sniff_decode(loud)
     assert d["decoder"] == "wav" and d["phash"] == h1
 
 

@@ -2,11 +2,14 @@
 (sources/pdfcrypt) vs the reference's itext probe/decrypt fallback
 (PDFExtract.java:574-625, PDFToHtml.java:74-109)."""
 
+import hashlib
+import struct
+
 import pytest
 
 from pdf_extract_spark.sources.pdfcrypt import (
+    PAD,
     StandardSecurityHandler,
-    compute_o,
     compute_u,
     file_key,
     permissions_dict,
@@ -43,6 +46,38 @@ def test_permissions_bit_decode():
     # bit 3 without bit 12 → degraded printing only (itext semantics)
     q = permissions_dict(_perm(3))
     assert q["can_print_degraded"] and not q["can_print"]
+
+
+def compute_o(owner_password: bytes, user_password: bytes, r: int,
+              length: int) -> bytes:
+    """Algorithm 3: the /O entry of an encrypted PDF (the writer side
+    itext plays in the reference's decrypt-rewrite, PDFToHtml.java:96)."""
+    n = max(5, min(16, length // 8)) if r >= 3 else 5
+    h = hashlib.md5((owner_password or user_password) + PAD).digest()
+    if r >= 3:
+        for _ in range(50):
+            h = hashlib.md5(h).digest()
+    key = h[:n]
+    out = rc4(key, (user_password + PAD)[:32])
+    if r >= 3:
+        for i in range(1, 20):
+            out = rc4(bytes(b ^ i for b in key), out)
+    return out
+
+
+def encrypt(handler: StandardSecurityHandler, raw: bytes, num: int,
+            gen: int) -> bytes:
+    """Encrypt object ``num gen``'s bytes under ``handler``'s key, the
+    inverse of ``handler.decrypt``. For AES the IV is derived
+    deterministically from (num, gen) so the builders stay
+    reproducible."""
+    key = handler.object_key(num, gen)
+    if handler.aes:
+        from pdf_extract_spark.sources.aes import cbc_encrypt
+
+        iv = hashlib.md5(b"iv" + struct.pack("<II", num, gen)).digest()
+        return iv + cbc_encrypt(key, iv, raw)
+    return rc4(key, raw)
 
 
 LINES = ["Encrypted document first line", "and its second line."]
@@ -98,7 +133,7 @@ def make_encrypted_pdf(v: int, r: int, length: int, p: int,
 
     objs = _plain_pdf_objects()
     enc = StandardSecurityHandler(enc_dict, DOC_ID)
-    stream = enc.encrypt(objs[3], 4, 0)  # content stream is object 4
+    stream = encrypt(enc, objs[3], 4, 0)  # content stream is object 4
     objs[3] = (b"<< /Length " + str(len(stream)).encode()
                + b" >>\nstream\n" + stream + b"\nendstream")
     objs.append(
@@ -113,8 +148,6 @@ def make_encrypted_pdf(v: int, r: int, length: int, p: int,
 def make_encrypted_pdf_v5(r: int, p: int) -> bytes:
     """AES-256 (/AESV3) fixture: V=5, R=5 (legacy SHA-256) or R=6
     (PDF 2.0 Algorithm 2.B hash); empty user password."""
-    import hashlib
-
     from pdf_extract_spark.sources.aes import cbc_encrypt
     from pdf_extract_spark.sources.pdfcrypt import hash_r6
 
@@ -137,7 +170,7 @@ def make_encrypted_pdf_v5(r: int, p: int) -> bytes:
         DOC_ID,
     )
     assert enc.key == file_k  # round-trip through /UE
-    stream = enc.encrypt(objs[3], 4, 0)
+    stream = encrypt(enc, objs[3], 4, 0)
     objs[3] = (b"<< /Length " + str(len(stream)).encode()
                + b" >>\nstream\n" + stream + b"\nendstream")
     objs.append(

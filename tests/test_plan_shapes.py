@@ -12,6 +12,7 @@ import tempfile
 
 import pytest
 
+from pdf_extract_spark.runtime import read_documents
 from tests.conftest import corpus_frame
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -105,12 +106,10 @@ def test_gated_repartition_skips_parallel_input(spark, tmp_path):
     """The documents-scan repartition only fires for under-parallel
     scans: a multi-partition input shows no round-robin exchange
     (VERDICT r1 item 7 done-bar)."""
-    import pdf_extract_spark.operators.dedup as dd
-
     par = spark.sparkContext.defaultParallelism
 
     # single small file → repartition inserted
-    assert "Repartition" in _optimized(dd._docs(spark, SF_DIR))
+    assert "Repartition" in _optimized(read_documents(spark, SF_DIR))
 
     # already-parallel input (documents.parquet as a multi-file dir
     # under a synthetic sf_dir) → scan kept as-is, no exchange
@@ -118,7 +117,7 @@ def test_gated_repartition_skips_parallel_input(spark, tmp_path):
     sf2.mkdir()
     (spark.read.parquet(f"{SF_DIR}/documents.parquet")
      .repartition(par).write.parquet(str(sf2 / "documents.parquet")))
-    df = dd._docs(spark, str(sf2))
+    df = read_documents(spark, str(sf2))
     assert df.rdd.getNumPartitions() >= par
     assert "Repartition" not in _optimized(df)
 
@@ -191,9 +190,8 @@ def test_bucketed_sketch_join_no_shuffle(spark, tmp_path):
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        docs = dedup._docs(spark, SF_DIR)
-        dedup.write_sketch_table(
-            spark, docs, "sketch_shape_t", str(tmp_path / "sk"), buckets=8)
+        docs = read_documents(spark, SF_DIR)
+        dedup.write_sketch_table(docs, "sketch_shape_t", str(tmp_path / "sk"))
         pairs = dedup.band_pairs(spark.table("sketch_shape_t"))
         plan = pairs._jdf.queryExecution().executedPlan().toString()
         assert not re.findall(r"Exchange [^\n]*", plan), plan
@@ -238,10 +236,9 @@ def test_sketch_table_scan_is_pure_and_equals_in_plan_bands(spark,
     banded_signatures form."""
     from pdf_extract_spark.operators import dedup
 
-    docs = dedup._docs(spark, SF_DIR)
+    docs = read_documents(spark, SF_DIR)
     try:
-        dedup.write_sketch_table(
-            spark, docs, "sketch_stream_t", str(tmp_path / "sk"), buckets=4)
+        dedup.write_sketch_table(docs, "sketch_stream_t", str(tmp_path / "sk"))
         from_table = spark.table("sketch_stream_t")
         plan = _physical(from_table)
         for marker in ("transform(", "array_distinct", "array_min"):
@@ -356,7 +353,7 @@ def test_minhash_band_keys_are_int64(spark):
     df = QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
     df.collect()
     assert "concat_ws" not in _physical(df)
-    schema = dedup.banded_signatures(dedup._docs(spark, SF_DIR)).schema
+    schema = dedup.banded_signatures(read_documents(spark, SF_DIR)).schema
     assert schema["band_key"].dataType == LongType()
     keys = schema["band_keys"].dataType
     assert isinstance(keys, ArrayType) and keys.elementType == LongType()
@@ -371,7 +368,7 @@ def test_band_join_refuses_mixed_band_key_types(spark):
 
     from pdf_extract_spark.operators import dedup
 
-    docs = dedup._docs(spark, SF_DIR)
+    docs = read_documents(spark, SF_DIR)
     sketch = dedup.banded_signatures(
         docs.filter(F.col("doc_id") % 10 != 0)).select(
         "doc_id", "sh", "n_sh",
@@ -417,8 +414,8 @@ def test_ensure_sketch_table_distinct_for_same_basename(spark, tmp_path):
         dirs.append(str(d))
     t_a = t_b = None
     try:
-        t_a = dedup.ensure_sketch_table(spark, dirs[0], buckets=2)
-        t_b = dedup.ensure_sketch_table(spark, dirs[1], buckets=2)
+        t_a = dedup.ensure_sketch_table(spark, dirs[0])
+        t_b = dedup.ensure_sketch_table(spark, dirs[1])
         assert t_a != t_b
         ids_a = {r.doc_id for r in spark.table(t_a).select("doc_id").collect()}
         ids_b = {r.doc_id for r in spark.table(t_b).select("doc_id").collect()}
@@ -447,12 +444,11 @@ def test_sketch_append_lifecycle(spark, tmp_path):
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        docs = dedup._docs(spark, SF_DIR)
+        docs = read_documents(spark, SF_DIR)
         old = docs.filter(F.col("doc_id") % 10 != 0)
         new = docs.filter(F.col("doc_id") % 10 == 0)
-        dedup.write_sketch_table(
-            spark, old, "sketch_app_t", str(tmp_path / "ska"), buckets=8)
-        dedup.append_to_sketch_table(spark, new, "sketch_app_t", buckets=8)
+        dedup.write_sketch_table(old, "sketch_app_t", str(tmp_path / "ska"))
+        dedup.append_to_sketch_table(new, "sketch_app_t")
 
         t = spark.table("sketch_app_t")
         assert t.select("doc_id").distinct().count() == docs.count()

@@ -12,12 +12,12 @@ from pdf_extract_spark.functions.textops import (
 from pdf_extract_spark.functions.textrules import RuleSet
 from pdf_extract_spark.sources.corpus import synth_pdf
 from pdf_extract_spark.sources.pdfcrypt import (
-    compute_o,
     compute_u,
     file_key,
     rc4,
 )
 from pdf_extract_spark.sources.pdfparse import PDFDocument
+from tests.test_pdfcrypt import compute_o
 
 RULES = RuleSet()
 

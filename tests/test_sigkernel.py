@@ -76,11 +76,12 @@ def test_kernel_matches_hof_on_corpus(spark):
     """The kernel on the sf0.001 corpus equals the DuckDB fragments on
     the same parquet, every column, sh element-for-element."""
     from pdf_extract_spark.functions.sigkernel import signature_frame
-    from pdf_extract_spark.operators.dedup import SHINGLE_W, _docs
+    from pdf_extract_spark.operators.dedup import SHINGLE_W
+    from pdf_extract_spark.runtime import read_documents
 
     fast = _collect(
-        signature_frame(_docs(spark, SF_DIR), SHINGLE_W, minhash=True,
-                        simhash=True), SIG_COLS)
+        signature_frame(read_documents(spark, SF_DIR), SHINGLE_W,
+                        minhash=True, simhash=True), SIG_COLS)
     want = _duckdb_signatures(
         f"select doc_id, text from read_parquet('{SF_DIR}/documents.parquet')",
         SHINGLE_W)

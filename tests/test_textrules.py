@@ -101,13 +101,15 @@ class TestReferenceConfigCompat:
 
     @pytest.fixture(scope="class")
     def ref_rules(self):
+        import json
         import os
 
         from pdf_extract_spark.functions.textrules import RuleSet
 
         if not os.path.exists(self.REF_CONFIG):
             pytest.skip("reference config unavailable")
-        return RuleSet.from_json(self.REF_CONFIG)
+        with open(self.REF_CONFIG) as fh:
+            return RuleSet(json.load(fh))
 
     def test_loads_both_languages(self, ref_rules):
         assert "common" in ref_rules.langs

@@ -59,13 +59,20 @@ def test_iter_warc_records_plain_and_gzip():
     gz = b"".join(gzip.compress(r) for r in _records())
     assert len(list(iter_warc_records(gz))) == 4
 
-    docs = warc_docs(raw, "t.warc", {"application/pdf": "pdf"})
-    assert [d["doc_id"] for d in docs] == ["urn:uuid:0001", "urn:uuid:0004"]
-    assert docs[0]["spans"][0]["media_ref"] == "http://a.example/one.pdf"
+    docs = warc_docs(raw, "t.warc")
+    kinds = {d["doc_id"]: d["spans"][0]["kind"] for d in docs}
+    # the request record is skipped; pdf and html responses are kept
+    assert kinds == {"urn:uuid:0001": "pdf", "urn:uuid:0002": "html",
+                     "urn:uuid:0004": "pdf"}
+    pdfs = [d for d in docs if d["spans"][0]["kind"] == "pdf"]
+    assert [d["doc_id"] for d in pdfs] == ["urn:uuid:0001", "urn:uuid:0004"]
+    assert pdfs[0]["spans"][0]["media_ref"] == "http://a.example/one.pdf"
 
 
 def test_read_warc_to_extraction(spark, tmp_path):
     """End to end: WARC dir → (doc_id, spans) → extract_spans."""
+    from pyspark.sql import functions as F
+
     from pdf_extract_spark.plans.pipeline import extract_spans
     from pdf_extract_spark.sources.warc import read_warc
 
@@ -73,9 +80,11 @@ def test_read_warc_to_extraction(spark, tmp_path):
     (tmp_path / "b.warc.gz").write_bytes(
         b"".join(gzip.compress(r) for r in _records()[2:]))
 
-    df = read_warc(spark, str(tmp_path),
-                   mime_kinds={"application/pdf": "pdf"})
-    rows = {r.doc_id: r for r in extract_spans(df).collect()}
+    df = read_warc(spark, str(tmp_path))
+    assert {r.doc_id for r in df.select("doc_id").collect()} == {
+        "urn:uuid:0001", "urn:uuid:0002", "urn:uuid:0004"}
+    pdfs = df.filter(F.col("spans")[0]["kind"] == "pdf")
+    rows = {r.doc_id: r for r in extract_spans(pdfs).collect()}
     assert set(rows) == {"urn:uuid:0001", "urn:uuid:0004"}
     assert all(r.error is None for r in rows.values())
     assert all(
