@@ -1,38 +1,33 @@
-"""Per-round benchmark: flagship extraction throughput + headline operator
-queries + the north-rule scaling evidence (same job at N and 4N cores).
+"""Per-round benchmark: the sf0.1 headline query suite, plus extraction
+throughput and scaling from one ``perfbench`` ``pipeline_small`` run.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total headline seconds>, "unit": "sec",
-   "flagged": {name: max/min run ratio, ...},
-   "corpus": {fixtures, fixtures_missing, docs},
+Prints two JSON lines. The first holds the evidence block: every raw
+query run with its steal share and loadavg, the ``pipeline_small`` run's
+inputs and evidence, and the harness commit. The last is the compact
+headline:
+  {"metric": "headline_suite_seconds", "value": <total seconds>,
+   "unit": "sec", "flagged": {name: max/min run ratio, ...},
    "queries": {name: sec, ...}, "sf": <sf>,
-   "extraction": {docs, wall_s, docs_per_sec},
-   "scaling": {cores_lo, cores_hi, docs_per_sec_lo, docs_per_sec_hi,
-               efficiency, note}}
+   "extraction": {docs_per_sec, wall_s, correct, attempted, failed},
+   "scaling": {cores_lo, cores_hi, efficiency, note},
+   "docs_per_sec": <extraction docs_per_sec>}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS  (default 32),
-     SPARK_GRAFT_SCALING=0 to skip the scaling pair runs.
+     SPARK_GRAFT_CPUS  (default 32): the query suite's ``local[N]``.
 
-A query whose two runs differ by more than FLAG_RATIO× is flagged: its
-time is reported as null and so is the suite total. Steal is a share of
-busy jiffies, recorded with the 1-minute loadavg for every timed window.
+Extraction and scaling come from ``perfbench/run.py --workload
+pipeline_small``: ``run_pipeline(resume=True)`` end to end on a seeded
+in-repo corpus, on every core this process may run on (perfbench's
+README). ``extraction`` is its median job (``docs_per_s``, ``wall_s``);
+``scaling.efficiency`` is its ``scaling_eff``, weak scaling of each
+``local[N]`` job against a one-slot job over 1/N of the rows in the same
+session. If its output checks fail, the headline ``value`` is null.
 
-Methodology (see BENCH.md for the control experiments):
-  * The extraction corpus is materialized to parquet once (not timed) —
-    the real job reads a table, not a generator.
-  * Extraction runs as a NARROW plan over a fine-grained scan
-    (maxPartitionBytes=4m): repartitioning a payload-heavy table shuffles
-    hundreds of MB and measured strictly slower at every core count.
-  * Python workers are warmed full-width before timing (Spark reuses
-    them; steady-state throughput is the metric, as on a long-running
-    cluster).
-  * The scaling pair is local[2] vs local[8]: a pure-Python
-    multiprocessing control shows this VM stops scaling linearly past
-    ~8-10 busy cores (0.65-0.73 efficiency for ZERO-Spark embarrassingly
-    parallel code from 8→32), so 2→8 is the largest pair that measures
-    the ENGINE rather than the hypervisor. The local[CPUS] headline run
-    is reported alongside.
+The query suite runs in perfbench's session, after a warm-up, two runs a
+query. A query whose two runs differ by more than FLAG_RATIO× is
+flagged: its time is reported as null and so is the suite total. Steal
+is a share of busy jiffies, recorded with the 1-minute loadavg for every
+timed run.
 """
 
 from __future__ import annotations
@@ -40,11 +35,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+sys.path.append(os.path.join(ROOT, "perfbench"))
+
+import host  # noqa: E402  perfbench's meters
+import run  # noqa: E402  perfbench's session
 
 BENCH_QUERIES = [
     "filter_project",
@@ -65,147 +66,29 @@ BENCH_QUERIES = [
     "text_quality",
 ]
 
-DOCS_PER_SF = 40_960   # extraction corpus size = DOCS_PER_SF * sf, min 256
-SCALING_DOCS = 1_024   # corpus subset for the N vs 4N pair
-SCALE_LO, SCALE_HI = 2, 8
-
+PIPELINE_SMALL = ["perfbench/run.py", "--workload", "pipeline_small",
+                  "--seed", "1", "--seconds", "18", "--trace", "0"]
 
 #: two runs of one query further apart than this ratio are one window
 #: poisoned by a neighbour (or a cold cache), not an engine cost
 FLAG_RATIO = 3.0
 
 
-def _cpu_stat() -> tuple[int, int]:
-    """(busy jiffies, steal jiffies) from /proc/stat — the evidence
-    that a timing window was or wasn't poisoned by hypervisor steal
-    (r4 VERDICT: BENCH numbers must carry steal measurements). Busy is
-    every state but idle and iowait, steal included."""
-    try:
-        with open("/proc/stat") as fh:
-            vals = [int(x) for x in fh.readline().split()[1:]]
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        return sum(vals[:8]) - idle, (vals[7] if len(vals) > 7 else 0)
-    except Exception:
-        return 0, 0
-
-
-def _loadavg_1m() -> float | None:
-    try:
-        with open("/proc/loadavg") as fh:
-            return float(fh.read().split()[0])
-    except Exception:
-        return None
-
-
-class StealMeter:
-    """Context manager: .pct is steal time as % of BUSY cpu time across
-    the window (an idle window cannot dilute it), .loadavg the 1-minute
-    load average at its end."""
-
-    def __enter__(self):
-        self._b0, self._s0 = _cpu_stat()
-        return self
-
-    def __exit__(self, *exc):
-        b1, s1 = _cpu_stat()
-        busy = b1 - self._b0
-        self.pct = (round(100.0 * (s1 - self._s0) / busy, 2) if busy > 0
-                    else None)
-        self.loadavg = _loadavg_1m()
-        return False
-
-
-def _harness_commit() -> str | None:
-    import subprocess
-
-    try:
-        return subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
-    except Exception:
-        return None
-
-
-def make_session(cores: int, app: str):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "24g"))
-        # fine-grained scan: one ~4 MB payload row per input split keeps
-        # heavy docs isolated without any shuffle
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
-        .getOrCreate()
-    )
-
-
-def run_extraction(spark, corpus_path: str, cores: int) -> dict:
-    """Warm python workers full-width, then time a narrow extraction."""
-    from pdf_extract_spark.plans.pipeline import extract_spans
-
-    warm = (
-        spark.read.parquet(corpus_path)
-        .limit(4 * cores)
-        .repartition(2 * cores)
-    )
-    extract_spans(warm).count()
-    with StealMeter() as sm:
-        t0 = time.time()
-        n = extract_spans(spark.read.parquet(corpus_path)).count()
-        wall = time.time() - t0
-    return {"docs": n, "wall_s": round(wall, 2),
-            "docs_per_sec": round(n / wall, 2), "steal_pct": sm.pct,
-            "loadavg_1m": sm.loadavg}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    do_scaling = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = 0.1
-    n_docs = max(256, int(DOCS_PER_SF * sf))
 
     from pdf_extract_spark.queries import QUERIES
-    from pdf_extract_spark.sources.corpus import (
-        FIXTURE_NAMES,
-        corpus_dataframe,
-        load_fixtures,
-    )
 
-    # without the reference fixtures the corpus has no sample4 skew
-    # tail, so its throughput is not comparable with a fixture run
-    fixtures = sorted(load_fixtures())
-    corpus = {"fixtures": fixtures,
-              "fixtures_missing": sorted(set(FIXTURE_NAMES) - set(fixtures)),
-              "docs": n_docs}
-    print(f"bench corpus: {n_docs} docs, reference fixtures "
-          f"{len(fixtures)}/{len(FIXTURE_NAMES)} present", file=sys.stderr)
-
-    tmp = tempfile.mkdtemp(prefix="bench_corpus_")
-    corpus_path = os.path.join(tmp, "corpus")
-    scaling_path = os.path.join(tmp, "corpus_scaling")
+    small = run_pipeline_small()
+    tmp = tempfile.mkdtemp(prefix="bench_")
+    spark = None
     try:
-        spark = make_session(cores, "bench")
-        # one-time corpus materialization (not timed as extraction)
-        corpus_dataframe(
-            spark, n_docs, use_fixtures=True, num_partitions=cores * 8
-        ).write.mode("overwrite").parquet(corpus_path)
-        if do_scaling:
-            corpus_dataframe(
-                spark, SCALING_DOCS, use_fixtures=True,
-                num_partitions=cores * 4,
-            ).write.mode("overwrite").parquet(scaling_path)
-
+        spark = run.session(cores, tmp, "bench", None)
         # JVM/JIT warm-up: the first lambda-heavy query otherwise pays
         # ~10s of interpreter warm-up (measured 11.7s cold vs 0.9s warm
         # for the identical plan); steady-state is the honest metric.
@@ -220,116 +103,111 @@ def main() -> None:
         (QUERIES["simhash_fingerprints"](spark, "/root/testdata/sf0.001")
          .write.format("noop").mode("overwrite").save())
         release_caches()
-
-        # min-of-2 per query: this VM sees bursty host steal (load>5 at
-        # idle observed); the min is the engine's cost, the max is the
-        # neighbor's
-
-        timings: dict[str, float] = {}
-        raw_runs: dict[str, list] = {}
-        with StealMeter() as suite_steal:
-            for name in BENCH_QUERIES:
-                runs = []
-                for _ in range(2):
-                    with StealMeter() as sm:
-                        t0 = time.time()
-                        (QUERIES[name](spark, sf_dir)
-                         .write.format("noop").mode("overwrite").save())
-                        dt = time.time() - t0
-                    runs.append({"sec": round(dt, 3), "steal_pct": sm.pct,
-                                 "loadavg_1m": sm.loadavg})
-                    # each invocation persists fresh intermediates
-                    # (caller-owned lifetime) — release outside the timer
-                    release_caches()
-                timings[name] = min(r["sec"] for r in runs)
-                raw_runs[name] = runs
-
-        # best-of-3 with every raw run RECORDED (r4 VERDICT: min-only
-        # reporting hid which runs were steal-poisoned)
-        ext_runs = [run_extraction(spark, corpus_path, cores)]
-        for _ in range(2):
-            ext_runs.append(run_extraction(spark, corpus_path, cores))
-        extraction = max(ext_runs, key=lambda r: r["docs_per_sec"])
-        spark.stop()
-
-        scaling = None
-        if do_scaling:
-            # settle after the 32-core headline JVM: its teardown/GC
-            # depressed a same-instant local[8] run from 101 to 57
-            # docs/sec (measured) — two interleaved passes + best-of
-            # keeps one noisy window from poisoning a level
-            time.sleep(5)
-            per_level = {}
-            for _pass in range(2):
-                for c in (SCALE_HI, SCALE_LO):
-                    s = make_session(c, f"bench-scale-{c}")
-                    r = run_extraction(s, scaling_path, c)
-                    r2 = run_extraction(s, scaling_path, c)
-                    best = r2 if r2["docs_per_sec"] > r["docs_per_sec"] else r
-                    if (c not in per_level
-                            or best["docs_per_sec"] > per_level[c]["docs_per_sec"]):
-                        per_level[c] = best
-                    s.stop()
-                    time.sleep(3)
-            speedup = (per_level[SCALE_HI]["docs_per_sec"]
-                       / per_level[SCALE_LO]["docs_per_sec"])
-            scaling = {
-                "cores_lo": SCALE_LO, "cores_hi": SCALE_HI,
-                "docs_per_sec_lo": per_level[SCALE_LO]["docs_per_sec"],
-                "docs_per_sec_hi": per_level[SCALE_HI]["docs_per_sec"],
-                "efficiency": round(speedup / (SCALE_HI / SCALE_LO), 3),
-                "note": (f"pair chosen inside this VM's linear region; "
-                         f"local[{cores}] headline uses all cores "
-                         f"(see BENCH.md)"),
-            }
-            # late re-measure: this VM's steal bursts span minutes, so
-            # back-to-back best-of-3 can land entirely inside one burst
-            # (observed 288 vs 417 docs/sec for identical code); a final
-            # sample ~4 min after the first escapes it
-            s32 = make_session(cores, "bench-late")
-            for _ in range(2):
-                ext_runs.append(run_extraction(s32, corpus_path, cores))
-            extraction = max(ext_runs, key=lambda r: r["docs_per_sec"])
-            s32.stop()
+        raw_runs = run_queries(spark, sf_dir)
     finally:
+        if spark is not None:
+            run.stop_spark(spark)
         shutil.rmtree(tmp, ignore_errors=True)
+    emit(summarize(raw_runs, small, sf))
 
-    # a flagged query's window reports nothing: neither its time nor
-    # the suite total built from it
-    flagged = {}
+
+def run_pipeline_small() -> dict:
+    """One ``pipeline_small`` run in its own process: its last line (the
+    metrics) and its ``inputs:`` and ``evidence:`` lines."""
+    proc = subprocess.run([sys.executable, *PIPELINE_SMALL], cwd=ROOT,
+                          capture_output=True, text=True)
+    lines = proc.stdout.splitlines()
+    try:
+        out = json.loads(lines[-1])
+    except (IndexError, json.JSONDecodeError):
+        raise RuntimeError(f"perfbench pipeline_small exited {proc.returncode}:"
+                           f" {proc.stderr[-2000:]}") from None
+    for line in lines:
+        key, _, rest = line.partition(": ")
+        if key in ("inputs", "evidence"):
+            out[key] = json.loads(rest)
+    return out
+
+
+def run_queries(spark, sf_dir: str) -> dict:
+    """Two timed runs per query, each with its meters, in a warmed
+    session."""
+    from pdf_extract_spark.queries import QUERIES
+    from pdf_extract_spark.runtime import release_caches
+
+    raw_runs: dict[str, list] = {}
+    for name in BENCH_QUERIES:
+        runs = []
+        for _ in range(2):
+            j0, t0 = host.cpu_jiffies(), time.perf_counter()
+            (QUERIES[name](spark, sf_dir)
+             .write.format("noop").mode("overwrite").save())
+            dt = time.perf_counter() - t0
+            runs.append({"sec": round(dt, 3),
+                         "steal_share": round(
+                             host.steal_share(j0, host.cpu_jiffies()), 4),
+                         "loadavg_1m": host.loadavg_1m()})
+            # each invocation persists fresh intermediates (caller-owned
+            # lifetime): release them outside the timer
+            release_caches()
+        raw_runs[name] = runs
+    return raw_runs
+
+
+def emit(result: dict) -> None:
+    """Print ``result``'s evidence block on its own line, then the rest
+    as one compact headline line, the last line of the output."""
+    headline = dict(result)
+    print(json.dumps({"evidence": headline.pop("evidence")}))
+    print(json.dumps(headline, separators=(",", ":")))
+
+
+def summarize(raw_runs: dict, small: dict, sf: float) -> dict:
+    """The bench's result from the query suite's ``raw_runs`` and
+    ``small``, one parsed ``pipeline_small`` run."""
+    m = {k: v["value"] for k, v in small["metrics"].items()}
+    # a query reports the min of its runs; a flagged query's window
+    # reports nothing: neither its time nor the suite total built from it
+    timings, flagged = {}, {}
     for name, runs in raw_runs.items():
         lo, hi = min(r["sec"] for r in runs), max(r["sec"] for r in runs)
+        timings[name] = lo
         if lo > 0 and hi / lo > FLAG_RATIO:
             flagged[name] = round(hi / lo, 2)
             timings[name] = None
-    total = (None if flagged
-             else round(sum(timings.values()) + extraction["wall_s"], 2))
-    print(json.dumps({
+    extraction = {"docs_per_sec": round(m["docs_per_s"], 2),
+                  "wall_s": round(m["wall_s"], 3),
+                  "correct": small["correct"],
+                  "attempted": small["attempted"], "failed": small["failed"]}
+    total = (round(sum(timings.values()) + m["wall_s"], 2)
+             if small["correct"] and not flagged else None)
+    return {
         "metric": "headline_suite_seconds",
         "value": total,
-        "flagged": flagged,
-        "corpus": corpus,
         "unit": "sec",
+        "flagged": flagged,
         "queries": timings,
         "sf": sf,
         "extraction": extraction,
-        "scaling": scaling,
+        "scaling": {
+            "cores_lo": 1, "cores_hi": small["evidence"]["cores"],
+            "efficiency": round(m["scaling_eff"], 3),
+            "note": ("perfbench pipeline_small weak scaling: each "
+                     "local[N] run_pipeline job against a one-slot job "
+                     "over 1/N of the rows in the same session"),
+        },
         "docs_per_sec": extraction["docs_per_sec"],
-        # evidence block (r4 VERDICT item 3): every raw run with its
-        # own /proc/stat steal window, plus the exact harness commit —
-        # BENCH.md claims must be reproducible from THIS output
         "evidence": {
-            "harness_commit": _harness_commit(),
+            "harness_commit": host.harness_commit(ROOT),
             "queries_raw": raw_runs,
-            "suite_steal_pct": suite_steal.pct,
-            "suite_loadavg_1m": suite_steal.loadavg,
-            "extraction_runs": ext_runs,
+            "pipeline_small": {k: small[k] for k in
+                               ("inputs", "evidence", "metrics")},
             "note": ("queries = min of the recorded runs; "
                      "dedup_sketch_pairs run 1 includes the one-time "
                      "bucketed sketch write (amortized at ingest in "
                      "production), run 2 is the steady-state read"),
         },
-    }))
+    }
 
 
 if __name__ == "__main__":

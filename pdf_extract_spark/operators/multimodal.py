@@ -44,7 +44,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.sqlkit import BASE, PRIME, polyhash_bytes
-from ..runtime import map_rows
+from ..runtime import map_rows, read_documents
 
 FEATURE_SCHEMA = StructType(
     [
@@ -117,8 +117,9 @@ def media_features(media: DataFrame) -> DataFrame:
 
 def media_from_documents(spark, sf_dir: str) -> DataFrame:
     """Synthesize a media table from the documents table (deterministic):
-    payload = utf-8 text bytes, ref derived from (source, doc_id)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    payload = utf-8 text bytes, ref derived from (source, doc_id). The
+    scan is spread before the decode (``runtime.read_documents``)."""
+    docs = read_documents(spark, sf_dir)
     return docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.concat(F.lit("img://"), "source", F.lit("/"),
@@ -398,17 +399,16 @@ def media_phash_neardup(spark, sf_dir: str) -> DataFrame:
     images, never an all-pairs pass."""
     from ..functions import sqlkit as K
     from ..functions.sqlkit import SPARK
-    from ..runtime import ensure_parallel_scan, track_cache
+    from ..runtime import track_cache
     from .dedup import band_join, explode_bands
 
     # tracked persist (runtime.track_cache): the phash frame feeds both
     # sides of the band self-join; harnesses release between queries so
     # repeated invocations in a long-lived session don't accumulate
-    # cached blocks.  The scan is spread before the decode (gated, as
-    # runtime.read_documents): the band join has no shuffle of its own,
-    # so it runs at the decode's width.
-    media = ensure_parallel_scan(spark, media_from_documents(spark, sf_dir))
-    f = track_cache(media_features(media).select("media_ref", "phash"))
+    # cached blocks.  The band join has no shuffle of its own, so it
+    # runs at the decode's width: the spread scan of media_from_documents.
+    f = track_cache(media_features(media_from_documents(spark, sf_dir))
+                    .select("media_ref", "phash"))
     # bitslice, not div/mod: real aHashes use bit 63, and a banded join
     # must extract true bit fields for negative values too
     bands = explode_bands(f, ["media_ref", "phash"], [

@@ -27,7 +27,7 @@ Scale design (north rule: 10^12 docs, explicit partitioning/skew):
     batches by record count (``arrow.maxRecordsPerBatch``, 10,000
     unless the session sets it — the package does not) and each batch
     comes in whole as Python values, so it grows with document size;
-    sessions over large PDFs set that conf low (``bench.py`` uses 8).
+    sessions over large PDFs set that conf low.
   * Input: one reader (``_read_input``) serves both CLI sinks: a table
     (optionally as of a committed snapshot), raw PDFs or WARC files.
   * Resume: output snapshot + per-partition lineage rows; a resumed run

@@ -503,7 +503,7 @@ def extract_spans_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .plans.pipeline import extract_spans
     from .sources.corpus import corpus_dataframe
 
-    docs = corpus_dataframe(spark, 48, use_fixtures=True)
+    docs = corpus_dataframe(spark, 48)
     out = extract_spans(docs)
     return out.select(
         "doc_id",

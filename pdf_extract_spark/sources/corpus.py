@@ -1,13 +1,9 @@
 """Deterministic synthetic corpus of interleaved text+media documents.
 
-Builds the north-rule input table shape (doc_id, spans) at any scale, with
-a skew tail mirroring the reference's measured 23× large-doc latency spread
-(BASELINE.md). Two payload sources:
-
-  * ``synth_pdf`` — a from-scratch minimal PDF writer (uncompressed
-    streams, Helvetica Tj/Td), so the corpus needs no external data at all.
-  * the reference's 4 fixture PDFs (read-only at /root/reference) when
-    present — used by golden tests for cross-checking extraction fidelity.
+Builds the north-rule input table shape (doc_id, spans) at any scale.
+Every pdf payload comes from ``synth_pdf``, a from-scratch minimal PDF
+writer (uncompressed streams, Helvetica Tj/Td), so the corpus needs no
+external data at all and has the same rows on every machine.
 
 Everything is seeded from doc_id → fully deterministic at any scale and
 any partitioning (the corpus can be generated distributedly with
@@ -18,11 +14,7 @@ materialization).
 from __future__ import annotations
 
 import base64
-import os
 import random
-
-FIXTURE_DIR = "/root/reference/Test/pdf-in"
-FIXTURE_NAMES = ["sample.pdf", "sample2.pdf", "sample3.pdf", "sample4.pdf"]
 
 _WORDS = (
     "the quick brown fox jumps over a lazy dog while many readers scan "
@@ -94,29 +86,12 @@ def synth_pdf(seed: int, n_pages: int = 2, lines_per_page: int = 20) -> bytes:
     return bytes(buf)
 
 
-def load_fixtures() -> dict[str, bytes]:
-    """The reference's 4 test PDFs, if available (read-only)."""
-    out = {}
-    for name in FIXTURE_NAMES:
-        path = os.path.join(FIXTURE_DIR, name)
-        if os.path.exists(path):
-            with open(path, "rb") as fh:
-                out[name] = fh.read()
-    return out
-
-
-#: every SKEW_EVERY-th doc embeds the large fixture (sample4)
-SKEW_EVERY = 50
-
-
-def make_doc(doc_idx: int, fixtures: dict[str, bytes] | None = None) -> dict:
+def make_doc(doc_idx: int) -> dict:
     """One deterministic interleaved document row (doc_id, spans).
 
     Interleaves 0-2 text spans and 0-3 media spans around one pdf span
-    (FIXTURES.md synthesis recipe). Every ``SKEW_EVERY``-th doc embeds the
-    large fixture (sample4) when available — the skew tail."""
+    (FIXTURES.md synthesis recipe)."""
     rng = random.Random(doc_idx * 2654435761 % (2**31))
-    fixtures = fixtures or {}
     spans: list[dict] = []
 
     def add(kind: str, text: str = "", media_ref: str = "") -> None:
@@ -130,14 +105,7 @@ def make_doc(doc_idx: int, fixtures: dict[str, bytes] | None = None) -> dict:
     for _ in range(rng.randint(0, 3)):
         add("media", media_ref=f"img://ext/{doc_idx}/{rng.randint(0, 999)}")
 
-    if (fixtures and doc_idx % SKEW_EVERY == SKEW_EVERY - 1
-            and "sample4.pdf" in fixtures):
-        payload = fixtures["sample4.pdf"]
-    elif fixtures and doc_idx % 7 == 3:
-        name = FIXTURE_NAMES[doc_idx % 3]  # sample/sample2/sample3
-        payload = fixtures.get(name) or synth_pdf(doc_idx)
-    else:
-        payload = synth_pdf(doc_idx, n_pages=1 + doc_idx % 3)
+    payload = synth_pdf(doc_idx, n_pages=1 + doc_idx % 3)
     add("pdf", text=base64.b64encode(payload).decode("ascii"))
 
     for _ in range(rng.randint(0, 1)):
@@ -145,8 +113,7 @@ def make_doc(doc_idx: int, fixtures: dict[str, bytes] | None = None) -> dict:
     return {"doc_id": f"doc{doc_idx:08d}", "spans": spans}
 
 
-def corpus_dataframe(spark, n_docs: int, use_fixtures: bool = True,
-                     num_partitions: int | None = None):
+def corpus_dataframe(spark, n_docs: int, num_partitions: int | None = None):
     """Distributed deterministic corpus: spark.range → runtime.map_rows.
 
     Payload bytes are derived from doc_idx on the executors — nothing big
@@ -154,14 +121,10 @@ def corpus_dataframe(spark, n_docs: int, use_fixtures: bool = True,
     from ..plans.pipeline import INPUT_SCHEMA
     from ..runtime import map_rows
 
-    def setup():
-        fixtures = load_fixtures() if use_fixtures else {}
-        return lambda i: [make_doc(i, fixtures)]
-
     rng = spark.range(n_docs)
     if num_partitions:
         rng = rng.repartition(num_partitions)
-    return map_rows(rng, INPUT_SCHEMA, setup)
+    return map_rows(rng, INPUT_SCHEMA, lambda: (lambda i: [make_doc(i)]))
 
 
 def read_pdf_dir(spark, path: str, pattern: str = "*.pdf"):

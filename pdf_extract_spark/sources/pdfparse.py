@@ -463,7 +463,6 @@ def decode_stream(sdict: dict, raw: bytes, doc: "PDFDocument | None" = None) -> 
 _OBJ_HDR_RE = re.compile(rb"(\d{1,10})\s+(\d{1,5})\s+obj\b")
 _STREAM_KW_RE = re.compile(rb"stream(\r\n|\n|\r)")
 _TRAILER_RE = re.compile(rb"trailer")
-_LENGTH_OBJ_RE_T = rb"(?<![0-9])%d\s+%d\s+obj\s+(\d+)"
 
 
 class PDFParseError(Exception):
@@ -520,6 +519,7 @@ class PDFDocument:
     # -- object discovery ---------------------------------------------------
     def _scan_objects(self) -> None:
         data = self.data
+        streams: list[tuple[PDFStream, int]] = []
         for m in _OBJ_HDR_RE.finditer(data):
             num = int(m.group(1))
             try:
@@ -529,17 +529,20 @@ class PDFDocument:
             if isinstance(obj, dict):
                 sm = _STREAM_KW_RE.match(data, _skip_ws(data, pos))
                 if sm:
-                    start = sm.end()
-                    raw = self._extract_stream(obj, start)
-                    obj = PDFStream(obj, raw, self, num=num, gen=int(m.group(2)))
+                    obj = PDFStream(obj, b"", self, num=num, gen=int(m.group(2)))
+                    streams.append((obj, sm.end()))
             # later definitions win (incremental updates append to the file)
             self.objects[num] = obj
+        # cut the streams once every object is known: an indirect /Length
+        # is then one lookup, not a search of the file per stream
+        for stream, start in streams:
+            stream.raw = self._extract_stream(stream.dict, start)
 
     def _extract_stream(self, sdict: dict, start: int) -> bytes:
         data = self.data
         length = sdict.get("Length")
         if isinstance(length, Ref):
-            length = self._fetch_int_object(length)
+            length = self.objects.get(length.num)
         if isinstance(length, int) and 0 <= length <= len(data) - start:
             end = start + length
             # validate endstream within a small slack window
@@ -557,13 +560,6 @@ class PDFDocument:
         elif seg.endswith(b"\n") or seg.endswith(b"\r"):
             seg = seg[:-1]
         return seg
-
-    def _fetch_int_object(self, ref: Ref) -> int | None:
-        m = re.search(_LENGTH_OBJ_RE_T % (ref.num, ref.gen), self.data)
-        if m:
-            return int(m.group(1))
-        obj = self.objects.get(ref.num)
-        return obj if isinstance(obj, int) else None
 
     def _expand_object_streams(self) -> None:
         for num in list(self.objects):

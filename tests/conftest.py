@@ -29,15 +29,14 @@ def spark():
     s.stop()
 
 
-def corpus_frame(spark, n_docs: int, use_fixtures: bool = False):
+def corpus_frame(spark, n_docs: int):
     """A small driver-side corpus of ``corpus.make_doc`` rows under the
     explicit ``pipeline.INPUT_SCHEMA``, so span structs never infer as
     maps."""
     from pdf_extract_spark.plans.pipeline import INPUT_SCHEMA
-    from pdf_extract_spark.sources.corpus import load_fixtures, make_doc
+    from pdf_extract_spark.sources.corpus import make_doc
 
-    fixtures = load_fixtures() if use_fixtures else {}
-    docs = [make_doc(i, fixtures) for i in range(n_docs)]
+    docs = [make_doc(i) for i in range(n_docs)]
     return spark.createDataFrame(
         [(d["doc_id"], d["spans"]) for d in docs], INPUT_SCHEMA)
 

@@ -22,7 +22,7 @@ def pipeline_sf_dir(spark, tmp_path_factory):
     from pdf_extract_spark.plans.pipeline import extract_spans
     from pdf_extract_spark.sources.corpus import corpus_dataframe
 
-    corpus = corpus_dataframe(spark, N_DOCS, use_fixtures=False)
+    corpus = corpus_dataframe(spark, N_DOCS)
     # corpus doc_ids are 'docNNNNNNNN' strings; work with the digits
     num = "cast(regexp_replace(doc_id, '[^0-9]', '') as bigint)"
     dups = (

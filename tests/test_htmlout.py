@@ -76,7 +76,7 @@ def test_render_error_doc():
 def test_extract_html_operator(spark):
     from pdf_extract_spark.plans.pipeline import extract_html
 
-    docs = corpus_frame(spark, 6, use_fixtures=True)
+    docs = corpus_frame(spark, 6)
     rows = {r.doc_id: r for r in extract_html(docs).collect()}
     assert len(rows) == 6
     ok = [r for r in rows.values() if r.error is None]

@@ -82,6 +82,8 @@ def test_media_from_documents_shape(spark):
 
     m = media_from_documents(spark, "/root/testdata/sf0.001")
     assert m.columns == ["doc_id", "media_ref", "media_kind", "payload"]
+    # the one-file scan is spread across the cluster before the decode
+    assert m.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     row = m.orderBy("doc_id").first()
     assert row.media_ref.startswith("img://")
     assert isinstance(row.payload, (bytes, bytearray))

@@ -224,3 +224,83 @@ class TestHostileStreams:
         assert len(res.spans) == 17
         assert res.spans == _spans(synth_pdf(1, n_pages=1))
         assert not [w for w in res.warnings if "recursion" in w[1]]
+
+
+def _indirect_lengths(pdf: bytes) -> bytes:
+    """``pdf``, a ``synth_pdf``, with each stream's ``/Length`` moved
+    into an object of its own, written right after the stream's object
+    (as pdfTeX writes them)."""
+    objs = re.findall(rb"(\d+) 0 obj\n(.*?)\nendobj\n", pdf, re.S)
+    n = len(objs)
+    placed = []  # (number, body) in file order
+    for num, body in objs:
+        m = re.match(rb"<< /Length (\d+) >>", body)
+        if m:
+            n += 1
+            placed.append((int(num), b"<< /Length %d 0 R >>" % n
+                           + body[m.end():]))
+            placed.append((n, m.group(1)))
+        else:
+            placed.append((int(num), body))
+    buf = bytearray(b"%PDF-1.4\n")
+    offsets = {}
+    for num, body in placed:
+        offsets[num] = len(buf)
+        buf += b"%d 0 obj\n%s\nendobj\n" % (num, body)
+    xref = len(buf)
+    buf += b"xref\n0 %d\n0000000000 65535 f \n" % (n + 1)
+    for num in range(1, n + 1):
+        buf += b"%010d 00000 n \n" % offsets[num]
+    buf += (b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
+            % (n + 1, xref))
+    return bytes(buf)
+
+
+class TestIndirectLength:
+    """A stream ``/Length`` held in an object of its own costs one
+    lookup after the object scan, not a search of the file."""
+
+    def test_spans_match_direct_lengths(self):
+        direct = synth_pdf(7, n_pages=12, lines_per_page=30)
+        indirect = _indirect_lengths(direct)
+        assert indirect.count(b" 0 R >>\nstream") == 12
+        assert _spans(indirect) == _spans(direct)
+
+    def test_open_scans_the_file_a_fixed_number_of_times(self, monkeypatch):
+        """Count the regex scans that start at byte 0 of the whole file:
+        opening must not add one per stream."""
+        from pdf_extract_spark.sources import pdfparse
+
+        scans = []
+
+        class Counting:
+            def __init__(self, target, module):
+                self._target, self._module = target, module
+
+            def __getattr__(self, name):
+                attr = getattr(self._target, name)
+                if name not in ("search", "finditer", "findall"):
+                    return attr
+
+                def scan(*args, **kw):
+                    # re.search(pattern, string) or Pattern.search(string, pos)
+                    if self._module:
+                        scans.append(args[1])
+                    elif (args[1] if len(args) > 1 else kw.get("pos", 0)) == 0:
+                        scans.append(args[0])
+                    return attr(*args, **kw)
+                return scan
+
+        monkeypatch.setattr(pdfparse, "re", Counting(re, True))
+        for name, val in list(vars(pdfparse).items()):
+            if isinstance(val, re.Pattern):
+                monkeypatch.setattr(pdfparse, name, Counting(val, False))
+
+        def whole_file_scans(n_pages: int) -> int:
+            pdf = _indirect_lengths(synth_pdf(7, n_pages, 30))
+            scans.clear()
+            assert len(PDFDocument(pdf).pages()) == n_pages
+            return sum(s is pdf for s in scans)
+
+        few, many = whole_file_scans(5), whole_file_scans(40)
+        assert 0 < few == many

@@ -11,7 +11,7 @@ from pdf_extract_spark.sources.corpus import corpus_dataframe, make_doc, synth_p
 
 @pytest.fixture(scope="module")
 def small_corpus(spark):
-    return corpus_dataframe(spark, 12, use_fixtures=False, num_partitions=4).cache()
+    return corpus_dataframe(spark, 12, num_partitions=4).cache()
 
 
 class TestExtractSpans:
@@ -28,7 +28,7 @@ class TestExtractSpans:
     def test_spans_match_direct_extraction(self, spark, small_corpus):
         """Spark result == driver-side extract_pdf on the same payload."""
         out = {r["doc_id"]: r for r in pipeline.extract_spans(small_corpus).collect()}
-        doc = make_doc(5, {})
+        doc = make_doc(5)
         direct = extract_pdf(
             base64.b64decode(
                 next(s for s in doc["spans"] if s["kind"] == "pdf")["text"]
@@ -44,10 +44,10 @@ class TestExtractSpans:
         """repartition(k) must not change any document's spans (determinism
         across partitionings — required for the scaling claim)."""
         a = pipeline.extract_spans(
-            corpus_dataframe(spark, 10, use_fixtures=False, num_partitions=1)
+            corpus_dataframe(spark, 10, num_partitions=1)
         ).collect()
         b = pipeline.extract_spans(
-            corpus_dataframe(spark, 10, use_fixtures=False, num_partitions=5)
+            corpus_dataframe(spark, 10, num_partitions=5)
         ).collect()
         am = {r["doc_id"]: r["spans"] for r in a}
         bm = {r["doc_id"]: r["spans"] for r in b}
@@ -148,7 +148,7 @@ class TestPipelineRun:
     def test_run_and_resume(self, spark, tmp_path):
         inp = str(tmp_path / "in")
         outp = str(tmp_path / "out")
-        corpus_dataframe(spark, 8, use_fixtures=False).write.parquet(inp)
+        corpus_dataframe(spark, 8).write.parquet(inp)
         r1 = pipeline.run_pipeline(spark, inp, outp)
         assert r1["n_docs"] == 8
         # resume: everything committed → no new docs
@@ -169,8 +169,8 @@ class TestPipelineRun:
         inp8 = str(tmp_path / "in8")
         inp12 = str(tmp_path / "in12")
         outp = str(tmp_path / "outr")
-        corpus_dataframe(spark, 8, use_fixtures=False).write.parquet(inp8)
-        corpus_dataframe(spark, 12, use_fixtures=False).write.parquet(inp12)
+        corpus_dataframe(spark, 8).write.parquet(inp8)
+        corpus_dataframe(spark, 12).write.parquet(inp12)
         pipeline.run_pipeline(spark, inp8, outp)
         r2 = pipeline.run_pipeline(spark, inp12, outp, resume=True)
         assert r2["n_docs"] == 4
@@ -184,7 +184,7 @@ class TestPipelineRun:
     def test_lineage_columns(self, spark, tmp_path):
         inp = str(tmp_path / "in2")
         outp = str(tmp_path / "out2")
-        corpus_dataframe(spark, 4, use_fixtures=False).write.parquet(inp)
+        corpus_dataframe(spark, 4).write.parquet(inp)
         pipeline.run_pipeline(spark, inp, outp)
         lin = spark.read.parquet(outp + "_lineage")
         assert set(lin.columns) >= {

@@ -497,7 +497,7 @@ def test_row_map_plan_is_arrow(spark, tmp_path, name):
     if name == "read_warc":
         df = read_warc(spark, str(tmp_path))
     elif name == "corpus_dataframe":
-        df = corpus_dataframe(spark, 4, use_fixtures=False)
+        df = corpus_dataframe(spark, 4)
     else:
         df = getattr(multimodal, name)(
             multimodal.media_from_documents(spark, SF_DIR))
