@@ -306,16 +306,17 @@ class SentenceJoinScorer:
 
     @classmethod
     def from_arpa(cls, prefix: str,
-                  threshold: float = DEFAULT_THRESHOLD) -> "SentenceJoinScorer":
+                  threshold: float | None = None) -> "SentenceJoinScorer":
         """Load ``{prefix}.forward.lm`` / ``{prefix}.backward.lm`` (the
         ARPA files the reference's training step writes,
-        sentence-join.py:66) plus optional ``{prefix}.threshold``
-        (format ``score threshold``, sentence-join.py:245-248)."""
+        sentence-join.py:66). An explicit ``threshold`` wins; ``None``
+        reads the optional ``{prefix}.threshold`` (format ``score
+        threshold``, sentence-join.py:245-248), else DEFAULT_THRESHOLD."""
         import os
 
-        thr = threshold
+        thr = DEFAULT_THRESHOLD if threshold is None else threshold
         tpath = prefix + ".threshold"
-        if os.path.exists(tpath):
+        if threshold is None and os.path.exists(tpath):
             with open(tpath, encoding="utf-8") as fh:
                 thr = float(fh.readline().rstrip().split(" ")[1])
         return cls(
@@ -367,9 +368,9 @@ class SentenceJoinScorer:
              threshold: float | None = None) -> "SentenceJoinScorer":
         """Dispatch loader: ``*.blm`` (binary, self-contained) or an
         ARPA prefix (``{prefix}.forward.lm``/``.backward.lm``).  An
-        explicitly passed ``threshold`` overrides the model's own
-        (including a ``.blm``'s stored one); ``None`` keeps the stored
-        value for binary models and ``DEFAULT_THRESHOLD`` for ARPA."""
+        explicitly passed ``threshold`` overrides the model's own (a
+        ``.blm``'s stored one or an ARPA prefix's ``.threshold`` file);
+        ``None`` keeps the model's own."""
         import os
 
         def _is_blm() -> bool:
@@ -385,9 +386,7 @@ class SentenceJoinScorer:
             if threshold is not None:
                 sc.threshold = threshold
             return sc
-        return cls.from_arpa(
-            path_or_prefix,
-            DEFAULT_THRESHOLD if threshold is None else threshold)
+        return cls.from_arpa(path_or_prefix, threshold)
 
     # -- decision ------------------------------------------------------------
     def score(self, left_text: str, right_text: str) -> float:

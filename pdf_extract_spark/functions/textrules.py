@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from itertools import repeat
 
 # Default ruleset, "common" language (applies to all docs before langid and
 # again per-language after). Semantics per reference PDFExtract.json:11-44.
@@ -152,22 +153,6 @@ def normalize_config(cfg: dict) -> dict:
     return cfg
 
 
-def load_search_replace_tab(path: str) -> list[tuple[str, str]]:
-    """Parse a ``search-replace.tab`` file (one ``search<TAB>replace``
-    pair per line; blank lines and lines without a tab ignored, matching
-    Common.java:494-505's lenient split)."""
-    out: list[tuple[str, str]] = []
-    with open(path, encoding="utf-8") as fh:
-        for line in fh:
-            line = line.rstrip("\n").rstrip("\r")
-            if not line or "\t" not in line:
-                continue
-            search, rep = line.split("\t", 1)
-            if search:
-                out.append((search, rep.split("\t")[0]))
-    return out
-
-
 @dataclass
 class LangRules:
     normalize: list[tuple[re.Pattern, str]] = field(default_factory=list)
@@ -183,11 +168,10 @@ class RuleSet:
     (SURVEY.md §2.8 — config parsed on the driver, broadcast to UDFs).
     """
 
-    def __init__(self, config: dict | None = None,
-                 search_replace_tab: str | None = None):
+    def __init__(self, config: dict | None = None):
         cfg = normalize_config(config or DEFAULT_CONFIG)
         self.langs: dict[str, LangRules] = {}
-        #: (lang, kind) → (flat rule list, combined gate regex | None)
+        #: (names, kind) → (flat rule list, combined gate regex | None)
         self._chain_cache: dict = {}
         #: per-language W4 sentence-join model paths, when the config
         #: declares them (reference ``sentencejoin_model``)
@@ -212,39 +196,31 @@ class RuleSet:
             if model:
                 self.sj_models[lang] = str(model)
             self.langs[lang] = lr
-        if search_replace_tab:
-            # F3: optional search-replace.tab next to the jar in the
-            # reference (Common.getSearchReplaceList, Common.java:484-507;
-            # declared README.md:309-316) — tab-separated search/replace
-            # pairs appended to the common normalize chain
-            common = self.langs.setdefault("common", LangRules())
-            for pat, rep in load_search_replace_tab(search_replace_tab):
-                common.normalize.append((re.compile(pat), rep))
+
+    def _rules_of(self, names: tuple) -> list[LangRules]:
+        """The rule sets of the languages ``names`` the config declares,
+        in order, each once."""
+        return [self.langs[n] for n in dict.fromkeys(names) if n in self.langs]
 
     def for_lang(self, lang: str | None) -> list[LangRules]:
         """Rule chains to apply: common first, then the language's own."""
-        out = [self.langs["common"]] if "common" in self.langs else []
-        if lang and lang in self.langs and lang != "common":
-            out.append(self.langs[lang])
-        return out
+        return self._rules_of(("common", lang))
 
     # -- application ---------------------------------------------------------
-    def _chain(self, lang: str | None, kind: str):
-        """(rule list, gate) for a language chain, cached per (lang,
-        kind). The gate is ONE combined alternation of every search
-        pattern: a line it doesn't match cannot be changed by any rule,
-        so the common case (plain ASCII text) pays one C-level search
-        instead of len(rules) subs. Disabled (None) when any pattern
-        carries backrefs/flags that don't survive alternation."""
-        key = (lang, kind)
+    def _chain(self, names: tuple, kind: str):
+        """(rule list, gate) for the ``kind`` rules of the languages
+        ``names``, in order, cached per (names, kind). The gate is ONE
+        combined alternation of every search pattern: a line it doesn't
+        match cannot be changed by any rule, so the common case (plain
+        ASCII text) pays one C-level search instead of len(rules) subs.
+        Disabled (None) when any pattern carries backrefs/flags that
+        don't survive alternation."""
+        key = (names, kind)
         hit = self._chain_cache.get(key)
         if hit is not None:
             return hit
-        rules = [
-            (pat, rep)
-            for lr in self.for_lang(lang)
-            for pat, rep in getattr(lr, kind)
-        ]
+        rules = [(pat, rep) for lr in self._rules_of(names)
+                 for pat, rep in getattr(lr, kind)]
         gate = None
         if rules and not any(
             _BACKREF_RE.search(pat.pattern) or pat.flags & ~_PLAIN_FLAGS
@@ -258,22 +234,28 @@ class RuleSet:
         self._chain_cache[key] = hit
         return hit
 
-    def normalize_series(self, texts, lang: str | None = None) -> list[str]:
-        """Ordered normalize over a sequence of strings (one document's
-        lines), returned as a list."""
-        return [self._apply_str(t, lang, "normalize") for t in texts]
-
-    def repair_series(self, texts, lang: str | None = None) -> list[str]:
-        return [self._apply_str(t, lang, "repair") for t in texts]
-
-    def normalize_str(self, text: str, lang: str | None = None) -> str:
-        return self._apply_str(text, lang, "normalize")
+    def normalize_str(self, text: str, lang: str = "common") -> str:
+        """F1: ``lang``'s own normalize chain — common (the reference's
+        pass before language id) or a detected language's (its pass
+        after language id, PDFExtract.java:1054-1063)."""
+        return self._apply_str(text, (lang,), "normalize")
 
     def repair_str(self, text: str, lang: str | None = None) -> str:
-        return self._apply_str(text, lang, "repair")
+        """F2: the common repair chain, then ``lang``'s own."""
+        return self._apply_str(text, ("common", lang), "repair")
 
-    def _apply_str(self, text: str, lang: str | None, kind: str) -> str:
-        rules, gate = self._chain(lang, kind)
+    def normalize_series(self, texts, langs=None) -> list[str]:
+        """F1 over one document's lines: each line's own language chain
+        (``langs``, aligned with ``texts``), or common when None."""
+        return [self.normalize_str(t, lang)
+                for t, lang in zip(texts, langs or repeat("common"))]
+
+    def repair_series(self, texts, langs) -> list[str]:
+        """F2 over one document's lines, each with its own language."""
+        return [self.repair_str(t, lang) for t, lang in zip(texts, langs)]
+
+    def _apply_str(self, text: str, names: tuple, kind: str) -> str:
+        rules, gate = self._chain(names, kind)
         if gate is not None and gate.search(text) is None:
             return text
         for pat, rep in rules:

@@ -8,8 +8,9 @@ over in-memory structures:
 
   parse (sources/pdfparse) → interpret (functions/textops) →
   W5 XY-cut blocks → W1 line merge → P3/P4 filters → A4 boilerplate →
-  F1 normalize → W2 paragraphs → A3 langid → W3 rule joins → F2 repair →
-  span assembly (text lines in reading order, media refs interleaved).
+  F1 normalize → W2 paragraphs → A3 langid → F1 per language → W3 rule
+  joins → W4 model joins → F2 repair → span assembly (text lines in
+  reading order, media refs interleaved).
 
 Vectorization note: the per-doc passes are sequential over at most a few
 hundred lines of plain Python lists; the doc-level regex chains
@@ -67,30 +68,26 @@ def lang_distribution(
 def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
                 max_pages: int | None = None,
                 keep_lines: bool = False,
-                sj_scorer=None,
-                time_budget_s: float | None = None,
-                hooks: dict | None = None) -> DocResult:
+                sj_scorers: dict | None = None,
+                time_budget_s: float | None = None) -> DocResult:
     """Extract one PDF into ordered (kind, text, media_ref) spans.
 
     ``keep_lines=True`` retains the processed layout lines on the result
-    for the S7 HTML renderer (functions/htmlout.py). ``sj_scorer`` is an
-    optional :class:`~..functions.sentencejoin.SentenceJoinScorer` — the
-    W4 model-based join stage (reference: sentenceJoin,
-    PDFExtract.java:1092-1216), applied after the W3 rule joins.
+    for the S7 HTML renderer (functions/htmlout.py). ``sj_scorers`` maps
+    a language (or ``"common"``, for every other language) to its
+    :class:`~..functions.sentencejoin.SentenceJoinScorer` — the W4
+    model-based join stage (reference: sentenceJoin,
+    PDFExtract.java:1092-1216), applied after the W3 rule joins — or to
+    None when that language's model failed to load; the result then
+    carries a ``sentencejoin`` warning. Like every warning here it is the
+    span's: a document's PDF spans are extracted one by one, each with
+    its own language's scorer, so a document whose spans differ in
+    language can have a model for one span and not another.
 
     ``time_budget_s`` is the X4 per-document budget (the reference kills
     poppler after ``-t`` seconds, default 30, PDFToHtml.java:22,135-139 —
     and loses the whole doc; we stop interpreting further pages and keep
     what's extracted, with a ``timeout`` warning).
-
-    ``hooks`` are the §2.8 extension points (the reference declares them
-    as JavaScript stubs, PDFExtract.js:1-34, never invoked; here they are
-    live Python callables):
-      * ``is_header(page_lines, page_width, page_height) -> list[int]``
-        indices into the page's first 5 lines to drop;
-      * ``is_footer(page_lines, page_width, page_height) -> list[int]``
-        indices into the page's last 5 lines to drop;
-      * ``repair_line(text) -> str`` applied to each line after F2.
     """
     rules = rules or _DEFAULT_RULES
     res = DocResult()
@@ -156,28 +153,15 @@ def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
             _mark_links(page_lines, p.link_rects, p.height, p.rotate)
         lines.extend(layout.filter_offpage(page_lines, p.width, p.height))
 
-    # §2.8 header/footer hooks — run before the built-in A4 frequency
-    # strip ("if internal logic has not already identified",
-    # PDFExtract.js:24-34), per page over its first/last 5 lines
-    if lines and hooks and ("is_header" in hooks or "is_footer" in hooks):
-        lines = _apply_edge_hooks(lines, hooks, pages)
-
     # A4 boilerplate strip (doc-level frequency over page edge bands)
     if lines:
         drop = layout.boilerplate_indices(lines, page_heights)
         if drop:
             lines = [ln for i, ln in enumerate(lines) if i not in drop]
 
-    # F1 normalize (common rules) — one regex chain per document
+    # F1 normalize (common rules); lines it empties are dropped
     if lines:
-        texts = rules.normalize_series([ln.text for ln in lines])
-        kept: list[Line] = []
-        for ln, t in zip(lines, texts):
-            t = t.strip()
-            if t:
-                ln.text = t
-                kept.append(ln)
-        lines = kept
+        lines = _normalize_lines(lines, rules)
 
     # A2 modal-style restyle of link lines: the reference counts lines
     # per fontspec class, takes the argmax, and restyles link-merged
@@ -210,43 +194,38 @@ def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
             if ln.lang:
                 counts[ln.lang] = counts.get(ln.lang, 0) + 1
         res.lang, res.lang_dist = lang_distribution(counts)
+        # then F1 again with each line's own language chain
+        # (PDFExtract.java:1054-1063)
         for ln in lines:
-            if not ln.lang:
-                ln.lang = res.lang
+            ln.lang = ln.lang or res.lang
+        lines = _normalize_lines(lines, rules, [ln.lang for ln in lines])
 
     # W3 rule-based join within paragraphs (cascading, first-match-wins)
     if lines:
         lines = _join_lines(lines, rules)
 
     # W4 model-based sentence join (optional; reference sentenceJoin
-    # stage PDFExtract.java:289 — runs after languageId, before repair).
-    # ``sj_scorer`` may be one scorer or a per-language dict — the
+    # stage PDFExtract.java:289 — runs after languageId, before repair)
+    # with the doc language's scorer, else the common one — the
     # in-process form of the reference's lazily-spawned one-worker-per-
     # language cache (PDFExtract.java:1723-1754, X2)
-    if lines and sj_scorer is not None:
-        if isinstance(sj_scorer, dict):
-            scorer = sj_scorer.get(res.lang) or sj_scorer.get("common")
-            if scorer is not None:
-                lines = _sentence_join(lines, scorer)
-        else:
-            lines = _sentence_join(lines, sj_scorer)
+    if lines and sj_scorers:
+        key = res.lang if res.lang in sj_scorers else "common"
+        if key in sj_scorers:
+            if sj_scorers[key] is None:
+                # configured model unreadable — the reference warns and
+                # skips the stage (PDFExtract.java:1299-1324)
+                res.warnings.append(("sentencejoin", "model not found",
+                                     "check sentence-join model prefix path"))
+            else:
+                lines = _sentence_join(lines, sj_scorers[key])
 
-    # F2 final repair — one chain; per-language on top of common
+    # F2 final repair — common, then the line's own language
     if lines:
-        texts = rules.repair_series([ln.text for ln in lines])
+        texts = rules.repair_series([ln.text for ln in lines],
+                                    [ln.lang for ln in lines])
         for ln, t in zip(lines, texts):
             ln.text = t
-
-    # §2.8 repair_line hook (repairObjectSequence analogue)
-    if lines and hooks and "repair_line" in hooks:
-        fn = hooks["repair_line"]
-        kept = []
-        for ln in lines:
-            t = fn(ln.text)
-            if t and t.strip():
-                ln.text = t
-                kept.append(ln)
-        lines = kept
 
     res.n_lines = len(lines)
     res.n_media = len(media)
@@ -254,6 +233,19 @@ def extract_pdf(pdf_bytes: bytes, rules: RuleSet | None = None,
     if keep_lines:
         res.lines = lines
     return res
+
+
+def _normalize_lines(lines: list[Line], rules: RuleSet,
+                     langs: list[str] | None = None) -> list[Line]:
+    """F1 over the lines (common chain, or each line's language in
+    ``langs``), stripped; the lines it empties are dropped."""
+    texts = rules.normalize_series([ln.text for ln in lines], langs)
+    kept: list[Line] = []
+    for ln, t in zip(lines, texts):
+        ln.text = t.strip()
+        if ln.text:
+            kept.append(ln)
+    return kept
 
 
 def _join_lines(lines: list[Line], rules: RuleSet) -> list[Line]:
@@ -307,32 +299,6 @@ def _mark_links(page_lines: list[Line], link_rects, page_height: float,
                     and min(ln.bottom, bottom) - max(ln.top, top) >= 0.5 * h):
                 ln.islink = True
                 break
-
-
-def _apply_edge_hooks(lines: list[Line], hooks: dict, pages) -> list[Line]:
-    """§2.8 is_header/is_footer: per page, hand the hook that page's
-    lines and page dims; it returns indices (within the first/last 5)
-    to drop — the contract PDFExtract.js:24-34 documents."""
-    dims = {p.pageno: (p.width, p.height) for p in pages}
-    drop_ids: set[int] = set()
-    by_page: dict[int, list[int]] = {}
-    for i, ln in enumerate(lines):
-        by_page.setdefault(ln.pageno, []).append(i)
-    for pageno, idxs in by_page.items():
-        w, h = dims.get(pageno, (0.0, 0.0))
-        page_lines = [lines[i] for i in idxs]
-        if "is_header" in hooks:
-            for k in hooks["is_header"](page_lines, w, h) or []:
-                if 0 <= k < min(5, len(idxs)):
-                    drop_ids.add(idxs[k])
-        if "is_footer" in hooks:
-            tail = idxs[-5:]
-            for k in hooks["is_footer"](page_lines, w, h) or []:
-                if 0 <= k < len(tail):
-                    drop_ids.add(tail[len(tail) - 1 - k])
-    if not drop_ids:
-        return lines
-    return [ln for i, ln in enumerate(lines) if i not in drop_ids]
 
 
 def _sentence_join(lines: list[Line], scorer) -> list[Line]:

@@ -12,7 +12,7 @@ Reference semantics reproduced:
   * W5 reading order — the reference inherits poppler's order; our
     from-scratch tokenizer gets raw content-stream order, so we sort with a
     recursive XY-cut (x-gutter first for column order, then y-bands).
-  * A4 boilerplate — the reference only stubs header/footer hooks
+  * A4 boilerplate — the reference only declares isHeader/isFooter stubs
     (PDFExtract.js:24-34); we implement the frequency heuristic the north
     rule mandates: normalized lines recurring on ≥ max(2, 30%) of pages
     inside the top/bottom 15% bands, plus page-number patterns.

@@ -161,34 +161,22 @@ def _get_ruleset(config: dict | None):
     return rs
 
 
-def _get_scorer(sj_model, sj_threshold: float | None):
-    """Resolve the W4 sentence-join scorer once per executor process —
-    the Spark analogue of the reference's lazily-started, per-language
-    shared worker (PDFExtract.java:1723-1754): an ARPA prefix path is
-    parsed once per Python worker and cached; a scorer object (small
-    model) rides the task closure. Returns None when no model is
-    configured, or the string ``"missing"`` when a path was given but
-    unreadable (degrades to a per-doc warning, the reference's
+def _get_scorer(path: str, sj_threshold: float | None):
+    """Load a W4 sentence-join model once per executor process — the
+    Spark analogue of the reference's lazily-started, per-language
+    shared worker (PDFExtract.java:1723-1754): a ``.blm`` file or an
+    ARPA prefix is parsed once per Python worker and cached. None when
+    it is unreadable (the doc then gets a warning, the reference's
     model-missing behavior at PDFExtract.java:1299-1324)."""
-    if sj_model is None:
-        return None
-    if not isinstance(sj_model, str):
-        if sj_threshold is not None:
-            sj_model.threshold = sj_threshold
-        return sj_model
-    key = f"{sj_model}|{sj_threshold}"
-    sc = _SCORER_CACHE.get(key)
-    if sc is None:
+    key = f"{path}|{sj_threshold}"
+    if key not in _SCORER_CACHE:
         from ..functions.sentencejoin import SentenceJoinScorer
 
         try:
-            # .blm binary (fast executor load) or ARPA prefix; load()
-            # applies an explicit threshold, keeps the model's otherwise
-            sc = SentenceJoinScorer.load(sj_model, sj_threshold)
+            _SCORER_CACHE[key] = SentenceJoinScorer.load(path, sj_threshold)
         except (OSError, ValueError):
-            sc = "missing"
-        _SCORER_CACHE[key] = sc
-    return sc
+            _SCORER_CACHE[key] = None
+    return _SCORER_CACHE[key]
 
 
 def _clean(rules, text: str | None) -> str:
@@ -241,42 +229,28 @@ def _walk_spans(spans: list | None, rules, run_pdf) -> Iterator[tuple[str, Any]]
             yield kind, span["media_ref"] or ""
 
 
-def _extract_setup(config: dict | None, max_pages: int | None, sj_model,
-                   sj_threshold: float | None, time_budget_s: float | None,
-                   hooks: dict | None):
+def _extract_setup(config: dict | None, max_pages: int | None,
+                   sj_model: str | None, sj_threshold: float | None,
+                   time_budget_s: float | None):
     """extract_spans' per-task setup for ``runtime.map_rows``: returns
-    the row function, one OUTPUT_SCHEMA row per input document."""
+    the row function, one OUTPUT_SCHEMA row per input document. The W4
+    scorers are ``sj_model`` for every language, else the config's
+    per-language ``sentencejoin_model`` paths (Config.java:126)."""
     from ..operators.extract import extract_pdf
 
     rules = _get_ruleset(config)
-    scorer = _get_scorer(sj_model, sj_threshold)
-    if scorer is None and getattr(rules, "sj_models", None):
-        # per-language models declared in the rule config
-        # (``sentencejoin_model``, Config.java:126) — the in-process form
-        # of the reference's one-worker-per-language cache (X2)
-        scorers: dict[str, Any] = {}
-        any_missing = False
-        for lang, prefix in rules.sj_models.items():
-            sc = _get_scorer(prefix, sj_threshold)
-            if sc == "missing":
-                any_missing = True
-            elif sc is not None:
-                scorers[lang] = sc
-        if scorers:
-            scorer = scorers
-        elif any_missing:
-            scorer = "missing"
-    sj_missing = scorer == "missing"
-    sj_scorer = None if sj_missing else scorer
+    models = {"common": sj_model} if sj_model else rules.sj_models
+    sj_scorers = {lang: _get_scorer(path, sj_threshold)
+                  for lang, path in models.items()}
 
     def run_pdf(pdf_bytes: bytes):
         return extract_pdf(pdf_bytes, rules, max_pages=max_pages,
-                           sj_scorer=sj_scorer,
-                           time_budget_s=time_budget_s, hooks=hooks)
+                           sj_scorers=sj_scorers,
+                           time_budget_s=time_budget_s)
 
     def one_doc(doc_id: str | None, spans) -> list[dict]:
         t0 = time.monotonic()
-        row = _extract_one(_walk_spans(spans, rules, run_pdf), sj_missing)
+        row = _extract_one(_walk_spans(spans, rules, run_pdf))
         row["doc_id"] = doc_id
         row["extract_ms"] = int((time.monotonic() - t0) * 1000)
         return [row]
@@ -284,7 +258,7 @@ def _extract_setup(config: dict | None, max_pages: int | None, sj_model,
     return one_doc
 
 
-def _extract_one(items, sj_missing: bool) -> dict:
+def _extract_one(items) -> dict:
     """extract_spans' fold over the walker: output spans renumbered in
     order, media passed through, counts summed; the first span with a
     language names the document's (with its distribution)."""
@@ -297,11 +271,6 @@ def _extract_one(items, sj_missing: bool) -> dict:
     error = None
     n_pages = n_lines = n_media = 0
     permission = None
-    if sj_missing:
-        # model path configured but unreadable — reference degrades to a
-        # warning and skips the stage (PDFExtract.java:1299-1324)
-        warnings.append(("sentencejoin", "model not found",
-                         "check sentence-join model prefix path"))
     for kind, item in items:
         if kind == "pdf":
             if item is None:
@@ -393,28 +362,26 @@ def extract_spans(
     config: dict | None = None,
     max_pages: int | None = None,
     num_partitions: int | None = None,
-    sj_model=None,
+    sj_model: str | None = None,
     sj_threshold: float | None = None,
     time_budget_s: float | None = None,
-    hooks: dict | None = None,
 ) -> DataFrame:
     """The extraction operator: (doc_id, spans) → OUTPUT_SCHEMA.
 
     Zero-shuffle narrow map when ``num_partitions`` is None; with it, one
     round-robin ``repartition(num_partitions)`` before the map. ``sj_model``
-    enables the W4 sentence-join stage: an ARPA model prefix (visible on
-    executors, e.g. shipped with ``spark-submit --files``; loaded once
-    per Python worker) or an in-memory ``SentenceJoinScorer``.
-    ``time_budget_s`` is the X4 per-doc budget (oversized docs produce
-    partial spans + a timeout warning instead of stalling a task);
-    ``hooks`` are the §2.8 Python callables (closure-pickled to
-    executors — keep them module-level functions, not lambdas over big
-    state)."""
+    enables the W4 sentence-join stage for every language: a ``.blm``
+    file or an ARPA model prefix (visible on executors, e.g. shipped
+    with ``spark-submit --files``; loaded once per Python worker);
+    without it, the config's per-language ``sentencejoin_model`` paths
+    do. ``time_budget_s`` is the X4 per-doc budget (oversized docs
+    produce partial spans + a timeout warning instead of stalling a
+    task)."""
     df = _span_input(df)
     if num_partitions is not None:
         df = df.repartition(num_partitions)
     return map_rows(df, OUTPUT_SCHEMA, lambda: _extract_setup(
-        config, max_pages, sj_model, sj_threshold, time_budget_s, hooks))
+        config, max_pages, sj_model, sj_threshold, time_budget_s))
 
 
 HTML_SCHEMA = StructType(

@@ -439,7 +439,7 @@ DISTINCT_AGG_SQL = """
 
 def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1/F2 analogue: ordered scalar normalize chain (the SQL-checkable
-    form of RuleSet.normalize_series/repair_series — lowercase, fold
+    form of RuleSet.normalize_str/repair_str — lowercase, fold
     non-alphanumerics, collapse runs, trim). Patterns restricted to the
     Java-regex ∩ RE2 common dialect so the oracle cross-checks exactly."""
     norm = F.trim(

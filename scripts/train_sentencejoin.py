@@ -26,7 +26,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pdf_extract_spark.functions.sentencejoin import (  # noqa: E402
-    DEFAULT_THRESHOLD,
     SentenceJoinScorer,
     tune_threshold,
 )
@@ -48,9 +47,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     if args.convert:
-        scorer = SentenceJoinScorer.from_arpa(
-            args.model,
-            DEFAULT_THRESHOLD if args.threshold is None else args.threshold)
+        scorer = SentenceJoinScorer.from_arpa(args.model, args.threshold)
         out = args.out or args.model + ".blm"
         scorer.save_binary(out)
         print(f"wrote {out}")
@@ -75,11 +72,7 @@ def main(argv: list[str] | None = None) -> int:
         print(f"{f} {t}")
 
     if args.apply:
-        scorer = SentenceJoinScorer.from_arpa(
-            args.model,
-            DEFAULT_THRESHOLD if args.threshold is None else args.threshold)
-        if args.threshold is not None:
-            scorer.threshold = args.threshold
+        scorer = SentenceJoinScorer.from_arpa(args.model, args.threshold)
         for line in sys.stdin:
             try:
                 left, right = line.rstrip("\n").split("\t")

@@ -124,7 +124,7 @@ def test_extract_pdf_w4_joins_what_w3_cannot():
     assert texts == ["THE QUICK BROWN FOX", "JUMPS OVER THE LAZY DOG"]
 
     sc = SentenceJoinScorer.train(UPPER)
-    joined = extract_pdf(pdf, sj_scorer=sc)
+    joined = extract_pdf(pdf, sj_scorers={"common": sc})
     jtexts = [t for k, t, _, _ in joined.spans if k == "text"]
     assert jtexts == ["THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG"]
 
@@ -226,6 +226,41 @@ def test_config_declared_per_language_models(spark, tmp_path):
     ]
 
 
+def test_config_model_missing_for_one_language(spark, tmp_path):
+    """A config whose ``de`` model is unreadable and whose ``en`` model
+    loads: the English doc is joined, the German doc keeps its lines
+    and gets the model-not-found warning."""
+    import copy
+
+    from pdf_extract_spark.functions.textrules import DEFAULT_CONFIG
+    from pdf_extract_spark.plans.pipeline import extract_spans
+
+    en = ("the cat and the dog are out in the garden",
+          "With the ball on the grass in the sun today")
+    de = ("die Katze und der Hund sind nicht in dem Garten",
+          "Mit dem Ball auf der Wiese in der Sonne heute")
+    prefix = str(tmp_path / "en")
+    SentenceJoinScorer.train([" ".join(en)] * 50).save_arpa(prefix)
+    cfg = copy.deepcopy(DEFAULT_CONFIG)
+    cfg["languages"]["en"] = {"sentencejoin_model": prefix}
+    cfg["languages"]["de"] = {"sentencejoin_model": str(tmp_path / "nope")}
+
+    df = spark.createDataFrame(
+        [(name, [{"kind": "pdf", "media_ref": "", "offset": 0,
+                  "text": base64.b64encode(_two_line_pdf(*lines)).decode()}])
+         for name, lines in (("en", en), ("de", de))],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    out = {r["doc_id"]: r for r in extract_spans(df, config=cfg).collect()}
+    assert out["en"]["lang"] == "en"
+    assert [s["text"] for s in out["en"]["spans"]] == [" ".join(en)]
+    assert not out["en"]["warnings"]
+    assert out["de"]["lang"] == "de"
+    assert [s["text"] for s in out["de"]["spans"]] == list(de)
+    assert [w["method"] for w in out["de"]["warnings"]] == ["sentencejoin"]
+
+
 class TestBinaryInterop:
     """Round-trip: ARPA pair ↔ single-file binary .blm (VERDICT r1 item
     9 — the kenlm build_binary role, sentence-join.py:64-70)."""
@@ -266,6 +301,21 @@ class TestBinaryInterop:
         # binary preserves exact float64; ARPA text rounds to 7 decimals
         assert via_blm.score(*pair) == sc.score(*pair)
         assert abs(via_arpa.score(*pair) - sc.score(*pair)) < 1e-5
+
+    def test_explicit_threshold_wins(self, tmp_path):
+        """An explicit threshold overrides the model's own in both
+        formats: an ARPA prefix's ``.threshold`` file and a ``.blm``'s
+        stored value; without one, the model's own is kept."""
+        from pdf_extract_spark.functions.sentencejoin import SentenceJoinScorer
+
+        sc = self._scorer()
+        prefix = str(tmp_path / "m")
+        sc.save_arpa(prefix)
+        (tmp_path / "m.threshold").write_text("0.9 3.5\n")
+        SentenceJoinScorer.from_arpa(prefix).save_binary(prefix + ".blm")
+        for path in (prefix, prefix + ".blm"):
+            assert SentenceJoinScorer.load(path).threshold == 3.5
+            assert SentenceJoinScorer.load(path, 5.0).threshold == 5.0
 
     def test_convert_cli(self, tmp_path):
         import subprocess

@@ -28,6 +28,8 @@ class TestNormalize:
     def test_series_matches_scalar(self, rules):
         texts = ["eﬀort ﬁne", "“q” – …", "plain"]
         assert rules.normalize_series(texts) == [rules.normalize_str(t) for t in texts]
+        assert rules.repair_series(texts, ["en"] * 3) == [
+            rules.repair_str(t, "en") for t in texts]
 
 
 class TestRepair:
@@ -89,6 +91,39 @@ class TestConfig:
         rs = RuleSet(cfg)
         assert rs.normalize_str("straße", "de") == "strasse"
         assert rs.normalize_str("straße", "en") == "straße"
+
+    def test_extract_pdf_runs_the_line_language_rules(self):
+        """A line detected as ``de`` gets the ``de`` normalize chain
+        after language id and the common + ``de`` repair chain
+        (PDFExtract.java:1054-1063)."""
+        import copy
+
+        from pdf_extract_spark.operators.extract import extract_pdf
+        from tests.test_sentencejoin import _two_line_pdf
+
+        cfg = copy.deepcopy(DEFAULT_CONFIG)
+        cfg["languages"]["de"] = {"normalize": [["Katze", "KATZE"]],
+                                  "repair": [["Hund", "HUND"]]}
+        pdf = _two_line_pdf("Die Katze und der Hund sind nicht hier",
+                            "Ein Haus , mit dem Garten")
+        res = extract_pdf(pdf, RuleSet(cfg))
+        assert res.lang == "de"
+        assert [t for k, t, _, _ in res.spans if k == "text"] == [
+            "Die KATZE und der HUND sind nicht hier",
+            "Ein Haus, mit dem Garten",
+        ]
+        # a language rule that empties a line drops it, and the edge
+        # whitespace it leaves is stripped
+        cfg["languages"]["de"]["normalize"] += [["hier", "hier  "],
+                                                ["^Ein Haus.*", ""]]
+        assert [t for _, t, _, _ in extract_pdf(pdf, RuleSet(cfg)).spans] == [
+            "Die KATZE und der HUND sind nicht hier",
+        ]
+        # the default config leaves both words alone
+        assert [t for _, t, _, _ in extract_pdf(pdf).spans] == [
+            "Die Katze und der Hund sind nicht hier",
+            "Ein Haus, mit dem Garten",
+        ]
 
 
 class TestReferenceConfigCompat:
