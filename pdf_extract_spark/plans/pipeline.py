@@ -30,10 +30,10 @@ Scale design (north rule: 10^12 docs, explicit partitioning/skew):
     sessions over large PDFs set that conf low.
   * Input: one reader (``_read_input``) serves both CLI sinks: a table
     (optionally as of a committed snapshot), raw PDFs or WARC files.
-  * Resume: output snapshot + per-partition lineage rows; a resumed run
-    left-anti-joins the input against the committed output's doc_ids —
-    a broadcast-able join at per-run failure scales. Commits only
-    append (``TableIO.write``).
+  * Resume: a resumed run left-anti-joins the input against the doc_ids
+    of the output's committed snapshots (``TableIO.read``: a crashed
+    write's orphan files do not count) — a broadcast-able join at
+    per-run failure scales. Commits only append (``TableIO.write``).
 """
 
 from __future__ import annotations
@@ -180,8 +180,8 @@ def _get_scorer(path: str, sj_threshold: float | None):
 
 
 def _clean(rules, text: str | None) -> str:
-    """The one text-line cleaning of both sinks: whitespace collapse (P2),
-    normalize (F1), repair (F2), strip."""
+    """A ``text`` span's cleaning in both sinks: whitespace collapse (P2),
+    common normalize (F1), common repair (F2), strip."""
     from ..operators.layout import _collapse_ws
 
     return rules.repair_str(
@@ -205,6 +205,7 @@ def _walk_spans(spans: list | None, rules, run_pdf) -> Iterator[tuple[str, Any]]
     null entries and spans of any other kind are skipped."""
     from ..functions import langid
     from ..functions.htmlextract import parse_main
+    from ..operators.layout import _collapse_ws
 
     items = [s for s in spans or () if s is not None]
     items.sort(key=lambda s: (s["offset"] is None, s["offset"] or 0))
@@ -219,9 +220,13 @@ def _walk_spans(spans: list | None, rules, run_pdf) -> Iterator[tuple[str, Any]]
             for k, t, m in parsed.out:
                 if k == "media":
                     parts.append(("media", "", m, ""))
-                elif txt := _clean(rules, t):
-                    parts.append(
-                        ("text", txt, "", langid.detect_reliable(txt) or ""))
+                    continue
+                # extract_pdf's order: common F1, A3, own F1, common + own F2
+                txt = rules.normalize_str(_collapse_ws(t or "")).strip()
+                lang = langid.detect_reliable(txt) or ""
+                txt = rules.repair_str(rules.normalize_str(txt, lang), lang)
+                if txt := txt.strip():
+                    parts.append(("text", txt, "", lang))
             yield kind, (parts, parsed.lang_attr)
         elif kind == "text":
             yield kind, _clean(rules, span["text"])
@@ -492,7 +497,9 @@ def extract_html(df: DataFrame, config: dict | None = None,
 
 
 def lineage_frame(out: DataFrame, run_id: str) -> DataFrame:
-    """Per-partition lineage rows (FIXTURES.md §4): the resume surface."""
+    """Per-partition lineage rows (FIXTURES.md §4). ``run_id`` is the id
+    of the output snapshot the rows describe: a lineage row counts only
+    when its ``run_id`` is in ``io.snapshots(output_ref)``."""
     return (
         out.withColumn("partition_id", F.spark_partition_id())
         .groupBy("partition_id")
@@ -574,8 +581,8 @@ def run_pipeline(
     # invalidates/recaches every cached plan built on it — a lineage pass
     # run after the append recomputes against the just-committed output
     # and anti-joins away every row (observed: empty lineage on resumed
-    # runs). Failure between the two writes only over-reports lineage;
-    # resume correctness keys on committed OUTPUT doc_ids.
+    # runs). Both writes commit under run_id, so a lineage row counts
+    # only once the output snapshot run_id is committed too.
     lin = lineage_frame(out, run_id)
     io.write(lin, lineage_ref or output_ref.rstrip("/") + "_lineage",
              run_id=run_id)

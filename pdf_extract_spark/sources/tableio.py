@@ -7,10 +7,11 @@ TableIO keeps one API with two backends (SURVEY.md §7 preamble):
   * iceberg backend — ``df.writeTo(table).append()`` / ``spark.read.table``
     when ``spark.sql.catalog.<name>`` is configured; snapshot semantics are
     Iceberg's own.
-  * parquet backend — a directory per table plus a ``_snapshots``
-    manifest (JSON lines) we maintain: each committed write appends a
-    manifest row (snapshot_id, run_id, row_count). Resume reads the last
-    committed snapshot's lineage exactly like the Iceberg path would.
+  * parquet backend — a directory per table plus a ``_snapshots.jsonl``
+    manifest (JSON lines) we maintain: each commit appends a row
+    (snapshot_id, the data files it added). The table is the files its
+    rows list; others (a crashed write's orphans) are ignored and left
+    in place. A directory with no manifest is read whole.
 
 Filesystem access on the parquet backend goes through the JVM Hadoop
 ``FileSystem`` API (py4j), so the same code serves ``file:``, ``hdfs:``,
@@ -37,10 +38,7 @@ def _has_iceberg_catalog(spark: SparkSession, ref: str) -> bool:
     if "." not in ref:
         return False
     catalog = ref.split(".", 1)[0]
-    try:
-        return bool(spark.conf.get(f"spark.sql.catalog.{catalog}", None))
-    except Exception:
-        return False
+    return bool(spark.conf.get(f"spark.sql.catalog.{catalog}", None))
 
 
 class _HadoopFS:
@@ -58,17 +56,11 @@ class _HadoopFS:
     def _fs(self, p: str):
         return self._path(p).getFileSystem(self._conf)
 
-    def exists(self, p: str) -> bool:
-        return bool(self._fs(p).exists(self._path(p)))
-
     def listdir(self, p: str) -> list[str]:
         fs, jp = self._fs(p), self._path(p)
         if not fs.exists(jp):
             return []
         return [st.getPath().getName() for st in fs.listStatus(jp)]
-
-    def mkdirs(self, p: str) -> None:
-        self._fs(p).mkdirs(self._path(p))
 
     def read_text(self, p: str) -> str | None:
         fs, jp = self._fs(p), self._path(p)
@@ -123,9 +115,11 @@ class TableIO:
         self._io = _HadoopFS(spark)
 
     def read(self, ref: str) -> DataFrame:
+        """Every committed snapshot's files (no manifest: the directory)."""
         if _has_iceberg_catalog(self.spark, ref):
             return self.spark.read.table(ref)
-        return self.spark.read.parquet(ref)
+        rows = self._manifest_rows(ref)
+        return self._read_rows(ref, rows) if rows else self.spark.read.parquet(ref)
 
     def exists(self, ref: str) -> bool:
         if _has_iceberg_catalog(self.spark, ref):
@@ -134,10 +128,7 @@ class TableIO:
                 return True
             except Exception:
                 return False
-        return any(
-            f.endswith(".parquet") or f == "_SUCCESS"
-            for f in self._io.listdir(ref)
-        )
+        return bool(self._manifest_rows(ref))
 
     def write(self, df: DataFrame, ref: str,
               run_id: str | None = None) -> str:
@@ -146,11 +137,12 @@ class TableIO:
         run_id = run_id or uuid.uuid4().hex
         if _has_iceberg_catalog(self.spark, ref):
             writer = df.writeTo(ref)
-            try:
+            if self.exists(ref):
                 writer.append()
-            except Exception:
+            else:
                 writer.create()
             return run_id
+        # an earlier crash's orphan files are in `before`: never adopted
         before = self._data_files(ref)
         df.write.mode("append").parquet(ref)
         added = sorted(self._data_files(ref) - before)
@@ -160,43 +152,44 @@ class TableIO:
     def read_asof(self, ref: str, snapshot_id: str) -> DataFrame:
         """Time-travel read: the table as of (and including) a committed
         snapshot — Iceberg's ``VERSION AS OF`` on the catalog backend;
-        on the parquet backend, the union of every snapshot's recorded
-        data files up to the requested one (each manifest row carries
-        the files its commit added, so older snapshots stay readable
-        after later appends — the same mechanics as an Iceberg
-        manifest list)."""
+        on the parquet backend, the manifest rows up to the requested
+        one (each row carries the files its commit added, so older
+        snapshots stay readable after later appends — the same
+        mechanics as an Iceberg manifest list)."""
         if _has_iceberg_catalog(self.spark, ref):
             return (
                 self.spark.read.option("snapshot-id", snapshot_id)
                 .table(ref)
             )
+        rows = self._manifest_rows(ref)
+        ids = [r["snapshot_id"] for r in rows]
+        if snapshot_id not in ids:
+            raise ValueError(
+                f"snapshot {snapshot_id!r} not in {ref}/_snapshots.jsonl")
+        return self._read_rows(ref, rows[:ids.index(snapshot_id) + 1])
+
+    # -- parquet-backend snapshot manifest ----------------------------------
+    def _manifest_path(self, ref: str) -> str:
+        return posixpath.join(ref, "_snapshots.jsonl")
+
+    def _read_rows(self, ref: str, rows: list[dict]) -> DataFrame:
+        """The union of the data files the manifest ``rows`` list."""
         files: list[str] = []
-        found = False
-        for row in self._manifest_rows(ref):
+        for row in rows:
             if "files" not in row:
                 # Manifest rows written before per-commit file tracking
                 # cannot be reconstructed — fail loudly rather than
                 # silently returning an empty/partial table.
                 raise ValueError(
                     f"snapshot {row['snapshot_id']!r} in {ref} predates "
-                    "file tracking; time travel to or past it is not "
+                    "file tracking; the table through it is not "
                     "reconstructible (re-write the table to refresh the "
                     "manifest)")
             files.extend(row["files"])
-            if row["snapshot_id"] == snapshot_id:
-                found = True
-                break
-        if not found:
-            raise ValueError(
-                f"snapshot {snapshot_id!r} not in {ref}/_snapshots.jsonl")
         if not files:
             return self.spark.read.parquet(ref).limit(0)
         return self.spark.read.parquet(
             *[posixpath.join(ref, f) for f in files])
-
-    # -- parquet-backend snapshot manifest ----------------------------------
-    def _manifest_path(self, ref: str) -> str:
-        return posixpath.join(ref, "_snapshots.jsonl")
 
     def _data_files(self, ref: str) -> set[str]:
         return {f for f in self._io.listdir(ref) if f.endswith(".parquet")}
@@ -206,10 +199,9 @@ class TableIO:
         # Manifest rows mirror Iceberg snapshot metadata (documented
         # delta: single-writer, no catalog-arbitrated swap; commit order
         # is append order). Each row records the data files its commit
-        # added — the time-travel source. The full manifest is rewritten
+        # added — what every read resolves. The full manifest is rewritten
         # via temp+rename so a crash mid-commit leaves the previous
         # complete manifest, never a torn line.
-        self._io.mkdirs(ref)
         row = json.dumps({"snapshot_id": run_id, "files": files})
         prior = self._io.read_text(self._manifest_path(ref)) or ""
         self._io.write_text_atomic(self._manifest_path(ref),

@@ -193,6 +193,80 @@ class TestPipelineRun:
         }
 
 
+def _inject_fault(case, monkeypatch, out_ref, doc_id):
+    """Patch one fault into the next run_pipeline call: (a) a crash
+    right after the lineage commit, (b) the output's manifest commit
+    fails after its parquet files landed, (c) one extraction task
+    fails."""
+    from pyspark.sql import functions as F
+
+    from pdf_extract_spark.sources.tableio import TableIO
+
+    if case == "a":
+        write = TableIO.write
+
+        def write_then_crash(self, df, ref, run_id=None):
+            sid = write(self, df, ref, run_id)
+            if ref != out_ref:
+                raise RuntimeError("injected crash after the lineage write")
+            return sid
+
+        monkeypatch.setattr(TableIO, "write", write_then_crash)
+    elif case == "b":
+        append = TableIO._append_manifest
+
+        def fail_output_commit(self, ref, run_id, files):
+            if ref == out_ref:
+                raise RuntimeError("injected crash before the manifest row")
+            append(self, ref, run_id, files)
+
+        monkeypatch.setattr(TableIO, "_append_manifest", fail_output_commit)
+    else:
+        extract = pipeline.extract_spans
+
+        def failing_task(df, **kwargs):
+            return extract(df, **kwargs).filter(
+                F.when(F.col("doc_id") == doc_id,
+                       F.raise_error(F.lit("injected task failure")))
+                .otherwise(F.lit(True)))
+
+        monkeypatch.setattr(pipeline, "extract_spans", failing_task)
+
+
+@pytest.mark.parametrize("case", ["a", "b", "c"])
+def test_resume_after_crash_commits_each_doc_once(spark, tmp_path,
+                                                  monkeypatch, case):
+    """A run that crashes at any point between its lineage write and its
+    output commit, then a resumed run, commit every doc exactly once:
+    the current read equals the latest snapshot, and the lineage rows of
+    committed snapshots count the committed rows."""
+    from pyspark.sql import functions as F
+
+    from pdf_extract_spark.sources.tableio import TableIO
+
+    io = TableIO(spark)
+    half, full = str(tmp_path / "in4"), str(tmp_path / "in8")
+    out = str(tmp_path / "out")
+    corpus_dataframe(spark, 4).write.parquet(half)
+    corpus_dataframe(spark, 8).write.parquet(full)
+    ids = sorted(r.doc_id for r in spark.read.parquet(full).collect())
+    pipeline.run_pipeline(spark, half, out)
+
+    with monkeypatch.context() as m:
+        _inject_fault(case, m, out, ids[-1])
+        with pytest.raises(Exception, match="injected"):
+            pipeline.run_pipeline(spark, full, out, resume=True)
+    spark.catalog.clearCache()  # the failed run's persisted frame stays cached
+    pipeline.run_pipeline(spark, full, out, resume=True)
+
+    snaps = io.snapshots(out)
+    latest = io.read_asof(out, snaps[-1])
+    assert sorted(r.doc_id for r in latest.collect()) == ids
+    assert sorted(r.doc_id for r in io.read(out).collect()) == ids
+    lineage = io.read(out + "_lineage").filter(F.col("run_id").isin(snaps))
+    assert lineage.agg(F.sum("n_docs")).first()[0] == len(ids)
+
+
 def test_extraction_plan_is_narrow(spark, tmp_path):
     """North-rule scale contract: both extraction sinks over a file
     source are a pure narrow map — scan → project → mapInArrow (no

@@ -102,8 +102,8 @@ def test_non_posix_scheme_roundtrip(spark, tmp_path):
 
 def test_read_asof_legacy_manifest_row_raises(spark, tmp_path):
     """Manifest rows from before per-commit file tracking (no `files`
-    key) make time travel non-reconstructible — read_asof must fail
-    loudly, not return an empty or partial table."""
+    key) make the table non-reconstructible — read_asof and read must
+    fail loudly, not return an empty, partial or uncommitted table."""
     import json
 
     from pdf_extract_spark.sources.tableio import TableIO
@@ -131,8 +131,9 @@ def test_read_asof_legacy_manifest_row_raises(spark, tmp_path):
         io.read_asof(ref, "s1")
     with pytest.raises(ValueError, match="predates file tracking"):
         io.read_asof(ref, "s2")  # union through s1 is equally unknowable
-    # current-state read is unaffected
-    assert _ids(io.read(ref)) == [1, 2]
+    # the current state is the union through the last snapshot: the same
+    with pytest.raises(ValueError, match="predates file tracking"):
+        io.read(ref)
 
 
 def test_manifest_commit_is_atomic_rename(spark, tmp_path, monkeypatch):
@@ -162,3 +163,61 @@ def test_manifest_commit_is_atomic_rename(spark, tmp_path, monkeypatch):
     # before a snapshot commit lands)
     assert io.snapshots(ref) == ["s1"]
     assert _ids(io.read_asof(ref, "s1")) == [1]
+    # the current state is the committed one: the orphan file is ignored
+    assert _ids(io.read(ref)) == [1]
+
+
+def test_table_without_manifest_is_read_whole(spark, tmp_path):
+    """A directory some other writer produced (no manifest) is read
+    whole, but is not a table TableIO committed."""
+    from pdf_extract_spark.sources.tableio import TableIO
+
+    io = TableIO(spark)
+    ref = str(tmp_path / "plain")
+    spark.createDataFrame([(1, "a"), (2, "b")],
+                          "doc_id long, t string").write.parquet(ref)
+    assert _ids(io.read(ref)) == [1, 2]
+    assert not io.exists(ref)
+    assert io.snapshots(ref) == []
+
+
+class _StubWriter:
+    def __init__(self):
+        self.calls = []
+
+    def append(self):
+        self.calls.append("append")
+        raise RuntimeError("injected append failure")
+
+    def create(self):
+        self.calls.append("create")
+
+
+class _StubFrame:
+    def __init__(self):
+        self.writer = _StubWriter()
+
+    def writeTo(self, ref):
+        return self.writer
+
+
+@pytest.mark.parametrize("exists", [True, False])
+def test_catalog_write_appends_or_creates(spark, monkeypatch, exists):
+    """The catalog backend appends to an existing table and lets the
+    append's error reach the caller; it creates only a missing table."""
+    from pdf_extract_spark.sources.tableio import TableIO
+
+    monkeypatch.setattr(TableIO, "exists", lambda self, ref: exists)
+    spark.conf.set("spark.sql.catalog.stubcat", "org.example.StubCatalog")
+    try:
+        df = _StubFrame()
+        if exists:
+            with pytest.raises(RuntimeError, match="injected append"):
+                TableIO(spark).write(df, "stubcat.db.docs", run_id="s1")
+            assert df.writer.calls == ["append"]
+        else:
+            assert TableIO(spark).write(df, "stubcat.db.docs",
+                                        run_id="s1") == "s1"
+            assert df.writer.calls == ["create"]
+    finally:
+        spark.conf.unset("spark.sql.catalog.stubcat")

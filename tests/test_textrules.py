@@ -125,6 +125,37 @@ class TestConfig:
             "Ein Haus, mit dem Garten",
         ]
 
+    def test_html_lines_run_the_line_language_rules(self):
+        """An html line detected as ``de`` gets the ``de`` normalize
+        chain and the common + ``de`` repair chain, as a pdf line does;
+        a line the language rules empty is dropped."""
+        import copy
+
+        from pdf_extract_spark.plans.pipeline import _walk_spans
+
+        def lines(cfg):
+            span = {"kind": "html", "media_ref": "", "offset": 0, "text": (
+                "<html><body><p>Die Katze und der Hund sind nicht hier , "
+                "sagt sie</p><p>The cat and the dog are not here , she "
+                "says</p></body></html>")}
+            [(kind, (parts, _))] = _walk_spans([span], RuleSet(cfg), None)
+            assert kind == "html"
+            return [(t, lang) for _, t, _, lang in parts]
+
+        cfg = copy.deepcopy(DEFAULT_CONFIG)
+        cfg["languages"]["de"] = {"normalize": [["Katze", "KATZE"]],
+                                  "repair": [["Hund", "HUND"]]}
+        assert lines(cfg) == [
+            ("Die KATZE und der HUND sind nicht hier, sagt sie", "de"),
+            ("The cat and the dog are not here, she says", "en"),
+        ]
+        cfg["languages"]["de"]["normalize"] += [["^Die .*", "  "]]
+        assert lines(cfg) == [
+            ("The cat and the dog are not here, she says", "en")]
+        # the default config leaves both words alone
+        assert lines(None)[0] == (
+            "Die Katze und der Hund sind nicht hier, sagt sie", "de")
+
 
 class TestReferenceConfigCompat:
     """RuleSet must consume the reference's SHIPPED PDFExtract.json
