@@ -182,73 +182,6 @@ class NgramModel:
             model.ngrams[1][(UNK,)] = (-7.0, 0.0)
         return model
 
-    # -- binary interop ------------------------------------------------------
-    def to_binary_bytes(self) -> bytes:
-        """Compact binary image (the role of kenlm's ``build_binary``
-        trie, sentence-join/sentence-join.py:64-70): interned vocab +
-        per-order id/probability arrays. Loads ~10× faster than ARPA
-        text on executors (no float parsing); values are exact float64
-        so binary and ARPA scoring decisions are bit-identical."""
-        import struct
-        from array import array
-
-        vocab: dict[str, int] = {}
-        chunks: list[bytes] = []
-        for n in range(1, self.order + 1):
-            for gram in self.ngrams[n]:
-                for w in gram:
-                    if w not in vocab:
-                        vocab[w] = len(vocab)
-        words_blob = b"\x00".join(w.encode("utf-8") for w in vocab)
-        chunks.append(struct.pack("<BII", self.order, len(vocab),
-                                  len(words_blob)))
-        chunks.append(words_blob)
-        for n in range(1, self.order + 1):
-            entries = self.ngrams[n]
-            ids = array("I")
-            vals = array("d")
-            for gram, (lp, bo) in entries.items():
-                for w in gram:
-                    ids.append(vocab[w])
-                vals.append(lp)
-                vals.append(bo)
-            chunks.append(struct.pack("<I", len(entries)))
-            chunks.append(ids.tobytes())
-            chunks.append(vals.tobytes())
-        return b"".join(chunks)
-
-    @classmethod
-    def from_binary_bytes(cls, buf: bytes, offset: int = 0
-                          ) -> "tuple[NgramModel, int]":
-        """Inverse of ``to_binary_bytes``; returns (model, end_offset)."""
-        import struct
-        from array import array
-
-        order, vocab_n, blob_len = struct.unpack_from("<BII", buf, offset)
-        offset += struct.calcsize("<BII")
-        words = buf[offset: offset + blob_len].decode("utf-8").split("\x00") \
-            if blob_len else []
-        if len(words) != vocab_n:
-            raise ValueError("corrupt binary LM: vocab mismatch")
-        offset += blob_len
-        model = cls(order)
-        for n in range(1, order + 1):
-            (count,) = struct.unpack_from("<I", buf, offset)
-            offset += 4
-            ids = array("I")
-            ids.frombytes(buf[offset: offset + 4 * count * n])
-            offset += 4 * count * n
-            vals = array("d")
-            vals.frombytes(buf[offset: offset + 16 * count])
-            offset += 16 * count
-            d = model.ngrams[n]
-            for i in range(count):
-                gram = tuple(words[j] for j in ids[i * n: (i + 1) * n])
-                d[gram] = (vals[2 * i], vals[2 * i + 1])
-        if (UNK,) not in model.ngrams[1]:
-            model.ngrams[1][(UNK,)] = (-7.0, 0.0)
-        return model, offset
-
     def to_arpa(self) -> str:
         out = ["\\data\\"]
         for n in range(1, self.order + 1):
@@ -330,63 +263,6 @@ class SentenceJoinScorer:
             fh.write(self.forward.to_arpa())
         with open(prefix + ".backward.lm", "w", encoding="utf-8") as fh:
             fh.write(self.backward.to_arpa())
-
-    # -- binary model files --------------------------------------------------
-    #: magic for the single-file binary scorer (forward+backward+threshold)
-    _BLM_MAGIC = b"PDFXBLM1"
-
-    def save_binary(self, path: str) -> None:
-        """One-file binary scorer: the engine's equivalent of the
-        reference's per-language ``.binlm`` pair (kenlm trie,
-        sentence-join.py:64-70). Same scores as the ARPA pair,
-        ~10× faster executor load. Existing kenlm ``.binlm`` artifacts
-        are regenerated via scripts/train_sentencejoin.py convert
-        (ARPA → this format); see MIGRATION.md."""
-        import struct
-
-        with open(path, "wb") as fh:
-            fh.write(self._BLM_MAGIC)
-            fh.write(struct.pack("<d", self.threshold))
-            fh.write(self.forward.to_binary_bytes())
-            fh.write(self.backward.to_binary_bytes())
-
-    @classmethod
-    def from_binary(cls, path: str) -> "SentenceJoinScorer":
-        import struct
-
-        with open(path, "rb") as fh:
-            buf = fh.read()
-        if buf[:8] != cls._BLM_MAGIC:
-            raise ValueError(f"not a {cls._BLM_MAGIC.decode()} model file")
-        (thr,) = struct.unpack_from("<d", buf, 8)
-        fwd, off = NgramModel.from_binary_bytes(buf, 16)
-        bwd, _ = NgramModel.from_binary_bytes(buf, off)
-        return cls(fwd, bwd, thr)
-
-    @classmethod
-    def load(cls, path_or_prefix: str,
-             threshold: float | None = None) -> "SentenceJoinScorer":
-        """Dispatch loader: ``*.blm`` (binary, self-contained) or an
-        ARPA prefix (``{prefix}.forward.lm``/``.backward.lm``).  An
-        explicitly passed ``threshold`` overrides the model's own (a
-        ``.blm``'s stored one or an ARPA prefix's ``.threshold`` file);
-        ``None`` keeps the model's own."""
-        import os
-
-        def _is_blm() -> bool:
-            if path_or_prefix.endswith(".blm"):
-                return True
-            if not os.path.isfile(path_or_prefix):
-                return False
-            with open(path_or_prefix, "rb") as fh:
-                return fh.read(8) == cls._BLM_MAGIC
-
-        if _is_blm():
-            sc = cls.from_binary(path_or_prefix)
-            if threshold is not None:
-                sc.threshold = threshold
-            return sc
-        return cls.from_arpa(path_or_prefix, threshold)
 
     # -- decision ------------------------------------------------------------
     def score(self, left_text: str, right_text: str) -> float:

@@ -173,9 +173,9 @@ class RuleSet:
         self.langs: dict[str, LangRules] = {}
         #: (names, kind) → (flat rule list, combined gate regex | None)
         self._chain_cache: dict = {}
-        #: per-language W4 sentence-join model paths, when the config
-        #: declares them (reference ``sentencejoin_model``)
-        self.sj_models: dict[str, str] = {}
+        #: per-language W4 sentence-join ARPA model prefixes, when the
+        #: config declares them (reference ``sentencejoin_model``)
+        self.sj_prefixes: dict[str, str] = {}
         for lang, rules in cfg.get("languages", {}).items():
             lr = LangRules()
             for pat, rep in rules.get("normalize", []):
@@ -194,7 +194,7 @@ class RuleSet:
                 lr.repair.append((compile_compat(pat), compat_replacement(rep)))
             model = rules.get("sentencejoin_model")
             if model:
-                self.sj_models[lang] = str(model)
+                self.sj_prefixes[lang] = str(model)
             self.langs[lang] = lr
 
     def _rules_of(self, names: tuple) -> list[LangRules]:

@@ -110,8 +110,7 @@ def exact_duplicates_oracle() -> str:
 # n-gram jaccard (exact all-pairs with lossless size prefilter)
 # ---------------------------------------------------------------------------
 
-def _shingled(spark: SparkSession, sf_dir: str,
-              reuse: bool = False) -> DataFrame:
+def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct shingle-hash array per doc, computed by the VECTORIZED
     kernel (functions/sigkernel.py: one narrow Arrow map, numpy
     segment-Horner hashing — bit-identical to the HOF fragments the
@@ -119,16 +118,16 @@ def _shingled(spark: SparkSession, sf_dir: str,
     interpreted HOF form cost 26-194 s per benched query at sf0.1
     (r4 VERDICT, reproduced); the kernel is the 100 TB path.
 
-    ``reuse=True`` persists the frame: the LSH operators reference it
-    from 3-4 plan branches (band self-join sides + verify joins) and
-    Spark recomputes common subplans per branch.  Cache lifetime is
-    caller-owned: the persist is registered with runtime.track_cache,
-    and harnesses release between queries."""
+    The frame is persisted: both callers reference it from several
+    plan branches (self-join sides, probe and index sides, verify
+    joins) and Spark recomputes common subplans per branch.  Cache
+    lifetime is caller-owned: the persist is registered with
+    runtime.track_cache, and harnesses release between queries."""
     from ..functions.sigkernel import signature_frame
 
     out = signature_frame(read_documents(spark, sf_dir), SHINGLE_W,
                           minhash=False)
-    return track_cache(out) if reuse else out
+    return track_cache(out)
 
 
 _SHINGLED_CTE_DUCK = f"""
@@ -145,7 +144,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs w-shingle jaccard ≥ τ (exact). The size-ratio prefilter is
     lossless, cutting candidate pairs before the set intersection; at real
     scale this operator only ever runs on LSH candidates."""
-    s = _shingled(spark, sf_dir, reuse=True)
+    s = _shingled(spark, sf_dir)
     a, b = s.alias("a"), s.alias("b")
     jac = K.jaccard("a.sh", "b.sh", "a.n_sh", "b.n_sh", SPARK)
     return (
@@ -229,7 +228,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     force)."""
     from pyspark.sql.window import Window
 
-    s = _shingled(spark, sf_dir, reuse=True)
+    s = _shingled(spark, sf_dir)
     occ = s.select("doc_id", "n_sh", F.explode("sh").alias("h"))
     freq = occ.groupBy("h").agg(F.count("*").alias("df"))
     # every occurrence ranked within its doc (rarest first, hash as

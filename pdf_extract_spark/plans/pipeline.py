@@ -161,22 +161,30 @@ def _get_ruleset(config: dict | None):
     return rs
 
 
-def _get_scorer(path: str, sj_threshold: float | None):
+def _get_scorer(prefix: str):
     """Load a W4 sentence-join model once per executor process — the
     Spark analogue of the reference's lazily-started, per-language
-    shared worker (PDFExtract.java:1723-1754): a ``.blm`` file or an
-    ARPA prefix is parsed once per Python worker and cached. None when
-    it is unreadable (the doc then gets a warning, the reference's
-    model-missing behavior at PDFExtract.java:1299-1324)."""
-    key = f"{path}|{sj_threshold}"
-    if key not in _SCORER_CACHE:
+    shared worker (PDFExtract.java:1723-1754): the ARPA pair at
+    ``prefix`` (and its optional ``.threshold``) is parsed once per
+    Python worker and cached. None when it is unreadable (the doc then
+    gets a warning, the reference's model-missing behavior at
+    PDFExtract.java:1299-1324)."""
+    if prefix not in _SCORER_CACHE:
         from ..functions.sentencejoin import SentenceJoinScorer
 
         try:
-            _SCORER_CACHE[key] = SentenceJoinScorer.load(path, sj_threshold)
+            _SCORER_CACHE[prefix] = SentenceJoinScorer.from_arpa(prefix)
         except (OSError, ValueError):
-            _SCORER_CACHE[key] = None
-    return _SCORER_CACHE[key]
+            _SCORER_CACHE[prefix] = None
+    return _SCORER_CACHE[prefix]
+
+
+def _sj_scorers(rules) -> dict:
+    """Both sinks' W4 scorers: ``{lang: scorer or None}`` from the
+    config's per-language ``sentencejoin_model`` prefixes
+    (Config.java:126); empty when the config declares none."""
+    return {lang: _get_scorer(prefix)
+            for lang, prefix in rules.sj_prefixes.items()}
 
 
 def _clean(rules, text: str | None) -> str:
@@ -235,18 +243,13 @@ def _walk_spans(spans: list | None, rules, run_pdf) -> Iterator[tuple[str, Any]]
 
 
 def _extract_setup(config: dict | None, max_pages: int | None,
-                   sj_model: str | None, sj_threshold: float | None,
                    time_budget_s: float | None):
     """extract_spans' per-task setup for ``runtime.map_rows``: returns
-    the row function, one OUTPUT_SCHEMA row per input document. The W4
-    scorers are ``sj_model`` for every language, else the config's
-    per-language ``sentencejoin_model`` paths (Config.java:126)."""
+    the row function, one OUTPUT_SCHEMA row per input document."""
     from ..operators.extract import extract_pdf
 
     rules = _get_ruleset(config)
-    models = {"common": sj_model} if sj_model else rules.sj_models
-    sj_scorers = {lang: _get_scorer(path, sj_threshold)
-                  for lang, path in models.items()}
+    sj_scorers = _sj_scorers(rules)
 
     def run_pdf(pdf_bytes: bytes):
         return extract_pdf(pdf_bytes, rules, max_pages=max_pages,
@@ -367,26 +370,23 @@ def extract_spans(
     config: dict | None = None,
     max_pages: int | None = None,
     num_partitions: int | None = None,
-    sj_model: str | None = None,
-    sj_threshold: float | None = None,
     time_budget_s: float | None = None,
 ) -> DataFrame:
     """The extraction operator: (doc_id, spans) → OUTPUT_SCHEMA.
 
     Zero-shuffle narrow map when ``num_partitions`` is None; with it, one
-    round-robin ``repartition(num_partitions)`` before the map. ``sj_model``
-    enables the W4 sentence-join stage for every language: a ``.blm``
-    file or an ARPA model prefix (visible on executors, e.g. shipped
-    with ``spark-submit --files``; loaded once per Python worker);
-    without it, the config's per-language ``sentencejoin_model`` paths
-    do. ``time_budget_s`` is the X4 per-doc budget (oversized docs
+    round-robin ``repartition(num_partitions)`` before the map. The W4
+    sentence-join stage runs for each language whose ``config`` names a
+    ``sentencejoin_model`` ARPA prefix (visible on executors, e.g.
+    shipped with ``spark-submit --files``; loaded once per Python
+    worker). ``time_budget_s`` is the X4 per-doc budget (oversized docs
     produce partial spans + a timeout warning instead of stalling a
     task)."""
     df = _span_input(df)
     if num_partitions is not None:
         df = df.repartition(num_partitions)
     return map_rows(df, OUTPUT_SCHEMA, lambda: _extract_setup(
-        config, max_pages, sj_model, sj_threshold, time_budget_s))
+        config, max_pages, time_budget_s))
 
 
 HTML_SCHEMA = StructType(
@@ -404,10 +404,11 @@ def _html_setup(config: dict | None, max_pages: int | None, keep_br: bool):
     from ..operators.extract import extract_pdf
 
     rules = _get_ruleset(config)
+    sj_scorers = _sj_scorers(rules)
 
     def run_pdf(pdf_bytes: bytes):
         return extract_pdf(pdf_bytes, rules, max_pages=max_pages,
-                           keep_lines=True)
+                           keep_lines=True, sj_scorers=sj_scorers)
 
     def one_doc(doc_id: str | None, spans) -> list[dict]:
         html, err = _html_doc(_walk_spans(spans, rules, run_pdf), keep_br)
@@ -491,7 +492,9 @@ def extract_html(df: DataFrame, config: dict | None = None,
                  keep_br: bool = False) -> DataFrame:
     """S7 HTML sink: (doc_id, spans) → (doc_id, html, error) in the
     reference's alignment-optimized format — the same narrow
-    ``mapInArrow`` shape and span walker as extract_spans."""
+    ``mapInArrow`` shape, span walker and W4 models as extract_spans
+    (the reference renders after its sentence join,
+    PDFExtract.java:209-333)."""
     return map_rows(_span_input(df), HTML_SCHEMA,
                     lambda: _html_setup(config, max_pages, keep_br))
 
@@ -546,8 +549,6 @@ def run_pipeline(
     resume: bool = False,
     num_partitions: int | None = None,
     max_pages: int | None = None,
-    sj_model: str | None = None,
-    sj_threshold: float | None = None,
     time_budget_s: float | None = None,
     input_format: str = "table",
     input_asof: str | None = None,
@@ -572,20 +573,23 @@ def run_pipeline(
         df = df.join(done, "doc_id", "left_anti")
     out = extract_spans(df, config=config, max_pages=max_pages,
                         num_partitions=num_partitions,
-                        sj_model=sj_model, sj_threshold=sj_threshold,
                         time_budget_s=time_budget_s)
     out = out.persist()
-    n_out = out.count()
-    # Write lineage BEFORE appending the output: on resume, `out` depends
-    # on a read of output_ref (the anti-join), and appending to that path
-    # invalidates/recaches every cached plan built on it — a lineage pass
-    # run after the append recomputes against the just-committed output
-    # and anti-joins away every row (observed: empty lineage on resumed
-    # runs). Both writes commit under run_id, so a lineage row counts
-    # only once the output snapshot run_id is committed too.
-    lin = lineage_frame(out, run_id)
-    io.write(lin, lineage_ref or output_ref.rstrip("/") + "_lineage",
-             run_id=run_id)
-    io.write(out, output_ref, run_id=run_id)
-    out.unpersist()
+    try:
+        n_out = out.count()
+        # Write lineage BEFORE appending the output: on resume, `out`
+        # depends on a read of output_ref (the anti-join), and appending
+        # to that path invalidates/recaches every cached plan built on
+        # it — a lineage pass run after the append recomputes against
+        # the just-committed output and anti-joins away every row
+        # (observed: empty lineage on resumed runs). Both writes commit
+        # under run_id, so a lineage row counts only once the output
+        # snapshot run_id is committed too.
+        lin = lineage_frame(out, run_id)
+        io.write(lin, lineage_ref or output_ref.rstrip("/") + "_lineage",
+                 run_id=run_id)
+        io.write(out, output_ref, run_id=run_id)
+    finally:
+        # a failed run must not leave its frame in the session's cache
+        out.unpersist()
     return {"run_id": run_id, "n_docs": n_out}

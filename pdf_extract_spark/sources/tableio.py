@@ -11,7 +11,9 @@ TableIO keeps one API with two backends (SURVEY.md §7 preamble):
     manifest (JSON lines) we maintain: each commit appends a row
     (snapshot_id, the data files it added). The table is the files its
     rows list; others (a crashed write's orphans) are ignored and left
-    in place. A directory with no manifest is read whole.
+    in place. The first commit writes an empty manifest before any data.
+    A directory with no manifest is read whole, and ``write`` refuses
+    one that holds parquet files: its files would drop out of the table.
 
 Filesystem access on the parquet backend goes through the JVM Hadoop
 ``FileSystem`` API (py4j), so the same code serves ``file:``, ``hdfs:``,
@@ -32,6 +34,8 @@ import posixpath
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+_MANIFEST = "_snapshots.jsonl"
 
 
 def _has_iceberg_catalog(spark: SparkSession, ref: str) -> bool:
@@ -119,7 +123,9 @@ class TableIO:
         if _has_iceberg_catalog(self.spark, ref):
             return self.spark.read.table(ref)
         rows = self._manifest_rows(ref)
-        return self._read_rows(ref, rows) if rows else self.spark.read.parquet(ref)
+        if rows is None:
+            return self.spark.read.parquet(ref)
+        return self._read_rows(ref, rows)
 
     def exists(self, ref: str) -> bool:
         if _has_iceberg_catalog(self.spark, ref):
@@ -142,8 +148,19 @@ class TableIO:
             else:
                 writer.create()
             return run_id
+        names = self._io.listdir(ref)
         # an earlier crash's orphan files are in `before`: never adopted
-        before = self._data_files(ref)
+        before = {f for f in names if f.endswith(".parquet")}
+        if _MANIFEST not in names:
+            if before:
+                # another writer's files: committing beside them would
+                # hide them from every later read
+                raise ValueError(
+                    f"{ref} holds parquet files but no {_MANIFEST}; "
+                    "TableIO appends only to tables it committed")
+            # the manifest comes first, so a crash in this first commit
+            # leaves a table whose orphan files are never read
+            self._io.write_text_atomic(self._manifest_path(ref), "")
         df.write.mode("append").parquet(ref)
         added = sorted(self._data_files(ref) - before)
         self._append_manifest(ref, run_id, added)
@@ -161,16 +178,16 @@ class TableIO:
                 self.spark.read.option("snapshot-id", snapshot_id)
                 .table(ref)
             )
-        rows = self._manifest_rows(ref)
+        rows = self._manifest_rows(ref) or []
         ids = [r["snapshot_id"] for r in rows]
         if snapshot_id not in ids:
             raise ValueError(
-                f"snapshot {snapshot_id!r} not in {ref}/_snapshots.jsonl")
+                f"snapshot {snapshot_id!r} not in {ref}/{_MANIFEST}")
         return self._read_rows(ref, rows[:ids.index(snapshot_id) + 1])
 
     # -- parquet-backend snapshot manifest ----------------------------------
     def _manifest_path(self, ref: str) -> str:
-        return posixpath.join(ref, "_snapshots.jsonl")
+        return posixpath.join(ref, _MANIFEST)
 
     def _read_rows(self, ref: str, rows: list[dict]) -> DataFrame:
         """The union of the data files the manifest ``rows`` list."""
@@ -207,11 +224,12 @@ class TableIO:
         self._io.write_text_atomic(self._manifest_path(ref),
                                    prior + row + "\n")
 
-    def _manifest_rows(self, ref: str) -> list[dict]:
+    def _manifest_rows(self, ref: str) -> list[dict] | None:
+        """The manifest's rows; None when the directory has none."""
         text = self._io.read_text(self._manifest_path(ref))
-        if not text:
-            return []
+        if text is None:
+            return None
         return [json.loads(line) for line in text.splitlines() if line.strip()]
 
     def snapshots(self, ref: str) -> list[str]:
-        return [r["snapshot_id"] for r in self._manifest_rows(ref)]
+        return [r["snapshot_id"] for r in self._manifest_rows(ref) or []]

@@ -6,8 +6,7 @@
         [--input-format table|pdf-dir|warc] [--input-asof SNAPSHOT] \
         [--max-pages N] [--config PDFExtract.json] \
         [--lineage <ref>] [--resume] [--num-partitions N] \
-        [--time-budget S] [--sj-model M] [--sj-threshold T] \
-        [--html [--keep-br]]
+        [--time-budget S] [--html [--keep-br]]
 
 Reads the interleaved-document table (doc_id, spans) — or raw PDFs or
 WARC files — and extracts spans (or alignment-optimized HTML with
@@ -17,8 +16,10 @@ warehouse with a snapshot manifest otherwise). The span sink also
 commits per-partition lineage, and with --resume anti-joins the input
 against already-committed doc_ids so a failed run continues from the
 last committed snapshot. A flag the chosen sink would ignore is an
-error: --lineage, --resume, --num-partitions, --time-budget and the
---sj-* options need the span sink, --keep-br needs --html.
+error: --lineage, --resume, --num-partitions and --time-budget need the
+span sink, --keep-br needs --html. Both sinks run the W4 sentence join
+for each language whose config names a ``sentencejoin_model`` ARPA
+prefix (ship the model files to executors with spark-submit --files).
 
 Build pdfx.zip with:  cd <repo> && zip -r pdfx.zip pdf_extract_spark
 """
@@ -36,8 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 #: options only the span sink (run_pipeline) reads
-_SPANS_ONLY = ("lineage", "resume", "num_partitions", "time_budget",
-               "sj_model", "sj_threshold")
+_SPANS_ONLY = ("lineage", "resume", "num_partitions", "time_budget")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -57,16 +57,8 @@ def main(argv: list[str] | None = None) -> int:
                     help="per-doc seconds budget (X4: the reference's -t "
                          "poppler timeout; here partial spans + warning)")
     ap.add_argument("--config", default=None,
-                    help="PDFExtract.json-compatible rule config")
-    ap.add_argument("--sj-model", default=None,
-                    help="W4 sentence-join model: a binary .blm file "
-                         "(train_sentencejoin.py --convert) or an ARPA "
-                         "prefix ({prefix}.forward.lm/.backward.lm"
-                         "[/.threshold]); ship to executors with "
-                         "spark-submit --files)")
-    ap.add_argument("--sj-threshold", type=float, default=None,
-                    help="sentence-join decision threshold (default 7.0 "
-                         "or {prefix}.threshold)")
+                    help="PDFExtract.json-compatible rule config (its "
+                         "sentencejoin_model prefixes enable W4)")
     ap.add_argument("--html", action="store_true",
                     help="emit alignment-optimized HTML instead of spans")
     ap.add_argument("--keep-br", action="store_true",
@@ -119,8 +111,6 @@ def main(argv: list[str] | None = None) -> int:
             resume=args.resume,
             num_partitions=args.num_partitions,
             max_pages=args.max_pages,
-            sj_model=args.sj_model,
-            sj_threshold=args.sj_threshold,
             time_budget_s=args.time_budget,
             input_format=args.input_format,
             input_asof=args.input_asof,

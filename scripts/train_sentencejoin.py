@@ -4,18 +4,17 @@ sentence-join.py CLI surface without KenLM or subprocesses.
     python scripts/train_sentencejoin.py --train --model M --text corpus.txt
     python scripts/train_sentencejoin.py --tune  --model M --dev dev.txt
     python scripts/train_sentencejoin.py --apply --model M [--threshold T] < pairs.tsv
-    python scripts/train_sentencejoin.py --convert --model M [--out M.blm]
 
 --train writes {M}.forward.lm / {M}.backward.lm (standard ARPA; also
 loadable by KenLM tooling). --tune writes {M}.threshold. --apply reads
 tab-separated line pairs on stdin and prints True/False per pair,
 byte-compatible with the reference worker protocol
-(SentenceJoin.java:106-109 drives exactly this). --convert packs the
-ARPA pair + threshold into one fast-loading binary {M}.blm — the
-one-shot converter for the reference's kenlm ``build_binary`` step
-(sentence-join.py:64-70); existing .binlm artifacts are regenerated by
-running this on their source ARPA files (kenlm's own binary format is
-not readable without kenlm, in either engine's direction)."""
+(SentenceJoin.java:106-109 drives exactly this). The extraction job
+loads the model a config names per language (``sentencejoin_model``:
+the prefix M, with its .threshold when --tune wrote one). The
+reference's kenlm ``build_binary`` step (sentence-join.py:64-70) has no
+counterpart: kenlm's .binlm files are not readable without kenlm, so
+they are regenerated from their source ARPA files (or by --train)."""
 
 from __future__ import annotations
 
@@ -36,21 +35,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--train", action="store_true")
     ap.add_argument("--tune", action="store_true")
     ap.add_argument("--apply", action="store_true")
-    ap.add_argument("--convert", action="store_true",
-                    help="pack ARPA pair + threshold into one binary .blm")
     ap.add_argument("--model", required=True, help="model prefix")
     ap.add_argument("--text", help="training corpus (one line per sentence)")
     ap.add_argument("--dev", help="tuning corpus")
     ap.add_argument("--order", type=int, default=5)
     ap.add_argument("--threshold", type=float, default=None)
-    ap.add_argument("--out", help="--convert output path (default {model}.blm)")
     args = ap.parse_args(argv)
-
-    if args.convert:
-        scorer = SentenceJoinScorer.from_arpa(args.model, args.threshold)
-        out = args.out or args.model + ".blm"
-        scorer.save_binary(out)
-        print(f"wrote {out}")
 
     if args.train:
         if not args.text:
@@ -83,8 +73,8 @@ def main(argv: list[str] | None = None) -> int:
             print(scorer.should_join(left, right))
             sys.stdout.flush()
 
-    if not (args.train or args.tune or args.apply or args.convert):
-        ap.error("pick one of --train/--tune/--apply/--convert")
+    if not (args.train or args.tune or args.apply):
+        ap.error("pick one of --train/--tune/--apply")
     return 0
 
 

@@ -197,7 +197,7 @@ def _inject_fault(case, monkeypatch, out_ref, doc_id):
     """Patch one fault into the next run_pipeline call: (a) a crash
     right after the lineage commit, (b) the output's manifest commit
     fails after its parquet files landed, (c) one extraction task
-    fails."""
+    fails; (d) is (b) on the output's first commit."""
     from pyspark.sql import functions as F
 
     from pdf_extract_spark.sources.tableio import TableIO
@@ -212,7 +212,7 @@ def _inject_fault(case, monkeypatch, out_ref, doc_id):
             return sid
 
         monkeypatch.setattr(TableIO, "write", write_then_crash)
-    elif case == "b":
+    elif case in ("b", "d"):
         append = TableIO._append_manifest
 
         def fail_output_commit(self, ref, run_id, files):
@@ -233,13 +233,14 @@ def _inject_fault(case, monkeypatch, out_ref, doc_id):
         monkeypatch.setattr(pipeline, "extract_spans", failing_task)
 
 
-@pytest.mark.parametrize("case", ["a", "b", "c"])
+@pytest.mark.parametrize("case", ["a", "b", "c", "d"])
 def test_resume_after_crash_commits_each_doc_once(spark, tmp_path,
                                                   monkeypatch, case):
     """A run that crashes at any point between its lineage write and its
     output commit, then a resumed run, commit every doc exactly once:
     the current read equals the latest snapshot, and the lineage rows of
-    committed snapshots count the committed rows."""
+    committed snapshots count the committed rows. The failed run leaves
+    nothing in the session's cache."""
     from pyspark.sql import functions as F
 
     from pdf_extract_spark.sources.tableio import TableIO
@@ -250,13 +251,16 @@ def test_resume_after_crash_commits_each_doc_once(spark, tmp_path,
     corpus_dataframe(spark, 4).write.parquet(half)
     corpus_dataframe(spark, 8).write.parquet(full)
     ids = sorted(r.doc_id for r in spark.read.parquet(full).collect())
-    pipeline.run_pipeline(spark, half, out)
+    if case != "d":
+        pipeline.run_pipeline(spark, half, out)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # other tests' frames share the session
 
     with monkeypatch.context() as m:
         _inject_fault(case, m, out, ids[-1])
         with pytest.raises(Exception, match="injected"):
             pipeline.run_pipeline(spark, full, out, resume=True)
-    spark.catalog.clearCache()  # the failed run's persisted frame stays cached
+    assert cache.isEmpty()
     pipeline.run_pipeline(spark, full, out, resume=True)
 
     snaps = io.snapshots(out)
@@ -288,6 +292,31 @@ def test_extraction_plan_is_narrow(spark, tmp_path):
         # scan
         assert "extra" not in plan.split("ReadSchema")[1][:400], \
             sink.__name__
+
+
+def test_pdf_payload_file_pointer_and_missing(spark, tmp_path):
+    """A ``file://`` media_ref with empty text extracts what the inline
+    base64 does; an unreadable pointer and bad base64 each give the
+    missing-payload error and one ``payload`` warning."""
+    pdf = synth_pdf(1, n_pages=1)
+    (tmp_path / "a.pdf").write_bytes(pdf)
+
+    def doc(text, ref):
+        return [{"kind": "pdf", "text": text, "media_ref": ref, "offset": 0}]
+
+    df = spark.createDataFrame([
+        ("inline", doc(base64.b64encode(pdf).decode(), "")),
+        ("file", doc("", f"file://{tmp_path}/a.pdf")),
+        ("gone", doc("", f"file://{tmp_path}/gone.pdf")),
+        ("bad64", doc("abc", "")),
+    ], pipeline.INPUT_SCHEMA)
+    out = {r["doc_id"]: r for r in pipeline.extract_spans(df).collect()}
+    assert out["inline"]["error"] is None and out["inline"]["spans"]
+    assert out["file"]["error"] is None
+    assert out["file"]["spans"] == out["inline"]["spans"]
+    for d in ("gone", "bad64"):
+        assert out[d]["error"] == "pdf: missing payload", d
+        assert [w["method"] for w in out[d]["warnings"]] == ["payload"], d
 
 
 def test_read_pdf_dir_source(spark, tmp_path):

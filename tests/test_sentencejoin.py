@@ -129,35 +129,66 @@ def test_extract_pdf_w4_joins_what_w3_cannot():
     assert jtexts == ["THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG"]
 
 
-def test_pipeline_sj_model_prefix_and_missing(spark, tmp_path):
-    from pdf_extract_spark.plans.pipeline import extract_spans
-
-    sc = SentenceJoinScorer.train(UPPER)
-    prefix = str(tmp_path / "sj")
-    sc.save_arpa(prefix)
-    (tmp_path / "sj.threshold").write_text("0.9 7.0\n")
-
+def _two_line_frame(spark):
     pdf64 = base64.b64encode(
         _two_line_pdf("THE QUICK BROWN FOX", "JUMPS OVER THE LAZY DOG")
     ).decode()
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         [("d0", [{"kind": "pdf", "text": pdf64, "media_ref": "", "offset": 0}])],
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    out = extract_spans(df, sj_model=prefix).collect()[0]
-    assert [s["text"] for s in out["spans"]] == [
-        "THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG"
-    ]
+
+
+def _common_model_config(prefix: str) -> dict:
+    import copy
+
+    from pdf_extract_spark.functions.textrules import DEFAULT_CONFIG
+
+    cfg = copy.deepcopy(DEFAULT_CONFIG)
+    cfg["languages"]["common"]["sentencejoin_model"] = prefix
+    return cfg
+
+
+def test_pipeline_config_model_prefix_and_missing(spark, tmp_path):
+    """A config model prefix's ``.threshold`` file sets its threshold;
+    an unreadable prefix skips the stage with a warning."""
+    from pdf_extract_spark.plans.pipeline import extract_spans
+
+    prefix = str(tmp_path / "strict")
+    SentenceJoinScorer.train(UPPER).save_arpa(prefix)
+    df = _two_line_frame(spark)
+    lines = ["THE QUICK BROWN FOX", "JUMPS OVER THE LAZY DOG"]
+
+    # a threshold below every score: the model loads, nothing joins
+    (tmp_path / "strict.threshold").write_text("0.9 -100.0\n")
+    out = extract_spans(df, config=_common_model_config(prefix)).collect()[0]
+    assert [s["text"] for s in out["spans"]] == lines
     assert out["error"] is None
+    assert not out["warnings"]
 
     # unreadable model prefix → per-doc warning, stage skipped
     # (reference model-missing behavior, PDFExtract.java:1299-1324)
-    out2 = extract_spans(df, sj_model=str(tmp_path / "nope")).collect()[0]
-    assert [s["text"] for s in out2["spans"]] == [
-        "THE QUICK BROWN FOX", "JUMPS OVER THE LAZY DOG"
-    ]
+    out2 = extract_spans(
+        df, config=_common_model_config(str(tmp_path / "nope"))).collect()[0]
+    assert [s["text"] for s in out2["spans"]] == lines
     assert any(w["method"] == "sentencejoin" for w in out2["warnings"])
+
+
+def test_extract_html_runs_config_model(spark, tmp_path):
+    """The HTML sink runs W4 with the config's models, as the span sink
+    does (the reference renders after its sentence join,
+    PDFExtract.java:209-333): the two uppercase lines render as one."""
+    from pdf_extract_spark.plans.pipeline import extract_html
+
+    prefix = str(tmp_path / "sj")
+    SentenceJoinScorer.train(UPPER).save_arpa(prefix)
+    df = _two_line_frame(spark)
+    plain = extract_html(df).collect()[0]["html"]
+    assert "THE QUICK BROWN FOX JUMPS" not in plain
+    row = extract_html(df, config=_common_model_config(prefix)).collect()[0]
+    assert row["error"] is None
+    assert "THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG" in row["html"]
 
 
 def test_tune_threshold_separates_perfectly(scorer):
@@ -202,28 +233,16 @@ def test_config_declared_per_language_models(spark, tmp_path):
     """X2 parity: sentencejoin_model paths declared in the rule config
     auto-load per executor, keyed by language (doc lang, 'common'
     fallback)."""
-    import copy
-
-    from pdf_extract_spark.functions.textrules import DEFAULT_CONFIG
     from pdf_extract_spark.plans.pipeline import extract_spans
 
     prefix = str(tmp_path / "cm")
     SentenceJoinScorer.train(UPPER).save_arpa(prefix)
-    cfg = copy.deepcopy(DEFAULT_CONFIG)
-    cfg["languages"]["common"]["sentencejoin_model"] = prefix
-
-    pdf64 = base64.b64encode(
-        _two_line_pdf("THE QUICK BROWN FOX", "JUMPS OVER THE LAZY DOG")
-    ).decode()
-    df = spark.createDataFrame(
-        [("d0", [{"kind": "pdf", "text": pdf64, "media_ref": "", "offset": 0}])],
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>",
-    )
-    out = extract_spans(df, config=cfg).collect()[0]
+    out = extract_spans(_two_line_frame(spark),
+                        config=_common_model_config(prefix)).collect()[0]
     assert [s["text"] for s in out["spans"]] == [
         "THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG"
     ]
+    assert out["error"] is None
 
 
 def test_config_model_missing_for_one_language(spark, tmp_path):
@@ -261,114 +280,14 @@ def test_config_model_missing_for_one_language(spark, tmp_path):
     assert [w["method"] for w in out["de"]["warnings"]] == ["sentencejoin"]
 
 
-class TestBinaryInterop:
-    """Round-trip: ARPA pair ↔ single-file binary .blm (VERDICT r1 item
-    9 — the kenlm build_binary role, sentence-join.py:64-70)."""
-
-    def _scorer(self):
-        from pdf_extract_spark.functions.sentencejoin import SentenceJoinScorer
-
-        lines = [
-            "the quick brown fox jumps over the lazy dog",
-            "a stitch in time saves nine every single day",
-            "the dog sleeps while the fox runs far away",
-        ] * 5
-        return SentenceJoinScorer.train(lines, order=3)
-
-    def test_roundtrip_identical_scores(self, tmp_path):
-        from pdf_extract_spark.functions.sentencejoin import SentenceJoinScorer
-
-        sc = self._scorer()
-        path = str(tmp_path / "model.blm")
-        sc.save_binary(path)
-        sc2 = SentenceJoinScorer.from_binary(path)
-        assert sc2.threshold == sc.threshold
-        for n in range(1, sc.forward.order + 1):
-            assert sc2.forward.ngrams[n] == sc.forward.ngrams[n]
-            assert sc2.backward.ngrams[n] == sc.backward.ngrams[n]
-        pair = ("the quick brown fox", "jumps over the dog")
-        assert sc2.score(*pair) == sc.score(*pair)
-
-    def test_load_dispatch(self, tmp_path):
-        from pdf_extract_spark.functions.sentencejoin import SentenceJoinScorer
-
-        sc = self._scorer()
-        sc.save_arpa(str(tmp_path / "m"))
-        sc.save_binary(str(tmp_path / "m.blm"))
-        via_arpa = SentenceJoinScorer.load(str(tmp_path / "m"))
-        via_blm = SentenceJoinScorer.load(str(tmp_path / "m.blm"))
-        pair = ("one two three four", "five six seven eight")
-        # binary preserves exact float64; ARPA text rounds to 7 decimals
-        assert via_blm.score(*pair) == sc.score(*pair)
-        assert abs(via_arpa.score(*pair) - sc.score(*pair)) < 1e-5
-
-    def test_explicit_threshold_wins(self, tmp_path):
-        """An explicit threshold overrides the model's own in both
-        formats: an ARPA prefix's ``.threshold`` file and a ``.blm``'s
-        stored value; without one, the model's own is kept."""
-        from pdf_extract_spark.functions.sentencejoin import SentenceJoinScorer
-
-        sc = self._scorer()
-        prefix = str(tmp_path / "m")
-        sc.save_arpa(prefix)
-        (tmp_path / "m.threshold").write_text("0.9 3.5\n")
-        SentenceJoinScorer.from_arpa(prefix).save_binary(prefix + ".blm")
-        for path in (prefix, prefix + ".blm"):
-            assert SentenceJoinScorer.load(path).threshold == 3.5
-            assert SentenceJoinScorer.load(path, 5.0).threshold == 5.0
-
-    def test_convert_cli(self, tmp_path):
-        import subprocess
-        import sys
-
-        from pdf_extract_spark.functions.sentencejoin import SentenceJoinScorer
-
-        sc = self._scorer()
-        prefix = str(tmp_path / "m")
-        sc.save_arpa(prefix)
-        out = subprocess.run(
-            [sys.executable, "scripts/train_sentencejoin.py",
-             "--convert", "--model", prefix],
-            capture_output=True, text=True, cwd="/root/repo",
-        )
-        assert out.returncode == 0, out.stderr
-        blm = SentenceJoinScorer.from_binary(prefix + ".blm")
-        # ARPA text round-trips at 7 decimals; binary must match the
-        # reloaded-ARPA scorer exactly
-        ref = SentenceJoinScorer.from_arpa(prefix)
-        pair = ("the quick brown fox", "jumps over the dog")
-        assert blm.score(*pair) == ref.score(*pair)
-
-    def test_corrupt_binary_rejected(self, tmp_path):
-        import pytest
-
-        from pdf_extract_spark.functions.sentencejoin import SentenceJoinScorer
-
-        p = tmp_path / "junk.blm"
-        p.write_bytes(b"NOTAMODEL" + b"\x00" * 64)
-        with pytest.raises(ValueError):
-            SentenceJoinScorer.from_binary(str(p))
-
-
-def test_pipeline_sj_model_blm(spark, tmp_path):
-    """The Spark pipeline loads a binary .blm model end-to-end (same
-    join decisions as the ARPA pair it was packed from)."""
-    from pdf_extract_spark.plans.pipeline import extract_spans
-
-    sc = SentenceJoinScorer.train(UPPER)
-    blm = str(tmp_path / "sj.blm")
-    sc.save_binary(blm)
-
-    pdf64 = base64.b64encode(
-        _two_line_pdf("THE QUICK BROWN FOX", "JUMPS OVER THE LAZY DOG")
-    ).decode()
-    df = spark.createDataFrame(
-        [("d0", [{"kind": "pdf", "text": pdf64, "media_ref": "", "offset": 0}])],
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>",
-    )
-    out = extract_spans(df, sj_model=blm).collect()[0]
-    assert [s["text"] for s in out["spans"]] == [
-        "THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG"
-    ]
-    assert out["error"] is None
+def test_arpa_threshold_file_and_explicit_threshold(tmp_path):
+    """``from_arpa`` reads the prefix's ``.threshold`` file (the one
+    ``--tune`` writes), an explicit threshold wins over it (``--apply
+    --threshold``), and with neither the default holds."""
+    sc = SentenceJoinScorer.train(CORPUS, order=3)
+    prefix = str(tmp_path / "m")
+    sc.save_arpa(prefix)
+    assert SentenceJoinScorer.from_arpa(prefix).threshold == 7.0
+    (tmp_path / "m.threshold").write_text("0.9 3.5\n")
+    assert SentenceJoinScorer.from_arpa(prefix).threshold == 3.5
+    assert SentenceJoinScorer.from_arpa(prefix, 5.0).threshold == 5.0

@@ -221,3 +221,46 @@ def test_catalog_write_appends_or_creates(spark, monkeypatch, exists):
             assert df.writer.calls == ["create"]
     finally:
         spark.conf.unset("spark.sql.catalog.stubcat")
+
+
+def test_write_refuses_a_directory_without_manifest(spark, tmp_path):
+    """Parquet files another writer left, with no manifest: ``write``
+    raises before it writes anything, so ``read`` still sees them."""
+    from pdf_extract_spark.sources.tableio import TableIO
+
+    io = TableIO(spark)
+    ref = str(tmp_path / "plain")
+    spark.createDataFrame([(1, "a")], "doc_id long, t string") \
+        .write.parquet(ref)
+    before = sorted(os.listdir(ref))
+    with pytest.raises(ValueError, match="no _snapshots.jsonl"):
+        io.write(spark.createDataFrame([(2, "b")], "doc_id long, t string"),
+                 ref)
+    assert sorted(os.listdir(ref)) == before
+    assert _ids(io.read(ref)) == [1]
+
+
+def test_first_commit_crash_leaves_an_empty_table(spark, tmp_path,
+                                                  monkeypatch):
+    """The first commit writes an empty manifest before its data: if its
+    manifest row then fails, the table has no snapshot, reads empty
+    and takes the next commit."""
+    from pdf_extract_spark.sources.tableio import TableIO
+
+    io = TableIO(spark)
+    ref = str(tmp_path / "docs_table")
+
+    def boom(self, ref, run_id, files):
+        raise RuntimeError("injected crash before the manifest row")
+
+    with monkeypatch.context() as m:
+        m.setattr(TableIO, "_append_manifest", boom)
+        with pytest.raises(RuntimeError):
+            io.write(spark.createDataFrame(
+                [(1, "a")], "doc_id long, t string"), ref, run_id="s1")
+    assert not io.exists(ref) and io.snapshots(ref) == []
+    assert _ids(io.read(ref)) == []
+    io.write(spark.createDataFrame([(2, "b")], "doc_id long, t string"),
+             ref, run_id="s2")
+    assert io.snapshots(ref) == ["s2"]
+    assert _ids(io.read(ref)) == [2]

@@ -180,7 +180,7 @@ class TestReferenceConfigCompat:
     def test_loads_both_languages(self, ref_rules):
         assert "common" in ref_rules.langs
         assert "en" in ref_rules.langs
-        assert ref_rules.sj_models.get("en") == "/home/usr/models/toy-model"
+        assert ref_rules.sj_prefixes.get("en") == "/home/usr/models/toy-model"
 
     def test_normalize_ligatures(self, ref_rules):
         assert ref_rules.normalize_str("eﬀort oﬃce ﬁt") == "effort office fit"
